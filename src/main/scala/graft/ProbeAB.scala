@@ -1,470 +1,60 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
-import graft.operators.{Curation, Dedup, Graph, TextOps}
-import graft.Tables
-
-/** Round-16 optimization A/B probes: each experiment prices the OLD
-  * (pre-optimization, inlined here verbatim) and NEW (registered)
-  * formulation of one operator in the SAME JVM with INTERLEAVED reps —
-  * the ProbeHotBin discipline for a host with long-lived co-tenant
-  * load, where isolated before/after runs are incomparable (the
-  * round's baseline ledger showed untouched keys swinging 3-6x between
-  * group runs; canary-normalization bounds but does not remove that).
-  * A co-tenant burst lands on adjacent old/new reps alike, so the
-  * RATIO of the two medians is the robust statistic. Every experiment
-  * is equality-gated first: old and new must produce identical rows,
-  * or the measurement is refused.
+/** Optimization A/B runner: prices the OLD (pre-optimization) and NEW
+  * (registered) formulation of one operator in the SAME JVM with
+  * INTERLEAVED reps — the discipline for a host with long-lived co-tenant
+  * load, where isolated before/after runs are incomparable (untouched
+  * keys swing 3-6x between group runs; canary-normalization bounds but
+  * does not remove that). A co-tenant burst lands on adjacent old/new
+  * reps alike, so the RATIO of the two medians is the robust statistic.
+  * Every experiment is equality-gated first: old and new must produce
+  * identical rows, or the measurement is refused.
+  *
+  * `experiments` is empty at rest. A performance change adds its old arm
+  * (inlined verbatim) for the length of that change, records the rep
+  * arrays this prints, and ships with the map empty again.
   *
   * Usage: SPARK_GRAFT_AB=g06,g02 runMain graft.ProbeAB [sfDir]
   */
 object ProbeAB {
-  /** Interleaved reps per arm; GRAFT_AB_REPS trims it for corpus-scale
-    * probes where one rep runs minutes (the 100x trend arms).
-    */
-  val REPS = sys.env.get("GRAFT_AB_REPS").map(_.toInt).getOrElse(5)
+  type Arm = (SparkSession, String) => DataFrame
 
-  // ---- OLD formulations, verbatim from the pre-round-16 tree ----
+  /** Interleaved reps per arm. */
+  val REPS = 5
 
-  /** g06 pre-optimization: capped-weight broadcast join + part-keyed
-    * self-join (SMJ at scale) + pair aggregate, over a checkpointed
-    * distinct edge frame.
-    */
-  private def g06Old(s: SparkSession, d: String): DataFrame = {
-    val cap = Graph.WEDGE_CAP; val topk = Graph.LINK_TOPK
-    val e = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_partkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .distinct()
-      .localCheckpoint()
-    val ok = e.groupBy("p").agg(count(lit(1)).as("dg"))
-      .filter(col("dg") <= cap)
-      .select(col("p"), expr("1000000000 div dg").as("w"))
-    val ec = e.join(ok, "p")
-    ec.select(col("p"), col("c").as("cust_a"), col("w"))
-      .join(ec.select(col("p"), col("c").as("cust_b")), "p")
-      .filter(col("cust_a") < col("cust_b"))
-      .groupBy("cust_a", "cust_b")
-      .agg(count(lit(1)).as("common"), sum(col("w")).as("ra_score"))
-      .orderBy(col("common").desc, col("ra_score").desc,
-        col("cust_a"), col("cust_b"))
-      .limit(topk)
-      .orderBy(col("common").desc, col("ra_score").desc,
-        col("cust_a"), col("cust_b"))
-  }
+  /** name -> (old arm, new arm). */
+  def experiments: Map[String, (Arm, Arm)] = Map.empty
 
-  /** g02 pre-optimization: distinct (ok, sk) self-join for support
-    * pairs, un-repartitioned checkpoints (the orientation frame froze
-    * at AQE's coalesced partition count).
+  /** Equality-gate `oldF` against `newF` (which also warms both), then
+    * time REPS interleaved old/new runs to a noop sink. Returns the
+    * (old, new) rep arrays in seconds; throws before any timed rep when
+    * the arms' rows differ.
     */
-  private def g02Old(s: SparkSession, d: String): DataFrame = {
-    val minSupport = math.max(4L,
-      Tables.orders(s, d).count() * 27L / 1000000L)
-    val so = Tables.lineitem(s, d)
-      .select(col("l_orderkey").as("ok"), col("l_suppkey").as("sk"))
-      .distinct()
-    val a = so.select(col("ok"), col("sk").as("u"))
-    val b = so.select(col("ok").as("ok2"), col("sk").as("v"))
-    val pairs = a.join(b, col("ok") === col("ok2") && col("u") < col("v"))
-      .groupBy(col("u"), col("v")).agg(count(lit(1)).as("support"))
-      .filter(col("support") >= minSupport)
-      .select(col("u"), col("v"))
-      .localCheckpoint(true)
-    val deg = pairs.select(explode(array(col("u"), col("v"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("dg"))
-    val du = deg.select(col("node").as("u"), col("dg").as("du"))
-    val dv = deg.select(col("node").as("v"), col("dg").as("dv"))
-    val lowFirst = col("du") < col("dv") ||
-      (col("du") === col("dv") && col("u") < col("v"))
-    val oriented = pairs.join(du, "u").join(dv, "v")
-      .select(when(lowFirst, col("u")).otherwise(col("v")).as("es"),
-              when(lowFirst, col("v")).otherwise(col("u")).as("et"))
-      .localCheckpoint(true)
-    val e1 = oriented.select(col("es").as("a1"), col("et").as("b1"))
-    val e2 = oriented.select(col("es").as("a2"), col("et").as("c2"))
-    val e3 = oriented.select(col("es").as("b3"), col("et").as("c3"))
-    val tri = e1.join(e2, col("a1") === col("a2") && col("b1") =!= col("c2"))
-      .join(e3, col("b3") === col("b1") && col("c3") === col("c2"))
-      .select(col("a1").as("x"), col("b1").as("y"), col("c2").as("z"))
-    tri.select(explode(array(col("x"), col("y"), col("z"))).as("node"))
-      .groupBy(col("node")).agg(count(lit(1)).as("n_tri"))
-      .orderBy(col("n_tri").desc, col("node"))
-      .limit(100)
-  }
-
-  /** t29 pre-optimization: the weak-vote projection recomputed by all
-    * four NB-chain consumers (no checkpoint).
-    */
-  private def t29Old(s: SparkSession, d: String): DataFrame =
-    TextOps.nbLangidOf(
-        TextOps.weakLabelRows(Tables.documents(s, d))
-          .filter(col("label") =!= "abstain")
-          .select(col("doc_id"), col("label").as("lang"), col("text")))
-      .select(col("true_lang").as("true_label"),
-        col("pred_lang").as("pred_label"), col("n_docs"))
-      .orderBy("true_label", "pred_label")
-
-  /** g11 pre-optimization: per-round teleport as a broadcast left join
-    * plus an anti-join re-entry union — the spread subtree referenced
-    * twice per round (2^ITERS plan copies by the last round).
-    */
-  private def g11Old(s: SparkSession, d: String): DataFrame = {
-    val bcastMax = Graph.RANK_BCAST_MAX_NODES
-    val eraw = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-              (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    val edges = eraw.select(explode(array(
-        struct(col("src").as("s"), col("dst").as("t")),
-        struct(col("dst").as("s"), col("src").as("t")))).as("e"))
-      .select(col("e.s").as("src"), col("e.t").as("dst"))
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    val seeds = Tables.supplier(s, d)
-      .filter(col("s_nationkey") < 5L)
-      .select((col("s_suppkey") * 2 + 1).as("seed"))
-    val deg = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(true)
-    val nNodes = deg.count()
-    val co = nNodes > bcastMax
-    val e = if (co) Graph.relayoutPartitioned(edges, col("src")) else edges
-    val adjRaw = Graph.iterJoin(e, deg, e("src") === deg("node"), nNodes, bcastMax)
-      .select(e("src"), e("dst"), deg("outdeg"))
-    val adj = if (co) Graph.checkpointPreserving(adjRaw)
-      else adjRaw.localCheckpoint(true)
-    var ranks = seeds.select(col("seed").as("node"))
-      .withColumn("r", lit(1000000000L))
-    for (_ <- 1 to 4) {
-      val spread = Graph.iterJoin(adj, ranks, adj("src") === ranks("node"),
-          nNodes, bcastMax)
-        .select(adj("dst"), expr("r div outdeg").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("csum"))
-        .select(col("dst").as("node"), expr("(85 * csum) div 100").as("r"))
-      ranks = spread
-        .join(broadcast(seeds), spread("node") === seeds("seed"), "left")
-        .select(col("node"),
-          (col("r") + when(col("seed").isNotNull, lit(150000000L)).otherwise(lit(0L)))
-            .as("r"))
-        .unionByName(
-          seeds.join(spread.select(col("node")), seeds("seed") === col("node"),
-              "left_anti")
-            .select(col("seed").as("node"), lit(150000000L).as("r")))
+  def compare(spark: SparkSession, sfDir: String, name: String,
+      oldF: Arm, newF: Arm): (Array[Double], Array[Double]) = {
+    val oldRows = oldF(spark, sfDir).collect().toSeq.map(_.toSeq)
+    val newRows = newF(spark, sfDir).collect().toSeq.map(_.toSeq)
+    require(oldRows == newRows,
+      s"[ab] $name: OLD != NEW (${oldRows.length} vs ${newRows.length} rows) — probe refused")
+    val (oldT, newT) = (Array.ofDim[Double](REPS), Array.ofDim[Double](REPS))
+    for (r <- 0 until REPS) {
+      var t0 = System.nanoTime()
+      oldF(spark, sfDir).write.mode("overwrite").format("noop").save()
+      oldT(r) = (System.nanoTime() - t0) / 1e9
+      t0 = System.nanoTime()
+      newF(spark, sfDir).write.mode("overwrite").format("noop").save()
+      newT(r) = (System.nanoTime() - t0) / 1e9
     }
-    val labeled = ranks
-      .join(broadcast(seeds), ranks("node") === seeds("seed"), "left_anti")
-      .select(
-        expr("CASE WHEN node % 2 = 0 THEN concat('c:', CAST(node div 2 AS STRING)) " +
-          "ELSE concat('s:', CAST((node - 1) div 2 AS STRING)) END").as("node"),
-        col("r").as("ppr_fp"))
-    labeled.orderBy(col("ppr_fp").desc, col("node")).limit(30)
+    (oldT, newT)
   }
-
-  /** g03 pre-optimization: per-round seed fixing as a broadcast
-    * anti-join + union after the vote argmax.
-    *
-    * Simplification vs the true pre-round-16 tree: this inline copy
-    * joins `edges` directly and omits the `relayoutPartitioned`
-    * co-regime dispatch (nNodes > RANK_BCAST_MAX_NODES) that lpaOn
-    * carries. Harmless at probe scale (sf0.1 nNodes ≪ 1e8), but do
-    * NOT run this probe with GRAFT_RANK_BCAST_MAX forced low — the
-    * ratio would conflate the seed-fold change with the relayout path.
-    */
-  private def g03Old(s: SparkSession, d: String): DataFrame = {
-    val bcastMax = Graph.RANK_BCAST_MAX_NODES
-    val eraw = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-              (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    val edges = eraw.select(explode(array(
-        struct(col("src").as("s"), col("dst").as("t")),
-        struct(col("dst").as("s"), col("src").as("t")))).as("e"))
-      .select(col("e.s").as("src"), col("e.t").as("dst"))
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    val seeds = Tables.supplier(s, d)
-      .filter(col("s_nationkey") < 5L)
-      .select((col("s_suppkey") * 2 + 1).as("node"),
-        col("s_nationkey").cast("long").as("label"))
-    val nNodes = Tables.customer(s, d).count() + Tables.supplier(s, d).count()
-    var labels = seeds
-    for (_ <- 1 to 3) {
-      val voted = Graph.iterJoin(edges, labels, labels("node") === edges("src"),
-          nNodes, bcastMax)
-        .select(col("dst"), col("label"))
-        .repartition(col("dst"))
-        .groupBy(col("dst"), col("label")).agg(count(lit(1)).as("cnt"))
-        .groupBy(col("dst"))
-        .agg(max(struct(col("cnt"), (-col("label")).as("nl"))).as("m"))
-        .select(col("dst").as("node"), (-col("m.nl")).as("label"))
-      labels = voted.join(seeds.select(col("node").as("snode")),
-          voted("node") === col("snode"), "left_anti")
-        .unionByName(seeds)
-    }
-    labels.groupBy(col("label"))
-      .agg(count(when(col("node") % 2 === 0, 1)).as("n_customers"),
-        count(when(col("node") % 2 === 1, 1)).as("n_suppliers"))
-      .orderBy(col("label"))
-  }
-
-  /** p20 pre-optimization: negative mining as a row_number window over
-    * the full anchor × same-source candidate join.
-    */
-  private def p20Old(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val a = Curation.leakageSafeSplitAssign(s, d)
-      .select(col("doc_id"), col("source"), col("component"))
-      .localCheckpoint(true)
-    val roots = a.groupBy("component")
-      .agg(count(lit(1)).as("n"), min(col("doc_id")).as("root"))
-      .filter(col("n") >= 2)
-    val pos = a.join(roots, "component")
-      .filter(col("doc_id") =!= col("root"))
-      .select(col("doc_id").as("anchor_id"), col("root").as("pos_id"),
-        col("source"), col("component"))
-    val cand = a.select(col("doc_id").as("neg_id"), col("source"),
-      col("component").as("ccomp"))
-    val w = Window.partitionBy(col("anchor_id"))
-      .orderBy(Dedup.baseHash(concat_ws(":",
-        col("anchor_id").cast("string"), col("neg_id").cast("string"))),
-        col("neg_id"))
-    cand.join(broadcast(pos), Seq("source"))
-      .filter(col("ccomp") =!= col("component"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("anchor_id"), col("pos_id"), col("neg_id"), col("source"))
-      .orderBy("anchor_id")
-  }
-
-  // ---- round-17 OLD formulations ----
-
-  /** Shared by the r17 graph probes: the tradeEdges derivation, verbatim
-    * (unchanged between rounds — both arms pay it identically; the probe
-    * ratio prices the LOOP structure that follows it).
-    */
-  private def tradeEdgesInline(s: SparkSession, d: String): DataFrame = {
-    val eraw = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .select((col("o_custkey") * 2).as("src"),
-              (col("l_suppkey") * 2 + 1).as("dst"))
-      .distinct()
-    eraw.select(explode(array(
-        struct(col("src").as("s"), col("dst").as("t")),
-        struct(col("dst").as("s"), col("src").as("t")))).as("e"))
-      .select(col("e.s").as("src"), col("e.t").as("dst"))
-      .repartition(col("src"))
-      .localCheckpoint(true)
-  }
-
-  /** g10 pre-round-17: per round, the survivor aggregate derived TWICE
-    * (once per broadcast build), a full-edge repartition(src) exchange
-    * before every checkpoint, edge-count fixpoint detection via a full
-    * no-op peel + count, and the conservative edge-row dispatch bound.
-    */
-  private def g10Old(s: SparkSession, d: String): DataFrame = {
-    val bcastMax = Graph.RANK_BCAST_MAX_NODES
-    val KCORE_CAP = 8
-    val edgesIn = tradeEdgesInline(s, d)
-    val n0 = edgesIn.count()
-    var edges = if (n0 > bcastMax) Graph.relayoutPartitioned(edgesIn, col("src"))
-      else edgesIn
-    var nCarry = n0
-    val census = Seq(2L, 3L, 4L).map { k =>
-      var cur = edges
-      var n = nCarry
-      var fixed = false
-      var round = 0
-      while (!fixed && round < KCORE_CAP) {
-        round += 1
-        val co = n > bcastMax
-        val keep0 = cur.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .filter(col("deg") >= k).select(col("node"))
-        val keep = if (co) keep0.localCheckpoint(true) else keep0
-        val peeled = Graph.iterJoin(
-          Graph.iterJoin(cur, keep.select(col("node").as("ks")),
-            col("src") === col("ks"), n, bcastMax, "left_semi"),
-          keep.select(col("node").as("kd")),
-          col("dst") === col("kd"), n, bcastMax, "left_semi")
-        val next =
-          if (co) Graph.relayoutPartitioned(peeled.localCheckpoint(true), col("src"))
-          else peeled.repartition(col("src")).localCheckpoint(true)
-        val m = next.count()
-        fixed = m == n
-        n = m
-        cur = next
-      }
-      edges = cur
-      nCarry = n
-      val conv = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .agg(coalesce(min(col("deg")) >= k, lit(true)).as("converged"))
-      cur.agg(countDistinct(col("src")).as("n_nodes"),
-          count(lit(1)).as("c2"))
-        .crossJoin(conv)
-        .select(lit(k).as("k"), col("n_nodes"),
-          expr("c2 div 2").as("n_edges"), col("converged"))
-    }
-    census.reduce(_ unionByName _).orderBy("k")
-  }
-
-  /** g04 pre-round-17: newly-discovered detection as distinct + anti-join
-    * against the accumulated dist frame, two eager checkpoints per round.
-    */
-  private def g04Old(s: SparkSession, d: String): DataFrame = {
-    val adj = tradeEdgesInline(s, d)
-    var dist = adj.sparkSession.range(1)
-      .select(lit(0L).as("node"), lit(0).cast("int").as("hop"))
-      .localCheckpoint(true)
-    var frontier = dist
-    var hop = 0
-    while (hop < 6 && !frontier.isEmpty) {
-      hop += 1
-      val next = adj.join(broadcast(frontier), adj("src") === frontier("node"))
-        .select(adj("dst").as("node")).distinct()
-        .join(dist, Seq("node"), "left_anti")
-        .withColumn("hop", lit(hop).cast("int"))
-        .localCheckpoint(true)
-      dist = dist.unionByName(next).localCheckpoint(true)
-      frontier = next
-    }
-    val profile = dist.groupBy(col("hop")).agg(count(lit(1)).as("n_nodes"))
-    val unreached = adj.select(col("src").as("node")).distinct()
-      .join(dist, Seq("node"), "left_anti")
-      .agg(count(lit(1)).as("n_nodes"))
-      .select(lit(-1).cast("int").as("hop"), col("n_nodes"))
-    profile.unionByName(unreached).filter(col("n_nodes") > 0)
-      .orderBy("hop")
-  }
-
-  /** g07 relax-from-all arm, kept for the REJECTED-experiment record:
-    * the frontier/changed-flag refinement measured 0.97x (sf0.1) and
-    * 0.92x (10x) against this and was reverted — see the ssspFrom doc
-    * comment. Not registered as an experiment (old == registered now).
-    */
-  private def g07Old(s: SparkSession, d: String): DataFrame = {
-    val ew = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
-      .join(Tables.lineitem(s, d).select(col("l_orderkey"), col("l_suppkey")),
-        col("l_orderkey") === col("o_orderkey"))
-      .groupBy((col("o_custkey") * 2).as("src"),
-        (col("l_suppkey") * 2 + 1).as("dst"))
-      .agg(count(lit(1)).as("mult"))
-      .select(col("src"), col("dst"),
-        expr("greatest(1L, 1000L div mult)").as("w"))
-    val adj = ew.select(explode(array(
-        struct(col("src").as("s"), col("dst").as("t"), col("w")),
-        struct(col("dst").as("s"), col("src").as("t"), col("w")))).as("e"))
-      .select(col("e.s").as("src"), col("e.t").as("dst"), col("e.w").as("w"))
-      .repartition(col("src"))
-      .localCheckpoint(true)
-    var dist = adj.sparkSession.range(1)
-      .select(lit(0L).as("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    for (_ <- 1 to 6) {
-      val relaxed = adj.join(broadcast(dist), adj("src") === dist("node"))
-        .select(adj("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
-    }
-    dist.select(col("node"),
-        when(col("node") % 2 === 0, lit("cust")).otherwise(lit("supp"))
-          .as("side"),
-        col("dist"))
-      .orderBy("node")
-  }
-
-  /** g08 pre-round-17: perLabel NOT checkpointed — the m_dir grand total
-    * re-derives the whole e2 pipeline (column pruning narrows its partial
-    * exchange, defeating exchange reuse).
-    */
-  private def g08Old(s: SparkSession, d: String): DataFrame = {
-    val (labels, edges) = Graph.lpaLabelsAndEdges(s, d)
-    val lab = edges.select(col("src").as("node")).distinct()
-      .join(labels, Seq("node"), "left")
-      .select(col("node"), coalesce(col("label"), lit(-1L)).as("label"))
-      .localCheckpoint(true)
-    val e2 = edges
-      .join(broadcast(lab.select(col("node").as("src"), col("label").as("lsrc"))),
-        "src")
-      .join(broadcast(lab.select(col("node").as("dst"), col("label").as("ldst"))),
-        "dst")
-    val perLabel = e2.groupBy(col("lsrc").as("label"))
-      .agg(count(lit(1)).as("deg_sum"),
-        count(when(col("lsrc") === col("ldst"), 1)).as("intra_deg"))
-    perLabel
-      .join(lab.groupBy("label").agg(count(lit(1)).as("n_nodes")), "label")
-      .crossJoin(broadcast(perLabel.agg(sum(col("deg_sum")).as("m_dir"))))
-      .select(col("label"), col("n_nodes"),
-        expr("intra_deg div 2").as("intra_edges"),
-        col("deg_sum"),
-        (col("m_dir") * col("intra_deg") - col("deg_sum") * col("deg_sum"))
-          .as("q_contrib_num"))
-      .orderBy("label")
-  }
-
-  /** g09 pre-round-17: THREE assignToCells executions — the 2-probe
-    * frame, a separate residency derivation for the edge builder, and
-    * the rollup's own re-derivation in its own action.
-    */
-  private def g09Old(s: SparkSession, d: String): DataFrame = {
-    import graft.operators.{Graph => G, Similarity => Sim}
-    val emb = Tables.embeddings(s, d)
-    val nCorpus = emb.count()
-    val nCells = Sim.N_CELLS
-    val corpus = emb.select(col("vec_id"), Sim.quantize(col("embedding")).as("qv"))
-    val cents = Sim.seedCentroids(corpus, nCells)
-    val resident = Sim.assignToCells(corpus, cents)
-    val kedges = Sim.knnProbeEdges(Sim.assignToCells(corpus, cents, 2), resident,
-      Sim.KNN_GRAPH_K).select(col("src"), col("dst"))
-    val edges = kedges.union(kedges.select(col("dst").as("src"),
-      col("src").as("dst"))).distinct().localCheckpoint(true)
-    val seeds = Sim.seedNodes(corpus, nCells)
-    val labels = G.lpaOn(edges, seeds, rounds = Sim.KNN_COMM_ROUNDS,
-      nNodesHint = Some(nCorpus))
-    resident.select(col("vec_id").as("node"), col("cell"))
-      .join(labels, Seq("node"), "left")
-      .select(col("node"), col("cell"), coalesce(col("label"), lit(-1L)).as("label"))
-      .groupBy("label")
-      .agg(count(lit(1)).as("n_members"),
-        countDistinct(col("cell")).as("n_cells"),
-        sum(col("node")).as("id_checksum"))
-      .orderBy("label")
-  }
-
-  def experiments: Map[String, (
-      (SparkSession, String) => DataFrame,
-      (SparkSession, String) => DataFrame)] = Map(
-    "g09" -> ((g09Old _, SparkEntry.queries("g09_knn_communities"))),
-    "g10" -> ((g10Old _, SparkEntry.queries("g10_kcore"))),
-    "g04" -> ((g04Old _, SparkEntry.queries("g04_bfs_reach"))),
-    "g08" -> ((g08Old _, SparkEntry.queries("g08_modularity"))),
-    "p20" -> ((p20Old _, SparkEntry.queries("p20_contrastive_pairs"))),
-    "g06" -> ((g06Old _, SparkEntry.queries("g06_link_prediction"))),
-    "g02" -> ((g02Old _, SparkEntry.queries("g02_triangle_census"))),
-    "t29" -> ((t29Old _, SparkEntry.queries("t29_nb_quality"))),
-    "g11" -> ((g11Old _, SparkEntry.queries("g11_ppr_trust"))),
-    "g03" -> ((g03Old _, SparkEntry.queries("g03_label_propagation"))))
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val names = sys.env.get("SPARK_GRAFT_AB")
       .map(_.split(",").toSeq).getOrElse(experiments.keys.toSeq.sorted)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
     try spark.read.parquet(s"$sfDir/lineitem.parquet")
       .groupBy("l_returnflag").count().write.mode("overwrite").format("noop").save()
@@ -472,20 +62,7 @@ object ProbeAB {
 
     names.foreach { name =>
       val (oldF, newF) = experiments(name)
-      // equality gate + warm pass for both arms
-      val oldRows = oldF(spark, sfDir).collect().toSeq.map(_.toSeq)
-      val newRows = newF(spark, sfDir).collect().toSeq.map(_.toSeq)
-      require(oldRows == newRows,
-        s"[ab] $name: OLD != NEW (${oldRows.length} vs ${newRows.length} rows) — probe refused")
-      val (oldT, newT) = (Array.ofDim[Double](REPS), Array.ofDim[Double](REPS))
-      for (r <- 0 until REPS) {
-        var t0 = System.nanoTime()
-        oldF(spark, sfDir).write.mode("overwrite").format("noop").save()
-        oldT(r) = (System.nanoTime() - t0) / 1e9
-        t0 = System.nanoTime()
-        newF(spark, sfDir).write.mode("overwrite").format("noop").save()
-        newT(r) = (System.nanoTime() - t0) / 1e9
-      }
+      val (oldT, newT) = compare(spark, sfDir, name, oldF, newF)
       val om = Bench.median(oldT.toSeq); val nm = Bench.median(newT.toSeq)
       println(f"""{"probe":"ab_$name","old_sec":$om%.3f,"new_sec":$nm%.3f,""" +
         f""""speedup":${om / nm}%.2f,""" +

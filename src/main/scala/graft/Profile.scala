@@ -2,7 +2,6 @@ package graft
 
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -24,23 +23,7 @@ object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val names = if (args.length > 1) args.drop(1).toSeq else Seq("d03_ngram_jaccard")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // experiment knobs (defaults = Spark defaults): forcing more
-      // post-shuffle parallelism at bench scale measured SLOWER — see the
-      // note in Bench.scala — but the knobs stay for re-running that
-      // experiment at other scales
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "64m"))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION", "1m"))
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("SPARK_GRAFT_MAX_SPLIT", "128m"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("ERROR")
     // operators with EAGER phases (p01's connected components, the
     // similarity family's centroid/codebook builds via localCheckpoint)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scaling-sweep corpus builder: writes an N× replica of an existing SF
@@ -71,13 +71,7 @@ object ScaleData {
     val Array(src, dst, factorStr) = args.take(3)
     val factor = factorStr.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession()
     spark.sparkContext.setLogLevel("WARN")
 
     val DOC_STRIDE = 1000000L      // well clear of sf0.1 doc_id range,

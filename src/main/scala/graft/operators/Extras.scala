@@ -858,13 +858,9 @@ object Extras {
     * margin at 8e18 to absorb the double-arithmetic slack of the bound
     * itself. Above it, the kernel lifts to DECIMAL(38,0): exact to 1e38,
     * i.e. ~3·10^16 users/type at $100 mean spend — 10 decades past the
-    * int64 cliff. Specs force the arms via the parameter; the
-    * `GRAFT_GINI_INT64_MAX` env override (the GRAFT_RANK_BCAST_MAX
-    * precedent) exists so the bench can PRICE the lift arm on a real
-    * corpus without planting one past 8e18 — production leaves it unset.
+    * int64 cliff. Specs force the arms via the parameter.
     */
-  private[graft] val GINI_INT64_SAFE: Double =
-    sys.env.get("GRAFT_GINI_INT64_MAX").map(_.toDouble).getOrElse(8.0e18)
+  private[graft] val GINI_INT64_SAFE: Double = 8.0e18
 
   /** Bin population above which q76's (type, bin) rank window abandons
     * the single per-bin row_number for the decomposed hot path — sized

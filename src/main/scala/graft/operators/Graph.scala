@@ -136,14 +136,9 @@ object Graph {
     * the edges never move. The hint is shuffle_hash, not merge: SMJ
     * would re-SORT the full edge side every round, and the hash build
     * side is the per-partition rank slice — the thing that fits.
-    *
-    * `GRAFT_RANK_BCAST_MAX` overrides the ceiling for profiling (0 runs
-    * every iterative key through the co-partitioned arm — how the
-    * crossover ledger in PLANS.md is measured); production leaves it
-    * unset.
+    * Specs force the co-partitioned arm through the `bcastMax` parameter.
     */
-  val RANK_BCAST_MAX_NODES: Long =
-    sys.env.get("GRAFT_RANK_BCAST_MAX").map(_.toLong).getOrElse(100000000L)
+  val RANK_BCAST_MAX_NODES: Long = 100000000L
 
   /** The per-round iteration join of the fixed-point family: an
     * edges-shaped frame joined to a per-node frame, physical strategy

@@ -37,7 +37,9 @@ object CdcStreaming {
 
   /** Parse + classify one micro-batch of raw (value, loop) records and
     * split valid/invalid. Tombstones (empty value, F2 main.go:124-126) are
-    * dropped.
+    * dropped. Invalid rows carry a `reason`: "unparseable envelope" (no
+    * Debezium payload, malformed JSON included), "no source table",
+    * "no row image" (both images null) or "missing id".
     */
   def parseBatch(batch: DataFrame): (DataFrame, DataFrame) = {
     // Classify every non-tombstone record ONCE, then split on a single
@@ -68,7 +70,11 @@ object CdcStreaming {
         col("env.payload.source.file").as("file"),
         col("env.payload.source.pos").as("pos"),
         col("env.payload.source.row").as("row"))
-    val invalid = classified.filter(!isValid).select(col("value"), col("loop"))
+    val invalid = classified.filter(!isValid).select(col("value"), col("loop"),
+      when(col("env.payload").isNull, "unparseable envelope")
+        .when(col("env.payload.source.table").isNull, "no source table")
+        .when(col("op") === "X", "no row image")
+        .otherwise("missing id").as("reason"))
     (valid, invalid)
   }
 
@@ -161,7 +167,8 @@ object CdcStreaming {
         .forEach(f => Files.delete(f))
     }
 
-  /** Route invalid records: error-log row always (S4); then, when the
+  /** Route invalid records (`parseBatch`'s second frame): error-log row
+    * with the record's reason always (S4); then, when the
     * REPUBLISH gate is on (config/config.go:20, checked main.go:98,149),
     * retry with loop+1 under the limit (ST2) and DLQ at the limit. With
     * the gate off the reference only error-logs — no redelivery.
@@ -169,7 +176,7 @@ object CdcStreaming {
   def routeFailures(spark: SparkSession, invalid: DataFrame, paths: SinkPaths,
       republishLimit: Int, republish: Boolean = true): Unit = {
     val errs = invalid.select(
-      col("value").as("data"), lit("unparseable envelope").as("error"),
+      col("value").as("data"), col("reason").as("error"),
       lit(null).cast("string").as("table_name"), lit(null).cast("string").as("db_name"),
       col("loop"))
     errs.write.mode(SaveMode.Append).parquet(paths.errors)
@@ -228,6 +235,28 @@ object CdcStreaming {
       }
       .start()
 
+  /** The one micro-batch loop behind every DML consumer mode: per
+    * batch, cache the raw records, parse and classify them, hand the valid
+    * rows (only `table`'s, when given) to `sink` if there are any, route
+    * the invalid ones if there are any, and release the cache.
+    */
+  private[streaming] def startBatches(spark: SparkSession, source: DataFrame,
+      paths: SinkPaths, republishLimit: Int, republish: Boolean,
+      checkpoint: String, table: Option[String] = None)
+      (sink: DataFrame => Unit): StreamingQuery =
+    source.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        val (valid, invalid) = parseBatch(batch.cache())
+        val rows = table.fold(valid)(t => valid.filter(col("tbl") === t))
+        if (!rows.isEmpty) sink(rows)
+        if (!invalid.isEmpty)
+          routeFailures(spark, invalid, paths, republishLimit, republish)
+        batch.unpersist()
+        ()
+      }
+      .start()
+
   /** Streaming variant of the S3 JDBC sink: every micro-batch's valid
     * changes applied as op-specific DML (JdbcSink), invalid records routed
     * to the error/retry/DLQ sinks. The reference's whole consumer loop
@@ -236,17 +265,8 @@ object CdcStreaming {
   def startJdbc(spark: SparkSession, source: DataFrame, url: String,
       table: String, paths: SinkPaths, republishLimit: Int = 3,
       checkpoint: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (valid, invalid) = parseBatch(batch.cache())
-        val forTable = valid.filter(col("tbl") === table)
-        if (!forTable.isEmpty) JdbcSink.applyChanges(forTable, url, table)
-        if (!invalid.isEmpty) routeFailures(spark, invalid, paths, republishLimit)
-        batch.unpersist()
-        ()
-      }
-      .start()
+    startBatches(spark, source, paths, republishLimit, republish = true,
+      checkpoint, Some(table))(JdbcSink.applyChanges(_, url, table))
 
   /** Streaming SCD2 sink: like [[startJdbc]] but each micro-batch appends
     * to a type-2 HISTORY table ([[JdbcSink.applyScd2]]) instead of
@@ -258,31 +278,14 @@ object CdcStreaming {
   def startJdbcScd2(spark: SparkSession, source: DataFrame, url: String,
       cdcTable: String, histTable: String, paths: SinkPaths,
       republishLimit: Int = 3, checkpoint: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (valid, invalid) = parseBatch(batch.cache())
-        val forTable = valid.filter(col("tbl") === cdcTable)
-        if (!forTable.isEmpty) JdbcSink.applyScd2(forTable, url, histTable)
-        if (!invalid.isEmpty) routeFailures(spark, invalid, paths, republishLimit)
-        batch.unpersist()
-        ()
-      }
-      .start()
+    startBatches(spark, source, paths, republishLimit, republish = true,
+      checkpoint, Some(cdcTable))(JdbcSink.applyScd2(_, url, histTable))
 
   /** Wire a streaming source of (value, loop) records into the
     * parse/upsert/retry sinks via foreachBatch.
     */
   def start(spark: SparkSession, source: DataFrame, paths: SinkPaths,
       republishLimit: Int = 3, checkpoint: String): StreamingQuery =
-    source.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (valid, invalid) = parseBatch(batch.cache())
-        if (!valid.isEmpty) upsertBatch(spark, valid, paths.state)
-        if (!invalid.isEmpty) routeFailures(spark, invalid, paths, republishLimit)
-        batch.unpersist()
-        ()
-      }
-      .start()
+    startBatches(spark, source, paths, republishLimit, republish = true,
+      checkpoint)(upsertBatch(spark, _, paths.state))
 }

@@ -31,17 +31,7 @@ object Consumer {
       CdcStreaming.startDdlStream(spark, source, client, cfg.tables,
         cfg.reclaim, cfg.replaceAllScheme, appliedPath, checkpoint)
     } else {
-      source.writeStream
-        .option("checkpointLocation", checkpoint)
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val (valid, invalid) = CdcStreaming.parseBatch(batch.cache())
-          if (!valid.isEmpty) CdcStreaming.upsertBatch(spark, valid, paths.state)
-          if (!invalid.isEmpty)
-            CdcStreaming.routeFailures(spark, invalid, paths,
-              cfg.republishLimit, republish = cfg.republish)
-          batch.unpersist()
-          ()
-        }
-        .start()
+      CdcStreaming.startBatches(spark, source, paths, cfg.republishLimit,
+        cfg.republish, checkpoint)(CdcStreaming.upsertBatch(spark, _, paths.state))
     }
 }

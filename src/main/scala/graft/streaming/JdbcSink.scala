@@ -29,23 +29,33 @@ object JdbcSink {
   /** Apply a batch of parsed changes (schema of CdcStreaming.parseBatch's
     * `valid` output) to `table` at `url`. Columns written: id, name, amount.
     */
-  def applyChanges(valid: DataFrame, url: String, table: String): Unit = {
-    val projected = valid.select(
+  def applyChanges(valid: DataFrame, url: String, table: String): Unit =
+    applyOrdered(valid, url)(applyOne(_, table, _))
+
+  /** The ordered apply both sinks share: project id, name, amount, op,
+    * src_seq and the binlog coordinate; repartition by id and
+    * sortWithinPartitions by binlog (file, pos, row) so each key's events
+    * apply in order (ST3) on any number of executors; run `one` per row
+    * over one connection per partition.
+    */
+  private def applyOrdered(valid: DataFrame, url: String)
+      (one: (Connection, org.apache.spark.sql.Row) => Unit): Unit =
+    valid.select(
       col("id"),
       element_at(col("after"), "name").as("name"),
       element_at(col("after"), "amount").cast("long").as("amount"),
-      col("op"), col("file"), col("pos"), col("row"))
-    projected
+      col("op"),
+      concat_ws(":", col("file"), col("pos"), col("row")).as("src_seq"),
+      col("file"), col("pos"), col("row"))
       .repartition(col("id"))
       .sortWithinPartitions(col("file"), col("pos"), col("row"))
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         if (rows.nonEmpty) {
           val conn = DriverManager.getConnection(url)
-          try rows.foreach(r => applyOne(conn, table, r))
+          try rows.foreach(r => one(conn, r))
           finally conn.close()
         }
       }
-  }
 
   private def applyOne(conn: Connection, table: String,
       r: org.apache.spark.sql.Row): Unit = {
@@ -122,25 +132,8 @@ object JdbcSink {
     * sortWithinPartitions by binlog (file, pos, row) — per-key apply
     * order holds on any number of executors.
     */
-  def applyScd2(valid: DataFrame, url: String, table: String): Unit = {
-    val projected = valid.select(
-      col("id"),
-      element_at(col("after"), "name").as("name"),
-      element_at(col("after"), "amount").cast("long").as("amount"),
-      col("op"),
-      concat_ws(":", col("file"), col("pos"), col("row")).as("src_seq"),
-      col("file"), col("pos"), col("row"))
-    projected
-      .repartition(col("id"))
-      .sortWithinPartitions(col("file"), col("pos"), col("row"))
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
-        if (rows.nonEmpty) {
-          val conn = DriverManager.getConnection(url)
-          try rows.foreach(r => applyScd2One(conn, table, r))
-          finally conn.close()
-        }
-      }
-  }
+  def applyScd2(valid: DataFrame, url: String, table: String): Unit =
+    applyOrdered(valid, url)(applyScd2One(_, table, _))
 
   private def applyScd2One(conn: Connection, table: String,
       r: org.apache.spark.sql.Row): Unit = {

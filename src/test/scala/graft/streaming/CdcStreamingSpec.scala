@@ -92,8 +92,16 @@ class CdcStreamingSpec extends SparkSpec {
     val paths = tmpPaths()
     implicit val sqlCtx = spark.sqlContext
     val poison = """{"not":"an envelope"}"""
+    // beside the poison record, one invalid record per other reason
+    val malformed = "not json at all"
+    val noTable = ev(7, "t", 1, "b1", 50).replace("\"table\":\"acct\",", "")
+    val noImage = ev(8, "x", 1, "b1", 60).replace(
+      "\"after\":{\"id\":8,\"name\":\"x\",\"amount\":1}", "\"after\":null")
+    val noId = ev(9, "y", 1, "b1", 70).replace("\"id\":9,", "")
+    val reasons = Map(poison -> "unparseable envelope", malformed -> "unparseable envelope",
+      noTable -> "no source table", noImage -> "no row image", noId -> "missing id")
 
-    var delivery: Seq[(String, Int)] = Seq((poison, 0))
+    var delivery: Seq[(String, Int)] = reasons.keys.toSeq.map((_, 0))
     for (round <- 1 to 3) {
       val ckpt = Files.createTempDirectory("ckpt").toString
       val mem = MemoryStream[(String, Int)]
@@ -110,10 +118,13 @@ class CdcStreamingSpec extends SparkSpec {
     }
 
     val dlq = spark.read.parquet(paths.dlq).as[(String, Int)].collect()
-    assert(dlq.toSeq == Seq((poison, 3)))
+    assert(dlq.toSeq.sorted == reasons.keys.toSeq.sorted.map((_, 3)))
     val errs = spark.read.parquet(paths.errors)
-    assert(errs.count() == 3) // one error-log row per delivery (S4)
-    assert(errs.select("error").distinct().collect().head.getString(0) == "unparseable envelope")
+    // one error-log row per record per delivery (S4), carrying its reason
+    assert(errs.count() == 3 * reasons.size)
+    val logged = errs.select("data", "error").as[(String, String)].collect()
+      .groupBy(identity).map { case (k, v) => k -> v.length }
+    assert(logged == reasons.map(_ -> 3))
   }
 
   test("streaming JDBC sink: micro-batched DML against Derby, dup absorbed, delete wins") {
