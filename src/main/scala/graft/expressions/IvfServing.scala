@@ -13,15 +13,17 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 object IvfServingKernels {
 
   /** The centroid norm [[probeCells]] divides by — defined HERE so every
-    * model builder (StreamingAnn's parquet loader, GraftExtensions' SQL
-    * literal path) produces bit-identical cnorms: a sequential left-fold
-    * double sum over the squared components, then one sqrt.
+    * model builder (`Similarity.assignToCells`, StreamingAnn's parquet
+    * loader, GraftExtensions' SQL literal path) produces bit-identical
+    * cnorms: the EXACT long self-dot, one cast to double, one sqrt — the
+    * `sqrt(CAST(c·c AS DOUBLE))` of every oracle. (A running double sum
+    * rounds differently once a partial sum passes 2^53.)
     */
   def centroidNorm(cv: Array[Long]): Double = {
-    var s = 0.0
+    var s = 0L
     var i = 0
-    while (i < cv.length) { s += cv(i).toDouble * cv(i); i += 1 }
-    math.sqrt(s)
+    while (i < cv.length) { s += cv(i) * cv(i); i += 1 }
+    math.sqrt(s.toDouble)
   }
 
   /** Per-subspace self-dots of one codebook row (`ccm(j)(m)` of
@@ -42,11 +44,12 @@ object IvfServingKernels {
   }
 
   /** Top-`nProbe` cell ids of a quantized query against the centroid
-    * matrix, ordered by (cosine score DESC, cell ASC) — exactly
-    * `Similarity.assignToCells`' ranking: score is the exact long dot cast
-    * to double over sqrt of the exact centroid self-dot cast to double,
-    * ties broken by ascending cell id (NaN impossible: centroids are
-    * non-zero by construction).
+    * matrix, ordered by (cosine score DESC, cell ASC) — THE cell ranking
+    * of the batch path (`Similarity.assignToCells`, per row, no window)
+    * and the streaming probe alike, mirrored by every oracle's
+    * row_number: score is the exact long dot cast to double over
+    * [[centroidNorm]], ties broken by ascending cell id (NaN impossible:
+    * centroids are non-zero by construction).
     */
   def probeCells(qvAd: ArrayData, cells: Array[Int], cents: Array[Array[Long]],
       cnorms: Array[Double], nProbe: Int): ArrayData = {

@@ -586,15 +586,20 @@ object Graph {
   private[graft] def lpaLabelsAndEdges(
       s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val edges = tradeEdges(s, d) // checkpointed by construction
-    val seeds = Tables.supplier(s, d)
-      .filter(col("s_nationkey") < LPA_SEED_NATIONS)
-      .select((col("s_suppkey") * 2 + 1).as("node"),
-        col("s_nationkey").cast("long").as("label"))
     // dispatch bound from parquet FOOTER counts (no scan, no shuffle):
     // trade-graph nodes ⊆ customers ∪ suppliers
     val bound = Tables.customer(s, d).count() + Tables.supplier(s, d).count()
-    (lpaOn(edges, seeds, nNodesHint = Some(bound)), edges)
+    (lpaOn(edges, lpaSeeds(s, d), nNodesHint = Some(bound)), edges)
   }
+
+  /** g03's seed frame: one (node, label = nation) row per seed supplier
+    * (suppkeys are unique, so the [[lpaOn]] input contract holds).
+    */
+  private[graft] def lpaSeeds(s: SparkSession, d: String): DataFrame =
+    Tables.supplier(s, d)
+      .filter(col("s_nationkey") < LPA_SEED_NATIONS)
+      .select((col("s_suppkey") * 2 + 1).as("node"),
+        col("s_nationkey").cast("long").as("label"))
 
   /** The g03 vote loop over any symmetric, src-partitioned, checkpointed
     * edge frame + (node, label) seed frame — the kernel g09 shares.

@@ -201,29 +201,13 @@ object Similarity {
   def annIvfTopK(s: SparkSession, d: String, nQueries: Int = 5, k: Int = 10): DataFrame = {
     val e = Tables.embeddings(s, d)
     val corpusRaw = e.filter(col("vec_id") >= nQueries)
-      .select(col("vec_id"), quantize(col("embedding")).as("cv"))
-    // deterministic centroid sample (k-means build stand-in), broadcast
-    val centroids = broadcast(
-      corpusRaw.filter(col("vec_id") % 31 === 6)
-        .withColumn("cell", row_number().over(Window.orderBy(col("vec_id"))))
-        .filter(col("cell") <= N_CELLS)
-        .select(col("cell"), col("cv").as("centroid")))
-    val corpus = corpusRaw.crossJoin(centroids)
-      .withColumn("score", qdot(col("cv"), col("centroid")).cast("double") /
-        sqrt(qdot(col("centroid"), col("centroid")).cast("double")))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))))
-      .filter(col("r") === 1)
-      .select(col("vec_id"), col("cv"), col("cell"))
-    val queriesDf = e.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("query_id"), quantize(col("embedding")).as("qv"))
-      .crossJoin(centroids)
-      .withColumn("score", qdot(col("qv"), col("centroid")).cast("double") /
-        sqrt(qdot(col("centroid"), col("centroid")).cast("double")))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("query_id")).orderBy(col("score").desc, col("cell"))))
-      .filter(col("r") <= N_PROBE)
-      .select(col("query_id"), col("qv"), col("cell"))
+      .select(col("vec_id"), quantize(col("embedding")).as("qv"))
+    // deterministic centroid sample (k-means build stand-in)
+    val centroids = seedCentroids(corpusRaw)
+    val corpus = assignToCells(corpusRaw, centroids).withColumnRenamed("qv", "cv")
+    val queriesDf = assignToCells(e.filter(col("vec_id") < nQueries)
+        .select(col("vec_id").as("query_id"), quantize(col("embedding")).as("qv")),
+        centroids, N_PROBE)
       .withColumn("qnorm", sqrt(qdot(col("qv"), col("qv")).cast("double")))
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cosine").desc, col("vec_id"))
@@ -274,11 +258,7 @@ object Similarity {
     */
   private def prunedAssignmentQv(corpusRaw: DataFrame)
       : (DataFrame, DataFrame) = {
-    val centroids = broadcast(
-      corpusRaw.filter(col("vec_id") % 31 === 6)
-        .withColumn("cell", row_number().over(Window.orderBy(col("vec_id"))))
-        .filter(col("cell") <= N_CELLS)
-        .select(col("cell"), col("cv").as("centroid")))
+    val centroids = broadcast(seedCentroids(corpusRaw.withColumnRenamed("cv", "qv")))
     val assignment = corpusRaw.crossJoin(centroids)
       .withColumn("cos_xc", qcosine(col("cv"), col("centroid")))
       .withColumn("r", row_number().over(
@@ -964,7 +944,7 @@ object Similarity {
 
   /** Deterministic seed centroids from a (vec_id, qv) corpus: every 31st
     * original id (planted copies excluded), first [[N_CELLS]] by id — the
-    * k-means-build stand-in shared by s03/s04/s05.
+    * k-means-build stand-in shared by every IVF-derived key.
     *
     * Scale shape: the candidate frame (1/31 of the corpus) is bounded to
     * [[N_CELLS]] rows FIRST via `orderBy().limit()` — a
@@ -972,10 +952,18 @@ object Similarity {
     * and only then ranked, so the unpartitioned `row_number` window runs
     * over exactly [[N_CELLS]] rows instead of funneling a
     * corpus-proportional frame through one task (same template as
-    * [[pqCodebook]]).
+    * [[pqCodebook]]). The model is collected once, as a local relation,
+    * so no consumer of it rescans the corpus.
     */
   def seedCentroids(corpus: DataFrame, nCells: Int = N_CELLS,
-      stride: Long = 31L, residue: Long = 6L): DataFrame =
+      stride: Long = 31L, residue: Long = 6L): DataFrame = {
+    val seed = seedCentroidPlan(corpus, nCells, stride, residue)
+    corpus.sparkSession.createDataFrame(java.util.Arrays.asList(seed.collect(): _*), seed.schema)
+  }
+
+  /** The bounded build [[seedCentroids]] collects. */
+  private[graft] def seedCentroidPlan(corpus: DataFrame, nCells: Int,
+      stride: Long, residue: Long): DataFrame =
     corpus.filter(col("vec_id") % stride === residue &&
         col("vec_id") < PLANT_ID_OFFSET)
       .orderBy("vec_id").limit(nCells)
@@ -983,26 +971,40 @@ object Similarity {
       .select(col("cell"), col("qv").as("centroid"))
 
   /** Assign every corpus vector to its best `nBest` cells by quantized
-    * cosine against broadcast centroids (tie-break (score DESC, cell),
-    * mirrored in every oracle that consumes it). One broadcast join + one
-    * window exchange; shared by s04/s05 (nBest=1: residency) and the s09
-    * query probe (nBest=N_PROBE).
+    * cosine against the centroids (tie-break (score DESC, cell), mirrored
+    * in every oracle that consumes it). The ≤ nCells-row centroid frame
+    * is collected once and ranked per row by the serving kernel
+    * ([[cellProbe]]) — one narrow projection, no join, no exchange.
+    * Every corpus column is carried through, plus `cell` (and its 1-based
+    * rank `r` under keepRank); shared by s04/s05 (nBest=1: residency) and
+    * the s09 query probe (nBest=N_PROBE). A row with a null `qv` ranks no
+    * cell and is dropped.
     */
   def assignToCells(corpus: DataFrame, centsIn: DataFrame, nBest: Int = 1,
       keepRank: Boolean = false): DataFrame = {
-    val cents = broadcast(centsIn)
-    val ranked = corpus.crossJoin(cents)
-      .withColumn("score", qdot(col("qv"), col("centroid")).cast("double") /
-        sqrt(qdot(col("centroid"), col("centroid")).cast("double")))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))))
-      .filter(col("r") <= nBest)
+    val ranked = corpus.select(col("*"),
+      posexplode(cellProbe(col("qv"), centsIn, nBest)).as(Seq("pos", "cell")))
     // keepRank: a caller that needs BOTH the n-probe frame and the
     // residency frame (r = 1 is a prefix of r <= n) can derive them
-    // from one ranked execution instead of running the corpus x cells
-    // ranking twice (the g09/g12 consolidation, round 17)
-    if (keepRank) ranked.select(col("vec_id"), col("qv"), col("cell"), col("r"))
-    else ranked.select(col("vec_id"), col("qv"), col("cell"))
+    // from one ranked execution instead of running the ranking twice
+    // (the g09/g12 consolidation, round 17)
+    if (keepRank) ranked.withColumn("r", col("pos") + 1).drop("pos")
+    else ranked.drop("pos")
+  }
+
+  /** The top-`nBest` cell ids (score DESC, cell ASC) of a quantized `qv`
+    * column against a (cell, centroid) frame — the ONE cell-ranking
+    * kernel of the batch path ([[assignToCells]]) and the streaming probe
+    * ([[graft.streaming.StreamingAnn]]). The frame is collected here
+    * (≤ nCells rows by every builder's contract) and rides the plan as
+    * reference objects of [[graft.expressions.IvfCellProbe]].
+    */
+  private[graft] def cellProbe(qv: Column, cents: DataFrame, nBest: Int): Column = {
+    val model = cents.select(col("cell").cast("int"), col("centroid")).collect()
+      .map(r => (r.getInt(0), r.getSeq[Long](1).toArray))
+    ColumnShim.column(graft.expressions.IvfCellProbe(ColumnShim.expression(qv),
+      model.map(_._1), model.map(_._2),
+      model.map(m => graft.expressions.IvfServingKernels.centroidNorm(m._2)), nBest))
   }
 
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
@@ -1078,7 +1080,7 @@ object Similarity {
   /** s05: one distributed Lloyd iteration — the k-means refinement that
     * turns s03's deterministic-sample centroids into a real IVF build
     * (repeat until movement < ε at corpus scale). Assignment reuses the
-    * s03 shape (broadcast centroids, per-vector best cell); the update
+    * s03 shape ([[assignToCells]], per-vector best cell); the update
     * step is the classic two-level aggregation: posexplode by dimension,
     * partial-aggregated sum per (cell, dim) — the map-side combine
     * reduces 64·N exploded rows to ≤ 64·k partials per task BEFORE the
@@ -1088,10 +1090,10 @@ object Similarity {
     * quantized cosine between old and new centroid, the convergence
     * signal a driver loop would threshold.
     *
-    * Scale shape: one broadcast join + one window exchange for
-    * assignment (inline-able as literals like the LSH planes once the
-    * build loop pins centroids), one thin (cell, dim, partial-sum)
-    * shuffle for the update. Nothing quadratic, no driver collect.
+    * Scale shape: assignment is one narrow projection (the ≤ k-row
+    * centroid frame collected once, ranked per row by the
+    * [[cellProbe]] kernel — no join, no exchange), one thin (cell, dim,
+    * partial-sum) shuffle for the update. Nothing quadratic.
     */
   def kmeansStep(s: SparkSession, d: String): DataFrame = {
     val corpus = Tables.embeddings(s, d)
@@ -1471,9 +1473,8 @@ object Similarity {
     val corpus = v.filter(col("vec_id") >= nQueries)
     val cents = seedCentroids(corpus)
     val cassign = assignToCells(corpus, cents).select("vec_id", "cell")
-    val qprobe = assignToCells(
-        queries.withColumnRenamed("query_id", "vec_id"), cents, nBest = N_PROBE)
-      .select(col("vec_id").as("query_id"), col("cell"))
+    val qprobe = assignToCells(queries, cents, nBest = N_PROBE)
+      .select("query_id", "cell")
     val cb = pqCodebook(corpus)
     val codes = pqEncode(corpus, cb)
     val lut = pqLut(queries, cb).withColumnRenamed("query_id", "lq")
@@ -1813,6 +1814,10 @@ object Similarity {
   }
 
   private def writeCodes(batch: DataFrame, dir: String, mode: String): Unit = {
+    // assignToCells drops a null-qv row: refuse it before any write,
+    // instead of letting it go missing from both tables
+    require(batch.filter(col("qv").isNull).isEmpty,
+      s"IVF-PQ index at $dir: a vector with a null qv cannot be indexed")
     val s = batch.sparkSession
     val cents = s.read.parquet(s"$dir/centroids")
     val cb = s.read.parquet(s"$dir/codebook")
@@ -1944,9 +1949,8 @@ object Similarity {
     val cents = s.read.parquet(s"$dir/centroids")
     val cb = s.read.parquet(s"$dir/codebook")
     // one assigned frame feeds both the cell collect and the scoring join
-    val qprobe = assignToCells(
-        queries.withColumnRenamed("query_id", "vec_id"), cents, nBest = N_PROBE)
-      .select(col("vec_id").as("query_id"), col("cell"))
+    val qprobe = assignToCells(queries, cents, nBest = N_PROBE)
+      .select("query_id", "cell")
       .localCheckpoint(true)
     val cells = qprobe.select("cell").distinct().collect().map(_.getInt(0))
     val codes = s.read.parquet(s"$dir/codes")
@@ -2528,45 +2532,13 @@ object Similarity {
     * ceil(|cell|/4). Emits per cell: population, quota, admitted count,
     * admitted-id checksum, and admitted label diversity.
     *
-    * Shape: broadcast-centroid argmax off one corpus scan, a per-cell
-    * rank window (bounded by the cell population), and a |cells|-row
-    * aggregate. Nothing quadratic, nothing unpartitioned.
+    * Shape: the p19 face of [[indexHealthFaces]] over
+    * [[cellAssignments]] (one corpus scan, kernel-ranked cells), a
+    * per-cell rank window (bounded by the cell population), and a
+    * |cells|-row aggregate. Nothing quadratic, nothing unpartitioned.
     */
-  def clusterQuotaSample(s: SparkSession, d: String): DataFrame = {
-    val all = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("cv"), col("label"))
-    // the s03 centroid build, with the row_number window fed from an
-    // explicit orderBy+limit (a TakeOrderedAndProject bound, so the
-    // unpartitioned-window census sees a bounded frame by construction;
-    // first-16-by-vec_id is identical either way)
-    val centroids = broadcast(
-      all.filter(col("vec_id") % 31 === 6)
-        .orderBy(col("vec_id")).limit(N_CELLS)
-        .withColumn("cell", row_number().over(Window.orderBy(col("vec_id"))))
-        .select(col("cell"), col("cv").as("centroid")))
-    val assigned = all.crossJoin(centroids)
-      .withColumn("score", qdot(col("cv"), col("centroid")).cast("double") /
-        sqrt(qdot(col("centroid"), col("centroid")).cast("double")))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))))
-      .filter(col("r") === 1)
-      .select(col("vec_id"), col("label"), col("cell"))
-    val wCell = Window.partitionBy(col("cell"))
-    val wRank = Window.partitionBy(col("cell")).orderBy(col("h"), col("vec_id"))
-    assigned
-      .withColumn("h", graft.operators.Dedup.baseHash(col("vec_id").cast("string")))
-      .withColumn("cell_n", count(lit(1)).over(wCell))
-      .withColumn("rk", row_number().over(wRank))
-      .withColumn("quota", expr("(cell_n + 3) div 4"))
-      .groupBy(col("cell"))
-      .agg(max(col("cell_n")).as("n_total"),
-        max(col("quota")).as("quota"),
-        count(when(col("rk") <= col("quota"), 1)).as("n_admitted"),
-        sum(when(col("rk") <= col("quota"), col("vec_id"))).as("admitted_id_sum"),
-        count_distinct(when(col("rk") <= col("quota"), col("label")))
-          .as("n_labels"))
-      .orderBy("cell")
-  }
+  def clusterQuotaSample(s: SparkSession, d: String): DataFrame =
+    indexHealthFaces(cellAssignments(s, d))._3
 
   /** p19 oracle: the s03 cell-assignment CTEs over the full corpus plus
     * the same md5 admission order and ceil-quota arithmetic.
@@ -2610,44 +2582,17 @@ object Similarity {
     * components, then div 64 (per-dimension mean) so per-cell long sums
     * hold headroom past 10^5 vectors/cell at unit-norm 10^6 quantization.
     *
-    * Scale shape: ONE corpus scan × broadcast centroids (the s03/p19
-    * assignment), per-vector arithmetic inside the projection, and a
+    * Scale shape: the s17 face of [[indexHealthFaces]] over
+    * [[cellAssignments]] — ONE corpus scan, kernel-ranked cells, the
+    * own-cell SSE from the per-vector fold, and a
     * ≤[[N_CELLS]]-row hash aggregate; the corpus total rides the same
     * aggregate output via a broadcast 1-row grand total (no second scan,
     * no unpartitioned window). At 100 TB the cell id is the stored
     * write-time partition key, so the scan reads cell-local partitions
     * and the report is delta-mergeable (sums and max re-aggregate).
     */
-  def ivfDrift(s: SparkSession, d: String): DataFrame = {
-    val all = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("cv"))
-    val centroids = broadcast(
-      all.filter(col("vec_id") % 31 === 6)
-        .orderBy(col("vec_id")).limit(N_CELLS)
-        .withColumn("cell", row_number().over(Window.orderBy(col("vec_id"))))
-        .select(col("cell"), col("cv").as("centroid")))
-    val assigned = all.crossJoin(centroids)
-      .withColumn("vv", qdot(col("cv"), col("cv")))
-      .withColumn("vc", qdot(col("cv"), col("centroid")))
-      .withColumn("cc", qdot(col("centroid"), col("centroid")))
-      .withColumn("score", col("vc").cast("double") /
-        sqrt(col("cc").cast("double")))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))))
-      .filter(col("r") === 1)
-      .select(col("cell"),
-        expr("(vv - 2 * vc + cc) div 64").as("msse"))
-    val perCell = assigned.groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_vecs"),
-        expr("sum(msse) div count(1)").as("mean_msse"),
-        max(col("msse")).as("max_msse"))
-    perCell
-      .crossJoin(broadcast(perCell.agg(sum(col("n_vecs")).as("n_corpus"))))
-      .select(col("cell"), col("n_vecs"),
-        expr(s"(n_vecs * $N_CELLS * 1000000) div n_corpus").as("imbalance_ppm"),
-        col("mean_msse"), col("max_msse"))
-      .orderBy("cell")
-  }
+  def ivfDrift(s: SparkSession, d: String): DataFrame =
+    indexHealthFaces(cellAssignments(s, d))._1
 
   /** s17 oracle: the p19 assignment CTEs carrying the three dot products,
     * identical div-64 / div-n integer arithmetic.
@@ -2697,46 +2642,15 @@ object Similarity {
     * sums only (Spark div truncates toward zero, DuckDB // floors — they
     * agree only on non-negatives, so no negative ever reaches a div).
     *
-    * Scale shape: the same one-scan × broadcast-centroids frame as
-    * s17/p19 — the per-(point,centroid) rows never leave their scan
-    * partition before the (vec_id) aggregate; then a ≤[[N_CELLS]]-row
-    * aggregate. Silhouette's pairwise-exact form is corpus² and is
+    * Scale shape: the s18 face of [[indexHealthFaces]] over the same
+    * [[cellAssignments]] frame as s17/p19 — the per-(point,centroid)
+    * rows never leave their scan partition before the map-side-combined
+    * (vec_id) aggregate; then a ≤[[N_CELLS]]-row aggregate.
+    * Silhouette's pairwise-exact form is corpus² and is
     * exactly what the simplified form exists to avoid.
     */
-  def silhouette(s: SparkSession, d: String): DataFrame = {
-    val all = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("cv"))
-    val centroids = broadcast(
-      all.filter(col("vec_id") % 31 === 6)
-        .orderBy(col("vec_id")).limit(N_CELLS)
-        .withColumn("cell", row_number().over(Window.orderBy(col("vec_id"))))
-        .select(col("cell"), col("cv").as("centroid")))
-    val scored = all.crossJoin(centroids)
-      .withColumn("sse",
-        qdot(col("cv"), col("cv")) - lit(2L) * qdot(col("cv"), col("centroid"))
-          + qdot(col("centroid"), col("centroid")))
-      .withColumn("score",
-        qdot(col("cv"), col("centroid")).cast("double") /
-          sqrt(qdot(col("centroid"), col("centroid")).cast("double")))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))))
-    val perPoint = scored.groupBy(col("vec_id"))
-      .agg(max(when(col("r") === 1, col("cell"))).as("cell"),
-        max(when(col("r") === 1, col("sse"))).as("a2"),
-        min(when(col("r") > 1, col("sse"))).as("b2"))
-      .select(col("cell"),
-        when(greatest(col("a2"), col("b2")) === 0, lit(1000L))
-          .otherwise(floor(lit(1000.0) *
-            ((sqrt(col("b2").cast("double")) - sqrt(col("a2").cast("double"))) /
-              greatest(sqrt(col("a2").cast("double")),
-                sqrt(col("b2").cast("double"))) + lit(1.0))).cast("long"))
-          .as("s_shift"))
-    perPoint.groupBy(col("cell"))
-      .agg(count(lit(1)).as("n_vecs"),
-        (expr("sum(s_shift) div count(1)") - lit(1000L)).as("mean_sil_milli"),
-        (min(col("s_shift")) - lit(1000L)).as("min_sil_milli"))
-      .orderBy("cell")
-  }
+  def silhouette(s: SparkSession, d: String): DataFrame =
+    indexHealthFaces(cellAssignments(s, d))._2
 
   /** s18 oracle: identical assignment, three-dot SSE, and the single
     * IEEE silhouette chain in the same operation order.
@@ -2773,13 +2687,12 @@ object Similarity {
 
   // ----------------------------------- amortized index-health report face
   /** The PRODUCTION face of the s17/s18/p19 trio (the p11/d21
-    * amortization discipline): all three read the same corpus ×
-    * broadcast-centroid assignment, so a monitoring job that runs them
-    * as registered keys pays that scan three times. Here the scored
-    * per-(vector, cell) frame — carrying the three dot products, the
-    * cosine and its per-vector rank, the superset every face needs — is
-    * materialized ONCE (localCheckpoint; n·N_CELLS thin rows), and the
-    * drift report, silhouette report, and quota sample all read it.
+    * amortization discipline): all three read the same
+    * [[cellAssignments]] frame, so a monitoring job that runs them as
+    * registered keys pays that scan three times. Here the per-vector
+    * (vec_id, label, cell, a2, b2) frame — the superset every face
+    * needs — is materialized ONCE (localCheckpoint; n thin rows), and
+    * the drift report, silhouette report, and quota sample all read it.
     * Spec-pinned row-for-row ≡ the three registered keys.
     *
     * At 100 TB the same amortization holds with the checkpoint replaced
@@ -2795,34 +2708,30 @@ object Similarity {
   /** The per-vector cell-assignment frame every health face consumes:
     * (vec_id, label, cell, a2 = squared distance to the OWN centroid,
     * b2 = squared distance to the nearest OTHER centroid) — one thin
-    * row per vector, reduced from the corpus × broadcast-centroid scan.
+    * row per vector: `cell` from [[assignToCells]], a2/b2 from one
+    * corpus × broadcast-centroid SSE scan folded per vector.
     * This is the frame [[writeCellAssignments]] persists: it is the
     * whole information content the s17/s18/p19 faces need, at 1/N_CELLS
     * the size of the raw scored pairs.
     */
   private[graft] def cellAssignments(s: SparkSession, d: String): DataFrame = {
-    val all = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("cv"), col("label"))
-    val centroids = broadcast(
-      all.filter(col("vec_id") % 31 === 6)
-        .orderBy(col("vec_id")).limit(N_CELLS)
-        .withColumn("cell", row_number().over(Window.orderBy(col("vec_id"))))
-        .select(col("cell"), col("cv").as("centroid")))
-    all.crossJoin(centroids)
-      .withColumn("vv", qdot(col("cv"), col("cv")))
-      .withColumn("vc", qdot(col("cv"), col("centroid")))
-      .withColumn("cc", qdot(col("centroid"), col("centroid")))
-      .withColumn("score", col("vc").cast("double") /
-        sqrt(col("cc").cast("double")))
-      .withColumn("r", row_number().over(
-        Window.partitionBy(col("vec_id")).orderBy(col("score").desc, col("cell"))))
-      .withColumn("sse", col("vv") - lit(2L) * col("vc") + col("cc"))
-      .groupBy(col("vec_id"))
-      .agg(max(col("label")).as("label"),
-        max(when(col("r") === 1, col("cell"))).as("cell"),
-        max(when(col("r") === 1, col("sse"))).as("a2"),
-        min(when(col("r") > 1, col("sse"))).as("b2"))
+    val corpus = Tables.embeddings(s, d)
+      .select(col("vec_id"), quantize(col("embedding")).as("qv"), col("label"))
+    cellAssignmentsOf(corpus, seedCentroids(corpus))
   }
+
+  /** [[cellAssignments]] over any (vec_id, qv, label) corpus and model. */
+  private[graft] def cellAssignmentsOf(corpus: DataFrame, cents: DataFrame)
+      : DataFrame =
+    // b2 needs EVERY other centroid: one broadcast crossJoin, folded back
+    // to one row per vector by a map-side-combined aggregate
+    assignToCells(corpus, cents)
+      .crossJoin(broadcast(cents.withColumnRenamed("cell", "c")))
+      .withColumn("sse", qdot(col("qv"), col("qv")) -
+        lit(2L) * qdot(col("qv"), col("centroid")) + qdot(col("centroid"), col("centroid")))
+      .groupBy("vec_id", "label", "cell")
+      .agg(max(when(col("c") === col("cell"), col("sse"))).as("a2"),
+        min(when(col("c") =!= col("cell"), col("sse"))).as("b2"))
 
   /** The three health faces off a (vec_id, label, cell, a2, b2) frame —
     * shared by the checkpoint-backed [[indexHealthReport]] and the
@@ -3063,9 +2972,8 @@ object Similarity {
 
   /** s21 over any (vec_id, qv) corpus (spec-injectable face). */
   private[graft] def knnGraphFrom(corpus: DataFrame): DataFrame = {
-    val cents = seedCentroids(corpus)
-    knnProbeEdges(assignToCells(corpus, cents), assignToCells(corpus, cents),
-      KNN_GRAPH_K).orderBy("src", "rank")
+    val resident = assignToCells(corpus, seedCentroids(corpus))
+    knnProbeEdges(resident, resident, KNN_GRAPH_K).orderBy("src", "rank")
   }
 
   /** Shared kNN edge builder: every probe-side vector ranks the
@@ -3256,9 +3164,12 @@ object Similarity {
   /** g12 over any embeddings frame (spec-injectable face). */
   private[graft] def knnCommunitiesOn(emb: DataFrame): DataFrame = {
     val n = emb.count()
-    knnCommunitiesBody(emb,
-      math.max(N_CELLS, math.sqrt(n.toDouble).toInt), n)
+    knnCommunitiesBody(emb, sqrtCells(n), n)
   }
+
+  /** The g12/s27 retrained geometry: max([[N_CELLS]], ⌊√N⌋) cells. */
+  private[graft] def sqrtCells(n: Long): Int =
+    math.max(N_CELLS, math.sqrt(n.toDouble).toInt)
 
   /** Shared g09/g12 body: the geometry (cell count) is the ONLY thing
     * the two keys decide differently.
@@ -3267,13 +3178,13 @@ object Similarity {
       nCorpus: Long): DataFrame = {
     val corpus = emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
     val cents = seedCentroids(corpus, nCells)
-    // ONE corpus x cells ranking, eagerly checkpointed, serves all three
+    // ONE cell ranking, eagerly checkpointed, serves all three
     // consumers (round-17 optimization — guide §5 caching judgment, the
     // t29 shape): the 2-probe frame, its r = 1 residency prefix feeding
     // the edge builder, and the final rollup's residency — previously
     // THREE full assignToCells executions (the rollup's ran in its own
     // action, where no exchange reuse can reach). Materialization is
-    // O(2N) thin rows against two saved corpus x cells rank passes.
+    // O(2N) thin rows against two saved rank passes.
     val asg2 = assignToCells(corpus, cents, 2, keepRank = true)
       .localCheckpoint(true)
     val resident = asg2.filter(col("r") === 1).drop("r")
@@ -3504,11 +3415,12 @@ object Similarity {
   /** s27 over any (vec_id, embedding) frame (spec-injectable face). */
   private[graft] def marginMiningOn(emb: DataFrame): DataFrame = {
     val n = emb.count()
-    val nCells = math.max(N_CELLS, math.sqrt(n.toDouble).toInt)
+    val nCells = sqrtCells(n)
     val corpus = emb.select(col("vec_id"), quantize(col("embedding")).as("qv"))
     val cents = seedCentroids(corpus, nCells)
-    val resident = assignToCells(corpus, cents)
-    val probes = assignToCells(corpus, cents, 2)
+    // one 2-probe ranking; residency is its r = 1 prefix
+    val probes = assignToCells(corpus, cents, 2, keepRank = true)
+    val resident = probes.filter(col("r") === 1)
     def side(df: DataFrame, par: Int): DataFrame =
       df.filter(col("vec_id") % 2 === par)
     // (even src, odd dst, cos_ppm) within a shared cell; `a` may carry

@@ -60,9 +60,6 @@ object StreamingAnn {
 
     // ---- model as reference objects (tiny by construction: nCells + k
     // rows — the layout contract bounds both)
-    val cents: Array[(Int, Array[Long])] = spark.read.parquet(s"$dir/centroids")
-      .collect().map(r => (r.getAs[Int]("cell"),
-        r.getSeq[Long](r.fieldIndex("centroid")).toArray))
     val cb: Array[(Long, Array[Long], Array[Long])] = spark.read.parquet(s"$dir/codebook")
       .collect().map(r => (r.getAs[Long]("j"),
         r.getSeq[Long](r.fieldIndex("cv")).toArray,
@@ -72,13 +69,9 @@ object StreamingAnn {
       s"codebook ids not dense 0..${cb.length - 1} — index at $dir is torn")
 
     // ---- per-row cell probe + ADC lookup tables, one compact kernel each
-    // (exact same scores/ties as the batch probe — see IvfServingKernels)
-    val cnorms = cents.map { case (_, cv) =>
-      graft.expressions.IvfServingKernels.centroidNorm(cv)
-    }
-    val probedCells = ColumnShim.column(graft.expressions.IvfCellProbe(
-      ColumnShim.expression(col("qv")), cents.map(_._1), cents.map(_._2),
-      cnorms, nProbe))
+    // (the batch path's own ranking column — Similarity.cellProbe)
+    val probedCells = Similarity.cellProbe(col("qv"),
+      spark.read.parquet(s"$dir/centroids"), nProbe)
     val luts = ColumnShim.column(graft.expressions.PqAdcLuts(
       ColumnShim.expression(col("qv")), cb.map(_._2), cb.map(_._3),
       M, Similarity.PQ_SUBDIM))

@@ -55,6 +55,18 @@ class IvfServingSpec extends SparkSpec {
     }
   }
 
+  test("centroidNorm is sqrt of the exact long self-dot, past 2^53 too") {
+    // components near 1e8: each square is ~1e16 > 2^53, so a running
+    // double sum rounds at every step while the exact long sum (6.4e17,
+    // far below Long.MaxValue) rounds once, in the final cast — the
+    // batch form sqrt(CAST(c·c AS DOUBLE)) every oracle computes
+    val cv = Array.tabulate(64)(i => 99999999L + i)
+    val exact = math.sqrt(cv.map(x => x * x).sum.toDouble)
+    val runningDouble = math.sqrt(cv.foldLeft(0.0)((s, x) => s + x.toDouble * x))
+    assert(exact != runningDouble, "the two forms must disagree on this vector")
+    assert(IvfServingKernels.centroidNorm(cv) == exact)
+  }
+
   test("PqAdcLuts equals the qq - 2qc + cc reference on every (m, j)") {
     val M = 4
     val SUB = 16

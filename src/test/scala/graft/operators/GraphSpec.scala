@@ -201,4 +201,26 @@ class GraphSpec extends SparkSpec {
     assert(out.map(x => (-x._3, -x._4, x._1, x._2)).toSeq ==
       out.map(x => (-x._3, -x._4, x._1, x._2)).sortBy(identity).toSeq)
   }
+
+  test("lpaOn seed contract: every caller's seed frame carries each node exactly once (sf0.01)") {
+    // lpaOn's seed fold keeps ONE label per node, so a caller passing a
+    // node twice would silently lose a label: pin the contract on every
+    // caller's real seed frame — g03's supplier seeds, and seedNodes at
+    // g09's fixed and g12's sqrt-N cell counts
+    import org.apache.spark.sql.functions.col
+    val d01 = d.replace("sf0.001", "sf0.01")
+    val corpus = Tables.embeddings(spark, d01)
+      .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
+    val n = corpus.count()
+    val frames = Seq(
+      "g03 supplier seeds" -> Graph.lpaSeeds(spark, d01),
+      "g09 seedNodes" -> Similarity.seedNodes(corpus, Similarity.N_CELLS),
+      "g12 seedNodes" -> Similarity.seedNodes(corpus, Similarity.sqrtCells(n)))
+    frames.foreach { case (who, seeds) =>
+      val nodes = seeds.select("node").collect().map(_.getLong(0))
+      assert(nodes.nonEmpty, s"$who is empty")
+      assert(nodes.distinct.length == nodes.length,
+        s"$who repeats a node: ${nodes.diff(nodes.distinct).take(5).mkString(",")}")
+    }
+  }
 }

@@ -464,6 +464,64 @@ class SimilaritySpec extends SparkSpec {
       s"probe did not prune partitions:\n${p.take(800)}")
   }
 
+  test("assignToCells equals a plain-Scala ranking, ties included, with no window or exchange") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(7)
+    def vec(): Array[Long] = Array.fill(8)((rnd.nextInt(2001) - 1000).toLong)
+    // non-dense cell ids; planted exact ties that must break by ascending
+    // cell: 9 and 4 share a vector, and 30 is 12's vector doubled (the
+    // score dot/|c| is scale-free and both scalings are exact in IEEE)
+    val base = Array.fill(6)(vec())
+    val cents: Seq[(Int, Array[Long])] = Seq(9 -> base(0), 4 -> base(0).clone(),
+      21 -> base(1), 12 -> base(2), 30 -> base(2).map(_ * 2), 2 -> base(3))
+    // random rows, plus rows ON the tied centroids so the ties rank first,
+    // one ON the untied centroid 21, and a null qv (ranks no cell: dropped)
+    val rows: Seq[(Long, Array[Long], String)] =
+      (0 until 40).map(i => (i.toLong, vec(), s"t$i")) ++
+        Seq((100L, base(0), "tie9/4"), (101L, base(2).map(_ * 3), "tie12/30"),
+          (102L, base(1), "on21"), (103L, null, "null qv"))
+    val corpus = rows.toDF("vec_id", "qv", "tag")
+    val centsDf = cents.toDF("cell", "centroid")
+    def dot(a: Array[Long], b: Array[Long]): Long = a.zip(b).map { case (x, y) => x * y }.sum
+    def expected(nBest: Int): Set[(Long, String, Int, Int)] =
+      rows.filter(_._2 != null).flatMap { case (id, qv, tag) =>
+        cents.map { case (c, cv) => (dot(qv, cv).toDouble / math.sqrt(dot(cv, cv).toDouble), c) }
+          .sortWith((a, b) => a._1 > b._1 || (a._1 == b._1 && a._2 < b._2))
+          .take(nBest).zipWithIndex.map { case ((_, c), i) => (id, tag, c, i + 1) }
+      }.toSet
+    for (nBest <- Seq(1, 3); keepRank <- Seq(false, true)) {
+      val got = Similarity.assignToCells(corpus, centsDf, nBest, keepRank)
+      // every corpus column is carried through, then cell (and r)
+      assert(got.columns.toSeq ==
+        Seq("vec_id", "qv", "tag", "cell") ++ (if (keepRank) Seq("r") else Nil))
+      val out = got.collect().map(r => (r.getLong(0), r.getString(2), r.getInt(3),
+        if (keepRank) r.getInt(4) else 0)).toSet
+      val want = expected(nBest).map(e => if (keepRank) e else e.copy(_4 = 0))
+      assert(out == want, s"nBest=$nBest keepRank=$keepRank")
+      val plan = got.queryExecution.executedPlan.toString
+      assert(!plan.contains("Window") && !plan.contains("Exchange"),
+        s"the ranking must be a narrow per-row projection:\n$plan")
+    }
+    // the planted ties really are ties, broken by ascending cell
+    val top = expected(2).filter(e => e._1 == 100L || e._1 == 101L).map(e => (e._1, e._3, e._4))
+    assert(top == Set((100L, 4, 1), (100L, 9, 2), (101L, 12, 1), (101L, 30, 2)))
+    // the s17/s18/p19 core: a2 = SSE to the own cell, b2 = least SSE to
+    // any other cell id (a tied twin counts as another cell: b2 = a2)
+    def sse(q: Array[Long], c: Array[Long]): Long = dot(q, q) - 2 * dot(q, c) + dot(c, c)
+    val own = expected(1).map(e => e._1 -> e._3).toMap
+    val cv = cents.toMap
+    val wantSse = rows.filter(_._2 != null).map { case (id, qv, tag) =>
+      (id, tag, own(id), sse(qv, cv(own(id))),
+        cents.collect { case (c, v) if c != own(id) => sse(qv, v) }.min)
+    }.toSet
+    val gotSse = Similarity.cellAssignmentsOf(corpus.withColumnRenamed("tag", "label"), centsDf)
+      .select("vec_id", "label", "cell", "a2", "b2").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getLong(3), r.getLong(4))).toSet
+    assert(gotSse == wantSse)
+    assert(wantSse.exists(e => e._1 == 100L && e._4 == 0L && e._5 == 0L) &&
+      wantSse.exists(e => e._1 == 102L && e._3 == 21 && e._4 == 0L && e._5 > 0L))
+  }
+
   test("s09 scale path is executable: cell-partitioned code table, pruned probe, same ranking") {
     // the composed IVF-PQ claim — "cell and codes are write-time columns;
     // a probe reads only its cells' partitions and scores via the
@@ -562,6 +620,12 @@ class SimilaritySpec extends SparkSpec {
     assert(beforeFiles.forall { case (f, sz) => afterFiles.get(f).contains(sz) },
       "append rewrote or removed an existing index file")
     assert(afterFiles.size > beforeFiles.size, "append added no files")
+    // a null qv ranks no cell: the append refuses it, touching nothing
+    val e = intercept[IllegalArgumentException](Similarity.appendToIvfPqIndex(
+      delta.limit(1).withColumn("qv", lit(null).cast("array<bigint>")), s"$dir/inc"))
+    assert(e.getMessage.contains("null qv"), e.getMessage)
+    assert(java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/inc")).iterator().asScala
+      .count(f => f.toString.endsWith(".parquet")) == afterFiles.size)
     Similarity.writeIvfPqIndex(corpus, s"$dir/scratch")
     val merged = Similarity.probeIvfPqIndex(spark, s"$dir/inc", queries)
     val scratch = Similarity.probeIvfPqIndex(spark, s"$dir/scratch", queries)
@@ -783,18 +847,22 @@ class SimilaritySpec extends SparkSpec {
     val corpus = all.filter(col("vec_id") >= 5)
     // centroid build: bounded even at production k (the %31 sample is
     // fixture-thin, so sample every 2nd id to reach 256 candidates)
+    assert(Similarity.seedCentroidPlan(corpus, K, 2L, 0L)
+      .queryExecution.sparkPlan.toString.contains("TakeOrderedAndProject"))
+    // the collected model is a local relation: consumers replay no scan
     val cents = Similarity.seedCentroids(corpus, nCells = K, stride = 2L, residue = 0L)
-    assert(cents.queryExecution.sparkPlan.toString.contains("TakeOrderedAndProject"))
+    assert(cents.queryExecution.sparkPlan.toString.contains("LocalTableScan"))
     assert(cents.count() == K)
     // broadcast-safety is arithmetic, not hope: k × 64 dims × 8 bytes
     assert(K.toLong * 64 * 8 < 8L * 1024 * 1024)
-    // assignment: centroids broadcast; every window partitions by vec_id
+    // assignment: the 256 centroids ride the cell-probe kernel as
+    // reference objects (no join at all); every window partitions by vec_id
     val assign = Similarity.assignToCells(corpus, cents)
     val ap = assign.queryExecution.sparkPlan
-    // pre-EnsureRequirements plan: the broadcast shows as the BNLJ itself
-    assert(ap.toString.contains("BroadcastNestedLoopJoin"), ap.toString.take(1500))
-    // the only empty-partition window allowed is the centroid rank, which
-    // sits on the 256-row TakeOrderedAndProject bound (the census rule)
+    assert(ap.toString.contains("ivf_cell_probe") && !ap.toString.contains("Join"),
+      ap.toString.take(1500))
+    // no empty-partition window over a corpus-proportional frame (the
+    // centroid rank ran inside seedCentroids, on the 256-row bound)
     assert(ap.collect {
       case w: WindowExec if w.partitionSpec.isEmpty &&
         !w.child.exists {
