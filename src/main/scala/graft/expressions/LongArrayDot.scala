@@ -51,16 +51,30 @@ case class LongArrayDot(left: Expression, right: Expression)
     sum
   }
 
+  /** Whether either array may hold a null element. */
+  private def elementsNullable: Boolean = Seq(left, right).exists(_.dataType match {
+    case ArrayType(_, containsNull) => containsNull
+    case _ => true
+  })
+
+  /** Null on a null array or a null element, so arrays that may hold
+    * nulls make the result nullable even when neither array is.
+    */
+  override def nullable: Boolean = super.nullable || elementsNullable
+
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val n = ctx.freshName("n")
       val i = ctx.freshName("i")
       val sum = ctx.freshName("sum")
+      // `isNull` is declared only when the result is nullable
+      val nullElement = if (!elementsNullable) "" else
+        s"if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }"
       s"""
          |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
          |long $sum = 0L;
          |for (int $i = 0; $i < $n; $i++) {
-         |  if ($a.isNullAt($i) || $b.isNullAt($i)) { ${ev.isNull} = true; break; }
+         |  $nullElement
          |  $sum += $a.getLong($i) * $b.getLong($i);
          |}
          |${ev.value} = $sum;

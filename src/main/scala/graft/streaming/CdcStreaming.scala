@@ -1,10 +1,12 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.{CompletionException, ExecutorService, Executors}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -30,52 +32,101 @@ import graft.cdc.Envelope
   * tail for `MERGE INTO` at scale. Micro-batch boundaries provide the
   * pause-the-world DDL barrier (ST4) — DDL rows would be applied on the
   * driver between batches.
+  *
+  * Per DML micro-batch ([[runBatch]]): classify the records once into a
+  * cached frame → one aggregate for every gate and count → the sink and
+  * the error/retry/DLQ writes side by side, each only when it has rows →
+  * one JSON line on the `graft.streaming.batch` logger → release the
+  * cache.
   */
 object CdcStreaming {
 
   final case class SinkPaths(state: String, errors: String, retry: String, dlq: String)
 
+  /** Why a record is invalid, in the order [[classify]] tests them. */
+  private val Reasons: Seq[String] =
+    Seq("unparseable envelope", "no source table", "no row image", "missing id")
+
   /** Parse + classify one micro-batch of raw (value, loop) records and
-    * split valid/invalid. Tombstones (empty value, F2 main.go:124-126) are
-    * dropped. Invalid rows carry a `reason`: "unparseable envelope" (no
-    * Debezium payload, malformed JSON included), "no source table",
-    * "no row image" (both images null) or "missing id".
+    * split valid/invalid: `split(classify(batch))`. Tombstones (empty
+    * value, F2 main.go:124-126) are dropped. Invalid rows carry a `reason`:
+    * "unparseable envelope" (no Debezium payload, malformed JSON included),
+    * "no source table", "no row image" (both images null) or "missing id".
     */
-  def parseBatch(batch: DataFrame): (DataFrame, DataFrame) = {
-    // Classify every non-tombstone record ONCE, then split on a single
-    // predicate so valid/invalid are exact complements — a record that
-    // parses but classifies as op 'X' (both images null) or lacks an id
-    // must reach the error/retry/DLQ sinks, not vanish (the reference logs
-    // every failed record to data_err, main.go:143-147).
-    val classified = batch
-      .filter(length(col("value")) > 0)
-      .withColumn("env", from_json(col("value"), Envelope.dmlEnvelopeSchema))
-      .withColumn("op",
-        when(col("env.payload").isNull || col("env.payload.source.table").isNull, "X")
-          .when(col("env.payload.before").isNull && col("env.payload.after").isNotNull, "I")
-          .when(col("env.payload.before").isNotNull && col("env.payload.after").isNotNull, "U")
-          .when(col("env.payload.before").isNotNull && col("env.payload.after").isNull, "D")
-          .otherwise("X"))
-      .withColumn("id",
-        element_at(coalesce(col("env.payload.after"), col("env.payload.before")), "id")
-          .cast("long"))
-    val isValid = col("op") =!= "X" && col("id").isNotNull
-    val valid = classified
-      .filter(isValid)
-      .select(
-        col("env.payload.source.db").as("db"),
-        col("env.payload.source.table").as("tbl"),
-        col("op"), col("id"),
-        col("env.payload.after").as("after"),
-        col("env.payload.source.file").as("file"),
-        col("env.payload.source.pos").as("pos"),
-        col("env.payload.source.row").as("row"))
-    val invalid = classified.filter(!isValid).select(col("value"), col("loop"),
-      when(col("env.payload").isNull, "unparseable envelope")
-        .when(col("env.payload.source.table").isNull, "no source table")
-        .when(col("op") === "X", "no row image")
-        .otherwise("missing id").as("reason"))
-    (valid, invalid)
+  def parseBatch(batch: DataFrame): (DataFrame, DataFrame) = split(classify(batch))
+
+  /** Parse every record ONCE. Each row carries `valid` (true; false for an
+    * invalid record; null for a tombstone, which neither split keeps),
+    * `op` (I/U/D), `id`, the valid shape's image and binlog columns, the
+    * raw `value` and `loop`, and an invalid record's `reason`. A record
+    * that parses but has no row image or no id is invalid, so it reaches
+    * the error/retry/DLQ sinks instead of vanishing (the reference logs
+    * every failed record to data_err, main.go:143-147).
+    */
+  private def classify(batch: DataFrame): DataFrame = {
+    val env = batch.withColumn("env", from_json(col("value"), Envelope.dmlEnvelopeSchema))
+    val p = col("env.payload")
+    val (before, after, src) = (p("before"), p("after"), p("source"))
+    val op = when(before.isNull && after.isNotNull, "I")
+      .when(before.isNotNull && after.isNotNull, "U")
+      .when(before.isNotNull && after.isNull, "D")
+    val id = element_at(coalesce(after, before), "id").cast("long")
+    val reason = Reasons.zip(Seq(p.isNull, src("table").isNull, op.isNull, id.isNull))
+      .foldRight(lit(null).cast("string")) { case ((r, bad), rest) => when(bad, r).otherwise(rest) }
+    val record = length(col("value")) > 0 // null or false for a tombstone
+    env.select(
+      when(record, reason.isNull).as("valid"),
+      op.as("op"), id.as("id"),
+      src("db").as("db"), src("table").as("tbl"), after.as("after"),
+      src("file").as("file"), src("pos").as("pos"), src("row").as("row"),
+      col("value"), col("loop"), when(record, reason).as("reason"))
+  }
+
+  /** The (valid, invalid) frames of a classified batch: valid rows as
+    * (db, tbl, op, id, after, file, pos, row), invalid ones as
+    * (value, loop, reason).
+    */
+  private def split(classified: DataFrame): (DataFrame, DataFrame) = (
+    classified.filter(col("valid"))
+      .select("db", "tbl", "op", "id", "after", "file", "pos", "row"),
+    classified.filter(!col("valid")).select("value", "loop", "reason"))
+
+  /** What one micro-batch held and where its rows go: `sink` valid rows
+    * for the sink (only the given table's), all `valid` rows with their
+    * I/U/D split, `tombstones`, `invalid` records by reason, and the
+    * `retry`/`dlq` shares of them (0 when the REPUBLISH gate is off).
+    */
+  final case class BatchCounts(sink: Long, valid: Long, tombstones: Long,
+      inserts: Long, updates: Long, deletes: Long, invalid: Map[String, Long],
+      retry: Long, dlq: Long) {
+
+    /** The batch's machine-readable log line. */
+    def json(batchId: Long, materializeMs: Long, sinkMs: Long, routeMs: Long): String = {
+      val reasons = Reasons.map(r => s""""$r":${invalid(r)}""").mkString(",")
+      s"""{"batch_id":$batchId,"valid":$valid,"tombstones":$tombstones,""" +
+        s""""inserts":$inserts,"updates":$updates,"deletes":$deletes,"sink_rows":$sink,""" +
+        s""""invalid":{$reasons},"retry":$retry,"dlq":$dlq,""" +
+        s""""materialize_ms":$materializeMs,"sink_ms":$sinkMs,"route_ms":$routeMs}"""
+    }
+  }
+
+  /** Every count of [[BatchCounts]] from one aggregate over `classified`. */
+  private def countBatch(classified: DataFrame, table: Option[String],
+      republishLimit: Int, republish: Boolean): BatchCounts = {
+    val (valid, failed) = (col("valid"), !col("valid"))
+    val next = col("loop") + 1
+    val gates = Seq(
+      "sink" -> table.fold(valid)(t => valid && col("tbl") === t),
+      "valid" -> valid, "tombstones" -> valid.isNull,
+      "I" -> (valid && col("op") === "I"), "U" -> (valid && col("op") === "U"),
+      "D" -> (valid && col("op") === "D"),
+      "retry" -> (failed && next < republishLimit), "dlq" -> (failed && next >= republishLimit)) ++
+      Reasons.map(r => r -> (failed && col("reason") === r))
+    val aggs = gates.map { case (k, c) => count_if(c).as(k) }
+    val n = classified.agg(aggs.head, aggs.tail: _*).first().getValuesMap[Long](gates.map(_._1))
+    BatchCounts(n("sink"), n("valid"), n("tombstones"), n("I"), n("U"), n("D"),
+      Reasons.map(r => r -> n(r)).toMap,
+      if (republish) n("retry") else 0L, if (republish) n("dlq") else 0L)
   }
 
   // ----------------------------------------------------- state commit log
@@ -167,27 +218,31 @@ object CdcStreaming {
         .forEach(f => Files.delete(f))
     }
 
-  /** Route invalid records (`parseBatch`'s second frame): error-log row
-    * with the record's reason always (S4); then, when the
-    * REPUBLISH gate is on (config/config.go:20, checked main.go:98,149),
-    * retry with loop+1 under the limit (ST2) and DLQ at the limit. With
-    * the gate off the reference only error-logs — no redelivery.
+  /** The writes that route a batch's invalid records (`parseBatch`'s
+    * second frame), given its [[BatchCounts]]: the error-log row with the
+    * record's reason (S4); then, when the REPUBLISH gate is on
+    * (config/config.go:20, checked main.go:98,149), retry with loop+1
+    * under the limit (ST2) and DLQ at the limit. With the gate off the
+    * counts hold no retry or DLQ rows and the reference only error-logs —
+    * no redelivery. A sink gets a write only when its count is non-zero,
+    * and each write is one file (`coalesce(1)`). The caller runs them.
     */
-  def routeFailures(spark: SparkSession, invalid: DataFrame, paths: SinkPaths,
-      republishLimit: Int, republish: Boolean = true): Unit = {
+  def routeFailures(invalid: DataFrame, counts: BatchCounts, paths: SinkPaths,
+      republishLimit: Int): Seq[() => Unit] = {
+    def append(rows: DataFrame, path: String): () => Unit =
+      () => rows.coalesce(1).write.mode(SaveMode.Append).parquet(path)
+    val next = col("loop") + 1
     val errs = invalid.select(
       col("value").as("data"), col("reason").as("error"),
       lit(null).cast("string").as("table_name"), lit(null).cast("string").as("db_name"),
       col("loop"))
-    errs.write.mode(SaveMode.Append).parquet(paths.errors)
-    if (republish) {
-      val retry = invalid.filter(col("loop") + 1 < republishLimit)
-        .select(col("value"), (col("loop") + 1).as("loop"))
-      if (!retry.isEmpty) retry.write.mode(SaveMode.Append).parquet(paths.retry)
-      val dead = invalid.filter(col("loop") + 1 >= republishLimit)
-        .select(col("value"), (col("loop") + 1).as("loop"))
-      if (!dead.isEmpty) dead.write.mode(SaveMode.Append).parquet(paths.dlq)
-    }
+    def redeliver(under: Boolean) =
+      invalid.filter((next < republishLimit) === under).select(col("value"), next.as("loop"))
+    Seq(
+      counts.invalid.values.sum -> append(errs, paths.errors),
+      counts.retry -> append(redeliver(under = true), paths.retry),
+      counts.dlq -> append(redeliver(under = false), paths.dlq))
+      .collect { case (n, write) if n > 0 => write }
   }
 
   /** ST4 pause-the-world DDL branch: per micro-batch (the natural barrier —
@@ -235,27 +290,82 @@ object CdcStreaming {
       }
       .start()
 
-  /** The one micro-batch loop behind every DML consumer mode: per
-    * batch, cache the raw records, parse and classify them, hand the valid
-    * rows (only `table`'s, when given) to `sink` if there are any, route
-    * the invalid ones if there are any, and release the cache.
+  /** The one micro-batch loop behind every DML consumer mode: each batch
+    * goes through [[runBatch]].
     */
-  private[streaming] def startBatches(spark: SparkSession, source: DataFrame,
-      paths: SinkPaths, republishLimit: Int, republish: Boolean,
-      checkpoint: String, table: Option[String] = None)
+  private[streaming] def startBatches(source: DataFrame, paths: SinkPaths,
+      republishLimit: Int, republish: Boolean, checkpoint: String,
+      table: Option[String] = None)
       (sink: DataFrame => Unit): StreamingQuery =
     source.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val (valid, invalid) = parseBatch(batch.cache())
-        val rows = table.fold(valid)(t => valid.filter(col("tbl") === t))
-        if (!rows.isEmpty) sink(rows)
-        if (!invalid.isEmpty)
-          routeFailures(spark, invalid, paths, republishLimit, republish)
-        batch.unpersist()
-        ()
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        runBatch(batch, batchId, paths, republishLimit, republish, table)(sink)
       }
       .start()
+
+  /** One micro-batch: classify the raw records once into a cached frame,
+    * take every gate and metric from one aggregate over it, then run the
+    * sink (valid rows, only `table`'s when given) and the failure writes
+    * of [[routeFailures]] side by side, each only when it has rows. Logs
+    * one JSON line ([[BatchCounts.json]]) on `graft.streaming.batch` and
+    * releases the cache.
+    */
+  private def runBatch(batch: DataFrame, batchId: Long, paths: SinkPaths,
+      republishLimit: Int, republish: Boolean, table: Option[String])
+      (sink: DataFrame => Unit): Unit = {
+    val t0 = System.nanoTime()
+    val classified = classify(batch).persist()
+    try {
+      val counts = countBatch(classified, table, republishLimit, republish)
+      val materializeMs = (System.nanoTime() - t0) / 1000000
+      val (valid, invalid) = split(classified)
+      val rows = table.fold(valid)(t => valid.filter(col("tbl") === t))
+      val sinkSide = if (counts.sink > 0) Seq(() => sink(rows)) else Nil
+      val sides = sinkSide ++ routeFailures(invalid, counts, paths, republishLimit)
+      val (sinkMs, routeMs) = runSides(batch.sparkSession, sides).splitAt(sinkSide.size)
+      BatchLog.info(counts.json(batchId, materializeMs, sinkMs.sum, routeMs.maxOption.getOrElse(0L)))
+    } finally classified.unpersist()
+  }
+
+  private val BatchLog = org.slf4j.LoggerFactory.getLogger("graft.streaming.batch")
+
+  /** Threads that run a batch's other sides while the first runs on the
+    * caller: the three failure writes.
+    */
+  private val SideThreads = 3
+  private lazy val sidePool: ExecutorService =
+    Executors.newFixedThreadPool(SideThreads, { (r: Runnable) =>
+      val t = new Thread(r, "graft-batch-side")
+      t.setDaemon(true)
+      t
+    })
+
+  /** Run `sides` at the same time, the first on the calling thread and
+    * the rest on the side pool, and return each one's milliseconds. A
+    * pool side runs with the caller's local properties (job group, query
+    * and execution ids), so stopping the query cancels its jobs too.
+    * Every side ends before the first failure is rethrown.
+    */
+  private def runSides(spark: SparkSession, sides: Seq[() => Unit]): Seq[Long] = {
+    def timed(side: () => Unit): Long = {
+      val t0 = System.nanoTime()
+      side()
+      (System.nanoTime() - t0) / 1000000
+    }
+    val session = spark.asInstanceOf[classic.SparkSession]
+    val pooled = sides.drop(1)
+      .map(s => SQLExecution.withThreadLocalCaptured(session, sidePool)(timed(s)))
+    def outcome(run: => Long): Either[Throwable, Long] =
+      try Right(run) catch {
+        case e: CompletionException if e.getCause != null => Left(e.getCause)
+        case e: Throwable => Left(e)
+      }
+    // join waits without reacting to interrupts, so every side has ended
+    val done = sides.take(1).map(s => outcome(timed(s))) ++ pooled.map(f => outcome(f.join()))
+    done.collectFirst { case Left(e) => throw e }
+    done.collect { case Right(ms) => ms }
+  }
 
   /** Streaming variant of the S3 JDBC sink: every micro-batch's valid
     * changes applied as op-specific DML (JdbcSink), invalid records routed
@@ -265,7 +375,7 @@ object CdcStreaming {
   def startJdbc(spark: SparkSession, source: DataFrame, url: String,
       table: String, paths: SinkPaths, republishLimit: Int = 3,
       checkpoint: String): StreamingQuery =
-    startBatches(spark, source, paths, republishLimit, republish = true,
+    startBatches(source, paths, republishLimit, republish = true,
       checkpoint, Some(table))(JdbcSink.applyChanges(_, url, table))
 
   /** Streaming SCD2 sink: like [[startJdbc]] but each micro-batch appends
@@ -278,7 +388,7 @@ object CdcStreaming {
   def startJdbcScd2(spark: SparkSession, source: DataFrame, url: String,
       cdcTable: String, histTable: String, paths: SinkPaths,
       republishLimit: Int = 3, checkpoint: String): StreamingQuery =
-    startBatches(spark, source, paths, republishLimit, republish = true,
+    startBatches(source, paths, republishLimit, republish = true,
       checkpoint, Some(cdcTable))(JdbcSink.applyScd2(_, url, histTable))
 
   /** Wire a streaming source of (value, loop) records into the
@@ -286,6 +396,6 @@ object CdcStreaming {
     */
   def start(spark: SparkSession, source: DataFrame, paths: SinkPaths,
       republishLimit: Int = 3, checkpoint: String): StreamingQuery =
-    startBatches(spark, source, paths, republishLimit, republish = true,
+    startBatches(source, paths, republishLimit, republish = true,
       checkpoint)(upsertBatch(spark, _, paths.state))
 }

@@ -31,7 +31,7 @@ object Consumer {
       CdcStreaming.startDdlStream(spark, source, client, cfg.tables,
         cfg.reclaim, cfg.replaceAllScheme, appliedPath, checkpoint)
     } else {
-      CdcStreaming.startBatches(spark, source, paths, cfg.republishLimit,
+      CdcStreaming.startBatches(source, paths, cfg.republishLimit,
         cfg.republish, checkpoint)(CdcStreaming.upsertBatch(spark, _, paths.state))
     }
 }

@@ -1,6 +1,8 @@
 package graft.streaming
 
-import java.sql.{Connection, DriverManager}
+import java.sql.{Connection, DriverManager, PreparedStatement}
+
+import scala.collection.mutable
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -36,10 +38,10 @@ object JdbcSink {
     * src_seq and the binlog coordinate; repartition by id and
     * sortWithinPartitions by binlog (file, pos, row) so each key's events
     * apply in order (ST3) on any number of executors; run `one` per row
-    * over one connection per partition.
+    * over one connection per partition, preparing each statement once.
     */
   private def applyOrdered(valid: DataFrame, url: String)
-      (one: (Connection, org.apache.spark.sql.Row) => Unit): Unit =
+      (one: (Statements, org.apache.spark.sql.Row) => Unit): Unit =
     valid.select(
       col("id"),
       element_at(col("after"), "name").as("name"),
@@ -51,61 +53,68 @@ object JdbcSink {
       .sortWithinPartitions(col("file"), col("pos"), col("row"))
       .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
         if (rows.nonEmpty) {
-          val conn = DriverManager.getConnection(url)
-          try rows.foreach(r => one(conn, r))
-          finally conn.close()
+          val sts = new Statements(DriverManager.getConnection(url))
+          try rows.foreach(r => one(sts, r))
+          finally sts.close()
         }
       }
 
-  private def applyOne(conn: Connection, table: String,
+  /** One partition's connection, each SQL string prepared on first use
+    * and kept until the connection closes. A statement stays usable after
+    * an integrity violation (F8), which fails only that execution.
+    */
+  private final class Statements(conn: Connection) {
+    private val prepared = mutable.HashMap.empty[String, PreparedStatement]
+    def apply(sql: String): PreparedStatement =
+      prepared.getOrElseUpdate(sql, conn.prepareStatement(sql))
+    def close(): Unit =
+      try prepared.values.foreach(_.close()) finally conn.close()
+  }
+
+  private def applyOne(sts: Statements, table: String,
       r: org.apache.spark.sql.Row): Unit = {
     val id = r.getLong(r.fieldIndex("id"))
     r.getString(r.fieldIndex("op")) match {
       case "D" =>
-        val st = conn.prepareStatement(s"DELETE FROM $table WHERE id = ?")
-        try { st.setLong(1, id); st.executeUpdate() } finally st.close()
+        val st = sts(s"DELETE FROM $table WHERE id = ?")
+        st.setLong(1, id)
+        st.executeUpdate()
       case "I" =>
-        try insert(conn, table, r, id)
+        try insert(sts, table, r, id)
         catch {
           // F8: duplicate-entry redelivery is skipped, not fatal
           case _: java.sql.SQLIntegrityConstraintViolationException => ()
         }
       case _ => // "U"
-        val st = conn.prepareStatement(
-          s"UPDATE $table SET name = ?, amount = ? WHERE id = ?")
-        try {
-          setName(st, 1, r)
-          setAmount(st, 2, r)
-          st.setLong(3, id)
-          if (st.executeUpdate() == 0) insert(conn, table, r, id)
-        } finally st.close()
+        val st = sts(s"UPDATE $table SET name = ?, amount = ? WHERE id = ?")
+        setName(st, 1, r)
+        setAmount(st, 2, r)
+        st.setLong(3, id)
+        if (st.executeUpdate() == 0) insert(sts, table, r, id)
     }
   }
 
-  private def setName(st: java.sql.PreparedStatement, pos: Int,
+  private def setName(st: PreparedStatement, pos: Int,
       r: org.apache.spark.sql.Row): Unit = {
     val i = r.fieldIndex("name")
     if (r.isNullAt(i)) st.setNull(pos, java.sql.Types.VARCHAR)
     else st.setString(pos, r.getString(i))
   }
 
-  private def setAmount(st: java.sql.PreparedStatement, pos: Int,
+  private def setAmount(st: PreparedStatement, pos: Int,
       r: org.apache.spark.sql.Row): Unit = {
     val i = r.fieldIndex("amount")
     if (r.isNullAt(i)) st.setNull(pos, java.sql.Types.BIGINT)
     else st.setLong(pos, r.getLong(i))
   }
 
-  private def insert(conn: Connection, table: String,
+  private def insert(sts: Statements, table: String,
       r: org.apache.spark.sql.Row, id: Long): Unit = {
-    val st = conn.prepareStatement(
-      s"INSERT INTO $table (id, name, amount) VALUES (?, ?, ?)")
-    try {
-      st.setLong(1, id)
-      setName(st, 2, r)
-      setAmount(st, 3, r)
-      st.executeUpdate()
-    } finally st.close()
+    val st = sts(s"INSERT INTO $table (id, name, amount) VALUES (?, ?, ?)")
+    st.setLong(1, id)
+    setName(st, 2, r)
+    setAmount(st, 3, r)
+    st.executeUpdate()
   }
 
   // ------------------------------------------------------------ SCD2 sink
@@ -135,41 +144,32 @@ object JdbcSink {
   def applyScd2(valid: DataFrame, url: String, table: String): Unit =
     applyOrdered(valid, url)(applyScd2One(_, table, _))
 
-  private def applyScd2One(conn: Connection, table: String,
+  private def applyScd2One(sts: Statements, table: String,
       r: org.apache.spark.sql.Row): Unit = {
     val id = r.getLong(r.fieldIndex("id"))
     val seq = r.getString(r.fieldIndex("src_seq"))
     val op = r.getString(r.fieldIndex("op"))
     // redelivery gate: this event already left its row
-    val seen = conn.prepareStatement(
-      s"SELECT 1 FROM $table WHERE id = ? AND src_seq = ?")
-    val already = try {
-      seen.setLong(1, id); seen.setString(2, seq)
-      val rs = seen.executeQuery(); try rs.next() finally rs.close()
-    } finally seen.close()
+    val seen = sts(s"SELECT 1 FROM $table WHERE id = ? AND src_seq = ?")
+    seen.setLong(1, id); seen.setString(2, seq)
+    val already = { val rs = seen.executeQuery(); try rs.next() finally rs.close() }
     if (!already) {
-      val close = conn.prepareStatement(
-        s"UPDATE $table SET is_current = false WHERE id = ? AND is_current = true")
-      try { close.setLong(1, id); close.executeUpdate() } finally close.close()
-      val verSt = conn.prepareStatement(
-        s"SELECT COALESCE(MAX(ver), 0) + 1 FROM $table WHERE id = ?")
-      val ver = try {
-        verSt.setLong(1, id)
-        val rs = verSt.executeQuery(); try { rs.next(); rs.getInt(1) } finally rs.close()
-      } finally verSt.close()
-      val ins = conn.prepareStatement(
-        s"INSERT INTO $table (id, ver, name, amount, op, src_seq, is_current)" +
-          " VALUES (?, ?, ?, ?, ?, ?, ?)")
-      try {
-        ins.setLong(1, id)
-        ins.setInt(2, ver)
-        setName(ins, 3, r)
-        setAmount(ins, 4, r)
-        ins.setString(5, op)
-        ins.setString(6, seq)
-        ins.setBoolean(7, op != "D")
-        ins.executeUpdate()
-      } finally ins.close()
+      val close = sts(s"UPDATE $table SET is_current = false WHERE id = ? AND is_current = true")
+      close.setLong(1, id)
+      close.executeUpdate()
+      val verSt = sts(s"SELECT COALESCE(MAX(ver), 0) + 1 FROM $table WHERE id = ?")
+      verSt.setLong(1, id)
+      val ver = { val rs = verSt.executeQuery(); try { rs.next(); rs.getInt(1) } finally rs.close() }
+      val ins = sts(s"INSERT INTO $table (id, ver, name, amount, op, src_seq, is_current)" +
+        " VALUES (?, ?, ?, ?, ?, ?, ?)")
+      ins.setLong(1, id)
+      ins.setInt(2, ver)
+      setName(ins, 3, r)
+      setAmount(ins, 4, r)
+      ins.setString(5, op)
+      ins.setString(6, seq)
+      ins.setBoolean(7, op != "D")
+      ins.executeUpdate()
     }
   }
 }

@@ -37,4 +37,17 @@ class LongArrayDotSpec extends SparkSpec {
     }
     assert(ex.getMessage.contains("long_array_dot") || ex.getMessage.contains("DATATYPE"))
   }
+
+  test("non-nullable arrays: the stage compiles without codegen fallback and the dot is right") {
+    val df = spark.range(1, 6).select(
+      Similarity.qdot(array(col("id"), col("id") * 2), array(lit(3L), col("id"))).as("d"))
+    assert(!df.schema("d").nullable)
+    assert(df.queryExecution.executedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.execution.WholeStageCodegenExec]))
+    val key = "spark.sql.codegen.fallback"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "false") // a compile error fails the query instead
+    try assert(df.collect().map(_.getLong(0)).toSeq == (1L to 5L).map(i => 3 * i + 2 * i * i))
+    finally spark.conf.set(key, prev)
+  }
 }

@@ -1,9 +1,18 @@
 package graft.streaming
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.ObjectMapper
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, Logger}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkSpec
 
@@ -34,6 +43,25 @@ class CdcStreamingSpec extends SparkSpec {
     val base = Files.createTempDirectory("cdcstream").toString
     CdcStreaming.SinkPaths(s"$base/state", s"$base/errors", s"$base/retry", s"$base/dlq")
   }
+
+  /** The lines logged on `graft.streaming.batch` while `body` runs. */
+  private def batchLines(body: => Unit): Seq[String] = {
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("batch-lines", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = lines.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = LogManager.getLogger("graft.streaming.batch").asInstanceOf[Logger]
+    val level = logger.getLevel
+    capture.start()
+    logger.addAppender(capture)
+    logger.setLevel(Level.INFO)
+    try body
+    finally { logger.removeAppender(capture); logger.setLevel(level); capture.stop() }
+    lines.asScala.toSeq
+  }
+
+  private def rows(path: String): Long =
+    if (Files.exists(Paths.get(path))) spark.read.parquet(path).count() else 0L
 
   test("upsert stream: latest state across micro-batches, duplicates absorbed, deletes win") {
     val paths = tmpPaths()
@@ -222,5 +250,73 @@ class CdcStreamingSpec extends SparkSpec {
     q2.processAllAvailable()
     q2.stop()
     assert(dump() == expected, "full replay must leave the history unchanged")
+  }
+
+  test("one JSON line per micro-batch: counts equal the hand-counted batch") {
+    val paths = tmpPaths()
+    implicit val sqlCtx = spark.sqlContext
+    // the five-failure fixture of the bounded-retry case, one record at
+    // loop 2 so it reaches the DLQ, beside 2 tombstones and 2 I, 1 U, 1 D
+    val noTable = ev(7, "t", 1, "b1", 50).replace("\"table\":\"acct\",", "")
+    val noImage = ev(8, "x", 1, "b1", 60).replace(
+      "\"after\":{\"id\":8,\"name\":\"x\",\"amount\":1}", "\"after\":null")
+    val noId = ev(9, "y", 1, "b1", 70).replace("\"id\":9,", "")
+    val batch = Seq(
+      (ev(1, "alice", 100, "b1", 10), 0), (ev(2, "bob", 200, "b1", 20), 0),
+      (ev(1, "alice2", 150, "b1", 30, op = "U"), 0), (ev(2, "bob", 200, "b1", 40, op = "D"), 0),
+      ("", 0), ("", 0),
+      ("""{"not":"an envelope"}""", 0), ("not json at all", 0), (noTable, 0), (noImage, 0),
+      (noId, 2))
+    val lines = batchLines {
+      val mem = MemoryStream[(String, Int)]
+      val q = CdcStreaming.start(spark, mem.toDF().toDF("value", "loop"), paths,
+        republishLimit = 3, checkpoint = Files.createTempDirectory("ckpt").toString)
+      mem.addData(batch: _*)
+      q.processAllAvailable(); q.stop()
+    }
+    assert(lines.size == 1, lines)
+    val j = new ObjectMapper().readTree(lines.head)
+    val counts = Seq("valid", "tombstones", "inserts", "updates", "deletes", "sink_rows",
+      "retry", "dlq").map(k => k -> j.get(k).asLong).toMap
+    assert(counts == Map("valid" -> 4, "tombstones" -> 2, "inserts" -> 2, "updates" -> 1,
+      "deletes" -> 1, "sink_rows" -> 4, "retry" -> 4, "dlq" -> 1))
+    val invalid = j.get("invalid").properties().asScala
+      .map(e => e.getKey -> e.getValue.asLong).toMap
+    assert(invalid == Map("unparseable envelope" -> 2L, "no source table" -> 1L,
+      "no row image" -> 1L, "missing id" -> 1L))
+    assert(Seq("batch_id", "materialize_ms", "sink_ms", "route_ms")
+      .forall(k => j.get(k).asLong >= 0))
+    // the sinks hold what the line reports
+    assert((rows(paths.errors), rows(paths.retry), rows(paths.dlq)) == ((5L, 4L, 1L)))
+    val state = CdcStreaming.currentState(spark, paths.state)
+      .select("id", "name").as[(Long, String)]
+    assert(state.collect().toSeq == Seq((1L, "alice2")))
+  }
+
+  test("a failing sink fails the batch after its failure writes have landed; restart recovers") {
+    val paths = tmpPaths()
+    val ckpt = Files.createTempDirectory("ckpt").toString
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, Int)]
+    val q = CdcStreaming.startBatches(mem.toDF().toDF("value", "loop"), paths,
+      republishLimit = 3, republish = true, ckpt)(_ => throw new IllegalStateException("sink down"))
+    mem.addData((ev(1, "alice", 100, "b1", 10), 0), ("not json at all", 0),
+      ("""{"not":"an envelope"}""", 2))
+    val e = intercept[StreamingQueryException](q.processAllAvailable())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => c.isInstanceOf[IllegalStateException] && c.getMessage == "sink down"), e)
+    ListenerBusDrain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    assert((rows(paths.errors), rows(paths.retry), rows(paths.dlq)) == ((2L, 1L, 1L)))
+    for (p <- Seq(paths.errors, paths.retry, paths.dlq))
+      assert(!Files.exists(Paths.get(p, "_temporary")), p)
+
+    // the failed batch was never committed: a restart with a working sink redoes it
+    val q2 = CdcStreaming.start(spark, mem.toDF().toDF("value", "loop"), paths,
+      republishLimit = 3, checkpoint = ckpt)
+    q2.processAllAvailable(); q2.stop()
+    val state = CdcStreaming.currentState(spark, paths.state)
+      .select("id", "name", "amount").as[(Long, String, Long)]
+    assert(state.collect().toSeq == Seq((1L, "alice", 100L)))
   }
 }

@@ -52,4 +52,20 @@ class ConsumerSpec extends SparkSpec {
     val retry = spark.read.parquet(paths.retry).as[(String, Int)].collect()
     assert(retry.toSeq == Seq(("still not json", 1)))
   }
+
+  test("env knobs fail loudly, naming the variable and the bad value") {
+    def err(kv: (String, String)): String =
+      intercept[IllegalArgumentException](cfg(kv)).getMessage
+    assert(err("REPUBLISH_LIMIT" -> "0") == """REPUBLISH_LIMIT="0" is not a limit of at least 1""")
+    assert(err("REPUBLISH_LIMIT" -> "three").startsWith("REPUBLISH_LIMIT=\"three\""))
+    assert(err("DBPORT" -> "0") == """DBPORT="0" is not a port (1-65535)""")
+    assert(err("DBPORT" -> "65536").startsWith("DBPORT=\"65536\""))
+    assert(err("DBPORT" -> "x").startsWith("DBPORT=\"x\""))
+    assert(err("REPUBLISH" -> "yes") == """REPUBLISH="yes" is not a boolean (true/false)""")
+    assert(err("ACTIVE_SCHEME" -> "1").startsWith("ACTIVE_SCHEME=\"1\""))
+    assert(err("TIMEZONE" -> "7h") == """TIMEZONE="7h" is not an integer""")
+    val edge = cfg("REPUBLISH_LIMIT" -> "1", "DBPORT" -> "65535", "REPUBLISH" -> "FALSE")
+    assert(edge.republishLimit == 1 && edge.dbPort == 65535 && !edge.republish)
+    assert(cfg().republishLimit == 3 && cfg().dbPort == 3306 && cfg().republish)
+  }
 }

@@ -105,4 +105,31 @@ class JdbcSinkSpec extends SparkSpec {
     JdbcSink.applyScd2(acct, url, "acct_hist")
     assert(dumpHist().map { case (id, _, n, a, c0) => (id, n, a, c0) } == batchScd2)
   }
+
+  test("one partition reuses its statements: skipped duplicate, UPDATE fallback, DELETE") {
+    val conn = DriverManager.getConnection(url)
+    try {
+      try conn.createStatement().execute("DROP TABLE acct_reuse")
+      catch { case _: java.sql.SQLException => () }
+      conn.createStatement().execute(
+        "CREATE TABLE acct_reuse (id BIGINT PRIMARY KEY, name VARCHAR(64), amount BIGINT)")
+      conn.createStatement().execute("INSERT INTO acct_reuse VALUES (1, 'seed', 1)")
+    } finally conn.close()
+
+    import spark.implicits._
+    val changes = Seq(
+      ("I", 1L, "dup", 10L),  // duplicate INSERT: the violation is skipped (F8)
+      ("U", 2L, "new", 20L),  // UPDATE of a missing id: falls back to the same INSERT
+      ("D", 1L, "seed", 30L)) // DELETE after both
+      .map { case (op, id, name, pos) =>
+        (op, id, Map("id" -> id.toString, "name" -> name, "amount" -> pos.toString), "b1", pos, 0)
+      }
+      .toDF("op", "id", "after", "file", "pos", "row")
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "1") // every change in one partition, one connection
+    try JdbcSink.applyChanges(changes, url, "acct_reuse")
+    finally spark.conf.set(key, prev)
+    assert(fetchAll("acct_reuse") == Set((2L, "new", 20L)))
+  }
 }
