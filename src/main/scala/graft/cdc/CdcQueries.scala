@@ -154,30 +154,32 @@ object CdcQueries {
     */
   def scd2HistoryFrom(changes: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.types.LongType
     // F8 says a redelivery is byte-identical, so distinct over the FULL
     // projected row (the oracle's SELECT DISTINCT), not just the binlog
     // coordinate: if that contract is ever violated upstream — two
     // differing payloads at one coordinate — both engines keep both rows
     // as separate versions instead of Spark silently picking one. The
-    // payload tiebreaks (op, name, amount — null-sentineled so neither
-    // engine's null-ordering default enters) make the version numbering
-    // deterministic and identical on both sides even in that case.
-    val tiebreak = Seq(col("op"), coalesce(col("name"), lit("")),
-      coalesce(col("amount"), lit(Long.MinValue)))
+    // payload tiebreaks (op, then the image columns null-sentineled so
+    // neither engine's null-ordering default enters: Long.MinValue for a
+    // long, '' for the rest) make the version numbering deterministic and
+    // identical on both sides even in that case.
+    val names = CdcPipeline.imageColumns.map(_._1)
+    val tiebreak = col("op") +: CdcPipeline.imageColumns.map {
+      case (n, LongType) => coalesce(col(n), lit(Long.MinValue))
+      case (n, _) => coalesce(col(n).cast("string"), lit(""))
+    }
     val w = Window.partitionBy(col("db"), col("tbl"), col("id"))
       .orderBy(col("file") +: col("pos") +: col("row") +: tiebreak: _*)
     changes
-      .select(col("db"), col("tbl"), col("id"), col("op"),
-        element_at(col("after"), "name").as("name"),
-        element_at(col("after"), "amount").cast("long").as("amount"),
-        col("file"), col("pos"), col("row"))
+      .select(Seq(col("db"), col("tbl"), col("id"), col("op")) ++
+        CdcPipeline.image(col("after")) ++ Seq(col("file"), col("pos"), col("row")): _*)
       .distinct()
       .withColumn("next_op", lead(col("op"), 1).over(w))
       .filter(col("op") =!= "D")
       .withColumn("ver", row_number().over(w).cast("long"))
-      .select(col("db"), col("tbl"), col("id"), col("ver"),
-        col("name"), col("amount"),
-        (col("next_op").isNull).as("is_current"))
+      .select(Seq(col("db"), col("tbl"), col("id"), col("ver")) ++ names.map(col) :+
+        col("next_op").isNull.as("is_current"): _*)
       .orderBy("db", "tbl", "id", "ver")
   }
 
@@ -227,21 +229,11 @@ object CdcQueries {
     * the cutoff a partition-pruning predicate, not a scan filter.
     */
   def pitrState(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cut = col("file") < PITR_FILE ||
       (col("file") === PITR_FILE &&
         (col("pos") < PITR_POS ||
           (col("pos") === PITR_POS && col("row") <= PITR_ROW)))
-    val w = Window.partitionBy(col("db"), col("tbl"), col("id"))
-      .orderBy(col("file").desc, col("pos").desc, col("row").desc)
-    CdcPipeline.changes(s)
-      .filter(cut)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") =!= "D")
-      .select(col("db"), col("tbl"), col("id"),
-        element_at(col("after"), "name").as("name"),
-        element_at(col("after"), "amount").cast("long").as("amount"))
-      .orderBy("db", "tbl", "id")
+    CdcPipeline.latestStateOf(CdcPipeline.changes(s).filter(cut))
   }
 
   val pitrStateSql: String =
@@ -291,14 +283,12 @@ object CdcQueries {
   /** c08 over any Debezium-envelope jsonl (spec-injectable face). */
   private[graft] def binlogAuditAt(s: SparkSession, path: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val e = CdcPipeline.parseDml(s, path).select(
-      col("payload.source.db").as("db"),
-      col("payload.source.table").as("tbl"),
-      CdcPipeline.opCol.as("op"),
-      concat(col("payload.source.file"), lit(":"),
-        lpad(col("payload.source.pos").cast("string"), 10, "0"), lit(":"),
-        lpad(col("payload.source.row").cast("string"), 5, "0")).as("coord"),
-      col("payload.source.ts_ms").as("src_ts"))
+    val e = CdcPipeline.changes(s, path).select(
+      col("db"), col("tbl"), col("op"),
+      concat(col("file"), lit(":"),
+        lpad(col("pos").cast("string"), 10, "0"), lit(":"),
+        lpad(col("row").cast("string"), 5, "0")).as("coord"),
+      col("src_ts"))
     // src_ts as a secondary key: duplicate coordinates are window TIES,
     // and if the F8 byte-identical contract is violated with differing
     // ts_ms (the very case this audit surfaces) a coord-only order makes

@@ -263,13 +263,9 @@ object SchemaRegistry {
   def typedLatestState(spark: SparkSession, path: String, db: String,
       table: String): DataFrame = {
     val spec = fromEvents(spark, path)((db, table))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("id"))
-      .orderBy(col("file").desc, col("pos").desc, col("row").desc)
-    CdcPipeline.changes(spark, path)
-      .filter(col("db") === db && col("tbl") === table)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1 && col("op") =!= "D")
+    CdcPipeline.latest(CdcPipeline.changes(spark, path)
+        .filter(col("db") === db && col("tbl") === table))
+      .filter(col("op") =!= "D")
       .select(decodeImage(col("after"), spec): _*)
       .orderBy("id")
   }

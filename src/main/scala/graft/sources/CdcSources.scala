@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * The Kafka connector jar is not present in this environment, so
   * `kafkaStream` constructs the exact reader (format/options) without
   * calling `.load()` in tests; the pure pieces — topic list, offset-reset
-  * mapping, republish projection, upsert SQL — are unit-tested directly.
+  * mapping, republish projection — are unit-tested directly. The JDBC
+  * statements are rendered by `streaming.JdbcSink`.
   */
 object CdcSources {
 
@@ -122,23 +123,4 @@ object CdcSources {
       array(struct(
         lit("loop").as("key"),
         (col("loop") + 1).cast("string").cast("binary").as("value"))).as("headers"))
-
-  /** S3: MySQL-dialect idempotent upsert statement for the foreachBatch
-    * JDBC sink — the engine-side replacement for the reference's per-event
-    * SQL synthesis (main.go:365-377) + duplicate-entry skip (F8,
-    * main.go:138-141): ON DUPLICATE KEY UPDATE absorbs redelivery.
-    */
-  def upsertSql(table: String, cols: Seq[String], pks: Seq[String]): String = {
-    require(cols.nonEmpty && pks.forall(cols.contains), s"bad upsert spec: $cols / $pks")
-    val colList = cols.map(c => s"`$c`").mkString(", ")
-    val placeholders = cols.map(_ => "?").mkString(", ")
-    val updates = cols.filterNot(pks.contains)
-      .map(c => s"`$c` = VALUES(`$c`)").mkString(", ")
-    s"INSERT INTO `$table` ($colList) VALUES ($placeholders) " +
-      s"ON DUPLICATE KEY UPDATE $updates"
-  }
-
-  /** S3: delete statement for op='D' rows. */
-  def deleteSql(table: String, pks: Seq[String]): String =
-    s"DELETE FROM `$table` WHERE " + pks.map(c => s"`$c` = ?").mkString(" AND ")
 }

@@ -1,7 +1,7 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -45,10 +45,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * admitting the N globally-next records in line order across
   * partitions.
   *
-  * Scale note: this is a TEST source — it re-reads the fixture file per
-  * planned batch on a single executor. The production path stays
-  * `CdcSources.kafkaStream` (jar required); everything downstream of
-  * the source boundary is shared, which is the point.
+  * Scale note: this is a TEST source — each planned partition streams
+  * the fixture file from its start on one executor, parsing only its own
+  * range. The production path stays `CdcSources.kafkaStream` (jar
+  * required); everything downstream of the source boundary is shared,
+  * which is the point.
   */
 object KafkaShapedSource {
 
@@ -73,14 +74,9 @@ object KafkaShapedSource {
     * newlines or tabs (the envelope fixtures are single-line JSON).
     */
   def writeFixture(path: String, records: Seq[(Int, String)]): Unit = {
-    records.foreach { case (_, v) =>
-      require(!v.contains('\n') && !v.contains('\t'), s"fixture value has newline/tab: $v")
-    }
     val p = Paths.get(path)
     if (p.getParent != null) Files.createDirectories(p.getParent)
-    val tmp = Paths.get(path + ".tmp")
-    Files.writeString(tmp, records.map { case (l, v) => s"$l\t$v" }.mkString("", "\n", "\n"))
-    Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    publish(p, Nil, records)
   }
 
   /** Append records atomically (read + rewrite + ATOMIC_MOVE — a reader
@@ -88,25 +84,38 @@ object KafkaShapedSource {
     * appended lines extend offsets, they never renumber committed ones).
     */
   def appendFixture(path: String, records: Seq[(Int, String)]): Unit = {
-    val existing = readLines(path)
     val p = Paths.get(path)
-    val tmp = Paths.get(path + ".tmp")
-    Files.writeString(tmp,
-      (existing.map { case (l, v) => s"$l\t$v" } ++
-        records.map { case (l, v) => s"$l\t$v" }).mkString("", "\n", "\n"))
+    val existing =
+      if (Files.exists(p)) Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq.filter(_.nonEmpty)
+      else Nil
+    publish(p, existing, records)
+  }
+
+  /** Replace `p` with the `head` lines and then `records`, atomically. */
+  private def publish(p: Path, head: Seq[String], records: Seq[(Int, String)]): Unit = {
+    records.foreach { case (_, v) =>
+      require(!v.contains('\n') && !v.contains('\t'), s"fixture value has newline/tab: $v")
+    }
+    val tmp = Paths.get(p.toString + ".tmp")
+    Files.writeString(tmp, (head ++ records.map { case (l, v) => s"$l\t$v" }).mkString("", "\n", "\n"))
     Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  private[graft] def readLines(path: String): Seq[(Int, String)] = {
+  /** One record line, `loop<TAB>value`, as (loop, value). */
+  private[graft] def parseLine(line: String): (Int, String) = {
+    val i = line.indexOf('\t')
+    require(i >= 0, s"malformed fixture line (no tab): $line")
+    (line.substring(0, i).toInt, line.substring(i + 1))
+  }
+
+  /** The number of records in the fixture (its non-empty lines), unparsed. */
+  private[graft] def countRecords(path: String): Long = {
     val p = Paths.get(path)
-    if (!Files.exists(p)) Seq.empty
-    else Files.readAllLines(p, StandardCharsets.UTF_8).asScala.toSeq
-      .filter(_.nonEmpty)
-      .map { line =>
-        val i = line.indexOf('\t')
-        require(i >= 0, s"malformed fixture line (no tab): $line")
-        (line.substring(0, i).toInt, line.substring(i + 1))
-      }
+    if (!Files.exists(p)) 0L
+    else {
+      val lines = Files.lines(p, StandardCharsets.UTF_8)
+      try lines.filter(!_.isEmpty).count() finally lines.close()
+    }
   }
 
   /** Per-partition record count for a file of `total` lines. */
@@ -183,10 +192,8 @@ class KafkaShapedMicroBatchStream(path: String, topic: String,
     maxPerTrigger.map(ReadLimit.maxRows).getOrElse(ReadLimit.allAvailable())
 
   /** Unbounded latest: everything currently in the fixture. */
-  override def latestOffset(): Offset = {
-    val total = readLines(path).size.toLong
-    KOffset(partitionCounts(total, numPartitions))
-  }
+  override def latestOffset(): Offset =
+    KOffset(partitionCounts(countRecords(path), numPartitions))
 
   /** Admission-controlled latest (ST6 batching/backpressure): admit the
     * `maxRows` globally-NEXT lines in line order — line i sits at
@@ -247,29 +254,40 @@ class KafkaShapedReaderFactory extends PartitionReaderFactory {
 }
 
 /** Replays one partition's [startOffset, endOffset) range: offset o is
-  * line `partition + numPartitions * o`, timestamp is a deterministic
-  * function of the line index (epoch + i seconds), timestampType 0
-  * (kafka CREATE_TIME). Deterministic by construction — the committed
-  * range re-reads identically after any crash.
+  * record `partition + numPartitions * o` (records are the fixture's
+  * non-empty lines), timestamp is a deterministic function of the record
+  * index (epoch + i seconds), timestampType 0 (kafka CREATE_TIME).
+  * Deterministic by construction — the committed range re-reads
+  * identically after any crash. The reader streams the file, parses only
+  * the records of its range, and stops after the last one.
   */
 class KafkaShapedPartitionReader(p: KafkaShapedInputPartition)
   extends PartitionReader[InternalRow] {
   import KafkaShapedSource._
 
-  private val lines = readLines(p.path)
+  private val in = Files.newBufferedReader(Paths.get(p.path), StandardCharsets.UTF_8)
+  private val records = Iterator.continually(in.readLine()).takeWhile(_ != null).filter(_.nonEmpty)
+  private var seen = 0L // records taken from `records` so far
   private var off = p.startOffset - 1
+  private var record: (Int, String) = _
 
   override def next(): Boolean = {
     off += 1
-    off < p.endOffset
+    off < p.endOffset && {
+      val i = p.partition + p.numPartitions * off
+      while (seen < i && records.hasNext) { records.next(); seen += 1 }
+      require(seen == i && records.hasNext,
+        s"offset $off of partition ${p.partition} maps past the fixture " +
+          s"($i >= $seen) — a committed range must stay replayable")
+      record = parseLine(records.next())
+      seen += 1
+      true
+    }
   }
 
   override def get(): InternalRow = {
     val i = p.partition + p.numPartitions * off
-    require(i < lines.size,
-      s"offset $off of partition ${p.partition} maps past the fixture " +
-        s"($i >= ${lines.size}) — a committed range must stay replayable")
-    val (loop, value) = lines(i.toInt)
+    val (loop, value) = record
     val headers: ArrayData =
       if (loop > 0) new GenericArrayData(Array[Any](
         new GenericInternalRow(Array[Any](
@@ -282,10 +300,10 @@ class KafkaShapedPartitionReader(p: KafkaShapedInputPartition)
       UTF8String.fromString(p.topic),
       p.partition,
       off,
-      i * 1000000L, // micros: epoch + line-index seconds, deterministic
+      i * 1000000L, // micros: epoch + record-index seconds, deterministic
       0,            // kafka TimestampType.CREATE_TIME
       headers))
   }
 
-  override def close(): Unit = ()
+  override def close(): Unit = in.close()
 }

@@ -7,11 +7,10 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{classic, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
-import graft.cdc.Envelope
+import graft.cdc.{CdcPipeline, Envelope}
 
 /** Structured-Streaming fidelity layer (SURVEY §2.5): the reference's
   * consumer loop (main.go:63-169) as a micro-batched, idempotent pipeline.
@@ -66,19 +65,13 @@ object CdcStreaming {
   private def classify(batch: DataFrame): DataFrame = {
     val env = batch.withColumn("env", from_json(col("value"), Envelope.dmlEnvelopeSchema))
     val p = col("env.payload")
-    val (before, after, src) = (p("before"), p("after"), p("source"))
-    val op = when(before.isNull && after.isNotNull, "I")
-      .when(before.isNotNull && after.isNotNull, "U")
-      .when(before.isNotNull && after.isNull, "D")
-    val id = element_at(coalesce(after, before), "id").cast("long")
-    val reason = Reasons.zip(Seq(p.isNull, src("table").isNull, op.isNull, id.isNull))
+    val Seq(db, tbl, op, id, after, file, pos, row) = CdcPipeline.changeOf(p)
+    // the analyzer trims the names off these nested uses
+    val reason = Reasons.zip(Seq(p.isNull, tbl.isNull, op.isNull, id.isNull))
       .foldRight(lit(null).cast("string")) { case ((r, bad), rest) => when(bad, r).otherwise(rest) }
     val record = length(col("value")) > 0 // null or false for a tombstone
     env.select(
-      when(record, reason.isNull).as("valid"),
-      op.as("op"), id.as("id"),
-      src("db").as("db"), src("table").as("tbl"), after.as("after"),
-      src("file").as("file"), src("pos").as("pos"), src("row").as("row"),
+      when(record, reason.isNull).as("valid"), op, id, db, tbl, after, file, pos, row,
       col("value"), col("loop"), when(record, reason).as("reason"))
   }
 
@@ -181,23 +174,14 @@ object CdcStreaming {
     * pre-materialization is needed — the write never overwrites its input.
     */
   def upsertBatch(spark: SparkSession, valid: DataFrame, statePath: String): Unit = {
-    val incoming = valid.select(
-      col("db"), col("tbl"), col("id"),
-      element_at(col("after"), "name").as("name"),
-      element_at(col("after"), "amount").cast("long").as("amount"),
-      col("op"), col("file"), col("pos"), col("row"))
+    val incoming = valid.select(Seq(col("db"), col("tbl"), col("id")) ++
+      CdcPipeline.image(col("after")) ++ Seq(col("op"), col("file"), col("pos"), col("row")): _*)
     val root = Paths.get(statePath)
     val current = committedVersion(root) match {
       case Some(v) => spark.read.parquet(root.resolve(v).toString)
       case None    => incoming.limit(0)
     }
-    val w = Window.partitionBy(col("db"), col("tbl"), col("id"))
-      .orderBy(col("file").desc, col("pos").desc, col("row").desc)
-    val merged = current.unionByName(incoming)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .drop("rn")
-    commitVersion(merged, root)
+    commitVersion(CdcPipeline.latest(current.unionByName(incoming)), root)
   }
 
   /** Live rows of the materialized state (delete tombstones stay in the
@@ -260,22 +244,15 @@ object CdcStreaming {
     source.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        import org.apache.spark.sql.functions.{col, from_json, length => flen, when => fwhen, lit => flit}
-        val parsed = batch.filter(flen(col("value")) > 0)
+        val parsed = batch.filter(length(col("value")) > 0)
           .withColumn("env", from_json(col("value"), Envelope.ddlEnvelopeSchema))
-        val whitelist = if (replaceAll) flit(true)
-          else col("env.payload.source.table").isin(tables: _*)
-        val db = col("env.payload.databaseName")
-        val ddl = col("env.payload.ddl")
+        val p = col("env.payload")
+        val (db, ddl) = (p("databaseName"), p("ddl"))
         val decided = parsed.select(
           db.as("db"),
           ddl.as("ddl"),
-          fwhen(db.isNull || flen(db) === 0, "skip_instance")
-            .when(!whitelist, "skip_whitelist")
-            .when(ddl.isNull || flen(ddl) === 0, "error_empty")
-            .when(graft.cdc.CdcPipeline.isBlockedDdl(ddl, reclaim), "blocked")
-            .otherwise("apply").as("decision"),
-          graft.cdc.CdcPipeline.stripDbQualifier(ddl, db).as("stripped"))
+          CdcPipeline.ddlDecision(p, tables, reclaim, replaceAll).as("decision"),
+          CdcPipeline.stripDbQualifier(ddl, db).as("stripped"))
         val toApply = decided.filter(col("decision") === "apply")
           .select("db", "stripped").collect() // DDL batches are tiny by nature
         if (toApply.nonEmpty) {

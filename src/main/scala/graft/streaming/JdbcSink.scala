@@ -1,11 +1,14 @@
 package graft.streaming
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.sql.{Connection, DriverManager, PreparedStatement, Types}
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType}
+
+import graft.cdc.CdcPipeline
 
 /** S3: the reference's JDBC DML sink (main.go:128-135) — op-specific
   * INSERT/UPDATE/DELETE executed against a JDBC target, here demonstrated
@@ -29,29 +32,27 @@ import org.apache.spark.sql.functions._
 object JdbcSink {
 
   /** Apply a batch of parsed changes (schema of CdcStreaming.parseBatch's
-    * `valid` output) to `table` at `url`. Columns written: id, name, amount.
+    * `valid` output) to `table` at `url`. Columns written: id and
+    * [[CdcPipeline.imageColumns]].
     */
   def applyChanges(valid: DataFrame, url: String, table: String): Unit =
     applyOrdered(valid, url)(applyOne(_, table, _))
 
-  /** The ordered apply both sinks share: project id, name, amount, op,
-    * src_seq and the binlog coordinate; repartition by id and
+  /** The ordered apply both sinks share: project id, the image columns,
+    * op, src_seq and the binlog coordinate; repartition by id and
     * sortWithinPartitions by binlog (file, pos, row) so each key's events
     * apply in order (ST3) on any number of executors; run `one` per row
     * over one connection per partition, preparing each statement once.
     */
   private def applyOrdered(valid: DataFrame, url: String)
-      (one: (Statements, org.apache.spark.sql.Row) => Unit): Unit =
-    valid.select(
-      col("id"),
-      element_at(col("after"), "name").as("name"),
-      element_at(col("after"), "amount").cast("long").as("amount"),
+      (one: (Statements, Row) => Unit): Unit =
+    valid.select(Seq(col("id")) ++ CdcPipeline.image(col("after")) ++ Seq(
       col("op"),
       concat_ws(":", col("file"), col("pos"), col("row")).as("src_seq"),
-      col("file"), col("pos"), col("row"))
+      col("file"), col("pos"), col("row")): _*)
       .repartition(col("id"))
       .sortWithinPartitions(col("file"), col("pos"), col("row"))
-      .foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+      .foreachPartition { (rows: Iterator[Row]) =>
         if (rows.nonEmpty) {
           val sts = new Statements(DriverManager.getConnection(url))
           try rows.foreach(r => one(sts, r))
@@ -71,8 +72,27 @@ object JdbcSink {
       try prepared.values.foreach(_.close()) finally conn.close()
   }
 
-  private def applyOne(sts: Statements, table: String,
-      r: org.apache.spark.sql.Row): Unit = {
+  private val imageNames: Seq[String] = CdcPipeline.imageColumns.map(_._1)
+
+  /** `INSERT INTO table (cols) VALUES (?, …)`, one parameter per column. */
+  private def insertSql(table: String, cols: Seq[String]): String =
+    s"INSERT INTO $table (${cols.mkString(", ")}) VALUES (${cols.map(_ => "?").mkString(", ")})"
+
+  /** Bind the row's image columns to parameters `first`, `first + 1`, …
+    * by their type.
+    */
+  private def setImage(st: PreparedStatement, first: Int, r: Row): Unit =
+    CdcPipeline.imageColumns.zipWithIndex.foreach { case ((name, t), k) =>
+      val (i, pos) = (r.fieldIndex(name), first + k)
+      t match {
+        case LongType if r.isNullAt(i) => st.setNull(pos, Types.BIGINT)
+        case LongType => st.setLong(pos, r.getLong(i))
+        case StringType if r.isNullAt(i) => st.setNull(pos, Types.VARCHAR)
+        case StringType => st.setString(pos, r.getString(i))
+      }
+    }
+
+  private def applyOne(sts: Statements, table: String, r: Row): Unit = {
     val id = r.getLong(r.fieldIndex("id"))
     r.getString(r.fieldIndex("op")) match {
       case "D" =>
@@ -86,34 +106,17 @@ object JdbcSink {
           case _: java.sql.SQLIntegrityConstraintViolationException => ()
         }
       case _ => // "U"
-        val st = sts(s"UPDATE $table SET name = ?, amount = ? WHERE id = ?")
-        setName(st, 1, r)
-        setAmount(st, 2, r)
-        st.setLong(3, id)
+        val st = sts(s"UPDATE $table SET ${imageNames.map(_ + " = ?").mkString(", ")} WHERE id = ?")
+        setImage(st, 1, r)
+        st.setLong(imageNames.size + 1, id)
         if (st.executeUpdate() == 0) insert(sts, table, r, id)
     }
   }
 
-  private def setName(st: PreparedStatement, pos: Int,
-      r: org.apache.spark.sql.Row): Unit = {
-    val i = r.fieldIndex("name")
-    if (r.isNullAt(i)) st.setNull(pos, java.sql.Types.VARCHAR)
-    else st.setString(pos, r.getString(i))
-  }
-
-  private def setAmount(st: PreparedStatement, pos: Int,
-      r: org.apache.spark.sql.Row): Unit = {
-    val i = r.fieldIndex("amount")
-    if (r.isNullAt(i)) st.setNull(pos, java.sql.Types.BIGINT)
-    else st.setLong(pos, r.getLong(i))
-  }
-
-  private def insert(sts: Statements, table: String,
-      r: org.apache.spark.sql.Row, id: Long): Unit = {
-    val st = sts(s"INSERT INTO $table (id, name, amount) VALUES (?, ?, ?)")
+  private def insert(sts: Statements, table: String, r: Row, id: Long): Unit = {
+    val st = sts(insertSql(table, "id" +: imageNames))
     st.setLong(1, id)
-    setName(st, 2, r)
-    setAmount(st, 3, r)
+    setImage(st, 2, r)
     st.executeUpdate()
   }
 
@@ -144,8 +147,7 @@ object JdbcSink {
   def applyScd2(valid: DataFrame, url: String, table: String): Unit =
     applyOrdered(valid, url)(applyScd2One(_, table, _))
 
-  private def applyScd2One(sts: Statements, table: String,
-      r: org.apache.spark.sql.Row): Unit = {
+  private def applyScd2One(sts: Statements, table: String, r: Row): Unit = {
     val id = r.getLong(r.fieldIndex("id"))
     val seq = r.getString(r.fieldIndex("src_seq"))
     val op = r.getString(r.fieldIndex("op"))
@@ -160,15 +162,14 @@ object JdbcSink {
       val verSt = sts(s"SELECT COALESCE(MAX(ver), 0) + 1 FROM $table WHERE id = ?")
       verSt.setLong(1, id)
       val ver = { val rs = verSt.executeQuery(); try { rs.next(); rs.getInt(1) } finally rs.close() }
-      val ins = sts(s"INSERT INTO $table (id, ver, name, amount, op, src_seq, is_current)" +
-        " VALUES (?, ?, ?, ?, ?, ?, ?)")
+      val ins = sts(insertSql(table, Seq("id", "ver") ++ imageNames ++ Seq("op", "src_seq", "is_current")))
+      val n = imageNames.size
       ins.setLong(1, id)
       ins.setInt(2, ver)
-      setName(ins, 3, r)
-      setAmount(ins, 4, r)
-      ins.setString(5, op)
-      ins.setString(6, seq)
-      ins.setBoolean(7, op != "D")
+      setImage(ins, 3, r)
+      ins.setString(n + 3, op)
+      ins.setString(n + 4, seq)
+      ins.setBoolean(n + 5, op != "D")
       ins.executeUpdate()
     }
   }

@@ -45,16 +45,6 @@ class SourcesSpec extends SparkSpec {
     assert(new String(hdr.getAs[Array[Byte]](1)) == "2")
   }
 
-  test("S3 upsert/delete SQL generation (idempotent ON DUPLICATE KEY form)") {
-    assert(CdcSources.upsertSql("acct", Seq("id", "name", "amount"), Seq("id")) ==
-      "INSERT INTO `acct` (`id`, `name`, `amount`) VALUES (?, ?, ?) " +
-        "ON DUPLICATE KEY UPDATE `name` = VALUES(`name`), `amount` = VALUES(`amount`)")
-    assert(CdcSources.deleteSql("acct", Seq("id")) == "DELETE FROM `acct` WHERE `id` = ?")
-    intercept[IllegalArgumentException] {
-      CdcSources.upsertSql("acct", Seq("name"), Seq("id"))
-    }
-  }
-
   test("S5 Connect REST: pause expects 202; resume retries until 202 (main.go:418-433)") {
     val resumeCalls = new AtomicInteger(0)
     val server = HttpServer.create(new InetSocketAddress(0), 0)

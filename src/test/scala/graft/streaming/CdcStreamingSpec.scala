@@ -15,6 +15,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQueryException
 
 import graft.SparkSpec
+import graft.cdc.CdcPipeline
 
 /** Deterministic streaming tests (MemoryStream + processAllAvailable):
   * ST1 idempotent upsert, F8 duplicate absorption, ST3 binlog ordering
@@ -318,5 +319,50 @@ class CdcStreamingSpec extends SparkSpec {
     val state = CdcStreaming.currentState(spark, paths.state)
       .select("id", "name", "amount").as[(Long, String, Long)]
     assert(state.collect().toSeq == Seq((1L, "alice", 100L)))
+  }
+
+  test("the c01 fixture streamed in three micro-batches leaves exactly c01's latest state") {
+    val paths = tmpPaths()
+    implicit val sqlCtx = spark.sqlContext
+    val events = Files.readAllLines(Paths.get(CdcPipeline.eventsPath)).asScala.toSeq.filter(_.nonEmpty)
+    val mem = MemoryStream[(String, Int)]
+    val q = CdcStreaming.start(spark, mem.toDF().toDF("value", "loop"), paths,
+      republishLimit = 3, checkpoint = Files.createTempDirectory("ckpt").toString)
+    val batches = events.grouped(6).toSeq
+    assert(batches.size == 3)
+    batches.foreach { b => mem.addData(b.map((_, 0)): _*); q.processAllAvailable() }
+    q.stop()
+    def rowsOf(df: org.apache.spark.sql.DataFrame) =
+      df.select("db", "tbl", "id", "name", "amount")
+        .as[(String, String, Long, Option[String], Option[Long])].collect().toSeq.sorted
+    val expected = rowsOf(CdcPipeline.latestState(spark))
+    assert(expected.size == 8)
+    assert(rowsOf(CdcStreaming.currentState(spark, paths.state)) == expected)
+    assert(rows(paths.errors) == 0L)
+  }
+
+  test("a record with neither image: op X in the batch faces, \"no row image\" in the consumer") {
+    val noImage = ev(8, "x", 1, "b1", 60).replace(
+      "\"after\":{\"id\":8,\"name\":\"x\",\"amount\":1}", "\"after\":null")
+    val events = Seq(ev(1, "alice", 100, "b1", 10), noImage)
+    val path = Files.createTempDirectory("noimage").resolve("events.jsonl")
+    Files.writeString(path, events.mkString("", "\n", "\n"))
+    val changes = CdcPipeline.changes(spark, path.toString)
+      .select("id", "op").as[(Option[Long], String)].collect().toSeq.sorted
+    assert(changes == Seq((None, "X"), (Some(1L), "I")))
+    val ops = CdcPipeline.opCounts(spark, path.toString).as[(String, String, Long)].collect().toSeq
+    assert(ops == Seq(("acct", "I", 1L), ("acct", "X", 1L)))
+
+    val paths = tmpPaths()
+    implicit val sqlCtx = spark.sqlContext
+    val mem = MemoryStream[(String, Int)]
+    val q = CdcStreaming.start(spark, mem.toDF().toDF("value", "loop"), paths,
+      republishLimit = 3, checkpoint = Files.createTempDirectory("ckpt").toString)
+    mem.addData(events.map((_, 0)): _*)
+    q.processAllAvailable(); q.stop()
+    val errs = spark.read.parquet(paths.errors).select("data", "error").as[(String, String)].collect()
+    assert(errs.toSeq == Seq((noImage, "no row image")))
+    val state = CdcStreaming.currentState(spark, paths.state).select("id").as[Long].collect()
+    assert(state.toSeq == Seq(1L))
   }
 }

@@ -1,13 +1,17 @@
 package graft.streaming
 
 import java.net.InetSocketAddress
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import com.sun.net.httpserver.HttpServer
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
+import graft.cdc.{CdcPipeline, CdcQueries}
 import graft.sources.ConnectClient
 
 /** ST4 end-to-end: DDL events through the streaming branch — blocked/
@@ -62,6 +66,35 @@ class DdlStreamSpec extends SparkSpec {
       val rows = spark.read.parquet(applied).collect()
       assert(rows.length == 1)
       assert(rows.head.getString(1) == "ALTER TABLE acct ADD COLUMN x INT")
+    } finally server.stop(0)
+  }
+
+  test("the c03 fixture streamed with c03's configuration applies exactly c03's 'apply' rows") {
+    val server = HttpServer.create(new InetSocketAddress(0), 0)
+    Seq("pause", "resume").foreach(op => server.createContext(s"/connectors/c/$op", ex => {
+      ex.sendResponseHeaders(202, -1); ex.close()
+    }))
+    server.start()
+    try {
+      val client = new ConnectClient(s"http://localhost:${server.getAddress.getPort}", "c")
+      val applied = Files.createTempDirectory("ddl").toString + "/applied"
+      implicit val sqlCtx = spark.sqlContext
+      val mem = MemoryStream[String]
+      val q = CdcStreaming.startDdlStream(spark, mem.toDF().toDF("value"), client,
+        tables = Seq("acct", "txn"), reclaim = false, replaceAll = false,
+        appliedPath = applied, checkpoint = Files.createTempDirectory("ckpt").toString,
+        resumeBackoffMillis = 10L)
+      mem.addData(Files.readAllLines(Paths.get(CdcPipeline.ddlPath)).asScala.toSeq.filter(_.nonEmpty): _*)
+      q.processAllAvailable()
+      q.stop()
+
+      val expected = CdcQueries.ddlDecisions(spark, "")
+        .filter(col("decision") === "apply")
+        .select(col("db"), CdcPipeline.stripDbQualifier(col("ddl"), col("db")))
+        .as[(String, String)].collect().toSeq.sorted
+      assert(expected == Seq(("shop", "ALTER TABLE acct ADD COLUMN note VARCHAR(64)"),
+        ("shop", "ALTER TABLE txn MODIFY amount BIGINT")))
+      assert(spark.read.parquet(applied).as[(String, String)].collect().toSeq.sorted == expected)
     } finally server.stop(0)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.{GraftConfig, SparkSpec}
-import graft.sources.{CdcSources, KafkaShapedSource}
+import graft.sources.{CdcSources, KafkaShapedInputPartition, KafkaShapedPartitionReader, KafkaShapedSource}
 
 /** The S1 gap-closer: the complete consumer assembly (S1 source → F1/F2
   * tombstone filter → P1 envelope parse → upsert / error / retry / DLQ)
@@ -170,5 +170,37 @@ class KafkaShapedE2eSpec extends SparkSpec {
     q.stop()
     assert(got.asScala.toSeq == Seq(("plain", 0), ("retried", 2), (null, 0)),
       "value decode / loop-header extraction / tombstone-null contract broke")
+  }
+
+  test("a reader parses only its own range: a mid-file range returns exactly its records") {
+    import java.nio.charset.StandardCharsets.UTF_8
+    import KafkaShapedSource._
+    val fixture = Files.createTempDirectory("krange").toString + "/records.log"
+    // records 0..9, an empty line after record 4 (skipped, not numbered)
+    // and record 7 malformed (no tab)
+    val recs = (0 until 10).map(i => if (i == 7) "garbage" else s"${i % 3}\trec$i")
+    Files.writeString(Paths.get(fixture),
+      (recs.take(5) ++ Seq("") ++ recs.drop(5)).mkString("", "\n", "\n"))
+    def read(partition: Int, start: Long, end: Long): Seq[(Long, String, Long, Int)] = {
+      val r = new KafkaShapedPartitionReader(
+        KafkaShapedInputPartition(fixture, "t", partition, 2, start, end))
+      try Iterator.continually(r.next()).takeWhile(identity).map { _ =>
+        val row = r.get()
+        (row.getLong(4), new String(row.getBinary(1), UTF_8), row.getLong(5),
+          row.getArray(7).numElements())
+      }.toList
+      finally r.close()
+    }
+    // partition 1, offsets [1, 3) = records 3 and 5: the malformed record 7
+    // lies past the range and is never parsed
+    assert(read(1, 1, 3) == Seq((1L, "rec3", 3000000L, 0), (2L, "rec5", 5000000L, 1)))
+    assert(read(0, 0, 2) == Seq((0L, "rec0", 0L, 0), (1L, "rec2", 2000000L, 1)))
+    // a returned record is still checked
+    assert(intercept[IllegalArgumentException](read(1, 3, 4)).getMessage
+      .contains("malformed fixture line"))
+    // partition 0 offset 5 is record 10, one past the last
+    assert(intercept[IllegalArgumentException](read(0, 4, 6)).getMessage
+      .contains("maps past the fixture"))
+    assert(countRecords(fixture) == 10L)
   }
 }
