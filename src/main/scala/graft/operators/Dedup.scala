@@ -604,9 +604,9 @@ object Dedup {
     * The probe's intermediate checkpoints are RELEASED before returning
     * (DataFrame.unpersist is a no-op for localCheckpoint'ed frames, so
     * in the long-lived daily-ingest service each probe would otherwise
-    * strand cached RDD blocks — see [[release]]); the returned verdict
+    * strand cached RDD blocks — see [[Graph.release]]); the returned verdict
     * is therefore materialized eagerly and holds the probe's ONE
-    * surviving checkpoint, which the caller may [[release]] once
+    * surviving checkpoint, which the caller may [[Graph.release]] once
     * consumed.
     */
   def probeMinhashIndex(s: SparkSession, dir: String, delta: DataFrame): DataFrame = {
@@ -641,7 +641,7 @@ object Dedup {
       .filter(col("sbkt").isin(sigBuckets.map(Integer.valueOf): _*))
       .drop("sbkt")
     val verdict = confirmCandidates(cand, deltaSigs, idxSigs).localCheckpoint(true)
-    Seq(deltaSigs, deltaBands, cand).foreach(release)
+    Seq(deltaSigs, deltaBands, cand).foreach(Graph.release)
     verdict
   }
 
@@ -849,7 +849,7 @@ object Dedup {
     * survivors needed anyway (the signature build shuffles on doc_id
     * next), and AQE still demotes it to a broadcast when the verdict is
     * genuinely small. Intermediates are released; the returned verdict
-    * holds one checkpoint for the caller to [[release]].
+    * holds one checkpoint for the caller to [[Graph.release]].
     */
   def probeExactThenNear(s: SparkSession, exactDir: String, mhDir: String,
       delta: DataFrame): DataFrame = {
@@ -863,7 +863,7 @@ object Dedup {
         col("match_id"), col("est_jaccard"), col("is_dup")))
       .orderBy("doc_id")
       .localCheckpoint(true)
-    Seq(exact, near).foreach(release)
+    Seq(exact, near).foreach(Graph.release)
     verdict
   }
 
@@ -1036,7 +1036,7 @@ object Dedup {
       .select("doc_id", "match_id")
       .orderBy("doc_id")
       .localCheckpoint(true)
-    release(pruned)
+    Graph.release(pruned)
     verdict
   }
 
@@ -1234,7 +1234,7 @@ object Dedup {
     survivors.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partCol).parquet(path)
-    release(survivors)
+    Graph.release(survivors)
     buckets.filterNot(kept).foreach { b =>
       deleteTreeIfExists(java.nio.file.Paths.get(path, s"$partCol=$b"))
     }
@@ -1266,7 +1266,7 @@ object Dedup {
       .distinct().collect().map(_.getInt(0))
     rewriteBucketsDropping(s, s"$dir/bands", "bkt", bkts, tomb, "doc_id")
     rewriteBucketsDropping(s, s"$dir/sigs", "sbkt", sbkts, tomb, "doc_id")
-    release(tomb)
+    Graph.release(tomb)
     deleteTreeIfExists(tombPath) // LAST: crash ⇒ probes still exclude
   }
 
@@ -1291,7 +1291,7 @@ object Dedup {
       .join(broadcast(tomb), col("match_id") === col("doc_id"))
       .select("hbkt").distinct().collect().map(_.getInt(0))
     rewriteBucketsDropping(s, s"$dir/hashes", "hbkt", hbkts, tomb, "match_id")
-    release(tomb)
+    Graph.release(tomb)
     deleteTreeIfExists(tombPath) // LAST: crash ⇒ probes still exclude
   }
 
@@ -1423,9 +1423,11 @@ object Dedup {
     * Components in MapReduce and Beyond"), which converge in O(log n)
     * rounds on ANY graph — plain min-label propagation needs
     * graph-DIAMETER rounds, so an adversarial 1M-doc near-dup chain at
-    * 100 TB would schedule a million Spark jobs. Per round the driver
-    * collects only a 4-scalar edge fingerprint for the fixpoint test — no
-    * row data. If the loop still hasn't converged at maxIter it THROWS:
+    * 100 TB would schedule a million Spark jobs. The rounds run on
+    * [[Graph.fixpoint]]: one action per round, the eager checkpoint,
+    * which also yields the 3-scalar edge fingerprint of the fixpoint test
+    * — no row data reaches the driver, and the round it replaces is
+    * released. If the loop still hasn't converged at maxIter it THROWS:
     * silently returning non-components to a dedup pipeline would delete
     * the wrong documents.
     */
@@ -1466,21 +1468,6 @@ object Dedup {
       if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
     }
     parent.keys.toSeq.map(k => (k, find(k))).toDF("id", "lbl")
-  }
-
-  /** Release everything a loop-iteration DataFrame holds: the CacheManager
-    * entry (cache()'d frames) AND the underlying checkpoint RDD —
-    * `DataFrame.unpersist()` alone is a NO-OP for localCheckpoint'ed
-    * frames because the CacheManager never saw them; the persisted RDD
-    * sits behind a LogicalRDD leaf (leak found by the
-    * ConnectedComponentsSpec hygiene test: one stranded RDD per
-    * iteration).
-    */
-  def release(df: DataFrame): Unit = {
-    df.unpersist()
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }.foreach(_.unpersist(false))
   }
 
   /** One large-star round: every neighbor of u LARGER than u is rewired to
@@ -1524,16 +1511,18 @@ object Dedup {
     * fixpoint). A single-hash xor has a 2^-64 collision chance per
     * comparison — a collision would silently hand non-component labels to
     * a pipeline that DELETES documents, so a second hash family (extra
-    * literal seed column) squares the odds away. One cheap collect per
-    * round.
+    * literal seed column) squares the odds away. Self-loops are left out
+    * (the star rounds never emit one), so the same scalars fingerprint
+    * the raw input edges. Observed on each round's own checkpoint
+    * ([[Graph.checkpointed]]): no separate job.
     */
-  private def edgeStats(e: DataFrame): (Long, Long, Long) = {
-    val r = e.agg(count(lit(1)),
-      coalesce(call_function("bit_xor", xxhash64(col("u"), col("v"))), lit(0L)),
+  private val edgeFingerprint: Seq[Column] = {
+    val live = col("u") =!= col("v")
+    Seq(count(when(live, 1)).as("n_edges"),
       coalesce(call_function("bit_xor",
-        xxhash64(lit(0x9E3779B9L), col("u"), col("v"))), lit(0L)))
-      .collect()(0)
-    (r.getLong(0), r.getLong(1), r.getLong(2))
+        when(live, xxhash64(col("u"), col("v")))), lit(0L)).as("h1"),
+      coalesce(call_function("bit_xor",
+        when(live, xxhash64(lit(0x9E3779B9L), col("u"), col("v")))), lit(0L)).as("h2"))
   }
 
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
@@ -1543,30 +1532,27 @@ object Dedup {
     // keeps each round's logical plan flat (uncheckpointed, the plan
     // doubles per round and a few dozen rounds OOM the driver on plan
     // strings alone — found by the 40-node-chain spec)
-    val eRaw = edges.select(col("id_a").as("u"), col("id_b").as("v"))
-      .localCheckpoint(true)
+    val (eRaw, fp0) = Graph.checkpointed(
+      edges.select(col("id_a").as("u"), col("id_b").as("v")),
+      edgeFingerprint: _*)
     // every node that appears in ANY input edge gets a label, including
     // self-loop-only nodes the star rounds drop
     val nodes = eRaw.select(col("u").as("id"))
       .union(eRaw.select(col("v").as("id"))).distinct().localCheckpoint(true)
-    var e = eRaw.filter(col("u") =!= col("v"))
-    var stats = edgeStats(e)
-    var iter = 0
-    var converged = stats._1 == 0L
-    while (!converged && iter < maxIter) {
-      val next = smallStar(largeStar(e)).localCheckpoint(true)
-      val ns = edgeStats(next)
-      converged = ns == stats
-      stats = ns
-      release(e) // next is already materialized; the old epoch is dead
-      e = next
-      iter += 1
+    val live = eRaw.filter(col("u") =!= col("v"))
+    var stats = fp0
+    var converged = fp0("n_edges") == 0L
+    val e = if (converged) live else Graph.fixpoint(live, maxIter) { (cur, _) =>
+      val (next, fp) = Graph.checkpointed(smallStar(largeStar(cur)), edgeFingerprint: _*)
+      converged = fp == stats
+      stats = fp
+      (next, !converged)
     }
     if (!converged) {
-      release(e); release(nodes)
+      Seq(e, eRaw, nodes).foreach(Graph.release)
       throw new IllegalStateException(
         s"connectedComponents did not converge in $maxIter alternating-star " +
-          s"rounds (${stats._1} edges remain in motion); refusing to return " +
+          s"rounds (${stats("n_edges")} edges remain in motion); refusing to return " +
           "labels that are not connected components")
     }
     // fixpoint edges are (child, root) stars; roots and isolated nodes
@@ -1575,8 +1561,7 @@ object Dedup {
       .join(e.select(col("u").as("id"), col("v").as("lbl")), Seq("id"), "left")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("lbl"))
       .localCheckpoint(true)
-    release(e)
-    release(nodes)
+    Seq(e, eRaw, nodes).foreach(Graph.release)
     labels
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
@@ -46,21 +46,12 @@ object Graph {
     * is 10^16 and the damped sum `85·Σ` stays under 2^63 (overflow at
     * ~10^17 nodes-worth of mass, far beyond any real graph's node count).
     */
-  private val START_FP = 1000000000L
+  private[graft] val START_FP = 1000000000L
   private val DAMP_NUM = 85L // damping 0.85 as an exact rational 85/100
-  private val ITERS    = 4
+  private[graft] val ITERS    = 4
   /** Per-iteration teleport mass: floor(0.15 · START_FP). */
   private val BASE_FP  = START_FP * (100L - DAMP_NUM) / 100L
 
-  /** g01: PageRank over the undirected customer↔supplier trade graph
-    * (edge ⇔ the customer ever ordered a part from the supplier).
-    *
-    * Undirected (both directions materialized) so every node has out-degree
-    * ≥ 1 — no dangling-mass correction term, which would need a global
-    * scalar per round. The customer/supplier key spaces overlap, so nodes
-    * are disambiguated by parity-packing into longs internally and labeled
-    * `c:123` / `s:45` on output.
-    */
   /** Undirected customer↔supplier trade edges in packed-long node ids
     * (customer k → 2k, supplier k → 2k+1), both directions materialized,
     * hash-partitioned by src at full shuffle parallelism — shared by the
@@ -209,6 +200,72 @@ object Graph {
   private[graft] def checkpointPreserving(df: DataFrame): DataFrame =
     withStaticPlan(df.sparkSession) { df.localCheckpoint(true) }
 
+  // -------------------------------------------------- the round driver
+  /** Release everything a loop frame holds: the CacheManager entry
+    * (cache()'d frames) AND the underlying checkpoint RDD —
+    * `DataFrame.unpersist()` alone is a NO-OP for localCheckpoint'ed
+    * frames because the CacheManager never saw them; the persisted RDD
+    * sits behind a LogicalRDD leaf (leak found by the
+    * ConnectedComponentsSpec hygiene test: one stranded RDD per
+    * iteration).
+    */
+  private[graft] def release(df: DataFrame): Unit = {
+    df.unpersist()
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }.foreach(_.unpersist(false))
+  }
+
+  /** One eager localCheckpoint of `df` whose own job also computes the
+    * named long aggregates `scalars` (observed metrics on the
+    * checkpointed plan): a round's frame and its convergence or dispatch
+    * scalars (frontier size, survivor and node counts, edge fingerprint)
+    * cost ONE action, not a checkpoint plus a count/isEmpty/collect. The
+    * scalars are read off the checkpoint's own executed plan as soon as
+    * it returns, not from a listener event that a full listener-bus
+    * queue could drop.
+    */
+  private[graft] def checkpointed(df: DataFrame,
+      scalars: Column*): (DataFrame, Map[String, Long]) = {
+    val observed = df.observe("round", scalars.head, scalars.tail: _*)
+    val ck = observed.localCheckpoint(true)
+    val row = observed.queryExecution.observedMetrics("round")
+    (ck, row.getValuesMap[Long](row.schema.fieldNames.toSeq))
+  }
+
+  /** The round loop of the checkpointed fixpoints (g04, g07, g10 and
+    * the dedup connected components): `round(cur, r)` returns round r's
+    * frame, already checkpointed, and whether another round should run;
+    * at most `maxRounds` rounds. Each superseded round's frame is
+    * released as soon as its successor exists. `init` and the result
+    * never are: the caller owns both, and g10 reads core k's final edges
+    * after core k+1 has peeled from them. A round that returns `cur`
+    * itself (g10 at its fixpoint) supersedes nothing.
+    */
+  private[graft] def fixpoint(init: DataFrame, maxRounds: Int)(
+      round: (DataFrame, Int) => (DataFrame, Boolean)): DataFrame = {
+    var cur = init
+    var r = 0
+    var more = true
+    while (more && r < maxRounds) {
+      r += 1
+      val (next, go) = round(cur, r)
+      if ((cur ne init) && (next ne cur)) release(cur)
+      cur = next
+      more = go
+    }
+    cur
+  }
+
+  /** g01: PageRank over the undirected customer↔supplier trade graph
+    * (edge ⇔ the customer ever ordered a part from the supplier).
+    *
+    * Undirected (both directions materialized) so every node has out-degree
+    * ≥ 1 — no dangling-mass correction term, which would need a global
+    * scalar per round. The customer/supplier key spaces overlap, so nodes
+    * are disambiguated by parity-packing into longs internally and labeled
+    * `c:123` / `s:45` on output.
+    */
   def pagerank(s: SparkSession, d: String): DataFrame =
     pagerankOn(tradeEdges(s, d))
 
@@ -218,28 +275,45 @@ object Graph {
     * co-partitioned path equal to the broadcast one.
     */
   private[graft] def pagerankOn(edges: DataFrame,
-      bcastMax: Long = RANK_BCAST_MAX_NODES): DataFrame = {
-    // O(|nodes|) thin frame, checkpointed: serves the dispatch count AND
-    // the adj build (previously derived inline and broadcast uncounted)
-    val deg = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(true)
-    val nNodes = deg.count() // the dispatch scalar: exactly |nodes|
+      bcastMax: Long = RANK_BCAST_MAX_NODES): DataFrame =
+    pageRanks(edges, bcastMax).select(
+        expr("CASE WHEN node % 2 = 0 THEN concat('c:', CAST(node div 2 AS STRING)) " +
+          "ELSE concat('s:', CAST((node - 1) div 2 AS STRING)) END").as("node"),
+        col("r").as("rank_fp"))
+      .orderBy(col("rank_fp").desc, col("node"))
+
+  /** The rank prelude of g01/g11/t30 over a symmetric, src-partitioned,
+    * checkpointed edge frame: the (src, dst, outdeg(src)) adjacency the
+    * rounds touch, and the node count the [[iterJoin]] dispatch reads.
+    * The O(|nodes|) degree frame is checkpointed once and the node count
+    * is observed on that same checkpoint; it serves the adjacency build
+    * and is then released. In the co-partitioned regime the cached edges
+    * are re-laid by src (one thin exchange, amortized over every round)
+    * and the adjacency is checkpointed with that partitioning captured
+    * for every round's probe; the broadcast regime keeps the edges and
+    * plans exactly as before the dispatch existed.
+    */
+  private def rankAdjacency(edges: DataFrame,
+      bcastMax: Long): (DataFrame, Long) = {
+    val (deg, n) = checkpointed(
+      edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg")),
+      count(lit(1)).as("n_nodes"))
+    val nNodes = n("n_nodes")
     val co = nNodes > bcastMax
-    // co-partitioned regime only: re-lay the (cached) edges so the src
-    // hash layout is VISIBLE to the round joins — one thin exchange,
-    // amortized over every round. The broadcast regime keeps the edges
-    // and plans exactly as before the dispatch existed.
     val e = if (co) relayoutPartitioned(edges, col("src")) else edges
-    // (src, dst, outdeg(src)) — the only frame the iterations touch; eager
-    // checkpoint so four rounds scan cached blocks instead of re-deriving
-    // the join+distinct four times. In the co regime, checkpointed with
-    // the inherited src partitioning captured for every round's probe.
     val adjRaw = iterJoin(e, deg, e("src") === deg("node"), nNodes, bcastMax)
       .select(e("src"), e("dst"), deg("outdeg"))
     val adj = if (co) checkpointPreserving(adjRaw)
       else adjRaw.localCheckpoint(true)
+    release(deg)
+    (adj, nNodes)
+  }
 
+  /** The g01 rank kernel, shared by t30: [[ITERS]] damped fixed-point
+    * rounds from [[START_FP]] on every node, as lazy `(node, r)` rows.
+    */
+  private[graft] def pageRanks(edges: DataFrame, bcastMax: Long): DataFrame = {
+    val (adj, nNodes) = rankAdjacency(edges, bcastMax)
     // node set = adj's src side (every node has degree ≥ 1 by construction)
     var ranks = adj.select(col("src").as("node")).distinct()
       .withColumn("r", lit(START_FP))
@@ -261,11 +335,19 @@ object Graph {
         .select(col("dst").as("node"),
           (lit(BASE_FP) + expr(s"($DAMP_NUM * csum) div 100")).as("r"))
     }
-    ranks.select(
-        expr("CASE WHEN node % 2 = 0 THEN concat('c:', CAST(node div 2 AS STRING)) " +
-          "ELSE concat('s:', CAST((node - 1) div 2 AS STRING)) END").as("node"),
-        col("r").as("rank_fp"))
-      .orderBy(col("rank_fp").desc, col("node"))
+    ranks
+  }
+
+  /** The oracle mirror of [[pageRanks]]' rounds over an `adj` CTE and a
+    * start frame `r0`: CTEs r1..r[[ITERS]] (g01 and t30).
+    */
+  private[graft] val pageRanksSql: String = {
+    val round = (prev: String, cur: String) =>
+      s"""$cur AS (SELECT a.dst AS node,
+         |  CAST($BASE_FP AS BIGINT) +
+         |    ($DAMP_NUM * CAST(sum(r.r // a.outdeg) AS BIGINT)) // 100 AS r
+         |FROM adj a JOIN $prev r ON r.node = a.src GROUP BY a.dst)""".stripMargin
+    (1 to ITERS).map(k => round(s"r${k - 1}", s"r$k")).mkString(",\n")
   }
 
   /** g01 oracle: the same four rounds unrolled as chained CTEs. `//` is
@@ -273,12 +355,7 @@ object Graph {
     * non-negative operands here); sums are cast back to BIGINT before the
     * damping multiply because DuckDB widens sum(BIGINT) to HUGEINT.
     */
-  val pagerankSql: String = {
-    val round = (prev: String, cur: String) =>
-      s"""$cur AS (SELECT a.dst AS node,
-         |  CAST($BASE_FP AS BIGINT) +
-         |    ($DAMP_NUM * CAST(sum(r.r // a.outdeg) AS BIGINT)) // 100 AS r
-         |FROM adj a JOIN $prev r ON r.node = a.src GROUP BY a.dst)""".stripMargin
+  val pagerankSql: String =
     s"""WITH $tradeEdgesCte,
        |deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS outdeg
        |        FROM edges GROUP BY src),
@@ -286,15 +363,11 @@ object Graph {
        |        SELECT e.src, e.dst, d.outdeg
        |        FROM edges e JOIN deg d ON d.node = e.src),
        |r0 AS (SELECT node, CAST($START_FP AS BIGINT) AS r FROM deg),
-       |${round("r0", "r1")},
-       |${round("r1", "r2")},
-       |${round("r2", "r3")},
-       |${round("r3", "r4")}
+       |$pageRanksSql
        |SELECT CASE WHEN node % 2 = 0 THEN concat('c:', CAST(node // 2 AS VARCHAR))
        |  ELSE concat('s:', CAST((node - 1) // 2 AS VARCHAR)) END AS node,
        |  r AS rank_fp
-       |FROM r4 ORDER BY rank_fp DESC, node""".stripMargin
-  }
+       |FROM r$ITERS ORDER BY rank_fp DESC, node""".stripMargin
 
   // ------------------------------------ g11 personalized PageRank (PPR)
   /** Seed nations for g11: suppliers of nations < this are the trusted
@@ -337,16 +410,8 @@ object Graph {
     */
   private[graft] def pprTrustOn(edges: DataFrame, seeds: DataFrame,
       bcastMax: Long = RANK_BCAST_MAX_NODES): DataFrame = {
-    val deg = edges.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(true)
-    val nNodes = deg.count() // dispatch scalar; ranks ≤ nodes every round
-    val co = nNodes > bcastMax
-    val e = if (co) relayoutPartitioned(edges, col("src")) else edges
-    val adjRaw = iterJoin(e, deg, e("src") === deg("node"), nNodes, bcastMax)
-      .select(e("src"), e("dst"), deg("outdeg"))
-    val adj = if (co) checkpointPreserving(adjRaw)
-      else adjRaw.localCheckpoint(true)
+    // ranks ≤ nodes every round, so the node count is the dispatch scalar
+    val (adj, nNodes) = rankAdjacency(edges, bcastMax)
     // all walk mass starts ON the seeds; BASE_FP returns to them each round
     var ranks = seeds.select(col("seed").as("node"))
       .withColumn("r", lit(START_FP))
@@ -660,8 +725,10 @@ object Graph {
     labels
   }
 
-  /** g03 oracle: the same synchronous rounds unrolled. */
-  val labelPropagationSql: String = {
+  /** The g03 propagation unrolled, shared by the g03 and g08 oracles:
+    * the edge and seed CTEs, then the synchronous rounds l1..l[[LPA_ROUNDS]].
+    */
+  private val lpaRoundsSql: String = {
     val round = (prev: String, k: Int) =>
       s"""n$k AS (SELECT e.dst AS node, l.label, CAST(count(*) AS BIGINT) AS cnt
          |  FROM edges e JOIN $prev l ON l.node = e.src GROUP BY e.dst, l.label),
@@ -678,12 +745,16 @@ object Graph {
        |  SELECT 2 * s_suppkey + 1 AS node, CAST(s_nationkey AS BIGINT) AS label
        |  FROM supplier WHERE s_nationkey < $LPA_SEED_NATIONS),
        |l0 AS (SELECT node, label FROM seeds),
-       |$rounds
+       |$rounds""".stripMargin
+  }
+
+  /** g03 oracle: the same synchronous rounds unrolled. */
+  val labelPropagationSql: String =
+    s"""$lpaRoundsSql
        |SELECT label,
        |  CAST(count(*) FILTER (node % 2 = 0) AS BIGINT) AS n_customers,
        |  CAST(count(*) FILTER (node % 2 = 1) AS BIGINT) AS n_suppliers
        |FROM l$LPA_ROUNDS GROUP BY label ORDER BY label""".stripMargin
-  }
 
   /** g04 BFS geometry: seed = customer 0 (packed node 0 — custkeys start
     * at 0 and stay fixed under ScaleData, so the seed exists at every
@@ -707,10 +778,10 @@ object Graph {
     *
     * Iteration discipline (the g01/g03 lessons): adjacency localCheckpoint
     * at full parallelism; the SMALL frame (frontier) broadcast explicitly
-    * so AQE demotion can't strand a probe-side exchange; dist re-checkpoints
-    * each round so lineage stays O(1); the per-round empty-frontier check
-    * is one bounded driver scalar (the CC fingerprint style). Early exit on
-    * an empty frontier — the cap is a bound, not a fixed cost.
+    * so AQE demotion can't strand a probe-side exchange; the rounds run on
+    * [[fixpoint]], which checkpoints dist once per hop (lineage stays
+    * O(1)) and releases the hop it replaces. Early exit when a hop
+    * discovers no node — the cap is a bound, not a fixed cost.
     *
     * Newly-discovered detection is MIN-HOP AGGREGATION, not an
     * anti-join (round-17 optimization — the g07 relaxation shape,
@@ -719,30 +790,28 @@ object Graph {
     * into the accumulated distance frame — a node re-reached at hop r
     * keeps its earlier hop (min), a new node enters at r, and the next
     * frontier is exactly the rows at hop == r off the cached result.
-    * The old form paid, per round, a distinct exchange over the relaxed
-    * frame PLUS an anti-join against the |visited|-frame (statically an
-    * SMJ — at scale that is a full re-exchange of both sides) PLUS two
-    * eager checkpoints (next, dist∪next) and a third action for the
-    * isEmpty probe; this form pays one exchange, one checkpoint, and
-    * reads the frontier count off the cached frame. Equivalence: BFS
-    * min-hop — distinct+anti-join(visited)+hop=r emits a node iff its
-    * minimum discovery hop is exactly r, which is what min(hop) keeps.
+    * Equivalence: BFS min-hop — distinct+anti-join(visited)+hop=r emits
+    * a node iff its minimum discovery hop is exactly r, which is what
+    * min(hop) keeps. One action per hop: the count of rows at hop == r
+    * is observed on that hop's own checkpoint ([[checkpointed]]), and
+    * the seed is a local relation, so no probe or seed job runs.
     */
-  def bfsReach(s: SparkSession, d: String): DataFrame = {
-    val adj = tradeEdges(s, d)
-    var dist = adj.sparkSession.range(1)
-      .select(lit(BFS_SEED).as("node"), lit(0).cast("int").as("hop"))
-      .localCheckpoint(true)
-    var frontier = dist
-    var hop = 0
-    while (hop < BFS_MAX_HOPS && !frontier.isEmpty) {
-      hop += 1
+  def bfsReach(s: SparkSession, d: String): DataFrame =
+    bfsReachOf(tradeEdges(s, d), BFS_SEED)
+
+  /** g04 over any symmetric, checkpointed (src, dst) edge frame (spec
+    * face).
+    */
+  private[graft] def bfsReachOf(adj: DataFrame, seed: Long): DataFrame = {
+    val seedRow = adj.sparkSession.createDataFrame(Seq((seed, 0))).toDF("node", "hop")
+    val dist = fixpoint(seedRow, BFS_MAX_HOPS) { (dist, hop) =>
+      val frontier = dist.filter(col("hop") === hop - 1)
       val relaxed = adj.join(broadcast(frontier), adj("src") === frontier("node"))
-        .select(adj("dst").as("node"), lit(hop).cast("int").as("hop"))
-      dist = dist.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("hop")).as("hop"))
-        .localCheckpoint(true)
-      frontier = dist.filter(col("hop") === hop)
+        .select(adj("dst").as("node"), lit(hop).as("hop"))
+      val (next, n) = checkpointed(
+        dist.unionByName(relaxed).groupBy(col("node")).agg(min(col("hop")).as("hop")),
+        count(when(col("hop") === hop, 1)).as("fresh"))
+      (next, n("fresh") > 0)
     }
     // reachability profile + the out-of-component remainder (hop −1): the
     // node universe is adj's src side (degree ≥ 1 by construction)
@@ -988,10 +1057,11 @@ object Graph {
     * Iteration discipline (g01/g03/g04 lessons): the weighted adjacency
     * is repartitioned and localCheckpointed ONCE; the O(|nodes|) distance
     * frame is broadcast explicitly each round (AQE demotion would strand
-    * a probe-side exchange per round); dist re-checkpoints per round so
-    * lineage stays O(1). Six rounds = six bounded jobs; at node counts
-    * past broadcast reach the same loop runs with a shuffled src-keyed
-    * join (the frames stay |nodes|-bounded either way).
+    * a probe-side exchange per round); the rounds run on [[fixpoint]],
+    * which checkpoints dist once per round (lineage stays O(1)) and
+    * releases the round it replaces. Six rounds = six bounded jobs; at
+    * node counts past broadcast reach the same loop runs with a shuffled
+    * src-keyed join (the frames stay |nodes|-bounded either way).
     */
   def sssp(s: SparkSession, d: String): DataFrame = {
     val ew = Tables.orders(s, d).select(col("o_orderkey"), col("o_custkey"))
@@ -1029,15 +1099,13 @@ object Graph {
       .select(col("e.s").as("src"), col("e.t").as("dst"), col("e.w").as("w"))
       .repartition(col("src"))
       .localCheckpoint(true)
-    var dist = adj.sparkSession.range(1)
-      .select(lit(seed).as("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    for (_ <- 1 to SSSP_ROUNDS) {
+    val seedRow = adj.sparkSession.createDataFrame(Seq((seed, 0L))).toDF("node", "dist")
+    val dist = fixpoint(seedRow, SSSP_ROUNDS) { (dist, _) =>
       val relaxed = adj.join(broadcast(dist), adj("src") === dist("node"))
         .select(adj("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
+      (dist.unionByName(relaxed)
         .groupBy("node").agg(min(col("dist")).as("dist"))
-        .localCheckpoint(true)
+        .localCheckpoint(true), true)
     }
     dist.select(col("node"),
         when(col("node") % 2 === 0, lit("cust")).otherwise(lit("supp"))
@@ -1134,24 +1202,8 @@ object Graph {
   /** g08 oracle: the g03 unrolled propagation feeding the same exact
     * integer modularity arithmetic.
     */
-  val modularitySql: String = {
-    val round = (prev: String, k: Int) =>
-      s"""n$k AS (SELECT e.dst AS node, l.label, CAST(count(*) AS BIGINT) AS cnt
-         |  FROM edges e JOIN $prev l ON l.node = e.src GROUP BY e.dst, l.label),
-         |v$k AS (SELECT node, label FROM n$k
-         |  QUALIFY row_number() OVER (PARTITION BY node ORDER BY cnt DESC, label) = 1),
-         |l$k AS MATERIALIZED (
-         |  SELECT v.node, v.label FROM v$k v
-         |    LEFT JOIN seeds s ON s.node = v.node WHERE s.node IS NULL
-         |  UNION ALL SELECT node, label FROM seeds)""".stripMargin
-    val rounds = (1 to LPA_ROUNDS).map(k =>
-      round(if (k == 1) "l0" else s"l${k - 1}", k)).mkString(",\n")
-    s"""WITH $tradeEdgesCte,
-       |seeds AS MATERIALIZED (
-       |  SELECT 2 * s_suppkey + 1 AS node, CAST(s_nationkey AS BIGINT) AS label
-       |  FROM supplier WHERE s_nationkey < $LPA_SEED_NATIONS),
-       |l0 AS (SELECT node, label FROM seeds),
-       |$rounds,
+  val modularitySql: String =
+    s"""$lpaRoundsSql,
        |lab AS MATERIALIZED (
        |  SELECT u.node, coalesce(l.label, -1) AS label
        |  FROM (SELECT DISTINCT src AS node FROM edges) u
@@ -1169,12 +1221,12 @@ object Graph {
        |  mt.m_dir * intra_deg - deg_sum * deg_sum AS q_contrib_num
        |FROM pl JOIN nn USING (label) CROSS JOIN mt ORDER BY pl.label"""
       .stripMargin
-  }
 
   // --------------------------------------------- g10 k-core decomposition
   /** Fixed peel-round budget per k; the engine early-exits at the actual
-    * fixpoint (one bounded O(1) driver count per round, the g04 frontier
-    * discipline) and the unrolled oracle runs all [[KCORE_CAP]] rounds —
+    * fixpoint (the node and survivor counts observed on each round's
+    * degree checkpoint, the g04 frontier discipline) and the unrolled
+    * oracle runs all [[KCORE_CAP]] rounds —
     * identical by monotonicity: once peeling reaches its fixpoint every
     * further round is a no-op, so "engine at fixpoint" and "oracle after
     * CAP rounds" are the same edge set whenever the `converged` flag is
@@ -1211,24 +1263,24 @@ object Graph {
     *
     * Round structure (round-17 optimization — guide §2.4 remove
     * shuffles, §1.2 don't compute what you throw away): ONE per-round
-    * degree materialization (an O(|nodes|)-row eager checkpoint) serves
+    * degree checkpoint (O(|nodes|) rows, [[checkpointed]]) serves
     * (a) the fixpoint test, (b) BOTH endpoint semi-join build sides,
     * and (c) the [[iterJoin]] dispatch scalar — the TRUE survivor node
-    * count, not the former edge-row upper bound. The old form computed
-    * the survivor aggregate TWICE per round (once per broadcast build;
-    * the two subtrees' aliases defeated exchange reuse), and detected
-    * the fixpoint by running a FULL no-op peel — checkpointing and
-    * counting an edge frame identical to its input — once per k.
-    * The fixpoint test is now node-monotone: no node under degree k ⇒
-    * no edge removed ⇒ fixpoint (a removed node has ≥ 1 incident edge
-    * on a degree-≥1 frame, so node-set equality ⇔ edge-set equality).
+    * count. The node and survivor counts are observed on that same
+    * checkpoint, so a peel round costs two actions (degrees, peeled
+    * edges) and the fixpoint round one; the round's degree frame is
+    * released once the peel has read it, and [[fixpoint]] releases the
+    * edge frame each peel replaces. The fixpoint test is node-monotone:
+    * no node under degree k ⇒ no edge removed ⇒ fixpoint (a removed node
+    * has ≥ 1 incident edge on a degree-≥1 frame, so node-set equality ⇔
+    * edge-set equality).
     *
     * Per-round exchange discipline: the broadcast regime checkpoints
     * `peeled` DIRECTLY — the semi-joins are narrow over the previous
     * checkpoint's partitions, so the partition count (established once
     * by the caller's pre-checkpoint repartition) carries through every
-    * round and the former per-round `repartition(src)` full-edge
-    * exchange is dropped. The co regime keeps [[relayoutPartitioned]]:
+    * round with no per-round `repartition(src)` full-edge exchange. The
+    * co regime re-lays the peeled edges with [[relayoutPartitioned]]:
     * there the src layout must stay VISIBLE (statically captured) so
     * the next round's degree aggregate and src-side semi-join ride it;
     * its dst-side semi-join still re-exchanges the edges on dst each
@@ -1246,36 +1298,29 @@ object Graph {
     var edges = if (n0 > bcastMax) relayoutPartitioned(edgesIn, col("src"))
       else edgesIn
     val census = KCORE_KS.map { k =>
-      var cur = edges
-      var fixed = false
-      var round = 0
-      while (!fixed && round < KCORE_CAP) {
-        round += 1
-        // one O(|nodes|) materialization: fixpoint test + both builds
-        val degCk = cur.groupBy(col("src").as("node"))
-          .agg(count(lit(1)).as("deg"))
-          .localCheckpoint(true)
-        val nNow = degCk.count()
-        val keep = degCk.filter(col("deg") >= k)
-        val nSurv = keep.count() // exact |survivors|: dispatch scalar
-        if (nSurv == nNow) {
-          fixed = true // no node under k ⇒ no edge removed (monotone)
-        } else {
+      val core = fixpoint(edges, KCORE_CAP) { (cur, _) =>
+        val (degCk, n) = checkpointed(
+          cur.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+          count(lit(1)).as("n_now"), count(when(col("deg") >= k, 1)).as("n_surv"))
+        val nSurv = n("n_surv") // exact |survivors|: dispatch scalar
+        // no node under k ⇒ no edge removed (monotone): cur is the core
+        val next = if (nSurv == n("n_now")) cur else {
+          val keep = degCk.filter(col("deg") >= k)
           val peeled = iterJoin(
             iterJoin(cur, keep.select(col("node").as("ks")),
               col("src") === col("ks"), nSurv, bcastMax, "left_semi"),
             keep.select(col("node").as("kd")),
             col("dst") === col("kd"), nSurv, bcastMax, "left_semi")
-          cur =
-            if (nSurv > bcastMax)
-              relayoutPartitioned(peeled.localCheckpoint(true), col("src"))
-            else peeled.localCheckpoint(true) // narrow: partitions carry
+          if (nSurv > bcastMax) relayoutPartitioned(peeled, col("src"))
+          else peeled.localCheckpoint(true) // narrow: partitions carry
         }
+        release(degCk)
+        (next, next ne cur)
       }
-      edges = cur // the (k+1)-core peels from here
-      val conv = cur.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      edges = core // the (k+1)-core peels from here
+      val conv = core.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         .agg(coalesce(min(col("deg")) >= k, lit(true)).as("converged"))
-      cur.agg(countDistinct(col("src")).as("n_nodes"),
+      core.agg(countDistinct(col("src")).as("n_nodes"),
           count(lit(1)).as("c2"))
         .crossJoin(conv)
         .select(lit(k).as("k"), col("n_nodes"),

@@ -1718,8 +1718,6 @@ object Similarity {
   private[graft] def ivfPqLayoutFor(nCells: Int, k: Int): String =
     s"cells=$nCells,m=$PQ_M,subdim=$PQ_SUBDIM,k=$k,quant=${QUANT.toLong},store=flat"
 
-  private[graft] val ivfPqLayout: String = ivfPqLayoutFor(N_CELLS, PQ_K)
-
   /** Read and validate an IVF-PQ index's layout stamp, returning its
     * (nCells, k). The cell and codebook cardinalities are INDEX properties
     * (a production store runs k ≈ 256+ while the fixtures run 16 — both
@@ -1895,14 +1893,14 @@ object Similarity {
       survivors.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("cell").parquet(s"$dir/$tbl")
-      Dedup.release(survivors)
+      Graph.release(survivors)
       // dynamic overwrite replaces only partitions it WRITES — a cell
       // whose every row was tombstoned must be dropped by hand
       affected.filterNot(keptCells).foreach { c =>
         Dedup.deleteTreeIfExists(java.nio.file.Paths.get(dir, tbl, s"cell=$c"))
       }
     }
-    Dedup.release(tomb)
+    Graph.release(tomb)
     Dedup.deleteTreeIfExists(tombPath) // LAST: crash ⇒ probes still exclude
   }
 
@@ -1928,7 +1926,7 @@ object Similarity {
     * the index was written from the same corpus (spec-pinned). The
     * probe's intermediate checkpoint is released before returning; the
     * returned frame holds the one surviving checkpoint for the caller to
-    * [[Dedup.release]] once consumed (the probeMinhashIndex hygiene).
+    * [[Graph.release]] once consumed (the probeMinhashIndex hygiene).
     */
   def probeIvfPqIndex(s: SparkSession, dir: String, queries: DataFrame,
       k: Int = 10): DataFrame = {
@@ -1972,7 +1970,7 @@ object Similarity {
       .select("query_id", "rank", "vec_id", "adc")
       .orderBy("query_id", "rank")
       .localCheckpoint(true)
-    Dedup.release(qprobe)
+    Graph.release(qprobe)
     (res, cells)
   }
 
@@ -1987,7 +1985,7 @@ object Similarity {
     * vector data ever shuffles and the re-rank window is ≤ c rows per
     * query. Identical ranking to [[ivfPqRerank]] when the index holds the
     * same corpus (spec-pinned). Returned frame carries the one surviving
-    * checkpoint — [[Dedup.release]] once consumed.
+    * checkpoint — [[Graph.release]] once consumed.
     */
   def probeIvfPqIndexRefined(s: SparkSession, dir: String, queries: DataFrame,
       k: Int = 10, c: Int = RERANK_C): DataFrame = {
@@ -2008,7 +2006,7 @@ object Similarity {
       .select("query_id", "rank", "vec_id", "sq")
       .orderBy("query_id", "rank")
       .localCheckpoint(true)
-    Dedup.release(shortlist)
+    Graph.release(shortlist)
     res
   }
 

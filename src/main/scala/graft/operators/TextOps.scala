@@ -2123,36 +2123,30 @@ object TextOps {
   /** t30: TextRank keyword extraction (Mihalcea & Tarau 2004) — the g01
     * integer fixed-point PageRank run over the WORD co-occurrence graph:
     * nodes are corpus words (60-bit md5-hashed to long exchange keys),
-    * edges are distinct unordered adjacent-token pairs, four synchronous
-    * damped rounds, top [[TR_K]] words by rank. The composition is the
-    * point: the same iteration discipline (checkpointed adjacency,
-    * explicit broadcast of the rank frame, one O(|nodes|) exchange per
-    * round) serves a text-mining face — keyword salience for labeling /
-    * data-card generation — without any new machinery.
-    *
-    * Integer discipline ≡ g01: start mass 10⁹, contribution
-    * `rank div degree`, damping as `(85·Σ) div 100`; the overflow
-    * ceiling (~10^17 node-mass) is g01's, now against vocabulary size —
-    * far beyond any real vocabulary. No stopword list: the synthetic
-    * corpus is all content words (a production run would filter the
-    * t01 stopword set first, one more pushed-down predicate).
+    * edges are distinct unordered adjacent-token pairs, and the ranks are
+    * g01's own kernel ([[Graph.pageRanks]]: its constants, its four
+    * damped rounds), top [[TR_K]] words by rank. The composition is the
+    * point: the same iteration discipline serves a text-mining face —
+    * keyword salience for labeling / data-card generation — without any
+    * new machinery. The overflow ceiling (~10^17 node-mass) is g01's,
+    * now against vocabulary size — far beyond any real vocabulary. No
+    * stopword list: the synthetic corpus is all content words (a
+    * production run would filter the t01 stopword set first, one more
+    * pushed-down predicate).
     *
     * Scale shape: pairs come from one per-doc lead() window (partitioned
     * by doc, never corpus-wide); the graph shuffles 8-byte hashes; each
     * round is one broadcast join + partial-agg exchange; the vocab map
     * joins back only for the final ≤ TR_K rows... (TakeOrdered cut).
     */
-  private val TR_ITERS = 4
   private val TR_K = 20
-  private val TR_START = 1000000000L
-  private val TR_BASE = TR_START * 15L / 100L
 
   def textrankKeywords(s: SparkSession, d: String): DataFrame =
     textrankKeywordsOf(Tables.documents(s, d))
 
   /** t30 over any (doc_id, text) frame (spec-injectable face). The rank
     * joins dispatch through [[Graph.iterJoin]] on the vocabulary-node
-    * count — same broadcast-vs-co-partitioned switch as g01, though a
+    * count observed by g01's rank prelude — the g01 switch, though a
     * word-co-occurrence graph crossing 100M NODES means a 100M-word
     * vocabulary (open-vocabulary hashes), so the broadcast arm is the
     * expected one at any realistic corpus.
@@ -2176,46 +2170,18 @@ object TextOps {
       .distinct()
       .repartition(col("src"))
       .localCheckpoint(true)
-    val deg = edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("outdeg"))
-      .localCheckpoint(true)
-    val nNodes = deg.count() // dispatch scalar: exactly |vocab nodes|
-    val co = nNodes > bcastMax
-    val e = if (co) Graph.relayoutPartitioned(edges, col("src")) else edges
-    val adjRaw = Graph.iterJoin(e, deg, e("src") === deg("node"),
-        nNodes, bcastMax)
-      .select(e("src"), e("dst"), deg("outdeg"))
-    val adj = if (co) Graph.checkpointPreserving(adjRaw)
-      else adjRaw.localCheckpoint(true)
-    var ranks = adj.select(col("src").as("node")).distinct()
-      .withColumn("r", lit(TR_START))
-    for (_ <- 1 to TR_ITERS) {
-      ranks = Graph.iterJoin(adj, ranks, adj("src") === ranks("node"),
-          nNodes, bcastMax)
-        .select(adj("dst"), expr("r div outdeg").as("contrib"))
-        .groupBy(col("dst"))
-        .agg(sum(col("contrib")).as("csum"))
-        .select(col("dst").as("node"),
-          (lit(TR_BASE) + expr("(85 * csum) div 100")).as("r"))
-    }
     val vocab = toked.select(Dedup.baseHash(col("tok")).as("node"), col("tok"))
       .groupBy(col("node")).agg(min(col("tok")).as("word"))
-    ranks.join(vocab, "node")
+    Graph.pageRanks(edges, bcastMax).join(vocab, "node")
       .select(col("word"), col("r").as("rank_fp"))
       .orderBy(col("rank_fp").desc, col("word"))
       .limit(TR_K)
   }
 
-  /** t30 oracle: the same rounds unrolled (the pagerankSql shape) over
+  /** t30 oracle: g01's unrolled rounds ([[Graph.pageRanksSql]]) over
     * the SQL-mirrored co-occurrence graph and md5-prefix word hashes.
     */
-  val textrankKeywordsSql: String = {
-    val round = (prev: String, cur: String) =>
-      s"""$cur AS (SELECT a.dst AS node,
-         |  CAST($TR_BASE AS BIGINT) +
-         |    (85 * CAST(sum(r.r // a.outdeg) AS BIGINT)) // 100 AS r
-         |FROM adj a JOIN $prev r ON r.node = a.src GROUP BY a.dst)""".stripMargin
-    val rounds = (1 to TR_ITERS).map(k =>
-      round(if (k == 1) "r0" else s"r${k - 1}", s"r$k")).mkString(",\n")
+  val textrankKeywordsSql: String =
     s"""WITH t AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS toks
        |           FROM documents),
        |p AS (SELECT unnest([{'a': toks[i], 'b': toks[i+1]}
@@ -2232,15 +2198,14 @@ object TextOps {
        |        FROM edges GROUP BY src),
        |adj AS MATERIALIZED (
        |  SELECT e.src, e.dst, d.outdeg FROM edges e JOIN deg d ON d.node = e.src),
-       |r0 AS (SELECT node, CAST($TR_START AS BIGINT) AS r FROM deg),
-       |$rounds,
+       |r0 AS (SELECT node, CAST(${Graph.START_FP} AS BIGINT) AS r FROM deg),
+       |${Graph.pageRanksSql},
        |vocab AS (SELECT CAST(concat('0x', substr(md5(tok), 1, 15)) AS BIGINT) AS node,
        |    min(tok) AS word
        |  FROM (SELECT unnest(toks) AS tok FROM t) GROUP BY 1)
        |SELECT word, r AS rank_fp
-       |FROM r$TR_ITERS JOIN vocab USING (node)
+       |FROM r${Graph.ITERS} JOIN vocab USING (node)
        |ORDER BY rank_fp DESC, word LIMIT $TR_K""".stripMargin
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t30_textrank_keywords" -> (textrankKeywords _),

@@ -24,7 +24,7 @@ class AnnDeletionSpec extends SparkSpec {
   private def probe(dir: String): Seq[(Long, Int, Long)] = {
     val got = Similarity.probeIvfPqIndex(spark, dir, queries)
     val rows = got.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
-    Dedup.release(got)
+    Graph.release(got)
     rows
   }
 
@@ -59,7 +59,7 @@ class AnnDeletionSpec extends SparkSpec {
     // the refined (exact re-rank) flavor excludes them too
     val refined = Similarity.probeIvfPqIndexRefined(spark, dir, queries)
     val rrows = refined.collect().map(_.getLong(2)).toSeq
-    Dedup.release(refined)
+    Graph.release(refined)
     assert(rrows.nonEmpty && rrows.forall(id => !champions.contains(id)))
   }
 
@@ -119,7 +119,7 @@ class AnnDeletionSpec extends SparkSpec {
     survivors.write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("cell").parquet(s"$dir/vectors")
-    Dedup.release(survivors)
+    Graph.release(survivors)
     assert(spark.read.parquet(s"$dir/codes")
       .filter(col("vec_id").isInCollection(delIds)).count() > 0,
       "precondition: the crash left codes dirty")

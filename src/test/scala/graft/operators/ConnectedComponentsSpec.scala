@@ -21,21 +21,6 @@ class ConnectedComponentsSpec extends SparkSpec {
     assert(uf == expected)
   }
 
-  // Other suites share this SparkContext and may cache concurrently, so
-  // cache-hygiene is asserted on the before/after DELTA with retries: a
-  // genuine leak adds a surviving RDD on EVERY attempt; a concurrent
-  // suite's transient cache does not.
-  private def leaksAtMost(expected: Int)(run: => Unit): Boolean =
-    (1 to 5).exists { _ =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      run
-      val persisted = spark.sparkContext.getPersistentRDDs
-      val delta = persisted.keySet -- before
-      // drain what this attempt added (e.g. the expected final checkpoint)
-      delta.foreach(id => persisted.get(id).foreach(_.unpersist(true)))
-      delta.size <= expected
-    }
-
   test("small-graph path leaves no cached RDDs behind (cache is unpersisted)") {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     assert(leaksAtMost(0) { Dedup.connectedComponentsAuto(edges).collect() })

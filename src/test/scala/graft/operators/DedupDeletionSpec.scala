@@ -21,7 +21,7 @@ class DedupDeletionSpec extends SparkSpec {
     val v = Dedup.probeMinhashIndex(spark, dir, delta)
     val rows = v.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
-    Dedup.release(v)
+    Graph.release(v)
     rows
   }
 
@@ -93,7 +93,7 @@ class DedupDeletionSpec extends SparkSpec {
     def probeCopy(): Seq[(Long, Long)] = {
       val v = Dedup.probeExactIndex(spark, dir, copy)
       val rows = v.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-      Dedup.release(v)
+      Graph.release(v)
       rows
     }
     assert(probeCopy() == Seq((999999L, kid)), "the planted copy matches its keeper")
@@ -106,7 +106,7 @@ class DedupDeletionSpec extends SparkSpec {
     val v2 = Dedup.probeExactIndex(spark, dir, copy2)
     assert(v2.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((999998L, 999999L)), "future copies match the NEW keeper")
-    Dedup.release(v2)
+    Graph.release(v2)
     // vacuum: physical removal; bloom untouched (stale positive harmless)
     val bloomBefore = java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(dir, "bloom.bin")).toSeq
@@ -121,6 +121,6 @@ class DedupDeletionSpec extends SparkSpec {
     val v3 = Dedup.probeExactIndex(spark, dir, copy2)
     assert(v3.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq ==
       Seq((999998L, 999999L)), "post-compact probe unchanged")
-    Dedup.release(v3)
+    Graph.release(v3)
   }
 }

@@ -554,7 +554,7 @@ class SimilaritySpec extends SparkSpec {
     val got = Similarity.probeIvfPqIndex(spark, dir, queries)
     assert(got.collect().toSeq ==
       Similarity.ivfPqTopK(spark, sfDir).collect().toSeq)
-    graft.operators.Dedup.release(got)
+    graft.operators.Graph.release(got)
   }
 
   test("s09: probeIvfPqIndex strands no intermediate checkpoints") {
@@ -567,17 +567,11 @@ class SimilaritySpec extends SparkSpec {
     val queries = v.filter(col("vec_id") < 5)
       .select(col("vec_id").as("query_id"), col("qv"))
     Similarity.writeIvfPqIndex(v.filter(col("vec_id") >= 5), dir)
-    val clean = (1 to 5).exists { _ =>
-      val before = spark.sparkContext.getPersistentRDDs.keySet
+    assert(leaksAtMost(0) {
       val got = Similarity.probeIvfPqIndex(spark, dir, queries)
       got.collect()
-      graft.operators.Dedup.release(got)
-      val persisted = spark.sparkContext.getPersistentRDDs
-      val added = persisted.keySet -- before
-      added.foreach(id => persisted.get(id).foreach(_.unpersist(true)))
-      added.isEmpty
-    }
-    assert(clean, "probeIvfPqIndex leaked checkpointed RDDs")
+      graft.operators.Graph.release(got)
+    }, "probeIvfPqIndex leaked checkpointed RDDs")
   }
 
   test("s09: appendToIvfPqIndex encodes under the frozen model — merged probe == from-scratch") {
@@ -639,12 +633,12 @@ class SimilaritySpec extends SparkSpec {
     val mergedRefRows = mergedRef.collect().toSeq
     assert(mergedRefRows == scratchRef.collect().toSeq,
       "append left the refine store inconsistent with a from-scratch build")
-    Seq(mergedRef, scratchRef).foreach(graft.operators.Dedup.release)
+    Seq(mergedRef, scratchRef).foreach(graft.operators.Graph.release)
     // appended vectors are genuinely searchable: some delta id must rank
     // (the delta is ~1/5 of the corpus across all cells)
     assert(mergedRows.exists(r => r.getLong(2) > 400 && r.getLong(2) % 31 != 6),
       s"no appended vector ranked: $mergedRows")
-    Seq(merged, scratch).foreach(graft.operators.Dedup.release)
+    Seq(merged, scratch).foreach(graft.operators.Graph.release)
     // compaction folds the append debris to one file per cell without
     // touching the frozen model or any ranking
     graft.operators.Similarity.compactIvfPqIndex(spark, s"$dir/inc")
@@ -660,11 +654,11 @@ class SimilaritySpec extends SparkSpec {
     val compacted = Similarity.probeIvfPqIndex(spark, s"$dir/inc", queries)
     assert(compacted.collect().toSeq == mergedRows,
       "compaction changed the ANN ranking")
-    graft.operators.Dedup.release(compacted)
+    graft.operators.Graph.release(compacted)
     val compactedRef = Similarity.probeIvfPqIndexRefined(spark, s"$dir/inc", queries)
     assert(compactedRef.collect().toSeq == mergedRefRows,
       "compaction changed the refined ranking")
-    graft.operators.Dedup.release(compactedRef)
+    graft.operators.Graph.release(compactedRef)
   }
 
   test("s11 at rest: refined probe equals the registered re-rank, prunes the vectors scan, strands nothing") {
@@ -700,7 +694,7 @@ class SimilaritySpec extends SparkSpec {
     assert(got.collect().toSeq ==
       Similarity.ivfPqRerank(spark, sfDir).collect().toSeq,
       "refined probe ranks differently from the registered s11 query")
-    graft.operators.Dedup.release(got)
+    graft.operators.Graph.release(got)
     val persisted = spark.sparkContext.getPersistentRDDs
     val added = persisted.keySet -- before
     added.foreach(id => persisted.get(id).foreach(_.unpersist(true)))
@@ -827,7 +821,7 @@ class SimilaritySpec extends SparkSpec {
     // and no near verdict exists for an exact-matched doc
     assert(registered.filter(col("tier") === "near" &&
       col("doc_id").isin(exactIds.toSeq: _*)).count() == 0)
-    Dedup.release(probed)
+    Graph.release(probed)
   }
 
   test("ANN at production k: 256 cells / 256 codes stay broadcast-safe; probe prune stays literal-bounded") {
@@ -939,7 +933,7 @@ class SimilaritySpec extends SparkSpec {
     Dedup.writeMinhashIndex(day1, s"$dir/inc")
     val before = parquetListing(s"$dir/inc")
     // day-2 probes (the daily verdict), then is absorbed
-    Dedup.release(Dedup.probeMinhashIndex(spark, s"$dir/inc", day2))
+    Graph.release(Dedup.probeMinhashIndex(spark, s"$dir/inc", day2))
     Dedup.appendToMinhashIndex(day2, s"$dir/inc")
     val after = parquetListing(s"$dir/inc")
     assert(before.forall { case (f, sz) => after.get(f).contains(sz) },
@@ -968,7 +962,7 @@ class SimilaritySpec extends SparkSpec {
     val afterTorn = Dedup.probeMinhashIndex(spark, s"$dir/inc", day3)
     assert(afterTorn.collect().toSeq == mergedRows,
       "orphan signatures changed probe verdicts")
-    Seq(merged, scratch, day3, afterTorn).foreach(Dedup.release)
+    Seq(merged, scratch, day3, afterTorn).foreach(Graph.release)
   }
 
   test("d17: appendToExactIndex absorbs a delta — merged probe == from-scratch; bloom union is live") {
@@ -984,7 +978,7 @@ class SimilaritySpec extends SparkSpec {
     val day2Verdict = Dedup.probeExactIndex(spark, s"$dir/inc", day2)
     // organic corpus has no exact dups: day-2 is all-new, append it whole
     assert(day2Verdict.count() == 0)
-    Dedup.release(day2Verdict)
+    Graph.release(day2Verdict)
     val before = parquetListing(s"$dir/inc/hashes")
     Dedup.appendToExactIndex(day2, s"$dir/inc")
     val after = parquetListing(s"$dir/inc/hashes")
@@ -1002,7 +996,7 @@ class SimilaritySpec extends SparkSpec {
       s"planted day-2 copy not matched: $mergedRows")
     // an empty append is a no-op, not a crash
     Dedup.appendToExactIndex(day2.filter(lit(false)), s"$dir/inc")
-    Seq(merged, scratch, day3).foreach(Dedup.release)
+    Seq(merged, scratch, day3).foreach(Graph.release)
   }
 
   private def filesPerBucket(path: String): Map[String, Int] =
@@ -1024,7 +1018,7 @@ class SimilaritySpec extends SparkSpec {
     Dedup.appendToExactIndex(day2, s"$dir/inc")
     val before = Dedup.probeExactIndex(spark, s"$dir/inc", day3)
     val beforeRows = before.collect().toSeq
-    Dedup.release(before)
+    Graph.release(before)
     assert(filesPerBucket(s"$dir/inc/hashes").values.exists(_ > 1),
       "no multi-file bucket — compaction untestable")
     // a stale __compact from a crashed prior run is reconciled, not tripped over
@@ -1039,7 +1033,7 @@ class SimilaritySpec extends SparkSpec {
       "compaction left swap debris")
     val after = Dedup.probeExactIndex(spark, s"$dir/inc", day3)
     assert(after.collect().toSeq == beforeRows, "compaction changed probe verdicts")
-    Dedup.release(after)
+    Graph.release(after)
     // the manifest now records the actual key count at the original fpp —
     // future appends size their delta blooms against reality
     val meta = new String(Files.readAllBytes(
@@ -1055,7 +1049,7 @@ class SimilaritySpec extends SparkSpec {
       day4.select((col("doc_id") + 1000L).as("doc_id"), col("text")))
     assert(reprobe.count() == day4.count(),
       "post-compaction append not probe-visible")
-    Seq(reprobe, day3).foreach(Dedup.release)
+    Seq(reprobe, day3).foreach(Graph.release)
   }
 
   test("d16: compactMinhashIndex folds both bucketed tables; probe identical") {
@@ -1068,7 +1062,7 @@ class SimilaritySpec extends SparkSpec {
     Dedup.appendToMinhashIndex(day2, s"$dir/inc")
     val before = Dedup.probeMinhashIndex(spark, s"$dir/inc", day3)
     val beforeRows = before.collect().toSeq
-    Dedup.release(before)
+    Graph.release(before)
     assert(filesPerBucket(s"$dir/inc/bands").values.exists(_ > 1),
       "no multi-file band bucket — compaction untestable")
     Dedup.compactMinhashIndex(spark, s"$dir/inc")
@@ -1081,7 +1075,7 @@ class SimilaritySpec extends SparkSpec {
     }
     val after = Dedup.probeMinhashIndex(spark, s"$dir/inc", day3)
     assert(after.collect().toSeq == beforeRows, "compaction changed probe verdicts")
-    Seq(after, day3).foreach(Dedup.release)
+    Seq(after, day3).foreach(Graph.release)
   }
 
   test("index writers rebuild cleanly over an existing directory (the retrain path)") {
@@ -1105,7 +1099,7 @@ class SimilaritySpec extends SparkSpec {
     val exNew = Dedup.probeExactIndex(spark, s"$dir/ex", day2Copy)
     assert(exOld.count() == 0, "stale exact-index content survived a rebuild")
     assert(exNew.count() == 1, "rebuilt exact index misses its own corpus")
-    Seq(exOld, exNew).foreach(Dedup.release)
+    Seq(exOld, exNew).foreach(Graph.release)
     // minhash: after a rebuild over day2, both tables hold ONLY day2 ids
     Dedup.writeMinhashIndex(day1, s"$dir/mh")
     Dedup.writeMinhashIndex(day2, s"$dir/mh")
@@ -1131,7 +1125,7 @@ class SimilaritySpec extends SparkSpec {
     assert(rebuilt.collect().toSeq ==
       Similarity.ivfPqTopK(spark, d).collect().toSeq,
       "rebuilt index ranks differently from the registered query")
-    Dedup.release(rebuilt)
+    Graph.release(rebuilt)
   }
 
   test("torn exact rebuild is loud; rebuild migrates an old-layout index and stamps last") {
@@ -1166,7 +1160,7 @@ class SimilaritySpec extends SparkSpec {
       .select((col("doc_id") + 50000000L).as("doc_id"), col("text"))
     val probed = Dedup.probeExactIndex(spark, s"$dir/ex", day2Copy)
     assert(probed.count() == 1, "migrated index misses its own corpus")
-    Dedup.release(probed)
+    Graph.release(probed)
   }
 
   test("s11 re-rank recovers recall over the raw ADC ranking; refine joins broadcast") {
@@ -1312,22 +1306,13 @@ class SimilaritySpec extends SparkSpec {
     Dedup.writeMinhashIndex(base, s"$dir/mh")
     Dedup.writeExactIndex(base, s"$dir/ex")
     val delta = docs.filter(expr("doc_id % 5 = 0")).select("doc_id", "text")
-    def leaksAtMost(expected: Int)(run: => Unit): Boolean =
-      (1 to 5).exists { _ =>
-        val before = spark.sparkContext.getPersistentRDDs.keySet
-        run
-        val persisted = spark.sparkContext.getPersistentRDDs
-        val added = persisted.keySet -- before
-        added.foreach(id => persisted.get(id).foreach(_.unpersist(true)))
-        added.size <= expected
-      }
     assert(leaksAtMost(0) {
       val v = Dedup.probeMinhashIndex(spark, s"$dir/mh", delta)
-      v.collect(); Dedup.release(v)
+      v.collect(); Graph.release(v)
     }, "probeMinhashIndex leaked checkpointed RDDs")
     assert(leaksAtMost(0) {
       val v = Dedup.probeExactIndex(spark, s"$dir/ex", delta)
-      v.collect(); Dedup.release(v)
+      v.collect(); Graph.release(v)
     }, "probeExactIndex leaked checkpointed RDDs")
   }
 

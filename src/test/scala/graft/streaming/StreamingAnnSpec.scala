@@ -29,7 +29,7 @@ class StreamingAnnSpec extends SparkSpec {
     val expect = Similarity.probeIvfPqIndex(spark, dir, queries)
     val expectRows = expect.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
-    graft.operators.Dedup.release(expect)
+    graft.operators.Graph.release(expect)
     assert(expectRows.nonEmpty, "batch probe returned nothing — fixture broken")
 
     val qRows = queries.collect()
@@ -94,7 +94,7 @@ class StreamingAnnSpec extends SparkSpec {
     val expect = Similarity.probeIvfPqIndex(spark, dir, queries)
     val expectRows = expect.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSeq
-    graft.operators.Dedup.release(expect)
+    graft.operators.Graph.release(expect)
     assert(expectRows.nonEmpty)
 
     val prevFallback = spark.conf.getOption("spark.sql.codegen.fallback")
@@ -202,7 +202,7 @@ class StreamingAnnSpec extends SparkSpec {
     val expect = Similarity.probeIvfPqIndex(spark, dir, queries)
     val expectRows = expect.collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3))).toSet
-    graft.operators.Dedup.release(expect)
+    graft.operators.Graph.release(expect)
     assert(postRefresh == expectRows)
     // and it genuinely changed: the appended vectors entered some top-10
     assert(postRefresh != preRefresh,

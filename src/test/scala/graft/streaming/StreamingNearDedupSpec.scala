@@ -122,7 +122,7 @@ class StreamingNearDedupSpec extends SparkSpec {
     // before the refresh and suppressed only after
     val day2Probe = graft.operators.Dedup.probeMinhashIndex(spark, dir, day2)
     val withCand = day2Probe.select("doc_id").collect().map(_.getLong(0)).toSet
-    graft.operators.Dedup.release(day2Probe)
+    graft.operators.Graph.release(day2Probe)
     val x = day2.select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
       .filter(t => !withCand.contains(t._1)).minBy(_._1)
@@ -143,7 +143,7 @@ class StreamingNearDedupSpec extends SparkSpec {
           seen += batch.select("doc_id").distinct().collect().map(_.getLong(0)).toSet
           adm ++= StreamingNearDedup.indexAdmitted(batch).collect().map(_.getLong(0))
         }
-        graft.operators.Dedup.release(batch)
+        graft.operators.Graph.release(batch)
         ()
       }
       .start()
@@ -188,7 +188,7 @@ class StreamingNearDedupSpec extends SparkSpec {
     val batch = graft.operators.Dedup.probeExactThenNear(
       spark, exactDir, mhDir, deltaDf)
     val batchRows = batch.collect()
-    graft.operators.Dedup.release(batch)
+    graft.operators.Graph.release(batch)
     val batchDup = batchRows.filter(_.getAs[Int]("is_dup") == 1)
       .map(_.getAs[Long]("doc_id")).toSet
     val exactIds = batchRows.filter(_.getAs[String]("tier") == "exact")
@@ -246,7 +246,7 @@ class StreamingNearDedupSpec extends SparkSpec {
     // byte-copy is fully admitted pre-refresh and exact-suppressed after
     val day2Probe = graft.operators.Dedup.probeMinhashIndex(spark, mhDir, day2)
     val withCand = day2Probe.select("doc_id").collect().map(_.getLong(0)).toSet
-    graft.operators.Dedup.release(day2Probe)
+    graft.operators.Graph.release(day2Probe)
     val x = day2.collect().map(r => (r.getLong(0), r.getString(1)))
       .filter(t => !withCand.contains(t._1)).minBy(_._1)
     val seen = scala.collection.mutable.ListBuffer[Set[Long]]()
@@ -266,7 +266,7 @@ class StreamingNearDedupSpec extends SparkSpec {
             .map(r => (r.getAs[Long]("doc_id"), r.getAs[String]("tier")))
           adm ++= StreamingNearDedup.indexAdmitted(batch).collect().map(_.getLong(0))
         }
-        graft.operators.Dedup.release(batch)
+        graft.operators.Graph.release(batch)
         ()
       }
       .start()
