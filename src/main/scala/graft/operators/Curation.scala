@@ -593,30 +593,13 @@ object Curation {
     *
     * Scale shape: a per-source cumulative sum is order-dependent, and
     * `source` has ~20 values — a window partitioned by bare source would
-    * scan petabytes on one task. This is the classic DISTRIBUTED PREFIX
-    * SUM instead: (1) slice each source's doc_id sequence into
-    * [[PACK_SLICES]] contiguous ranges; (2) aggregate one token total
-    * per (source, slice) — a tiny frame — and turn it into per-slice
-    * base offsets with a window over that tiny frame; (3) broadcast the
-    * bases back and compute the running sum LOCALLY within each
-    * (source, slice). Every task touches one bounded slice; no
-    * single-task-per-source scan anywhere.
-    *
-    * The slice id is DETERMINISTIC ARITHMETIC — `doc_id div width` with
-    * width from the exact max(doc_id) (division first, so arbitrary
-    * int64 ids cannot overflow) — NOT spark_partition_id() over a range
-    * exchange. An earlier form used the latter; it is subtly unsound:
-    * the frame feeds two consumers (base aggregate + running-sum join),
-    * the planner does NOT dedup their exchanges (column pruning makes
-    * the subtrees non-identical — verified: two rangepartitioning
-    * plan_ids, no ReusedExchange), and RangePartitioner seeds boundary
-    * sampling from the per-materialization RDD id. At test scale the
-    * sample is exhaustive so both exchanges compute equal bounds; at
-    * 100 TB sparse sampling diverges and base offsets silently mis-join.
-    * Any monotone function of doc_id cuts each source's sequence into
-    * contiguous runs, so the arithmetic slice keeps base + local prefix
-    * = global per-source prefix EXACTLY, with no dependence on physical
-    * partitioning at all. PlanShapeSpec pins the two-phase plan.
+    * scan petabytes on one task. The offset is instead the
+    * [[SlicedPrefix]] running sum per source over [[PACK_SLICES]]
+    * contiguous doc_id ranges, so the bin frame is ≤ sources ·
+    * PACK_SLICES rows. The slice id is `doc_id div width`, with width
+    * from the exact max(doc_id) (division first, so arbitrary int64 ids
+    * cannot overflow): deterministic arithmetic, not physical
+    * partitioning. PlanShapeSpec pins the two-phase plan.
     *
     * All arithmetic is exact int64 (`div`, not float division), so the
     * oracle hash-matches at any corpus size — the oracle keeps the
@@ -626,7 +609,6 @@ object Curation {
   val PACK_SLICES = 32
 
   def sequencePacking(s: SparkSession, d: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
     val base0 = Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
         size(TextFunctions.tokens(col("text"))).cast("long").as("n_tokens"))
@@ -637,21 +619,10 @@ object Curation {
     val sliced = base0.crossJoin(broadcast(bound))
       .withColumn("slice", expr("doc_id div width").cast("int"))
       .drop("width")
-    // per-(source, slice) totals → cumulative base offset per slice; the
-    // frame is ≤ sources·PACK_SLICES rows, so the bare-source window here
-    // sorts a handful of rows, not the corpus
-    val wBase = W.partitionBy(col("source")).orderBy(col("slice"))
-      .rowsBetween(W.unboundedPreceding, -1)
-    val bases = sliced.groupBy("source", "slice")
-      .agg(sum(col("n_tokens")).as("slice_tokens"))
-      .withColumn("base", coalesce(sum(col("slice_tokens")).over(wBase), lit(0L)))
-      .select("source", "slice", "base")
-    val wLocal = W.partitionBy(col("source"), col("slice")).orderBy(col("doc_id"))
-      .rowsBetween(W.unboundedPreceding, -1)
-    sliced
-      .join(broadcast(bases), Seq("source", "slice"))
-      .withColumn("offset",
-        col("base") + coalesce(sum(col("n_tokens")).over(wLocal), lit(0L)))
+    SlicedPrefix(sliced, Seq("slice"),
+        Seq(SlicedPrefix.Run("offset", desc = false, col("doc_id"))),
+        groups = Seq("source"), weight = Some(col("n_tokens")),
+        exclusive = true)
       .select(col("doc_id"), col("source"), col("n_tokens"),
         expr(s"offset div $SEQ_TOKENS").as("start_seq"),
         expr(s"(offset + n_tokens - 1) div $SEQ_TOKENS").as("end_seq"))
@@ -843,30 +814,17 @@ object Curation {
     * i.e. a single-partition window that serializes 100 TB through one
     * task.
     *
-    * Scale shape — distributed total-order ranking (the p06 prefix sum
-    * generalized from per-source to global): (1) slice the corpus into
-    * ranges CONTIGUOUS in the order key (bucket DESC, h, doc_id); (2)
-    * count rows per slice — a tiny frame — and turn counts into
-    * per-slice base offsets with a window over that tiny frame; (3)
-    * broadcast the bases back and row_number WITHIN each slice. base +
-    * local rank is exactly the global rank.
-    *
-    * The slice id is deterministic arithmetic, monotone in the order
-    * key — `(9 − bucket) · HSLICES + h div (2^60 / HSLICES)` (baseHash
-    * is 15 hex digits, so h < 2^60 exactly, and h is uniform, so slices
-    * balance) — NOT spark_partition_id() over a range exchange, for the
-    * reason sequencePacking documents: the frame feeds two consumers
-    * whose exchanges the planner does not dedup, and RangePartitioner's
-    * sampled bounds are not reproducible across materializations at
-    * sparse-sample scale. Quality deciles reuse t03's hash-green score,
-    * so `floor(quality·10)` is bit-identical on both engines; the
-    * oracle states the single-window form, value-identical by
-    * construction.
+    * Scale shape — the epoch rank is the [[SlicedPrefix]] rank over
+    * slices contiguous in the order key (bucket DESC, h, doc_id):
+    * `(9 − bucket) · HSLICES + h div (2^60 / HSLICES)` (baseHash is 15
+    * hex digits, so h < 2^60 exactly, and h is uniform, so slices
+    * balance), ≤40 values. Quality deciles reuse t03's hash-green score,
+    * so `floor(quality·10)` is bit-identical on both engines; the oracle
+    * states the single-window form, value-identical by construction.
     */
   val CURR_HSLICES = 4 // per quality decile: 10 buckets x 4 = 40 slices
 
   def curriculumOrder(s: SparkSession, d: String): DataFrame = {
-    val W = org.apache.spark.sql.expressions.Window
     val hWidth = (1L << 60) / CURR_HSLICES
     val docs = Tables.documents(s, d)
       .select(col("doc_id"),
@@ -876,16 +834,8 @@ object Curation {
       .withColumn("slice",
         ((lit(9L) - col("bucket")) * CURR_HSLICES + expr(s"h div $hWidth"))
           .cast("int"))
-    val wBase = W.orderBy(col("slice"))
-      .rowsBetween(W.unboundedPreceding, -1)
-    val bases = docs.groupBy("slice").agg(count(lit(1)).as("n"))
-      .withColumn("base", coalesce(sum(col("n")).over(wBase), lit(0L)))
-      .select("slice", "base")
-    val wLocal = W.partitionBy(col("slice"))
-      .orderBy(col("bucket").desc, col("h"), col("doc_id"))
-    docs
-      .join(broadcast(bases), Seq("slice"))
-      .withColumn("epoch_order", col("base") + row_number().over(wLocal).cast("long"))
+    SlicedPrefix(docs, Seq("slice"), Seq(SlicedPrefix.Run("epoch_order",
+        desc = false, col("bucket").desc, col("h"), col("doc_id"))))
       .select("doc_id", "bucket", "epoch_order")
       .orderBy("epoch_order")
   }
@@ -1187,11 +1137,11 @@ object Curation {
     * exact Horvitz–Thompson multiplicities — the "sample a ~fixed token
     * budget, long docs proportionally more likely" curation primitive.
     *
-    * Scale: the prefix sum is sliced by hash-range bins — one per-bin
-    * window (partitioned, parallel) plus a ≤256-row bin-offset frame
-    * (bounded by construction); no products anywhere (stride division
-    * instead of `n·P` cross-multiplication), so nothing overflows at any
-    * corpus size (P ≤ W = total corpus chars ≪ 2^63).
+    * Scale: P and W are the [[SlicedPrefix]] exclusive running sum and
+    * total of `w` over hash-range bins (≤256 of them, bounded by
+    * construction); no products anywhere (stride division instead of
+    * `n·P` cross-multiplication), so nothing overflows at any corpus
+    * size (P ≤ W = total corpus chars ≪ 2^63).
     */
   def ppsSample(s: SparkSession, d: String): DataFrame =
     ppsSampleOf(Tables.documents(s, d), PPS_N)
@@ -1200,30 +1150,14 @@ object Curation {
     * (spec-injectable face).
     */
   def ppsSampleOf(docs: DataFrame, n: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val h = docs.select(col("doc_id"),
         col("n_chars").cast("long").as("w"),
         Dedup.baseHash(col("doc_id").cast("string")).as("hv"))
       .withColumn("_pps_bin", expr(s"hv div $PPS_BIN_W"))
-    // base offsets AND the grand total come off ONE pass over the ≤256-row
-    // bin frame (two frames of the same ordered window), so the corpus
-    // aggregate underneath runs once and documents is scanned twice total
-    // (row stream + bin counts), not three times
-    val counts = h.groupBy("_pps_bin").agg(sum(col("w")).as("bw"))
-    val wBins = Window.orderBy(col("_pps_bin")) // ≤256 rows, bounded
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.orderBy(col("_pps_bin"))
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val bases = counts
-      .withColumn("base", coalesce(sum(col("bw")).over(wBins), lit(0L)))
-      .withColumn("tot", sum(col("bw")).over(wAll))
-      .select(col("_pps_bin"), col("base"), col("tot"))
-    val wLocal = Window.partitionBy(col("_pps_bin"))
-      .orderBy(col("hv"), col("doc_id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    h.join(broadcast(bases), "_pps_bin")
+    SlicedPrefix(h, Seq("_pps_bin"),
+        Seq(SlicedPrefix.Run("pre", desc = false, col("hv"), col("doc_id"))),
+        weight = Some(col("w")), exclusive = true, total = Some("tot"))
       .withColumn("s", greatest(lit(1L), expr(s"tot div $n")))
-      .withColumn("pre", col("base") + sum(col("w")).over(wLocal) - col("w"))
       .withColumn("hits", expr("((pre + w) div s) - (pre div s)"))
       .filter(col("hits") >= 1)
       .select(col("doc_id"), col("w"), col("hits"))
@@ -1553,48 +1487,29 @@ object Curation {
     * classic greedy-balance approximation that is also a pure function of
     * rank (reproducible, SQL-expressible, and re-runnable after appends).
     *
-    * Scale shape: the global rank is DECOMPOSED, never one window task
-    * (the t22 discipline): rank = (# docs with more tokens) + (# earlier
-    * docs at the same count). The first term is a running sum over the
-    * per-count aggregate — a frame whose size is the number of DISTINCT
-    * token counts, thousands at most regardless of corpus size; the
-    * second is a row_number partitioned by token count, where a
-    * pathologically hot count (a boilerplate-dominated corpus) escalates
-    * to t22's hot-bin split by doc_id chunks. The manifest rollup is
-    * [[N_SHARDS]] rows.
+    * Scale shape: the global rank is the [[SlicedPrefix]] rank over
+    * token-count bins, never one window task. The bin is `tok div 64`
+    * clamped to 16383, so the bin frame has ≤16,384 rows whatever the
+    * corpus. A bin's row_number runs in one task, so a pathologically
+    * hot count (a boilerplate-dominated corpus) puts that whole count
+    * through one sort; p24 has no hot-bin split, which keeps its plan
+    * lazy and free of actions. The manifest rollup is [[N_SHARDS]] rows.
     */
   def shardManifest(s: SparkSession, d: String): DataFrame =
     shardManifestOf(Tables.documents(s, d))
 
   /** p24 over any documents-shaped frame (spec-injectable face). */
   private[graft] def shardManifestOf(docs: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val N = N_SHARDS
     val d0 = docs.select(col("doc_id"),
       TextFunctions.bpeishTokenCount(col("text")).cast("long").as("tok"))
       // clamped value-range bin (the q47 _sgr_bin / p17 _pps_bin class):
-      // tok div 64 clamped to 16383 has a domain bounded by the VALUE
-      // range — ≤16,384 bins regardless of corpus size — so the bin
-      // aggregate below passes the unpartitioned-window census
-      // structurally; bins are monotone in tok, so higher bin ⇔ strictly
-      // more tokens and the decomposed rank equals the global one. Docs
+      // ≤16,384 bins regardless of corpus size, monotone in tok. Docs
       // past the clamp (≥2^20 bpe-ish tokens) share the top bin's
       // partition — the same rare-tail argument as q47's clamp.
       .withColumn("_shard_bin", least(expr("tok div 64"), lit(16383L)))
-    // docs in strictly higher bins: running sum over the per-BIN
-    // aggregate (≤16,384 rows by construction)
-    val counts = d0.groupBy("_shard_bin").agg(count(lit(1)).as("cnt"))
-      .withColumn("prefix", coalesce(sum(col("cnt")).over(
-        Window.orderBy(col("_shard_bin").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_shard_bin"), col("prefix"))
-    val ranked = d0
-      .withColumn("intra", row_number().over(
-        Window.partitionBy(col("_shard_bin"))
-          .orderBy(col("tok").desc, col("doc_id"))))
-      .join(broadcast(counts), "_shard_bin")
-      .withColumn("r0", col("prefix") + col("intra") - 1)
-    ranked
+    SlicedPrefix(d0, Seq("_shard_bin"), Seq(SlicedPrefix.Run(
+        "r0", desc = true, col("tok").desc, col("doc_id"))), exclusive = true)
       .withColumn("pos", col("r0") % N)
       .withColumn("shard",
         when(expr(s"r0 div $N") % 2 === 0, col("pos"))

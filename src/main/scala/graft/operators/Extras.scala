@@ -871,7 +871,6 @@ object Extras {
     * GINI_BIN_CENTS-wide bin. Specs force the path via the parameter.
     */
   private[graft] val GINI_HOT_BIN_USERS = 2000000L
-  private val GINI_TIE_CHUNK = 65536L // user_id chunk width inside one exact-cents tie
 
   /** q76: revenue CONCENTRATION per event type — the Gini coefficient of
     * per-user spend, the inequality/concentration slot in the statistics
@@ -880,31 +879,20 @@ object Extras {
     * dashboard answers. Gini needs the full Lorenz order (each user's
     * rank by spend), which is exactly the quantity naive SQL computes
     * with ONE UNPARTITIONED window over all users of a type — the
-    * scale-killer shape this repo's census bans. Here the rank is
-    * DECOMPOSED (the p17/p24/t22 prefix-sum discipline): a ≤16,384-row
-    * per-type bin-count frame gives each bin its rank base; a
-    * (type, bin)-partitioned row_number finishes it; the two never put
-    * a corpus-proportional partition through one task. Residual
-    * concentration — a (type, bin) partition holds EVERY user whose
-    * total spend falls in the same GINI_BIN_CENTS-wide bin, so a
-    * low-ARPU corpus where most users spend under $10 concentrates
-    * nearly the whole type into bin 0 — is now a DISPATCH, not prose
-    * (the t22/slicedRanks pattern applied verbatim): bins past
-    * [[GINI_HOT_BIN_USERS]] rank by decomposition — per-cents counts
-    * give each exact spend its offset inside the bin (a window over
-    * AGGREGATED rows, ≤ GINI_BIN_CENTS distinct values per non-clamp
-    * bin), user_id chunks split one exact-cents tie (the window input
-    * is one aggregated row per GINI_TIE_CHUNK-wide chunk, ≥65536-fold
-    * smaller than the tie), and a row_number over (type, cents, chunk)
-    * partitions of ≤~GINI_TIE_CHUNK rows finishes. The all-cold case —
-    * every corpus at healthy spread — keeps the ORIGINAL single-window
-    * plan verbatim (no hot aggregates, no union in the plan), decided
-    * from the bounded bin-census frame the kernel aggregates anyway.
-    * The only residual is a CLAMP bin (0 with unbounded negatives,
-    * NBINS−1 with unbounded spend) whose per-cents census is itself
-    * wide — but that census is aggregated rows (one per distinct cents,
-    * not per user), already ≥tie-size-fold below the raw partition the
-    * naive window would funnel.
+    * scale-killer shape this repo's census bans. Here the rank is the
+    * [[SlicedPrefix.byScore]] rank under (cents, user_id) per type: the
+    * bins are cents div GINI_BIN_CENTS clamped to [0, NBINS−1], so the
+    * per-type bin frame has ≤16,384 rows whatever the corpus. A (type,
+    * bin) partition holds EVERY user whose spend falls in that
+    * GINI_BIN_CENTS-wide bin, so a low-ARPU corpus where most users
+    * spend under $10 concentrates nearly the whole type into bin 0:
+    * bins past [[GINI_HOT_BIN_USERS]] take the kernel's hot-bin split
+    * (a bin is ≤ GINI_BIN_CENTS scores wide, so it has no fine level).
+    * The residual is a CLAMP bin (0 with unbounded negatives, NBINS−1
+    * with unbounded spend) whose per-cents level is itself wide — but
+    * it reads aggregated rows (one per distinct cents, not per user),
+    * already ≥tie-size-fold below the raw partition the naive window
+    * would funnel.
     *
     * The sufficient statistics are exact int64: cents = floor(100·value),
     * rank mass R = Σ rank·cents, and the population Gini
@@ -1000,7 +988,6 @@ object Extras {
   private[graft] def giniStatsOfUserCents(users: DataFrame,
       int64SafeMax: Double = GINI_INT64_SAFE,
       hotThreshold: Long = GINI_HOT_BIN_USERS): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     // envelope scalar: the worst int64 the kernel will form, from a
     // ≤|event_type|-row aggregate (bounded domain — the q-family
     // stance) over the cached user frame. max() is null on an empty
@@ -1013,76 +1000,15 @@ object Extras {
         lit(0.0)))
       .head().getDouble(0)
     val lift = worst > int64SafeMax
-    val u = users.withColumn("_gini_bin",
-      least(greatest(expr(s"cents div $GINI_BIN_CENTS"), lit(0L)),
-        lit(GINI_NBINS - 1)))
-    // bin census: bounded (≤ NBINS·|types| aggregated rows), checkpointed
-    // once — read by the hot dispatch scalar AND the rank join's
-    // broadcast build (the slicedRanks bases discipline)
-    val bases = u.groupBy(col("event_type"), col("_gini_bin"))
-      .agg(count(lit(1)).as("bn"))
-      .withColumn("prefix", coalesce(sum(col("bn")).over(
-        Window.partitionBy(col("event_type")).orderBy(col("_gini_bin"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .withColumn("hot", col("bn") > hotThreshold)
-      .select(col("event_type"), col("_gini_bin"), col("prefix"), col("hot"))
-      .localCheckpoint(true)
-    // bounded driver scalar off the checkpointed bin census — DISPATCH,
-    // not insurance: the all-cold plan is the pre-dispatch one verbatim
-    val anyHot = bases.filter(col("hot")).limit(1).count() > 0L
-    val joined = u.join(broadcast(bases), Seq("event_type", "_gini_bin"))
-    val wBin = Window.partitionBy(col("event_type"), col("_gini_bin"))
-      .orderBy(col("cents"), col("user_id"))
-    val ranked =
-      if (!anyHot)
-        joined.withColumn("rnk",
-          col("prefix") + row_number().over(wBin).cast("long"))
-      else {
-        val cold = joined.filter(!col("hot"))
-          .withColumn("rnk",
-            col("prefix") + row_number().over(wBin).cast("long"))
-        // hot decomposition (see revenueGini Scaladoc): within the bin,
-        //   rank = #users with smaller cents        (cbase — window over
-        //                                            per-cents AGGREGATED rows)
-        //        + #tied users in earlier id chunks (tbase — window over
-        //                                            per-chunk AGGREGATED rows;
-        //                                            cents determines its bin,
-        //                                            so keying by (type, cents)
-        //                                            cannot mix bins)
-        //        + row_number within (type, cents, chunk) — ≤~chunk rows
-        val hot = joined.filter(col("hot"))
-          .withColumn("_chunk", expr(s"user_id div $GINI_TIE_CHUNK"))
-        val centsBase = hot.groupBy(col("event_type"), col("_gini_bin"),
-            col("cents"))
-          .agg(count(lit(1)).as("cn"))
-          .withColumn("cbase", coalesce(sum(col("cn")).over(
-            Window.partitionBy(col("event_type"), col("_gini_bin"))
-              .orderBy(col("cents"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("event_type"), col("_gini_bin"), col("cents"),
-            col("cbase"))
-        val tieBase = hot.groupBy(col("event_type"), col("cents"),
-            col("_chunk"))
-          .agg(count(lit(1)).as("tn"))
-          .withColumn("tbase", coalesce(sum(col("tn")).over(
-            Window.partitionBy(col("event_type"), col("cents"))
-              .orderBy(col("_chunk"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-          .select(col("event_type"), col("cents"), col("_chunk"),
-            col("tbase"))
-        val hotRanked = hot
-          .join(centsBase, Seq("event_type", "_gini_bin", "cents"))
-          .join(tieBase, Seq("event_type", "cents", "_chunk"))
-          .withColumn("rnk",
-            col("prefix") + col("cbase") + col("tbase") +
-              row_number().over(
-                Window.partitionBy(col("event_type"), col("cents"),
-                  col("_chunk")).orderBy(col("user_id"))).cast("long"))
-        cold.select(col("event_type"), col("user_id"), col("cents"),
-            col("rnk"))
-          .unionByName(hotRanked.select(col("event_type"), col("user_id"),
-            col("cents"), col("rnk")))
-      }
+    // Lorenz rank under (cents, user_id) per type: the SlicedPrefix rank
+    // over clamped cents bins (≤ NBINS per type), hot bins split
+    val ranked = SlicedPrefix.byScore(
+      users.withColumn("_gini_bin",
+        least(greatest(expr(s"cents div $GINI_BIN_CENTS"), lit(0L)),
+          lit(GINI_NBINS - 1))),
+      Seq("_gini_bin"), "rnk", desc = false,
+      SlicedPrefix.HotSplit("cents", "user_id", GINI_BIN_CENTS, hotThreshold),
+      groups = Seq("event_type"))
     val stats =
       if (!lift) ranked.groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_users"),

@@ -287,29 +287,6 @@ object Relational2 {
       |FROM v ORDER BY vec_id""".stripMargin
 
   // ---------------------------------------------------------------- q47
-  /** Explicit null-ordering semantics: ranks under DESC NULLS LAST and
-    * ASC NULLS FIRST over a lag-produced nullable column (explicit on both
-    * engines — defaults differ across SQL dialects).
-    *
-    * Scale shape — the input slice (`user_id < 20`) grows linearly with
-    * the corpus, so a bare `row_number() OVER (ORDER BY …)` would funnel
-    * every row through ONE task (the shape p09 engineered out of the
-    * curation family). This is the p09 sliced total-order rank
-    * generalized to an arbitrary sort column: (1) quantize `prev` into
-    * cent bins — `floor(prev·100)` is deterministic arithmetic, MONOTONE
-    * in the sort key, so bins are contiguous ranges of the total order
-    * (and never come from a RangePartitioner, whose sampled bounds are
-    * not reproducible across a frame's consumers — see sequencePacking);
-    * (2) count rows per (null-flag, bin) — a frame bounded by the VALUE
-    * DOMAIN (cent granularity), not the corpus; (3) prefix-sum that tiny
-    * frame once per direction (nulls last for DESC, first for ASC) into
-    * per-slice base offsets; (4) broadcast the bases back and
-    * row_number WITHIN each bin: base + local rank = global rank, for
-    * both directions, off one count aggregate and zero corpus-wide
-    * sorts. Ties in `prev` break on unique event_id, so the distributed
-    * rank is bit-identical to the single-window statement the oracle
-    * keeps.
-    */
   /** Distributed two-direction global rank over a nullable numeric sort
     * column: adds `rn_desc` (sortCol DESC NULLS LAST, tieCol) and
     * `rn_asc` (sortCol ASC NULLS FIRST, tieCol) without ever planning an
@@ -318,8 +295,7 @@ object Relational2 {
     * single-window statement). NaN gets its own slice flag: Spark orders
     * NaN above every double, but `floor(NaN·100)` casts to null → bin 0,
     * so without the flag NaN rows would sort with bin 0 instead of at
-    * the top of the DESC order. See [[nullOrdering]] for the shape
-    * derivation.
+    * the top of the DESC order. [[SlicedPrefix]] holds the derivation.
     *
     * Boundedness is by CONSTRUCTION, not assumption: the sort column is
     * cast to double up front (a decimal/long whose `*100` overflows
@@ -337,41 +313,40 @@ object Relational2 {
   val SGR_BIN_RANGE = 1000.0
 
   def slicedGlobalRanks(df: DataFrame, sortCol: String, tieCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val vd = col(sortCol).cast("double")
     // least/greatest skip nulls and order NaN above all doubles, so null
     // and NaN rows clamp to the top bin — harmless: their slice FLAGS
-    // (_sgr_nn/_sgr_nan), not the bin, decide where they rank
+    // (_sgr_nn/_sgr_nan), not the bin, decide where they rank. NaN sorts
+    // above all numbers, so with the non-null flag the slice order is
+    // (nn, nan, bin) descending under DESC NULLS LAST and ascending
+    // under ASC NULLS FIRST: one bin count serves both directions
     val clamped = greatest(lit(-SGR_BIN_RANGE), least(lit(SGR_BIN_RANGE), vd))
     val p = df
-      .withColumn("_sgr_nn", col(sortCol).isNull.cast("int"))
+      .withColumn("_sgr_nn", col(sortCol).isNotNull.cast("int"))
       .withColumn("_sgr_nan", coalesce(isnan(vd).cast("int"), lit(0)))
       .withColumn("_sgr_bin", coalesce(floor(clamped * 100), lit(0L)))
-    val counts = p.groupBy("_sgr_nn", "_sgr_nan", "_sgr_bin").agg(count(lit(1)).as("cnt"))
-    // prefix sums over the tiny bin frame — bounded by the value domain.
-    // NaN sorts above all numbers, so the slice order is (NaN, numbers
-    // desc, nulls) under DESC NULLS LAST and (nulls, numbers asc, NaN)
-    // under ASC NULLS FIRST
-    val wDesc = Window.orderBy(col("_sgr_nn").asc, col("_sgr_nan").desc, col("_sgr_bin").desc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAsc = Window.orderBy(col("_sgr_nn").desc, col("_sgr_nan").asc, col("_sgr_bin").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bases = counts
-      .withColumn("_sgr_base_desc", coalesce(sum(col("cnt")).over(wDesc), lit(0L)))
-      .withColumn("_sgr_base_asc", coalesce(sum(col("cnt")).over(wAsc), lit(0L)))
-      .select("_sgr_nn", "_sgr_nan", "_sgr_bin", "_sgr_base_desc", "_sgr_base_asc")
-    val wLocalDesc = Window.partitionBy(col("_sgr_nn"), col("_sgr_nan"), col("_sgr_bin"))
-      .orderBy(col(sortCol).desc_nulls_last, col(tieCol))
-    val wLocalAsc = Window.partitionBy(col("_sgr_nn"), col("_sgr_nan"), col("_sgr_bin"))
-      .orderBy(col(sortCol).asc_nulls_first, col(tieCol))
-    p.join(broadcast(bases), Seq("_sgr_nn", "_sgr_nan", "_sgr_bin"))
-      .withColumn("rn_desc",
-        (col("_sgr_base_desc") + row_number().over(wLocalDesc)).cast("int"))
-      .withColumn("rn_asc",
-        (col("_sgr_base_asc") + row_number().over(wLocalAsc)).cast("int"))
-      .drop("_sgr_nn", "_sgr_nan", "_sgr_bin", "_sgr_base_desc", "_sgr_base_asc")
+    val bins = Seq("_sgr_nn", "_sgr_nan", "_sgr_bin")
+    SlicedPrefix(p, bins, Seq(
+        SlicedPrefix.Run("rn_desc", desc = true,
+          col(sortCol).desc_nulls_last, col(tieCol)),
+        SlicedPrefix.Run("rn_asc", desc = false,
+          col(sortCol).asc_nulls_first, col(tieCol))))
+      .withColumn("rn_desc", col("rn_desc").cast("int"))
+      .withColumn("rn_asc", col("rn_asc").cast("int"))
+      .drop(bins: _*)
   }
 
+  /** Explicit null-ordering semantics: ranks under DESC NULLS LAST and
+    * ASC NULLS FIRST over a lag-produced nullable column (explicit on both
+    * engines — defaults differ across SQL dialects).
+    *
+    * Scale shape — the input slice (`user_id < 20`) grows linearly with
+    * the corpus, so a bare `row_number() OVER (ORDER BY …)` would funnel
+    * every row through ONE task. Both ranks are [[SlicedPrefix]] ranks
+    * off one bin count ([[slicedGlobalRanks]]); ties in `prev` break on
+    * unique event_id, so the distributed rank is bit-identical to the
+    * single-window statement the oracle keeps.
+    */
   def nullOrdering(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("user_id")).orderBy(col("event_id"))

@@ -1287,9 +1287,8 @@ object TextOps {
     * Scale shape: the reference counts are one hash aggregate over the
     * en-slice pairs; scoring is the same shuffle join t15 keeps (AQE
     * demotes to broadcast while the realized bigram table is small); the
-    * tercile RANK is sliced by the [[PPL_BIN_W]] score bins — a per-bin
-    * partitioned window plus a ≤240-row bin frame (the p17 prefix-sum
-    * pattern), never an unpartitioned corpus window.
+    * tercile RANK is the [[SlicedPrefix]] rank over the [[PPL_BIN_W]]
+    * score bins ([[slicedRanks]]), never an unpartitioned corpus window.
     */
   def ccnetBuckets(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1321,8 +1320,7 @@ object TextOps {
       .groupBy("doc_id")
       .agg(floor(sum(col("q")).cast("double") / count(lit(1))).cast("long")
         .as("lm_score"))
-    // sliced global rank, descending (higher score = more in-domain),
-    // hot bins taking the decomposed skew-proof path (slicedRanks)
+    // sliced global rank, descending (higher score = more in-domain)
     slicedRanks(doc)
       .select(col("doc_id"), col("lm_score"),
         when(lit(3L) * col("rnk") <= col("tot"), "head")
@@ -1332,122 +1330,37 @@ object TextOps {
   }
 
   /** Population above which a score bin abandons its single per-bin rank
-    * window for the decomposed path in [[slicedRanks]]. Sized so a task
-    * ranking one cold bin sorts at most this many thin rows; no corpus
-    * at the test SFs comes near it — the threshold exists for the
+    * window for the decomposed path of [[SlicedPrefix.byScore]]. Sized so
+    * a task ranking one cold bin sorts at most this many thin rows; no
+    * corpus at the test SFs comes near it — the threshold exists for the
     * pathological skew case (e.g. a default score shared by a large
     * corpus fraction).
     */
   val HOT_BIN_THRESHOLD = 2000000L
-  private val FINE_SPLITS = 4096L  // fine sub-bins per hot bin
-  private val TIE_CHUNK = 65536L   // doc_id chunk width inside an exact-score tie
 
   /** Exact sliced global rank of a (doc_id, lm_score) frame under the
-    * order (lm_score DESC, doc_id ASC) — the t22/p17 prefix-sum pattern,
-    * upgraded from hazard note to handled: bins whose population exceeds
-    * `hotThreshold` are ranked by DECOMPOSITION instead of one per-bin
-    * window (which would funnel the hot bin through a single task):
-    *
-    *   rank = base(bin)                                  ≤240-row frame
-    *        + #rows in finer-greater sub-bins            (bin) window over ≤4096 aggregated rows
-    *        + #rows in my sub-bin with greater score     (bin,fine) window over ≤1024 aggregated rows
-    *        + #ties before my doc_id chunk               (score) window over aggregated chunk counts
-    *        + row_number within (score, chunk)           partitions of ≤~TIE_CHUNK rows
-    *
-    * Every level is a window over an AGGREGATED frame or a partitioned
-    * row_number — no corpus-proportional partition anywhere. The only
-    * residual concentration is the per-score chunk-count window when one
-    * EXACT score holds a huge tie: its input is one aggregated row per
-    * doc_id chunk (≥TIE_CHUNK-fold smaller than the tie, 4 thin columns),
-    * three orders below the raw rows the naive window would funnel.
-    *
-    * The sub-keys are ORDERED (finer score ranges; doc_id ranges inside
-    * an exact-score tie — where doc_id IS the order), not hashed: a hash
-    * sub-key scatters order across groups and cannot reconstruct exact
-    * ranks from offsets. Cold bins keep the original cheap single-window
-    * path, so at healthy skew the plan is unchanged.
-    *
-    * DISPATCH, not insurance: whether any bin is hot is decided from the
-    * ≤240-row bin-count frame (a bounded driver scalar, the
-    * unionFindLocal precedent) and the all-cold case — every corpus at
-    * healthy skew — gets the ORIGINAL single-window plan verbatim: no
-    * hot-branch aggregates, no union in the plan at all. Round 13
-    * planned the hot branch unconditionally and paid 1.4× on t22 for
-    * skew insurance that never fired.
+    * order (lm_score DESC, doc_id ASC), with the total row count: the
+    * [[SlicedPrefix.byScore]] kernel over `lm_score div PPL_BIN_W` bins,
+    * ≤240 of them over the quantized score range, so the bin frame is
+    * bounded. Bins past `hotThreshold` take the kernel's hot-bin split.
     *
     * The input is checkpointed as the thin (doc_id, lm_score, bin)
     * projection — 3 longs/row, ~10^10 rows ≈ 240 GB across a 1000-node
     * fleet at the 100 TB corpus, MEMORY_AND_DISK so overflow spills —
-    * because every face consumes it: the bin census, the dispatch
-    * scalar, and the rank join probe. Without it the plan derives the
-    * EXPENSIVE upstream scoring twice (census + probe; no shared
-    * exchange, so Catalyst cannot reuse it) — which is what t22 paid in
-    * every round up to 13.
+    * because every face consumes it: the bin census and the rank join
+    * probe. Without it the plan derives the EXPENSIVE upstream scoring
+    * twice (no shared exchange, so Catalyst cannot reuse it) — which is
+    * what t22 paid in every round up to 13.
     */
   private[graft] def slicedRanks(doc: DataFrame,
-      hotThreshold: Long = HOT_BIN_THRESHOLD): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val fineW = math.max(1L, PPL_BIN_W / FINE_SPLITS)
-    val binned = doc.withColumn("_ppl_bin", expr(s"lm_score div $PPL_BIN_W"))
-      .localCheckpoint(true)
-    val counts = binned.groupBy("_ppl_bin").agg(count(lit(1)).as("bn"))
-    val wAbove = Window.orderBy(col("_ppl_bin").desc) // ≤240 rows, bounded
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val wAll = Window.orderBy(col("_ppl_bin").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    val bases = counts
-      .withColumn("base", coalesce(sum(col("bn")).over(wAbove), lit(0L)))
-      .withColumn("tot", sum(col("bn")).over(wAll))
-      .withColumn("hot", col("bn") > hotThreshold)
-      .select(col("_ppl_bin"), col("base"), col("tot"), col("hot"))
-      .localCheckpoint(true) // ≤240 rows; read for the dispatch AND the join
-    // bounded driver scalar off the ≤240-row checkpointed bin frame
-    val anyHot = bases.filter(col("hot")).limit(1).count() > 0L
-    val joined = binned.join(broadcast(bases), "_ppl_bin")
-    val wLocal = Window.partitionBy(col("_ppl_bin"))
-      .orderBy(col("lm_score").desc, col("doc_id"))
-    if (!anyHot)
-      return joined
-        .withColumn("rnk", col("base") + row_number().over(wLocal))
-        .select(col("doc_id"), col("lm_score"), col("rnk"), col("tot"))
-    val cold = joined.filter(!col("hot"))
-      .withColumn("rnk", col("base") + row_number().over(wLocal))
-    val hot = joined.filter(col("hot"))
-      .withColumn("_fine", expr(s"lm_score div $fineW"))
-      .withColumn("_chunk", expr(s"doc_id div $TIE_CHUNK"))
-    val fineBase = hot.groupBy(col("_ppl_bin"), col("_fine"))
-      .agg(count(lit(1)).as("fn"))
-      .withColumn("fbase", coalesce(sum(col("fn")).over(
-        Window.partitionBy(col("_ppl_bin")).orderBy(col("_fine").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_ppl_bin"), col("_fine"), col("fbase"))
-    val scoreBase = hot.groupBy(col("_ppl_bin"), col("_fine"), col("lm_score"))
-      .agg(count(lit(1)).as("sn"))
-      .withColumn("sbase", coalesce(sum(col("sn")).over(
-        Window.partitionBy(col("_ppl_bin"), col("_fine"))
-          .orderBy(col("lm_score").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("_ppl_bin"), col("_fine"), col("lm_score"), col("sbase"))
-    // a score value determines its bin and fine sub-bin, so keying the
-    // tie level by lm_score alone cannot mix bins
-    val tieBase = hot.groupBy(col("lm_score"), col("_chunk"))
-      .agg(count(lit(1)).as("tn"))
-      .withColumn("tbase", coalesce(sum(col("tn")).over(
-        Window.partitionBy(col("lm_score")).orderBy(col("_chunk"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .select(col("lm_score"), col("_chunk"), col("tbase"))
-    val hotRanked = hot
-      .join(fineBase, Seq("_ppl_bin", "_fine"))
-      .join(scoreBase, Seq("_ppl_bin", "_fine", "lm_score"))
-      .join(tieBase, Seq("lm_score", "_chunk"))
-      .withColumn("rnk",
-        col("base") + col("fbase") + col("sbase") + col("tbase") +
-          row_number().over(Window.partitionBy(col("lm_score"), col("_chunk"))
-            .orderBy(col("doc_id"))))
-    cold.select(col("doc_id"), col("lm_score"), col("rnk"), col("tot"))
-      .unionByName(
-        hotRanked.select(col("doc_id"), col("lm_score"), col("rnk"), col("tot")))
-  }
+      hotThreshold: Long = HOT_BIN_THRESHOLD): DataFrame =
+    SlicedPrefix.byScore(
+        doc.withColumn("_ppl_bin", expr(s"lm_score div $PPL_BIN_W"))
+          .localCheckpoint(true),
+        Seq("_ppl_bin"), "rnk", desc = true,
+        SlicedPrefix.HotSplit("lm_score", "doc_id", PPL_BIN_W, hotThreshold),
+        total = Some("tot"))
+      .select(col("doc_id"), col("lm_score"), col("rnk"), col("tot"))
 
   val ccnetBucketsSql: String =
     s"""WITH t AS (SELECT doc_id, lang,
