@@ -5,7 +5,7 @@ import java.util.concurrent.{CompletionException, ExecutorService, Executors}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{classic, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{classic, DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -26,11 +26,14 @@ import graft.cdc.{CdcPipeline, Envelope}
   *   S4   error sink rows (data, error, table_name, db_name), mirroring
   *        the reference's `data_err` table (main.go:143-147)
   *
-  * The state sink here is read-merge-overwrite parquet — the local stand-in
-  * for a lakehouse MERGE/JDBC upsert in `foreachBatch`; swap `upsertBatch`'s
-  * tail for `MERGE INTO` at scale. Micro-batch boundaries provide the
-  * pause-the-world DDL barrier (ST4) — DDL rows would be applied on the
-  * driver between batches.
+  * The state sink is a merge-on-read parquet commit log (the
+  * Structured Streaming state-store layout, SIGMOD 2018): each
+  * micro-batch commits only its own binlog-latest rows as a delta beside
+  * a base, readers resolve latest-wins over base ∪ deltas, and compaction
+  * folds the deltas into a new base every [[MaxDeltas]] commits. It is the
+  * local-fs miniature of a lakehouse table format's merge-on-read upsert.
+  * Micro-batch boundaries provide the pause-the-world DDL barrier (ST4) —
+  * DDL rows would be applied on the driver between batches.
   *
   * Per DML micro-batch ([[runBatch]]): classify the records once into a
   * cached frame → one aggregate for every gate and count → the sink and
@@ -93,13 +96,17 @@ object CdcStreaming {
       inserts: Long, updates: Long, deletes: Long, invalid: Map[String, Long],
       retry: Long, dlq: Long) {
 
-    /** The batch's machine-readable log line. */
-    def json(batchId: Long, materializeMs: Long, sinkMs: Long, routeMs: Long): String = {
+    /** The batch's machine-readable log line, with the state commit its
+      * sink made, if any.
+      */
+    def json(batchId: Long, materializeMs: Long, sinkMs: Long, routeMs: Long,
+        commit: Option[StateCommit]): String = {
       val reasons = Reasons.map(r => s""""$r":${invalid(r)}""").mkString(",")
       s"""{"batch_id":$batchId,"valid":$valid,"tombstones":$tombstones,""" +
         s""""inserts":$inserts,"updates":$updates,"deletes":$deletes,"sink_rows":$sink,""" +
         s""""invalid":{$reasons},"retry":$retry,"dlq":$dlq,""" +
-        s""""materialize_ms":$materializeMs,"sink_ms":$sinkMs,"route_ms":$routeMs}"""
+        s""""materialize_ms":$materializeMs,"sink_ms":$sinkMs,"route_ms":$routeMs""" +
+        commit.fold("")(c => s""","commit":${c.json}""") + "}"
     }
   }
 
@@ -123,25 +130,48 @@ object CdcStreaming {
   }
 
   // ----------------------------------------------------- state commit log
-  /** The materialized state is a tiny commit log: `statePath/` holds
-    * immutable version directories (v00000001, v00000002, …) plus a
-    * one-line `_CURRENT` manifest naming the committed version. A commit
-    * writes a FRESH version dir, then publishes it with a single atomic
-    * rename of the manifest — so there is NO window in which a crash loses
-    * state (the r3 layout's read-merge-overwrite double-move could drop the
-    * `.old` copy if killed between its two Files.move calls). A crash
-    * before the manifest rename leaves an orphan version dir that the next
-    * successful commit garbage-collects; a crash during it is resolved by
-    * ATOMIC_MOVE (reader sees old or new manifest, never a torn one). This
-    * is the local-fs miniature of a lakehouse table-format commit —
-    * swap the whole block for `MERGE INTO` on Delta/Iceberg at scale.
+  /** The materialized state is a merge-on-read commit log, the state-store
+    * layout of Structured Streaming (SIGMOD 2018): a delta per committed
+    * batch plus a periodically compacted base. `statePath/` holds immutable
+    * version directories (v00000001, v00000002, …) and a `_CURRENT`
+    * manifest naming one version per line: the base first (one row per
+    * key), then its deltas, oldest first (each one batch's binlog-latest
+    * row per key). A one-line manifest is a base with no deltas.
+    *
+    * Every change, a batch's delta or a compaction's new base, is a FRESH
+    * version directory published by a single atomic rename of the
+    * manifest, so a crash loses nothing. Killed before the rename, it
+    * leaves an orphan directory that readers never see; the next commit
+    * takes a number past it (never re-uses it) and garbage-collects it. A
+    * crash during the rename is resolved by ATOMIC_MOVE: a reader sees the
+    * old or the new manifest, never a torn one.
     */
   private val Manifest = "_CURRENT"
   private val VersionRe = "v(\\d{8})".r
+  /** The key of a state row: latest-wins resolves per key. */
+  private val StateKeys = Seq("db", "tbl", "id")
 
-  private def committedVersion(root: Path): Option[String] = {
+  /** Compaction folds the deltas into a new base once there are this many.
+    *
+    * Write amplification: a batch of `d` changed keys, `n` of them new,
+    * writes a delta of `d` rows; every K batches the compaction rewrites
+    * the state, `S + K·n` rows for a state of `S` keys. Amortized, that is
+    * `1 + n/d + S/(K·d)` rows written per changed key. A 1000-event OLTP
+    * batch changes about 700 keys, about 300 of them new, so at
+    * S = 10⁵ keys K = 20 gives 1 + 0.43 + 7.1 ≈ 8.6 (at most 10 needs
+    * K ≥ 17).
+    *
+    * Read: a read resolves latest-wins over every delta, so K bounds the
+    * runs it lists and joins. Each costs a directory listing and a file
+    * open, small beside the base scan.
+    */
+  private[streaming] val MaxDeltas = 20
+
+  /** The committed base and deltas of `root`, oldest first, if any. */
+  private def manifestOf(root: Path): Option[Seq[String]] = {
     val m = root.resolve(Manifest)
-    if (Files.exists(m)) Some(Files.readString(m).trim) else None
+    if (Files.exists(m)) Some(Files.readAllLines(m).asScala.toSeq.map(_.trim).filter(_.nonEmpty))
+    else None
   }
 
   private def listVersions(root: Path): Seq[String] =
@@ -153,47 +183,97 @@ object CdcStreaming {
       finally s.close()
     }
 
-  /** Publish `df` as the next committed version of `statePath`. */
-  private def commitVersion(df: DataFrame, root: Path): Unit = {
-    Files.createDirectories(root)
-    // next = max existing + 1 (not committed + 1): an orphan dir from a
-    // crashed commit must never be re-used for fresh data
-    val next = f"v${listVersions(root).map(_.drop(1).toInt).maxOption.getOrElse(0) + 1}%08d"
-    df.write.mode(SaveMode.ErrorIfExists).parquet(root.resolve(next).toString)
-    val tmp = root.resolve(Manifest + ".tmp")
-    Files.writeString(tmp, next)
-    Files.move(tmp, root.resolve(Manifest),
-      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
-    listVersions(root).filterNot(_ == next).foreach(v => deleteRec(root.resolve(v)))
+  /** Write `df` as the next version of `root` (max existing + 1, not
+    * committed + 1: an orphan of a crashed commit must never be re-used
+    * for fresh data). Returns the version and its rows, observed on the
+    * write itself.
+    */
+  private def writeVersion(df: DataFrame, root: Path): (String, Long) = {
+    val v = f"v${listVersions(root).map(_.drop(1).toInt).maxOption.getOrElse(0) + 1}%08d"
+    val rows = Observation()
+    df.observe(rows, count(lit(1)).as("rows"))
+      .write.mode(SaveMode.ErrorIfExists).parquet(root.resolve(v).toString)
+    (v, rows.get("rows").asInstanceOf[Long])
   }
 
-  /** Idempotent keyed upsert: union incoming changes with current state,
-    * keep the binlog-latest surviving row per (db, tbl, id). Re-applying
-    * the same batch is a no-op (exactly-once effect). The merge reads the
-    * committed version and writes a NEW one, so no cache/count
-    * pre-materialization is needed — the write never overwrites its input.
+  /** Atomically make `versions` the committed manifest of `root`, then
+    * garbage-collect every version directory it does not name.
     */
-  def upsertBatch(spark: SparkSession, valid: DataFrame, statePath: String): Unit = {
+  private def publish(root: Path, versions: Seq[String]): Unit = {
+    val tmp = root.resolve(Manifest + ".tmp")
+    Files.writeString(tmp, versions.mkString("", "\n", "\n"))
+    Files.move(tmp, root.resolve(Manifest),
+      StandardCopyOption.REPLACE_EXISTING, StandardCopyOption.ATOMIC_MOVE)
+    listVersions(root).filterNot(versions.contains).foreach(v => deleteRec(root.resolve(v)))
+  }
+
+  /** Latest-wins over a manifest's base ∪ deltas by binlog coordinate,
+    * tombstones kept. The delta keys are broadcast: base rows they do not
+    * touch pass through unshuffled, and only the touched keys (their base
+    * row and their delta rows) go through [[CdcPipeline.latest]].
+    */
+  private def resolve(spark: SparkSession, root: Path, versions: Seq[String]): DataFrame = {
+    def read(vs: Seq[String]) = spark.read.parquet(vs.map(v => root.resolve(v).toString): _*)
+    val base = read(versions.take(1))
+    if (versions.size == 1) base
+    else {
+      val deltas = read(versions.drop(1))
+      val keys = broadcast(deltas.select(StateKeys.map(k => col(k).as(s"delta_$k")): _*))
+      val touched = StateKeys.map(k => base(k) <=> col(s"delta_$k")).reduce(_ && _)
+      base.join(keys, touched, "left_anti").unionByName(
+        CdcPipeline.latest(base.join(keys, touched, "left_semi").unionByName(deltas)))
+    }
+  }
+
+  /** What one state commit did: the manifest it left (`base` version and
+    * `deltas` count), the rows of the run it wrote (`deltaRows`; the first
+    * commit's run is the base), the rows of the new base when it compacted,
+    * and its milliseconds.
+    */
+  final case class StateCommit(base: String, deltas: Int, deltaRows: Long,
+      compactedRows: Option[Long], commitMs: Long) {
+    def json: String =
+      s"""{"base":"$base","deltas":$deltas,"delta_rows":$deltaRows,""" +
+        s""""compacted":${compactedRows.isDefined},"compacted_rows":${compactedRows.getOrElse(0L)},""" +
+        s""""commit_ms":$commitMs}"""
+  }
+
+  /** Idempotent keyed upsert: write the batch's binlog-latest row per
+    * (db, tbl, id) alone, as a delta (the base, on an empty path), and
+    * publish it; the commit never reads the state. Re-applying the same
+    * batch is a no-op (exactly-once effect): its rows carry the same
+    * coordinates, and latest-wins keeps one of each. Once there are
+    * [[MaxDeltas]] deltas, the same commit compacts them into a new base.
+    */
+  def upsertBatch(spark: SparkSession, valid: DataFrame, statePath: String): StateCommit = {
+    val t0 = System.nanoTime()
     val incoming = valid.select(Seq(col("db"), col("tbl"), col("id")) ++
       CdcPipeline.image(col("after")) ++ Seq(col("op"), col("file"), col("pos"), col("row")): _*)
     val root = Paths.get(statePath)
-    val current = committedVersion(root) match {
-      case Some(v) => spark.read.parquet(root.resolve(v).toString)
-      case None    => incoming.limit(0)
-    }
-    commitVersion(CdcPipeline.latest(current.unionByName(incoming)), root)
+    Files.createDirectories(root)
+    val (delta, deltaRows) = writeVersion(CdcPipeline.latest(incoming), root)
+    val committed = manifestOf(root).fold(Seq(delta))(_ :+ delta)
+    publish(root, committed)
+    val (base, deltas, compactedRows) =
+      if (committed.size <= MaxDeltas) (committed.head, committed.size - 1, None)
+      else {
+        val (base, rows) = writeVersion(resolve(spark, root, committed), root)
+        publish(root, Seq(base))
+        (base, 0, Some(rows))
+      }
+    StateCommit(base, deltas, deltaRows, compactedRows, (System.nanoTime() - t0) / 1000000)
   }
 
-  /** Live rows of the materialized state (delete tombstones stay in the
-    * sink for ordering correctness — a late-arriving older update must not
-    * resurrect a deleted key — and are dropped on read; compaction would
-    * purge them at scale).
+  /** Live rows of the materialized state: latest-wins over the base and
+    * its deltas. Delete tombstones stay in the state for ordering
+    * correctness (a late-arriving older update must not resurrect a
+    * deleted key) and are dropped on read.
     */
   def currentState(spark: SparkSession, statePath: String): DataFrame = {
     val root = Paths.get(statePath)
-    val v = committedVersion(root).getOrElse(
+    val versions = manifestOf(root).getOrElse(
       throw new IllegalStateException(s"no committed state at $statePath"))
-    spark.read.parquet(root.resolve(v).toString).filter(col("op") =!= "D")
+    resolve(spark, root, versions).filter(col("op") =!= "D")
   }
 
   private def deleteRec(p: java.nio.file.Path): Unit =
@@ -268,12 +348,13 @@ object CdcStreaming {
       .start()
 
   /** The one micro-batch loop behind every DML consumer mode: each batch
-    * goes through [[runBatch]].
+    * goes through [[runBatch]]. The sink returns the state commit it made,
+    * if it keeps the parquet state.
     */
   private[streaming] def startBatches(source: DataFrame, paths: SinkPaths,
       republishLimit: Int, republish: Boolean, checkpoint: String,
       table: Option[String] = None)
-      (sink: DataFrame => Unit): StreamingQuery =
+      (sink: DataFrame => Option[StateCommit]): StreamingQuery =
     source.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
@@ -285,12 +366,12 @@ object CdcStreaming {
     * take every gate and metric from one aggregate over it, then run the
     * sink (valid rows, only `table`'s when given) and the failure writes
     * of [[routeFailures]] side by side, each only when it has rows. Logs
-    * one JSON line ([[BatchCounts.json]]) on `graft.streaming.batch` and
-    * releases the cache.
+    * one JSON line ([[BatchCounts.json]], with the sink's state commit) on
+    * `graft.streaming.batch` and releases the cache.
     */
   private def runBatch(batch: DataFrame, batchId: Long, paths: SinkPaths,
       republishLimit: Int, republish: Boolean, table: Option[String])
-      (sink: DataFrame => Unit): Unit = {
+      (sink: DataFrame => Option[StateCommit]): Unit = {
     val t0 = System.nanoTime()
     val classified = classify(batch).persist()
     try {
@@ -298,10 +379,12 @@ object CdcStreaming {
       val materializeMs = (System.nanoTime() - t0) / 1000000
       val (valid, invalid) = split(classified)
       val rows = table.fold(valid)(t => valid.filter(col("tbl") === t))
-      val sinkSide = if (counts.sink > 0) Seq(() => sink(rows)) else Nil
+      var commit = Option.empty[StateCommit] // the sink side runs on this thread
+      val sinkSide = if (counts.sink > 0) Seq(() => commit = sink(rows)) else Nil
       val sides = sinkSide ++ routeFailures(invalid, counts, paths, republishLimit)
       val (sinkMs, routeMs) = runSides(batch.sparkSession, sides).splitAt(sinkSide.size)
-      BatchLog.info(counts.json(batchId, materializeMs, sinkMs.sum, routeMs.maxOption.getOrElse(0L)))
+      BatchLog.info(counts.json(batchId, materializeMs, sinkMs.sum,
+        routeMs.maxOption.getOrElse(0L), commit))
     } finally classified.unpersist()
   }
 
@@ -353,7 +436,7 @@ object CdcStreaming {
       table: String, paths: SinkPaths, republishLimit: Int = 3,
       checkpoint: String): StreamingQuery =
     startBatches(source, paths, republishLimit, republish = true,
-      checkpoint, Some(table))(JdbcSink.applyChanges(_, url, table))
+      checkpoint, Some(table)) { rows => JdbcSink.applyChanges(rows, url, table); None }
 
   /** Streaming SCD2 sink: like [[startJdbc]] but each micro-batch appends
     * to a type-2 HISTORY table ([[JdbcSink.applyScd2]]) instead of
@@ -366,7 +449,7 @@ object CdcStreaming {
       cdcTable: String, histTable: String, paths: SinkPaths,
       republishLimit: Int = 3, checkpoint: String): StreamingQuery =
     startBatches(source, paths, republishLimit, republish = true,
-      checkpoint, Some(cdcTable))(JdbcSink.applyScd2(_, url, histTable))
+      checkpoint, Some(cdcTable)) { rows => JdbcSink.applyScd2(rows, url, histTable); None }
 
   /** Wire a streaming source of (value, loop) records into the
     * parse/upsert/retry sinks via foreachBatch.
@@ -374,5 +457,5 @@ object CdcStreaming {
   def start(spark: SparkSession, source: DataFrame, paths: SinkPaths,
       republishLimit: Int = 3, checkpoint: String): StreamingQuery =
     startBatches(source, paths, republishLimit, republish = true,
-      checkpoint)(upsertBatch(spark, _, paths.state))
+      checkpoint)(rows => Some(upsertBatch(spark, rows, paths.state)))
 }

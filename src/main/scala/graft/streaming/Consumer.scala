@@ -32,6 +32,6 @@ object Consumer {
         cfg.reclaim, cfg.replaceAllScheme, appliedPath, checkpoint)
     } else {
       CdcStreaming.startBatches(source, paths, cfg.republishLimit,
-        cfg.republish, checkpoint)(CdcStreaming.upsertBatch(spark, _, paths.state))
+        cfg.republish, checkpoint)(rows => Some(CdcStreaming.upsertBatch(spark, rows, paths.state)))
     }
 }

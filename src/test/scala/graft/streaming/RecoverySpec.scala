@@ -75,7 +75,7 @@ class RecoverySpec extends SparkSpec {
     assert(names() == Set("alice", "bob"))
     val left = Files.list(root).iterator()
     val entries = Iterator.continually(left).takeWhile(_.hasNext).map(_.next().getFileName.toString).toSet
-    assert(entries == Set("v00000003", "_CURRENT"), s"dir: $entries")
+    assert(entries == Set("v00000001", "v00000003", "_CURRENT"), s"dir: $entries")
   }
 
   test("streaming dropDuplicates holds state across micro-batches") {
