@@ -131,13 +131,12 @@ object GraftExtensions {
             s"cms_probe sketch evaluated to $other")
         }
       }),
-    // the IVF-PQ serving pair (StreamingAnn.indexScores is the DataFrame
-    // face). Like cms_probe, the model must fold at analysis time — the
-    // centroid matrix / codebook ride as foldable array literals and
-    // become codegen reference objects; derived model parts (centroid
-    // norms, per-subspace self-dots) are computed here through the SAME
-    // IvfServingKernels helpers the DataFrame path uses, so the two
-    // surfaces cannot drift.
+    // the IVF-PQ serving pair. Like cms_probe, the model must fold at
+    // analysis time — the centroid matrix / codebook ride as foldable
+    // array literals and become codegen reference objects; derived model
+    // parts (centroid norms, per-subspace self-dots) are computed here
+    // through the SAME IvfServingKernels helpers the DataFrame path uses,
+    // so the two surfaces cannot drift.
     (FunctionIdentifier("ivf_cell_probe"),
       info("ivf_cell_probe",
         "ivf_cell_probe(qv, cells, cents, nProbe) - top-nProbe IVF cell ids " +

@@ -13,9 +13,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType}
 object IvfServingKernels {
 
   /** The centroid norm [[probeCells]] divides by — defined HERE so every
-    * model builder (`Similarity.assignToCells`, StreamingAnn's parquet
-    * loader, GraftExtensions' SQL literal path) produces bit-identical
-    * cnorms: the EXACT long self-dot, one cast to double, one sqrt — the
+    * model builder (`Similarity.assignToCells`, GraftExtensions' SQL
+    * literal path) produces bit-identical cnorms: the EXACT long
+    * self-dot, one cast to double, one sqrt — the
     * `sqrt(CAST(c·c AS DOUBLE))` of every oracle. (A running double sum
     * rounds differently once a partial sum passes 2^53.)
     */
@@ -45,11 +45,10 @@ object IvfServingKernels {
 
   /** Top-`nProbe` cell ids of a quantized query against the centroid
     * matrix, ordered by (cosine score DESC, cell ASC) — THE cell ranking
-    * of the batch path (`Similarity.assignToCells`, per row, no window)
-    * and the streaming probe alike, mirrored by every oracle's
-    * row_number: score is the exact long dot cast to double over
-    * [[centroidNorm]], ties broken by ascending cell id (NaN impossible:
-    * centroids are non-zero by construction).
+    * of the batch path (`Similarity.assignToCells`, per row, no window),
+    * mirrored by every oracle's row_number: score is the exact long dot
+    * cast to double over [[centroidNorm]], ties broken by ascending cell
+    * id (NaN impossible: centroids are non-zero by construction).
     */
   def probeCells(qvAd: ArrayData, cells: Array[Int], cents: Array[Array[Long]],
       cnorms: Array[Double], nProbe: Int): ArrayData = {
@@ -109,18 +108,18 @@ object IvfServingKernels {
   }
 }
 
-/** The IVF cell probe of [[graft.streaming.StreamingAnn]] as ONE compact
-  * expression with the centroid matrix as a codegen REFERENCE OBJECT.
+/** The IVF cell probe ([[graft.operators.Similarity.cellProbe]]) as ONE
+  * compact expression with the centroid matrix as a codegen REFERENCE
+  * OBJECT.
   *
   * Why a custom expression: composing the probe from per-centroid column
   * literals builds nCells struct nodes each wrapping a 64-long literal
   * array — at the fixture's 16 cells that plan codegens fine, but at a
   * production store's 256 cells the generated `processNext()` exceeds the
-  * JVM's 64KB method limit and janino refuses the class outright
-  * (StreamingAnnSpec's production-k pin reproduced it; the LshBucketTables
-  * lesson at a different k). Here the model is one referenced `long[][]`
-  * and the generated code is a single kernel call whose size is constant
-  * in nCells.
+  * JVM's 64KB method limit and janino refuses the class outright (the
+  * LshBucketTables lesson at a different k). Here the model is one
+  * referenced `long[][]` and the generated code is a single kernel call
+  * whose size is constant in nCells.
   */
 case class IvfCellProbe(child: Expression, cells: Array[Int],
     cents: Array[Array[Long]], cnorms: Array[Double], nProbe: Int)

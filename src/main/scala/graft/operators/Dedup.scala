@@ -257,7 +257,6 @@ object Dedup {
   // ------------------------------------------------------------ MinHash LSH
   val SIG_N = 32  // minhashes per signature
   val BANDS = 8   // bands of SIG_N/BANDS rows each
-  val ROWS_PER_BAND: Int = SIG_N / BANDS
 
   /** Cross-engine deterministic hash family. Base hash = first 15 hex chars
     * of md5 (60 bits, both engines lowercase-hex identical); family member
@@ -2244,7 +2243,7 @@ object Dedup {
   /** d19: recall curve of the d04 MinHash-LSH candidate generation against
     * EXACT Jaccard ground truth — the dedup analog of s10's ANN recall
     * eval, i.e. the measurement every LSH deployment runs before trusting
-    * a (BANDS, ROWS_PER_BAND) choice at 100 TB. Per true-similarity decile
+    * a (BANDS, SIG_N/BANDS) choice at 100 TB. Per true-similarity decile
     * `floor(jaccard*10)`, reports how many truly-overlapping pairs exist
     * and how many the banding surfaced — the observed S-curve to hold
     * against the theoretical 1-(1-j^r)^b.

@@ -312,10 +312,9 @@ object Extras {
   private[graft] val HIST_NBINS     = 128L
 
   /** The q66 histogram geometry: value → integer cents → capped bin id.
-    * Shared with [[graft.streaming.StreamingHistogram]] so the streaming
-    * log and the batch sketch can never bin differently. The division is
-    * exact: the dividend is reduced to a multiple of the bin width first,
-    * so no float-quotient edge case exists at any magnitude.
+    * The division is exact: the dividend is reduced to a multiple of the
+    * bin width first, so no float-quotient edge case exists at any
+    * magnitude.
     */
   private[graft] def centsOf(value: Column): Column =
     floor(value * 100.0).cast("long")
@@ -325,7 +324,7 @@ object Extras {
       .cast("long"), lit(HIST_NBINS - 1))
 
   /** Quantile estimates off a (key, bin, n) histogram frame — the read
-    * half of the mergeable sketch, shared by q66 and the streaming face.
+    * half of q66's mergeable sketch.
     */
   private[graft] def histEstimates(hist: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -623,9 +622,7 @@ object Extras {
   def markovTransitionsOf(events: DataFrame): DataFrame =
     transitionReport(transitionRollup(transitionEvents(events)))
 
-  /** The q73 event projection — shared with the streaming face so the
-    * online log and the batch operator can never order differently.
-    */
+  /** The q73 event projection (q75 reads it too). */
   private[graft] def transitionEvents(events: DataFrame): DataFrame =
     events.select(col("user_id"), col("event_type"),
       unix_micros(col("ts").cast("timestamp")).as("us"), col("event_id"))
@@ -655,8 +652,7 @@ object Extras {
   }
 
   /** Final q73 projection from a (prev_type, next_type, n, gap_sum)
-    * counts frame — the streaming read folds its log to exactly this
-    * shape and reuses the projection verbatim.
+    * counts frame.
     */
   private[graft] def transitionReport(counts: DataFrame): DataFrame = {
     val fromTot = counts.groupBy(col("prev_type")).agg(sum(col("n")).as("from_n"))
@@ -960,11 +956,9 @@ object Extras {
       .agg(sum(centsOf(col("value"))).as("cents"))
       .localCheckpoint(true)
 
-  /** The shared Lorenz kernel over a folded (event_type, user_id, cents)
-    * frame — batch q76 and the streaming read
-    * ([[graft.streaming.StreamingGini]]) both end here, so the bin
-    * decomposition, the hot-bin dispatch, the envelope dispatch and the
-    * ppm chain live once. Terminal (arm-independent) schema: see
+  /** The Lorenz kernel over a folded (event_type, user_id, cents) frame:
+    * the bin decomposition, the hot-bin dispatch, the envelope dispatch
+    * and the ppm chain. Terminal (arm-independent) schema: see
     * [[revenueGini]]'s Scaladoc; numeric statistics live on
     * [[giniStatsOfUserCents]].
     */

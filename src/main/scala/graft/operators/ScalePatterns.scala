@@ -352,16 +352,6 @@ object ScalePatterns {
     Dedup.deleteTreeIfExists(old)
   }
 
-  /** Retention for the daily layout — the third lifecycle verb (land →
-    * compact → EXPIRE): drop every `day=` partition strictly older than
-    * `keepFrom` (yyyy-MM-dd, inclusive cutoff). Day granularity is what
-    * makes 100 TB retention O(days-dropped) directory removals instead
-    * of a rewrite; the string comparison IS the date comparison for
-    * zero-padded ISO dates. Same manifest guard as [[compactDay]]: a
-    * streaming-managed table must be finalized first, or manifest
-    * readers would keep listing deleted files. Returns the dropped day
-    * values (the audit record a production run logs).
-    */
   /** Restate (backfill) ONE event-day of a [[writeDailyPartitioned]] table
     * with corrected rows — the lifecycle op every pipeline needs when an
     * upstream correction lands after the day closed. Completes the table's
@@ -422,6 +412,16 @@ object ScalePatterns {
     Dedup.deleteTreeIfExists(old)
   }
 
+  /** Retention for the daily layout — the third lifecycle verb (land →
+    * compact → EXPIRE): drop every `day=` partition strictly older than
+    * `keepFrom` (yyyy-MM-dd, inclusive cutoff). Day granularity is what
+    * makes 100 TB retention O(days-dropped) directory removals instead
+    * of a rewrite; the string comparison IS the date comparison for
+    * zero-padded ISO dates. Same manifest guard as [[compactDay]]: a
+    * streaming-managed table must be finalized first, or manifest
+    * readers would keep listing deleted files. Returns the dropped day
+    * values (the audit record a production run logs).
+    */
   def expireDays(path: String, keepFrom: String): Seq[String] = {
     import java.nio.file.{Files, Paths}
     require(keepFrom.matches("""\d{4}-\d{2}-\d{2}"""),

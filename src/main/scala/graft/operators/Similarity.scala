@@ -994,9 +994,8 @@ object Similarity {
 
   /** The top-`nBest` cell ids (score DESC, cell ASC) of a quantized `qv`
     * column against a (cell, centroid) frame — the ONE cell-ranking
-    * kernel of the batch path ([[assignToCells]]) and the streaming probe
-    * ([[graft.streaming.StreamingAnn]]). The frame is collected here
-    * (≤ nCells rows by every builder's contract) and rides the plan as
+    * kernel of the batch path ([[assignToCells]]). The frame is collected
+    * here (≤ nCells rows by every builder's contract) and rides the plan as
     * reference objects of [[graft.expressions.IvfCellProbe]].
     */
   private[graft] def cellProbe(qv: Column, cents: DataFrame, nBest: Int): Column = {

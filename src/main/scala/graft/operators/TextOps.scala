@@ -1138,9 +1138,9 @@ object TextOps {
   def bm25TopK(s: SparkSession, d: String): DataFrame =
     bm25Cut(bm25Scores(s, d)).orderBy("query_id", "rank")
 
-  /** Salted two-level top-k over a (query_id, doc_id, score) frame — the
-    * shared rank kernel of the ad-hoc key and the index probe (no global
-    * sort: callers that hash-compare add their own terminal orderBy).
+  /** Salted two-level top-k over a (query_id, doc_id, score) frame (no
+    * global sort: callers that hash-compare add their own terminal
+    * orderBy).
     */
   private[graft] def bm25Cut(scored: DataFrame, k: Int = BM25_TOPK): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -1157,11 +1157,10 @@ object TextOps {
 
   /** Word-bigram postings (term, doc_id, tf, dl) for every doc with ≥ 2
     * tokens; `onlyTerms` applies the literal posting-list probe BEFORE the
-    * aggregation exchange (the t19 shape). None indexes the full corpus
-    * (the [[Bm25Index]] build shape).
+    * aggregation exchange (the t19 shape).
     */
   private[graft] def bigramPostings(docs: DataFrame,
-      onlyTerms: Option[Seq[String]]): DataFrame = {
+      onlyTerms: Seq[String]): DataFrame = {
     val t = docs.select(col("doc_id"), tokens(col("text")).as("tk"))
       .filter(size(col("tk")) >= 2)
       .withColumn("dl", (size(col("tk")) - 1).cast("long"))
@@ -1170,16 +1169,14 @@ object TextOps {
       .select(col("doc_id"), col("dl"), concat_ws(" ",
         element_at(col("tk"), col("i")),
         element_at(col("tk"), col("i") + 1)).as("term"))
-    val probed = onlyTerms.fold(grams)(ts => grams.filter(col("term").isin(ts: _*)))
-    probed.groupBy(col("term"), col("doc_id"))
+    grams.filter(col("term").isin(onlyTerms: _*))
+      .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
   }
 
   /** The deterministic BM25 arithmetic over a postings frame: df from the
     * postings themselves, integer-log2 idf, quantized tf saturation, summed
-    * per (query, doc). ONE kernel shared by the ad-hoc key, the persisted
-    * index probe, and the streaming server — the score paths cannot drift.
-    * `consts` is one broadcastable row (n_docs, avg_dl).
+    * per (query, doc). `consts` is one broadcastable row (n_docs, avg_dl).
     */
   private[graft] def bm25ScorePostings(postings: DataFrame, consts: DataFrame,
       qterms: DataFrame): DataFrame = {
@@ -1216,15 +1213,14 @@ object TextOps {
     // through the probe filter removes the guess. (The df branch inside
     // bm25ScorePostings re-executes the pruned posting probe — Catalyst
     // won't reuse an exchange across different prunings — which costs one
-    // extra corpus pass; the production shape for repeated query workloads
-    // is the persisted [[Bm25Index]], not an ad-hoc rescan.)
+    // extra corpus pass.)
     val consts = docs
       .select(col("doc_id"), (size(tokens(col("text"))) - 1).cast("long").as("dl"))
       .filter(col("dl") >= 1)
       .agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("sum_dl"))
       .select(col("n_docs"),
         expr("greatest(sum_dl div n_docs, CAST(1 AS BIGINT))").as("avg_dl"))
-    val postings = bigramPostings(docs, Some(BM25_QUERIES.flatMap(_._2).distinct))
+    val postings = bigramPostings(docs, BM25_QUERIES.flatMap(_._2).distinct)
     bm25ScorePostings(postings, consts, bm25QueryFrame(s))
   }
 

@@ -25,9 +25,6 @@ import graft.operators.Curation
   * The quality gate is a stateless codegen'd filter at ingest — rejected
   * docs never reach either state store, which is the point of gating
   * first: at crawl rates the gate drops the junk BEFORE it costs state.
-  * Near-dup suppression can be inserted between the two stages via
-  * [[StreamingNearDedup]] when semantic duplicates matter more than
-  * state size.
   */
 object StreamingCuration {
 

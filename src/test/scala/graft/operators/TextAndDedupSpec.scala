@@ -1261,8 +1261,6 @@ class SimilaritySpec extends SparkSpec {
     refusal(Similarity.probeIvfPqIndexRefined(spark, s"$dir/ann", queries))
     refusal(Similarity.appendToIvfPqIndex(queries
       .withColumnRenamed("query_id", "vec_id"), s"$dir/ann"))
-    refusal(graft.streaming.StreamingNearDedup.indexMatches(
-      delta, s"$dir/mh"))
     // a missing manifest (pre-manifest index) also refuses, pointing at
     // the rebuild path rather than probing on a guess
     Files.delete(Paths.get(s"$dir/mh/index.meta"))
