@@ -146,14 +146,4 @@ object TextFunctions {
     */
   def fingerprint(c: Column): Column =
     xxhash64(lower(regexp_replace(trim(c), "\\s+", " ")))
-
-  /** Word n-grams (n >= 1) of a whitespace tokenization → array<string>. */
-  def wordNgrams(c: Column, n: Int): Column = {
-    val toks = tokens(c)
-    val count = size(toks) - (n - 1)
-    when(count <= 0, array(array_join(toks, " ")))
-      .otherwise(
-        transform(sequence(lit(0), count - 1),
-          i => array_join(slice(toks, i + 1, lit(n)), " ")))
-  }
 }

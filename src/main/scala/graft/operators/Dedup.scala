@@ -283,10 +283,9 @@ object Dedup {
   /** Distinct word-3-gram shingles per doc as a fully codegen'd pipeline:
     * explode an index sequence over the token array and assemble each
     * shingle with element_at — all codegen'd builtins, no window sort, no
-    * shuffle before the one distinct. Semantically identical to
-    * `array_distinct(TextFunctions.wordNgrams(text, 3))` + explode
-    * (including the <3-token whole-doc fallback), but the
-    * higher-order-function form is interpreted per element — measured
+    * shuffle before the one distinct. A doc of fewer than n tokens is one
+    * whole-doc shingle. A higher-order-function form (transform over
+    * slices of the token array) is interpreted per element — measured
     * 7.8 s vs ~2 s at sf0.1. The token array never crosses an exchange:
     * the shingle projection happens in the same codegen stage as the
     * Generate. `carry` columns (e.g. blocking keys) ride along.
@@ -342,7 +341,7 @@ object Dedup {
     * the comma-joined band minhashes (identical string form both engines).
     */
   /** (doc_id, band_idx, band_key) rows from a signature frame — the LSH
-    * banding both the d04 self-join and the d16 persisted index share.
+    * banding both the d04 self-join and the d16 incremental probe share.
     * Band keys are the comma-joined band minhashes (identical string form
     * both engines).
     */
@@ -449,42 +448,31 @@ object Dedup {
        |SELECT id_a, id_b, est_jaccard FROM est WHERE est_jaccard >= 0.1
        |ORDER BY id_a, id_b""".stripMargin
 
-  // ----------------------------------------- incremental index dedup
-  /** d16: incremental near-dup of a DELTA batch against a PERSISTED
-    * corpus index — the production 100 TB shape every d01–d15 operator
-    * sidesteps by recomputing its index from the full corpus. A daily
-    * ingest dedups "today's batch against yesterday's corpus" by probing
-    * a saved structure, never rescanning the corpus: here the d04
-    * MinHash band table ((band_idx, band_key, doc_id) + the signature
-    * table), written once via [[writeMinhashIndex]] with the band key's
-    * hash bucket as the WRITE-TIME PARTITION KEY (the s03/s04 pattern),
-    * probed via [[probeMinhashIndex]] which reads ONLY the ≤
-    * [[INDEX_BUCKETS]] partitions the delta's own band keys hash into —
-    * PartitionFilters pruning, spec-pinned, with the bucket list bounded
-    * by construction (64 literals, never delta-proportional).
+  // ------------------------------------------ incremental near-dup
+  /** d16: incremental near-dup of a DELTA batch against a base corpus —
+    * the daily-ingest shape ("today's batch against yesterday's corpus")
+    * that every d01–d15 operator sidesteps by deduplicating the whole
+    * corpus at once. The base side is the d04 MinHash band table
+    * ((band_idx, band_key, doc_id)) plus its signature table; each delta
+    * doc's bands probe it by equi-join.
     *
     * Per delta doc the probe reports its banded candidate count and the
     * best base match by signature agreement (the d04 estimator), with
     * `is_dup` at the 0.5 threshold. Selection is a lexicographic struct
     * max (est DESC, base id ASC) — deterministic under est ties.
     *
-    * The REGISTERED query states the same semantics as pure joins over a
-    * deterministic `doc_id % 5` corpus split (base = 4/5, delta = 1/5) so
-    * DuckDB can oracle-check values; the index write+probe path is
-    * asserted equal to it by spec (same discipline as the s03 IVF
-    * partition-pruning claim). Candidate generation inherits d04's
-    * banding bounds; a production index build would additionally apply
-    * the d03 posting cap per band key at WRITE time — once, amortized
-    * across every delta that probes it.
+    * The registered query splits the corpus by a deterministic
+    * `doc_id % 5` (base = 4/5, delta = 1/5) so DuckDB can oracle-check
+    * the values. Candidate generation inherits d04's banding bounds.
     */
   val INC_SPLIT = 5
-  val INDEX_BUCKETS = 64
   val INC_DUP_THRESHOLD = 0.5
 
-  /** Probe: delta signatures vs an index's band table + signature table.
+  /** Probe: delta signatures vs a base band table + signature table.
     * The band probe is a thin equi-join on (band_idx, band_key); the
     * pair-distinct is a hash aggregate over two longs; signatures join
-    * back only for the candidate set (d04's confirm shape).
+    * back only for the candidate set (d04's confirm shape): signature
+    * agreement, best-match struct max, verdict.
     */
   def probeSignatures(deltaSigs: DataFrame, indexBands: DataFrame,
       indexSigs: DataFrame): DataFrame = {
@@ -494,14 +482,6 @@ object Dedup {
           col("q.band_key") === col("x.band_key"))
       .select(col("q.doc_id").as("did"), col("x.doc_id").as("bid"))
       .distinct()
-    confirmCandidates(cand, deltaSigs, indexSigs)
-  }
-
-  /** The confirm stage over an already-generated (did, bid) candidate
-    * frame: signature agreement, best-match struct max, verdict.
-    */
-  private def confirmCandidates(cand: DataFrame, deltaSigs: DataFrame,
-      indexSigs: DataFrame): DataFrame = {
     val sq = deltaSigs.toDF("did" +: (0 until SIG_N).map(i => s"a$i"): _*)
     val sx = indexSigs.toDF("bid" +: (0 until SIG_N).map(i => s"b$i"): _*)
     val matches = (0 until SIG_N).map(i =>
@@ -515,133 +495,6 @@ object Dedup {
         (-col("best.nid")).as("match_id"), col("best.e").as("est_jaccard"),
         (col("best.e") >= INC_DUP_THRESHOLD).cast("int").as("is_dup"))
       .orderBy("doc_id")
-  }
-
-  /** Write "yesterday's" index: the band table partitioned by the band
-    * key's hash bucket (what the delta probe prunes on) and the
-    * signature table partitioned by a doc-id bucket (what the CONFIRM
-    * stage prunes on — without it every probe would scan the
-    * corpus-sized signature table for a tiny candidate set). Both bucket
-    * hashes are Spark-internal; they never reach a result, only
-    * partition layout.
-    */
-  def writeMinhashIndex(docs: DataFrame, dir: String): Unit =
-    writeMinhash(docs, dir, "overwrite")
-
-  /** Absorb a delta into a persisted minhash index WITHOUT rewriting the
-    * corpus — the index-maintenance half of the daily-ingest cycle
-    * (write once, then probe + append every day). Signatures and bands
-    * are computed for the DELTA only and appended into the existing
-    * bucketed partition layout: parquet append adds new files under the
-    * delta's own partition dirs and never reads or touches an existing
-    * file, so the write cost is delta-proportional regardless of index
-    * size (spec-pinned: every pre-append file survives byte-identical).
-    * Callers append the probe's NON-dup rows; appending a dup merely
-    * adds a redundant candidate row (the band index is a multi-map), it
-    * cannot corrupt verdicts.
-    */
-  def appendToMinhashIndex(docs: DataFrame, dir: String): Unit =
-    writeMinhash(docs, dir, "append")
-
-  private def writeMinhash(docs: DataFrame, dir: String, mode: String): Unit = {
-    // an empty overwrite would land an UNREADABLE partitioned parquet (no
-    // part files to infer a schema from) — refuse loudly, like
-    // writeExactIndex; an empty APPEND is a harmless no-op
-    if (mode == "overwrite") {
-      require(!docs.isEmpty,
-        s"writeMinhashIndex: empty corpus — refusing to write an empty index to $dir")
-    } else {
-      // append-mode parquet happily CREATES a missing table, so a typo'd
-      // or unmounted index path would silently become a fresh delta-only
-      // index that every later probe runs against — require the index
-      // this append claims to extend to actually exist
-      require(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bands")) &&
-        java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "sigs")),
-        s"appendToMinhashIndex: no index at $dir — write one first")
-      // an append under different constants would interleave
-      // incompatible signatures with the index's own
-      requireLayout(dir, minhashLayout, "appendToMinhashIndex")
-    }
-    val sigs = minhashSignatures(docs)
-    // a REBUILD over an existing index must not let a torn run pair the
-    // NEW sigs with the STALE band table: candidates are generated from
-    // bands, so stale bands would silently miss every new-corpus dup.
-    // Dropping bands first turns that window into a missing-table read —
-    // loud — and the old sigs it strands are harmless orphans
-    if (mode == "overwrite")
-      deleteTreeIfExists(java.nio.file.Paths.get(dir, "bands"))
-    // sigs land BEFORE bands: a crash between the two writes must not
-    // leave band rows without signatures — the probe's confirm join is
-    // inner, so such candidates would be dropped SILENTLY forever. An
-    // orphan signature (sigs committed, bands lost) is never probed, so
-    // every verdict stays correct; recovering the torn delta still takes
-    // a fresh from-scratch write, but nothing is silently wrong in the
-    // meantime. (Same discipline as writeExactIndex's
-    // bloom-before-parquet ordering.)
-    sigs
-      .withColumn("sbkt", pmod(col("doc_id"), lit(INDEX_BUCKETS.toLong)).cast("int"))
-      .write.mode(mode).partitionBy("sbkt").parquet(s"$dir/sigs")
-    bandedKeys(sigs)
-      .withColumn("bkt",
-        pmod(xxhash64(col("band_key")), lit(INDEX_BUCKETS)).cast("int"))
-      .write.mode(mode).partitionBy("bkt").parquet(s"$dir/bands")
-    // the layout stamp lands LAST on a rebuild: a torn run leaves the
-    // OLD stamp (or none) next to new tables, so requireLayout refuses
-    // loudly instead of blessing old-layout tables with a new stamp
-    if (mode == "overwrite") stampLayout(dir, minhashLayout)
-  }
-
-  /** Probe the persisted index with a delta batch. Every index read is
-    * partition-pruned by literals bounded by [[INDEX_BUCKETS]], never by
-    * delta or corpus size: the band scan by the delta's own band-key
-    * buckets, the signature scan by the CANDIDATES' doc-id buckets
-    * (known only after the band join — the thin candidate frame is
-    * checkpointed once so the bucket collect and the confirm join share
-    * one computation, and the delta's signatures are checkpointed so
-    * the bucket collect does not recompute the shingle pipeline).
-    *
-    * The probe's intermediate checkpoints are RELEASED before returning
-    * (DataFrame.unpersist is a no-op for localCheckpoint'ed frames, so
-    * in the long-lived daily-ingest service each probe would otherwise
-    * strand cached RDD blocks — see [[Graph.release]]); the returned verdict
-    * is therefore materialized eagerly and holds the probe's ONE
-    * surviving checkpoint, which the caller may [[Graph.release]] once
-    * consumed.
-    */
-  def probeMinhashIndex(s: SparkSession, dir: String, delta: DataFrame): DataFrame = {
-    requireLayout(dir, minhashLayout, "probeMinhashIndex")
-    val deltaSigs = minhashSignatures(delta).localCheckpoint(true)
-    // one banded frame feeds both the bucket collect and the candidate
-    // join — two uncheckpointed subtrees would recompute the band-key
-    // concat (column pruning makes them differ, so ReuseExchange
-    // would not dedup them)
-    val deltaBands = bandedKeys(deltaSigs).localCheckpoint(true)
-    val buckets = deltaBands
-      .select(pmod(xxhash64(col("band_key")), lit(INDEX_BUCKETS)).cast("int").as("bkt"))
-      .distinct().collect().map(_.getInt(0))
-    val idxBands = s.read.parquet(s"$dir/bands")
-      .filter(col("bkt").isin(buckets.map(Integer.valueOf): _*))
-      .select("doc_id", "band_idx", "band_key")
-      // tombstoned docs stop generating candidates the moment they are
-      // deleted (one broadcast anti-join; their sigs are never probed
-      // because no candidate can cite them) — see deleteFromMinhashIndex
-      .join(broadcast(indexTombstones(s, dir)), Seq("doc_id"), "left_anti")
-    val cand = deltaBands.as("q")
-      .join(idxBands.as("x"),
-        col("q.band_idx") === col("x.band_idx") &&
-          col("q.band_key") === col("x.band_key"))
-      .select(col("q.doc_id").as("did"), col("x.doc_id").as("bid"))
-      .distinct()
-      .localCheckpoint(true)
-    val sigBuckets = cand
-      .select(pmod(col("bid"), lit(INDEX_BUCKETS.toLong)).cast("int").as("sbkt"))
-      .distinct().collect().map(_.getInt(0))
-    val idxSigs = s.read.parquet(s"$dir/sigs")
-      .filter(col("sbkt").isin(sigBuckets.map(Integer.valueOf): _*))
-      .drop("sbkt")
-    val verdict = confirmCandidates(cand, deltaSigs, idxSigs).localCheckpoint(true)
-    Seq(deltaSigs, deltaBands, cand).foreach(Graph.release)
-    verdict
   }
 
   /** The registered d16 face: both batches derived from `documents` by
@@ -678,13 +531,12 @@ object Dedup {
   val DEDUP_DEL_MOD = 13L
   val DEDUP_DEL_RES = 2L
 
-  /** d23: the d16 incremental probe with a tombstoned slice of the base
-    * index excluded — the oracled face of [[deleteFromMinhashIndex]]'s
-    * semantics (DedupDeletionSpec pins the persisted path ≡ this frame
-    * form): a forgotten doc generates no candidates, so deltas that only
-    * matched forgotten content now probe as new, and n_cand/best-match
-    * re-rank among the survivors. Deletion composes at the BAND frame —
-    * one filter before candidate generation, nothing downstream changes.
+  /** d23: the d16 incremental probe with a forgotten slice of the base
+    * excluded: a forgotten doc generates no candidates, so deltas that
+    * only matched forgotten content now probe as new, and
+    * n_cand/best-match re-rank among the survivors. Deletion composes at
+    * the BAND frame — one filter before candidate generation, nothing
+    * downstream changes.
     */
   def incrementalNearDupDeleted(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
@@ -717,19 +569,13 @@ object Dedup {
        |  CASE WHEN est >= $INC_DUP_THRESHOLD THEN 1 ELSE 0 END AS is_dup
        |FROM sel WHERE rn = 1 ORDER BY doc_id""".stripMargin
 
-  // ------------------------------------- incremental EXACT index dedup
-  /** d17: exact incremental dedup of a delta batch against a persisted
+  // ------------------------------------------- incremental exact dedup
+  /** d17: exact incremental dedup of a delta batch against a base
     * content-hash index — the cheap first tier in front of d16's
     * near-dup probe (production runs exact-then-near: most re-crawls
-    * are byte-identical and never need a signature). The persisted
-    * index is (md5, keeper id) partitioned by a hash bucket, PLUS a
-    * Bloom filter over the hashes: the probe drops non-dup delta rows
-    * with a codegen [[BloomFilterMightContain]] BEFORE any join or
-    * exchange — at 100 TB with a ~1% dup rate that is a ~99% cut in
-    * shuffled volume (fpp extra rows are harmless: the join still
-    * decides membership exactly). Remaining index reads are
-    * partition-pruned by the SURVIVORS' hash buckets (≤
-    * [[INDEX_BUCKETS]] literals).
+    * are byte-identical and never need a signature). The index is
+    * (md5, keeper id), the min doc id per hash; each delta doc joins it
+    * on its own md5.
     *
     * The corpus has no organic exact duplicates (d01: 500 distinct
     * hashes of 500 docs), so the registered query PLANTS deterministic
@@ -774,8 +620,7 @@ object Dedup {
     * hash join are the ONLY rows shingled, minhashed, and band-probed.
     * Registered over the same deterministic %[[INC_SPLIT]] split (with
     * d17's planted exact copies, so the exact tier provably kills rows)
-    * and oracle-mirrored; the amortized persisted-index face is
-    * [[probeExactThenNear]], spec-pinned equal.
+    * and oracle-mirrored.
     *
     * Output: one verdict row per matched delta doc — `tier='exact'`
     * (byte-identical, est 1.0) or `tier='near'` (d16's best-match
@@ -836,463 +681,13 @@ object Dedup {
        |FROM sel WHERE rn = 1
        |ORDER BY doc_id""".stripMargin
 
-  /** The persisted-index face of [[exactThenNear]]: d17's bloom-fronted
-    * exact probe kills byte-identical rows pre-shuffle, then d16's
-    * partition-pruned signature probe runs on the survivors only. The
-    * exact verdict's anti-join against the delta is deliberately NOT
-    * broadcast-hinted: in the daily-ingest workload this composition
-    * exists for, MOST of the delta matches the exact tier (byte-identical
-    * re-crawls), so the verdict is delta-proportional — a forced
-    * broadcast would blow the 8 GB relation limit at exactly the scale
-    * the operator targets. The shuffle anti-join on doc_id is what the
-    * survivors needed anyway (the signature build shuffles on doc_id
-    * next), and AQE still demotes it to a broadcast when the verdict is
-    * genuinely small. Intermediates are released; the returned verdict
-    * holds one checkpoint for the caller to [[Graph.release]].
-    */
-  def probeExactThenNear(s: SparkSession, exactDir: String, mhDir: String,
-      delta: DataFrame): DataFrame = {
-    val exact = probeExactIndex(s, exactDir, delta)
-    val survivors = delta.join(exact.select("doc_id"),
-      Seq("doc_id"), "left_anti")
-    val near = probeMinhashIndex(s, mhDir, survivors)
-    val verdict = exact.select(col("doc_id"), lit("exact").as("tier"),
-        col("match_id"), lit(1.0).as("est_jaccard"), lit(1).as("is_dup"))
-      .unionAll(near.select(col("doc_id"), lit("near").as("tier"),
-        col("match_id"), col("est_jaccard"), col("is_dup")))
-      .orderBy("doc_id")
-      .localCheckpoint(true)
-    Seq(exact, near).foreach(Graph.release)
-    verdict
-  }
-
-  /** Serialized bloom over a frame's `h` column (null for an empty
-    * frame). The caps mirror bloomPrunedJoin's (ScalePatterns) clamping.
-    */
-  private def bloomBytes(hashes: DataFrame, expectedKeys: Long,
-      fpp: Double): Array[Byte] = {
-    import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.graft.ColumnShim
-    val items = math.min(math.max(expectedKeys, 1L), 4000000L)
-    val numBits = math.min(
-      org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(items, fpp),
-      67108864L)
-    hashes.select(ColumnShim.column(
-        new BloomFilterAggregate(ColumnShim.expression(xxhash64(col("h"))),
-          Literal(items), Literal(numBits)).toAggregateExpression()).as("bf"))
-      .head().getAs[Array[Byte]](0)
-  }
-
-  /** The keeper frame and serialized bloom of a docs batch — shared by
-    * the exact-index write and append paths. Returns null bloom bytes
-    * for an empty batch.
-    */
-  private def exactIndexParts(docs: DataFrame, expectedKeys: Long,
-      fpp: Double): (DataFrame, Array[Byte]) = {
-    val index = docs
-      .groupBy(md5(col("text")).as("h")).agg(min(col("doc_id")).as("match_id"))
-    (index, bloomBytes(index, expectedKeys, fpp))
-  }
-
-  /** Write the exact index: (h, match_id) partitioned by hash bucket,
-    * plus the serialized Bloom filter over the hashes.
-    */
-  def writeExactIndex(docs: DataFrame, dir: String,
-      expectedKeys: Long = 1000000L, fpp: Double = 0.01): Unit = {
-    // the bloom is built BEFORE any file lands: BloomFilterAggregate
-    // yields NULL over zero rows, and discovering that after the parquet
-    // write would NPE and leave a half-written index (parquet present,
-    // bloom.bin missing). An empty corpus also writes an UNREADABLE
-    // partitioned parquet (no part files to infer a schema from), so the
-    // only self-consistent outcome is to refuse loudly, touching nothing.
-    val (index, bfBytes) = exactIndexParts(docs, expectedKeys, fpp)
-    require(bfBytes != null,
-      s"writeExactIndex: empty corpus — refusing to write an empty index to $dir")
-    // artifact ORDER decides what a torn REBUILD over an existing index
-    // looks like, and EITHER stale pairing is silently wrong: a stale
-    // bloom drops every new-corpus hash it doesn't cover, and a NEW
-    // bloom over the STALE hash table drops every old-corpus hash the
-    // new corpus no longer contains — both before the exact join can
-    // decide. So the stale table is dropped FIRST: every torn state
-    // from here to the final write has no hash table at all, and a
-    // probe fails loudly on the missing path instead of mis-verdicting
-    // (the writeMinhash bands-first discipline).
-    deleteTreeIfExists(java.nio.file.Paths.get(dir, "hashes"))
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "bloom.bin"), bfBytes)
-    // the bloom build parameters are part of the index, not of each
-    // call site: an append must build a BIT-COMPATIBLE delta filter,
-    // and making every future caller re-supply the original
-    // (expectedKeys, fpp) is a foot-gun — appendToExactIndex reads this
-    // manifest instead of taking parameters
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "bloom.meta"),
-      s"$expectedKeys,$fpp".getBytes("UTF-8"))
-    index
-      .withColumn("hbkt", pmod(xxhash64(col("h")), lit(INDEX_BUCKETS)).cast("int"))
-      .write.mode("overwrite").partitionBy("hbkt").parquet(s"$dir/hashes")
-    // the layout stamp lands LAST: a torn rebuild leaves the OLD stamp
-    // (or none) next to new tables, so requireLayout refuses loudly
-    // instead of blessing old-layout tables with a new-layout stamp
-    stampLayout(dir, exactLayout)
-  }
-
-  /** Absorb a delta into a persisted exact index without rewriting the
-    * corpus: new (h, keeper) rows append into the delta's own hash-bucket
-    * partitions (no existing file is read or touched — delta-proportional
-    * cost at any index size), and the on-disk bloom is REPLACED by the
-    * union of itself and the delta's bloom, built with the parameters
-    * the INDEX records in its own manifest (bloom.meta, written by
-    * [[writeExactIndex]]) so the two filters are bit-compatible by
-    * construction — no caller-supplied parameters to get wrong. The
-    * bloom swap is write-temp-then-atomic-move, so a crash mid-append
-    * can never leave a torn bloom.bin.
-    *
-    * Caller contract: append only rows the probe reported UNMATCHED
-    * (their hashes are provably absent — the probe's join is exact, so
-    * no duplicate h can arise); intra-delta copies collapse to one
-    * min-id keeper in the grouping here.
-    */
-  def appendToExactIndex(docs: DataFrame, dir: String): Unit = {
-    val metaPath = java.nio.file.Paths.get(dir, "bloom.meta")
-    require(java.nio.file.Files.exists(metaPath),
-      s"appendToExactIndex: no index manifest at $metaPath — write the index first")
-    // a manifest without a hash table is a torn writeExactIndex (bloom
-    // lands first there); appending would quietly mint a delta-only
-    // table under the full-corpus bloom — every base dup would then
-    // probe as new, silently, forever
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "hashes")),
-      s"appendToExactIndex: manifest but no hash table at $dir — torn write, rebuild the index")
-    requireLayout(dir, exactLayout, "appendToExactIndex")
-    val meta = new String(
-      java.nio.file.Files.readAllBytes(metaPath), "UTF-8").split(",")
-    val (expectedKeys, fpp) = (meta(0).toLong, meta(1).toDouble)
-    val (index, bfBytes) = exactIndexParts(docs, expectedKeys, fpp)
-    if (bfBytes == null) return // empty delta: nothing to absorb
-    // the bloom swap happens BEFORE the parquet append (the writeExactIndex
-    // "bloom before any file lands" discipline): a corrupt bloom.bin
-    // (mergeInPlace fails loudly), a missing one, or a crash between the
-    // two writes must not leave appended hashes the bloom prefilter can never see
-    // (those docs would silently probe as non-dups forever). The reverse
-    // failure — bloom swapped, parquet append lost — only widens the
-    // filter: the join still decides membership exactly, and every verdict
-    // stays correct. Recovery after a torn append must go through the
-    // probe, not a blind re-run: re-appending rows whose parquet append
-    // actually committed would duplicate (h, match_id) rows and the probe
-    // would emit duplicate verdicts — but the documented probe-then-append
-    // flow is naturally idempotent (a re-probe reports the committed rows
-    // as matched, so they are excluded from the retried append).
-    import org.apache.spark.util.sketch.BloomFilter
-    val existing = BloomFilter.readFrom(new java.io.ByteArrayInputStream(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "bloom.bin"))))
-    existing.mergeInPlace(
-      BloomFilter.readFrom(new java.io.ByteArrayInputStream(bfBytes)))
-    val out = new java.io.ByteArrayOutputStream()
-    existing.writeTo(out)
-    val tmp = java.nio.file.Paths.get(dir, "bloom.bin.tmp")
-    java.nio.file.Files.write(tmp, out.toByteArray)
-    java.nio.file.Files.move(tmp, java.nio.file.Paths.get(dir, "bloom.bin"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    index
-      .withColumn("hbkt", pmod(xxhash64(col("h")), lit(INDEX_BUCKETS)).cast("int"))
-      .write.mode("append").partitionBy("hbkt").parquet(s"$dir/hashes")
-  }
-
-  /** Probe the exact index: bloom-prefilter the delta (codegen, no
-    * shuffle), then read only the SURVIVORS' hash-bucket partitions and
-    * join. Both the bloom literal and the bucket list are
-    * size-bounded — nothing driver-side is delta- or corpus-
-    * proportional.
-    */
-  def probeExactIndex(s: SparkSession, dir: String, delta: DataFrame): DataFrame = {
-    requireLayout(dir, exactLayout, "probeExactIndex")
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.graft.ColumnShim
-    import org.apache.spark.sql.types.BinaryType
-    val bfBytes = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "bloom.bin"))
-    val hashed = delta.select(col("doc_id"), md5(col("text")).as("h"))
-    val pruned = hashed.filter(ColumnShim.column(
-        BloomFilterMightContain(Literal(bfBytes, BinaryType),
-          ColumnShim.expression(xxhash64(col("h"))))))
-      .localCheckpoint(true)
-    val buckets = pruned
-      .select(pmod(xxhash64(col("h")), lit(INDEX_BUCKETS)).cast("int").as("hbkt"))
-      .distinct().collect().map(_.getInt(0))
-    val index = s.read.parquet(s"$dir/hashes")
-      .filter(col("hbkt").isin(buckets.map(Integer.valueOf): _*))
-      .select("h", "match_id")
-      // forgotten keepers stop matching immediately: identical content
-      // re-ingested after a deletion is NEW content (a stale bloom
-      // positive merely lets the row through to this join, which decides
-      // exactly) — see deleteFromExactIndex
-      .join(broadcast(indexTombstones(s, dir)
-        .select(col("doc_id").as("match_id"))), Seq("match_id"), "left_anti")
-    // materialize the (delta-bounded) verdict, then release the probe's
-    // intermediate checkpoint — see probeMinhashIndex's release note
-    val verdict = pruned.join(index, "h")
-      .select("doc_id", "match_id")
-      .orderBy("doc_id")
-      .localCheckpoint(true)
-    Graph.release(pruned)
-    verdict
-  }
-
-  // ---------------------------------------------- index compaction
-  /** Rewrite a bucket-partitioned index table so each partition holds
-    * ~one file instead of the one-file-per-append debris the daily
-    * ingest cycle accumulates (after 365 appends every probe of a bucket
-    * opens 365 tiny files — footer decode and scheduler overhead grow
-    * linearly with index AGE, not size; compaction resets it). The
-    * rewrite is partition-parallel: one shuffle hash-partitioned on the
-    * bucket column, so each bucket is written by exactly one task into
-    * exactly one file, and no driver-side row ever materializes.
-    *
-    * Swap discipline: the compacted copy is fully written BESIDE the
-    * live table, then swapped in via two directory renames. A crash
-    * between the renames leaves the live path MISSING — every probe
-    * fails loudly (no silent wrong answers), and recovery is renaming
-    * `<path>__old` (the untouched original) back. Leftovers from a
-    * crashed prior run are reconciled on entry: a stale `__compact` is
-    * incomplete output (deleted, rebuilt), a stale `__old` beside a
-    * live table is post-swap debris (deleted); `__old` WITHOUT a live
-    * table aborts loudly with the recovery instruction rather than
-    * guessing.
-    *
-    * On an object store the same sequence runs against a metadata
-    * catalog pointer swap instead of renames; the layout contract
-    * (content-identical rows, one file per bucket) is unchanged.
-    */
-  private[operators] def compactBucketedTable(s: SparkSession, path: String,
-      partCol: String, numPartitions: Int = INDEX_BUCKETS): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val live = Paths.get(path)
-    val tmp = Paths.get(path + "__compact")
-    val old = Paths.get(path + "__old")
-    if (Files.exists(old)) {
-      require(Files.exists(live),
-        s"compact: $old exists but $path is missing — a prior compaction " +
-          s"crashed mid-swap; restore by renaming $old back to $path")
-      deleteTree(old)
-    }
-    if (Files.exists(tmp)) deleteTree(tmp)
-    require(Files.exists(live), s"compact: no table at $path")
-    s.read.parquet(path)
-      .repartition(numPartitions, col(partCol))
-      .write.partitionBy(partCol).parquet(tmp.toString)
-    Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
-    deleteTree(old)
-  }
-
-  private def deleteTree(p: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-      .foreach(java.nio.file.Files.delete)
-  }
-
+  /** Delete a directory tree if it exists (children before parents). */
   private[graft] def deleteTreeIfExists(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) deleteTree(p)
-
-  // ---------------------------------------------- index layout manifests
-  /** The layout constants an index was WRITTEN under are part of the
-    * index, not of whichever library version later probes it — the
-    * bloom.meta lesson generalized. A probe computes partition buckets,
-    * band keys, and scores with its own compiled constants; against an
-    * index laid out under different ones it would prune the WRONG
-    * partitions or compare incompatible signatures and silently report
-    * non-dups. Every writer stamps `index.meta`; every probe/append
-    * requires an exact match and aborts naming both layouts otherwise.
-    */
-  private[operators] def stampLayout(dir: String, layout: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir))
-    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "index.meta"),
-      layout.getBytes("UTF-8"))
-  }
-
-  private[graft] def requireLayout(dir: String, expected: String,
-      what: String): Unit = {
-    val p = java.nio.file.Paths.get(dir, "index.meta")
-    require(java.nio.file.Files.exists(p),
-      s"$what: no layout manifest at $p — rebuild the index with this library version")
-    val found = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    require(found == expected,
-      s"$what: index layout [$found] does not match this library's [$expected] — " +
-        "probing across layouts silently misses matches; rebuild the index")
-  }
-
-  /** Minhash index layout: partition bucket count + signature shape. */
-  private[graft] val minhashLayout: String =
-    s"buckets=$INDEX_BUCKETS,sig_n=$SIG_N,bands=$BANDS"
-
-  /** Exact index layout: partition bucket count (hash fn is xxhash64 by
-    * construction of this format version).
-    */
-  private[graft] val exactLayout: String = s"buckets=$INDEX_BUCKETS"
-
-  /** Compact a persisted exact index ([[writeExactIndex]] layout) after a
-    * season of appends: fold each hash bucket's file debris to one file,
-    * then REBUILD the bloom sized to the index's ACTUAL key count. The
-    * rebuild matters as much as the file fold: the live bloom is a union
-    * of per-append filters all sized by the original `expectedKeys`
-    * guess, so its false-positive rate degrades as appends accumulate —
-    * and every false positive is delta rows surviving the pre-shuffle
-    * kill [[probeExactIndex]] exists to provide. Rebuilding from the
-    * on-disk hashes restores the manifest fpp exactly (and the manifest
-    * records the new count, so future appends size against reality, not
-    * the day-one guess).
-    *
-    * Order: parquet swap FIRST, bloom after — if the bloom rebuild never
-    * runs, the stale bloom is a superset of the live hash set (unions
-    * only ever widened it), so every probe verdict stays correct, merely
-    * less pre-filtered. The reverse order could crash having narrowed
-    * nothing (the new bloom equals the set) but is pointless risk
-    * ordering; both writes individually keep the
-    * bloom-covers-every-hash invariant that correctness rests on.
-    */
-  def compactExactIndex(s: SparkSession, dir: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    val metaPath = Paths.get(dir, "bloom.meta")
-    require(Files.exists(metaPath),
-      s"compactExactIndex: no index manifest at $metaPath")
-    val fpp = new String(Files.readAllBytes(metaPath), "UTF-8")
-      .split(",")(1).toDouble
-    compactBucketedTable(s, s"$dir/hashes", "hbkt")
-    val hashes = s.read.parquet(s"$dir/hashes")
-    val keys = hashes.count()
-    val bf = bloomBytes(hashes.select("h"), keys, fpp)
-    val tmpB = Paths.get(dir, "bloom.bin.tmp")
-    Files.write(tmpB, bf)
-    Files.move(tmpB, Paths.get(dir, "bloom.bin"),
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    val tmpM = Paths.get(dir, "bloom.meta.tmp")
-    Files.write(tmpM, s"$keys,$fpp".getBytes("UTF-8"))
-    Files.move(tmpM, metaPath,
-      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Compact a persisted minhash index ([[writeMinhashIndex]] layout):
-    * fold both bucketed tables' append debris. Content is untouched, so
-    * the sigs-before-bands write discipline has no analogue here — any
-    * one-table crash outcome leaves a fully correct index (one table
-    * compacted, the other not yet).
-    */
-  def compactMinhashIndex(s: SparkSession, dir: String): Unit = {
-    compactBucketedTable(s, s"$dir/sigs", "sbkt")
-    compactBucketedTable(s, s"$dir/bands", "bkt")
-  }
-
-  // ------------------------- index deletion (right-to-be-forgotten)
-  /** Record doc ids to forget in an append-only tombstone table —
-    * O(batch), no index file read or touched. Takes effect at the NEXT
-    * probe: a tombstoned doc stops matching, so it stops suppressing
-    * future documents as duplicates of content the platform no longer
-    * holds (the dedup-index half of the GDPR story — forgetting the
-    * DOCUMENT is not enough if its fingerprints keep voting). Physical
-    * removal is [[vacuumMinhashIndex]] / [[vacuumExactIndex]].
-    */
-  def deleteFromMinhashIndex(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    requireLayout(dir, minhashLayout, "deleteFromMinhashIndex")
-    ids.select(col("doc_id")).write.mode("append").parquet(s"$dir/tombstones")
-  }
-
-  /** Exact-index twin of [[deleteFromMinhashIndex]] — ids are the KEEPER
-    * (`match_id`) documents to forget.
-    */
-  def deleteFromExactIndex(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    requireLayout(dir, exactLayout, "deleteFromExactIndex")
-    ids.select(col("doc_id")).write.mode("append").parquet(s"$dir/tombstones")
-  }
-
-  /** Distinct tombstoned ids, or an empty frame when none recorded.
-    * Bounded by deletion volume, never index size.
-    */
-  private def indexTombstones(s: SparkSession, dir: String): DataFrame =
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "tombstones")))
-      s.read.parquet(s"$dir/tombstones").select("doc_id").distinct()
-    else s.range(0).select(col("id").as("doc_id"))
-
-  /** Rewrite ONLY the named bucket partitions of a bucketed index table,
-    * dropping rows whose `joinCol` is tombstoned; a wholly-emptied
-    * bucket's dir is removed explicitly (dynamic overwrite replaces only
-    * partitions it writes). Survivors are materialized BEFORE the
-    * overwrite so the write never reads the partitions it replaces.
-    */
-  private def rewriteBucketsDropping(s: SparkSession, path: String,
-      partCol: String, buckets: Array[Int], tomb: DataFrame,
-      joinCol: String): Unit = {
-    if (buckets.isEmpty) return
-    val survivors = s.read.parquet(path)
-      .filter(col(partCol).isin(buckets.map(Integer.valueOf): _*))
-      .join(broadcast(tomb.select(col("doc_id").as(joinCol))),
-        Seq(joinCol), "left_anti")
-      .localCheckpoint(true)
-    val kept = survivors.select(partCol).distinct()
-      .collect().map(_.getInt(0)).toSet
-    survivors.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol).parquet(path)
-    Graph.release(survivors)
-    buckets.filterNot(kept).foreach { b =>
-      deleteTreeIfExists(java.nio.file.Paths.get(path, s"$partCol=$b"))
+    if (java.nio.file.Files.exists(p)) {
+      import scala.jdk.CollectionConverters._
+      java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
+        .foreach(java.nio.file.Files.delete)
     }
-  }
-
-  /** Physically remove tombstoned docs from a minhash index. Every read
-    * and write is partition-pruned by literals derived from the
-    * tombstones themselves: the sig buckets come from doc-id arithmetic
-    * (no scan at all), and the dead docs' BAND buckets come from
-    * re-banding their signatures read out of exactly those sig buckets —
-    * never a full bands scan. Tombstones clear LAST, so a crash at any
-    * point leaves a correct index (probes keep excluding; re-vacuum is
-    * idempotent).
-    */
-  def vacuumMinhashIndex(s: SparkSession, dir: String): Unit = {
-    requireLayout(dir, minhashLayout, "vacuumMinhashIndex")
-    val tombPath = java.nio.file.Paths.get(dir, "tombstones")
-    if (!java.nio.file.Files.exists(tombPath)) return
-    val tomb = indexTombstones(s, dir).localCheckpoint(true)
-    val sbkts = tomb
-      .select(pmod(col("doc_id"), lit(INDEX_BUCKETS.toLong)).cast("int").as("sbkt"))
-      .distinct().collect().map(_.getInt(0))
-    val deadSigs = s.read.parquet(s"$dir/sigs")
-      .filter(col("sbkt").isin(sbkts.map(Integer.valueOf): _*))
-      .drop("sbkt")
-      .join(broadcast(tomb), "doc_id")
-    val bkts = bandedKeys(deadSigs)
-      .select(pmod(xxhash64(col("band_key")), lit(INDEX_BUCKETS)).cast("int").as("bkt"))
-      .distinct().collect().map(_.getInt(0))
-    rewriteBucketsDropping(s, s"$dir/bands", "bkt", bkts, tomb, "doc_id")
-    rewriteBucketsDropping(s, s"$dir/sigs", "sbkt", sbkts, tomb, "doc_id")
-    Graph.release(tomb)
-    deleteTreeIfExists(tombPath) // LAST: crash ⇒ probes still exclude
-  }
-
-  /** Physically remove tombstoned keepers from an exact index. The FIND
-    * phase reads two thin columns (match_id, hbkt) of the hash table —
-    * the bucket key derives from the content hash, which a
-    * right-to-be-forgotten request no longer has — but the WRITE phase
-    * stays affected-bucket-bounded. The bloom is deliberately NOT
-    * rebuilt: a stale bloom entry only costs a false-positive prefilter
-    * pass (the exact join still decides membership), and the next
-    * [[compactExactIndex]] rebuilds it from surviving hashes anyway —
-    * vacuum + compact is the fully-forgotten state, including the
-    * filter.
-    */
-  def vacuumExactIndex(s: SparkSession, dir: String): Unit = {
-    requireLayout(dir, exactLayout, "vacuumExactIndex")
-    val tombPath = java.nio.file.Paths.get(dir, "tombstones")
-    if (!java.nio.file.Files.exists(tombPath)) return
-    val tomb = indexTombstones(s, dir).localCheckpoint(true)
-    val hbkts = s.read.parquet(s"$dir/hashes")
-      .select("match_id", "hbkt")
-      .join(broadcast(tomb), col("match_id") === col("doc_id"))
-      .select("hbkt").distinct().collect().map(_.getInt(0))
-    rewriteBucketsDropping(s, s"$dir/hashes", "hbkt", hbkts, tomb, "match_id")
-    Graph.release(tomb)
-    deleteTreeIfExists(tombPath) // LAST: crash ⇒ probes still exclude
-  }
 
   // --------------------------------------------------------------- SimHash
   val SIMHASH_BITS = 60 // the md5-derived base hash carries 60 bits
@@ -2454,11 +1849,10 @@ object Dedup {
   }
 
   // ----------------------------------------------- d24 chunk-grain dedup
-  /** d24: chunk-grain dedup accounting — the batch face of
-    * StreamingChunks.chunkDedupStream and the measurement that motivates
-    * it: how much of each language's CHUNK mass is duplicated content
-    * that document-level d01 can never see (navigation boilerplate,
-    * license blocks, templated paragraphs shared across distinct pages).
+  /** d24: chunk-grain dedup accounting: how much of each language's
+    * CHUNK mass is duplicated content that document-level d01 can never
+    * see (navigation boilerplate, license blocks, templated paragraphs
+    * shared across distinct pages).
     * Chunks come from the shared t27 kernel; identity is the 60-bit
     * chunk hash; dup_ppm is the deduplicatable fraction and max_mult the
     * hottest boilerplate chunk's multiplicity.

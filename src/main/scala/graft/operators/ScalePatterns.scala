@@ -299,81 +299,29 @@ object ScalePatterns {
       .option(s"parquet.enable.dictionary#$keyCol", "false")
       .parquet(path)
 
-  /** Transition a STREAMING-landed daily table (graft.streaming
-    * EventIngest) to plain directory-listing semantics by dropping the
-    * parquet sink's `_spark_metadata` manifest. Required before any
-    * layout rewrite: batch readers of a manifest-bearing path list files
-    * FROM THE MANIFEST, so compacted files would be invisible and removed
-    * ones would error. One-way by design — run it with the stream STOPPED
-    * and decommissioned (a restarted sink would resume manifest numbering
-    * the readers no longer consult).
-    */
-  def finalizeStreamTable(path: String): Unit =
-    Dedup.deleteTreeIfExists(java.nio.file.Paths.get(path, "_spark_metadata"))
-
-  /** Compact ONE closed day partition of a daily table into a single file
-    * — the per-day form of the index compactor, folding the
-    * one-file-per-micro-batch (plus late-arrival) debris a day
-    * accumulates. Day-granularity is the point: the ingest keeps landing
-    * TODAY's partition while yesterday compacts, and retention later
-    * drops whole day directories.
-    *
-    * Same swap discipline and crash story as Dedup.compactBucketedTable:
-    * compacted copy fully written BESIDE the live day dir, two renames, a
-    * crash between them leaves the day missing (loud) with `__old` as the
-    * named recovery, stale debris reconciled on entry. Refuses a
-    * manifest-bearing table — [[finalizeStreamTable]] first.
-    */
-  def compactDay(s: SparkSession, path: String, day: String): Unit = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    require(!Files.exists(Paths.get(path, "_spark_metadata")),
-      s"compactDay: $path still carries a _spark_metadata manifest — " +
-        "manifest readers would not see compacted files; finalizeStreamTable first")
-    val live = Paths.get(s"$path/day=$day")
-    // underscore-prefixed siblings: invisible to Spark's file listing, so
-    // a concurrent reader of the table never sees a half-written copy or
-    // a bogus `day=...__compact` partition value
-    val tmp = Paths.get(s"$path/_compact_$day")
-    val old = Paths.get(s"$path/_old_$day")
-    if (Files.exists(old)) {
-      require(Files.exists(live),
-        s"compactDay: $old exists but $live is missing — a prior compaction " +
-          s"crashed mid-swap; restore by renaming $old back to $live")
-      Dedup.deleteTreeIfExists(old)
-    }
-    Dedup.deleteTreeIfExists(tmp)
-    require(Files.exists(live), s"compactDay: no partition at $live")
-    // a partition dir read yields the file schema (day lives only in the
-    // directory name), so the rewrite lands schema-identical files
-    s.read.parquet(live.toString).coalesce(1)
-      .write.parquet(tmp.toString)
-    Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
-    Dedup.deleteTreeIfExists(old)
-  }
-
   /** Restate (backfill) ONE event-day of a [[writeDailyPartitioned]] table
     * with corrected rows — the lifecycle op every pipeline needs when an
-    * upstream correction lands after the day closed. Completes the table's
-    * land → compact → expire lifecycle with restatement.
+    * upstream correction lands after the day closed.
     *
-    * Same crash-ordered underscore-sibling swap as [[compactDay]]:
-    * the replacement is written to an underscore-prefixed sibling
-    * (invisible to Spark's listing), then swapped in with two atomic
-    * renames — a concurrent reader never sees a mix of old and new rows
-    * or a half-written file. (Between the two renames there IS a brief
-    * window where the day directory is absent — a reader in that instant
-    * sees an empty day, the same contract as [[compactDay]]; a
-    * table-format manifest would close it, plain directories cannot.)
+    * Crash-ordered swap: the replacement is written to an
+    * underscore-prefixed sibling (invisible to Spark's listing), then
+    * swapped in with two atomic renames — a concurrent reader never sees
+    * a mix of old and new rows or a half-written file. (Between the two
+    * renames there IS a brief window where the day directory is absent —
+    * a reader in that instant sees an empty day; a table-format manifest
+    * would close it, plain directories cannot.)
     * Every crash point is recoverable: the `_old_` sibling survives until
     * the swap completes. Day granularity is what makes restatement
     * 100 TB-viable: the rewrite is proportional to ONE day, not the
     * table.
     *
-    * Guards: every replacement row must fall inside the restated day (a
-    * row landing in another partition would silently vanish), and the
-    * replacement schema must match the partition files' schema (which
-    * excludes the derived `day` column).
+    * Guards: the table carries no streaming file sink's
+    * `_spark_metadata` manifest (readers of such a table list files from
+    * the manifest and would not see the swapped ones), every replacement
+    * row falls inside the restated day (a row landing in another
+    * partition would silently vanish), and the replacement schema
+    * matches the partition files' schema (which excludes the derived
+    * `day` column).
     */
   def restateDay(s: SparkSession, path: String, day: String,
       replacement: DataFrame, tsCol: String): Unit = {
@@ -382,7 +330,8 @@ object ScalePatterns {
       s"restateDay: day must be yyyy-MM-dd, got [$day]")
     require(!Files.exists(Paths.get(path, "_spark_metadata")),
       s"restateDay: $path still carries a _spark_metadata manifest — " +
-        "manifest readers would not see the swapped files; finalizeStreamTable first")
+        "manifest readers would not see the swapped files; stop the stream " +
+        "that wrote it and delete the manifest first")
     // null-safe: a NULL event time is a stray too (writeDailyPartitioned
     // would route it to the default partition, not this day)
     val strays = replacement
@@ -410,32 +359,6 @@ object ScalePatterns {
     Files.move(live, old, StandardCopyOption.ATOMIC_MOVE)
     Files.move(tmp, live, StandardCopyOption.ATOMIC_MOVE)
     Dedup.deleteTreeIfExists(old)
-  }
-
-  /** Retention for the daily layout — the third lifecycle verb (land →
-    * compact → EXPIRE): drop every `day=` partition strictly older than
-    * `keepFrom` (yyyy-MM-dd, inclusive cutoff). Day granularity is what
-    * makes 100 TB retention O(days-dropped) directory removals instead
-    * of a rewrite; the string comparison IS the date comparison for
-    * zero-padded ISO dates. Same manifest guard as [[compactDay]]: a
-    * streaming-managed table must be finalized first, or manifest
-    * readers would keep listing deleted files. Returns the dropped day
-    * values (the audit record a production run logs).
-    */
-  def expireDays(path: String, keepFrom: String): Seq[String] = {
-    import java.nio.file.{Files, Paths}
-    require(keepFrom.matches("""\d{4}-\d{2}-\d{2}"""),
-      s"expireDays: keepFrom must be yyyy-MM-dd, got [$keepFrom]")
-    require(!Files.exists(Paths.get(path, "_spark_metadata")),
-      s"expireDays: $path still carries a _spark_metadata manifest — " +
-        "manifest readers would keep listing dropped files; finalizeStreamTable first")
-    import scala.jdk.CollectionConverters._
-    val dropped = Files.list(Paths.get(path)).iterator().asScala
-      .filter(p => p.getFileName.toString.startsWith("day=") &&
-        p.getFileName.toString.stripPrefix("day=") < keepFrom)
-      .toSeq
-    dropped.foreach(Dedup.deleteTreeIfExists)
-    dropped.map(_.getFileName.toString.stripPrefix("day="))
   }
 
   /** q58: the salted skew join as a registered, oracled query. events has

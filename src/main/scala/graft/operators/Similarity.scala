@@ -1449,10 +1449,8 @@ object Similarity {
     *
     * Scale shape: at 100 TB `cell` and the 4 code ids are WRITE-TIME
     * columns (cell the partition key — the s03 claim the
-    * TextAndDedupSpec partition-pruning test makes executable, extended
-    * here to the composed probe: the spec writes (cell, m, code) rows
-    * partitioned by cell, probes only the queries' ≤ nQueries·N_PROBE
-    * cells as literals, and pins PartitionFilters). A probe touches
+    * TextAndDedupSpec partition-pruning test makes executable), so a
+    * probe reads only the queries' ≤ nQueries·N_PROBE cells. It touches
     * N_PROBE/N_CELLS of the corpus and never reads a float vector: the
     * scoring join is broadcast(LUT ≤ nQueries·PQ_M·PQ_K rows) against
     * the pruned code scan, partial-aggregated before its one exchange.
@@ -1674,341 +1672,6 @@ object Similarity {
       |SELECT query_id, CAST(rank AS INT) AS rank, vec_id, sq
       |FROM rr WHERE rank <= 10 ORDER BY query_id, rank""".stripMargin
 
-  // ------------------------------- persisted IVF-PQ index (s09 at rest)
-  /** Persisted IVF-PQ index — the d16/d17 daily-ingest discipline applied
-    * to ANN: the MODEL (centroids + codebook) and the CODED corpus are
-    * written once; probes read the tiny model plus only the probed cells'
-    * partitions; deltas append their codes under the FROZEN model. The
-    * model is deliberately never updated by an append — re-clustering
-    * under existing codes would silently invalidate every earlier cell
-    * assignment and code id (they are argmins AGAINST that model); recall
-    * drift from a shifted distribution is recovered by a full
-    * [[writeIvfPqIndex]] rebuild, the FAISS retrain discipline.
-    *
-    * Layout under `dir`: `centroids` ([[N_CELLS]] rows), `codebook`
-    * ([[PQ_K]] rows with the precomputed per-subspace self-dots),
-    * `vectors` ((vec_id, qv) flat rows partitioned by `cell` — the FAISS
-    * IndexRefineFlat storage the refined probe re-scores against), and
-    * `codes` ((vec_id, m, code) rows partitioned by `cell` — the
-    * write-time partition key both probes prune on). The model lands
-    * BEFORE the vectors, and the vectors BEFORE any code row: both probe
-    * flavors read `codes`, so a crash anywhere in the chain leaves a
-    * missing/empty `codes` table — probes fail loudly or return no
-    * candidates from the torn delta, never a silently-wrong ranking (the
-    * appendToMinhashIndex ordering discipline), and "codes present ⇒
-    * vectors present" holds by construction. Code rows are derived by
-    * READING BACK the persisted model, so codes always agree with the
-    * model on disk, not with a driver-side copy.
-    *
-    * Corpus/delta/query frames carry (vec_id|query_id, qv) with qv the
-    * [[quantize]]d integer components — quantization happens once at
-    * ingest, as in every registered similarity query.
-    */
-  /** Layout constants this index format is written under — stamped at
-    * write, required at probe/append ([[Dedup.requireLayout]]): cell and
-    * code geometry decide both the partition layout and what a stored
-    * code MEANS; the quantization scale decides what the stored model
-    * vectors mean relative to a caller's query frame.
-    */
-  // store=flat marks the vectors-table format version: an index written
-  // before the refine store existed must refuse (and rebuild) rather
-  // than let an append CREATE a delta-only vectors table the refined
-  // probe would silently treat as the whole corpus
-  private[graft] def ivfPqLayoutFor(nCells: Int, k: Int): String =
-    s"cells=$nCells,m=$PQ_M,subdim=$PQ_SUBDIM,k=$k,quant=${QUANT.toLong},store=flat"
-
-  /** Read and validate an IVF-PQ index's layout stamp, returning its
-    * (nCells, k). The cell and codebook cardinalities are INDEX properties
-    * (a production store runs k ≈ 256+ while the fixtures run 16 — both
-    * are valid indexes of this format), but the subspace geometry, the
-    * quantization constant, and the store version are COMPILED-IN: a stamp
-    * that disagrees on any of those was written by a different build and
-    * probing it would silently mis-score, so refuse exactly like
-    * [[Dedup.requireLayout]] (same message shape — the tamper spec pins
-    * both the found layout and the "rebuild" pointer appearing).
-    */
-  private[graft] def ivfPqLayoutParams(dir: String, what: String): (Int, Int) = {
-    val p = java.nio.file.Paths.get(dir, "index.meta")
-    require(java.nio.file.Files.exists(p),
-      s"$what: no layout manifest at $p — rebuild the index with this library version")
-    val found = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
-    val re = ("""cells=(\d+),m=""" + PQ_M + """,subdim=""" + PQ_SUBDIM +
-      """,k=(\d+),quant=""" + QUANT.toLong + """,store=flat""").r
-    found match {
-      case re(c, k) => (c.toInt, k.toInt)
-      case _ => throw new IllegalArgumentException(
-        s"requirement failed: $what: index layout [$found] does not match this " +
-          s"library's [${ivfPqLayoutFor(N_CELLS, PQ_K)} (any cells/k)] — " +
-          "probing across layouts silently misses matches; rebuild the index")
-    }
-  }
-
-  /** Build (or rebuild) a complete IVF-PQ index at `dir`. `nCells`/`k`
-    * size the model — fixtures run the 16/16 defaults, a production store
-    * runs 256+/256 (the stamp records the choice; probes read it back
-    * rather than assuming the compiled default). `centroidStride`/
-    * `centroidResidue` pick the deterministic seed sample and must be
-    * chosen so the corpus yields `nCells` candidates (checked loudly
-    * below).
-    */
-  def writeIvfPqIndex(corpus: DataFrame, dir: String,
-      nCells: Int = N_CELLS, k: Int = PQ_K,
-      centroidStride: Long = 31L, centroidResidue: Long = 6L): Unit = {
-    // an empty overwrite would land an unreadable partitioned parquet and
-    // a null model — refuse loudly, touching nothing (writeExactIndex)
-    require(!corpus.isEmpty,
-      s"writeIvfPqIndex: empty corpus — refusing to write an empty index to $dir")
-    // a REBUILD (the retrain path) must never let a torn run pair the
-    // NEW model with the STALE code table — codes are argmins against
-    // the model that encoded them, so that pairing is silently-wrong
-    // rankings. Dropping codes first turns every torn window into a
-    // missing-table read: loud (the writeMinhashIndex discipline)
-    Dedup.deleteTreeIfExists(java.nio.file.Paths.get(dir, "codes"))
-    seedCentroids(corpus, nCells, centroidStride, centroidResidue).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
-    pqCodebook(corpus, k).coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/codebook")
-    // a thin corpus (or a too-coarse stride) yields FEWER model rows than
-    // requested (seedCentroids/pqCodebook are limit-bounded) — legal, but
-    // the stamp must record the ACTUAL geometry, not the ask: probes and
-    // compaction read their cell/code cardinalities from the stamp, and a
-    // stamp that lies about them is the exact torn-index class the layout
-    // check exists to refuse. Tiny single-file reads, write-time-only cost.
-    val spark = corpus.sparkSession
-    val nc = spark.read.parquet(s"$dir/centroids").count().toInt
-    require(nc > 0, s"writeIvfPqIndex: corpus yielded no centroids " +
-      s"(stride=$centroidStride residue=$centroidResidue selects nothing)")
-    val nk = spark.read.parquet(s"$dir/codebook").count().toInt
-    require(nk > 0, s"writeIvfPqIndex: corpus yielded no codebook rows")
-    writeCodes(corpus, dir, "overwrite")
-    // the layout stamp lands LAST: a torn rebuild leaves the OLD stamp
-    // (or none) next to new tables, so the layout check refuses loudly
-    // instead of blessing old-layout tables with a new-layout stamp
-    Dedup.stampLayout(dir, ivfPqLayoutFor(nc, nk))
-  }
-
-  /** Absorb a delta batch: assign + encode against the PERSISTED model,
-    * append under the deltas' own cell partitions — no existing file is
-    * read or touched, so the cost is delta-proportional at any index
-    * size. An empty delta appends nothing (harmless no-op).
-    *
-    * Caller contract: `vec_id` is the index's primary key — append only
-    * ids not already present. Unlike the minhash band index (a
-    * multi-map, where a duplicate append is merely redundant), a
-    * duplicate vec_id here lands a second (vec_id, m, code) row set and
-    * the probe's per-(query, vec) ADC SUM would double-count it —
-    * corrupt scores, not just waste. Dedup ingest ids first (d01/d17).
-    */
-  def appendToIvfPqIndex(delta: DataFrame, dir: String): Unit = {
-    // append-mode parquet happily CREATES a missing table — require BOTH
-    // tables this append claims to extend to exist (appendToMinhashIndex);
-    // a missing vectors table alongside live codes is a torn write
-    require(java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "codes")) &&
-      java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "vectors")),
-      s"appendToIvfPqIndex: no complete index at $dir — write one first")
-    ivfPqLayoutParams(dir, "appendToIvfPqIndex")
-    writeCodes(delta, dir, "append")
-  }
-
-  private def writeCodes(batch: DataFrame, dir: String, mode: String): Unit = {
-    // assignToCells drops a null-qv row: refuse it before any write,
-    // instead of letting it go missing from both tables
-    require(batch.filter(col("qv").isNull).isEmpty,
-      s"IVF-PQ index at $dir: a vector with a null qv cannot be indexed")
-    val s = batch.sparkSession
-    val cents = s.read.parquet(s"$dir/centroids")
-    val cb = s.read.parquet(s"$dir/codebook")
-    val assigned = assignToCells(batch, cents).select("vec_id", "cell")
-    // the FLAT vectors land under the same cell partitioning, BEFORE the
-    // codes, so "codes present ⇒ vectors present": the refined probe
-    // reads both tables, and any torn write leaves codes missing — both
-    // probe flavors then fail loudly on the same path (the FAISS
-    // IndexRefineFlat storage, under the writeMinhash sigs-before-bands
-    // discipline)
-    assigned.join(batch.select("vec_id", "qv"), "vec_id")
-      .write.mode(mode).partitionBy("cell").parquet(s"$dir/vectors")
-    assigned.join(pqEncode(batch, cb), "vec_id")
-      .write.mode(mode).partitionBy("cell").parquet(s"$dir/codes")
-  }
-
-  // ------------------------------------------ deletion (GDPR) lifecycle
-  /** Record deletions in an append-only tombstone table. O(batch) — no
-    * index file is read or touched; the ids take effect at the NEXT
-    * probe (tombstone-aware exclusion) and are physically removed by
-    * [[vacuumIvfPqIndex]]. The right-to-be-forgotten path: logical
-    * deletion is immediate and cheap, physical rewrite is batched and
-    * touches only the affected cell partitions.
-    */
-  def deleteFromIvfPqIndex(s: SparkSession, dir: String, ids: DataFrame): Unit = {
-    ivfPqLayoutParams(dir, "deleteFromIvfPqIndex")
-    ids.select(col("vec_id")).write.mode("append").parquet(s"$dir/tombstones")
-  }
-
-  /** Distinct tombstoned ids, or an empty frame when none were ever
-    * recorded. Bounded by the deletion volume, never the index.
-    */
-  private def tombstonesOf(s: SparkSession, dir: String): DataFrame =
-    if (java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "tombstones")))
-      s.read.parquet(s"$dir/tombstones").select("vec_id").distinct()
-    else s.range(0).select(col("id").as("vec_id"))
-
-  /** Physically remove tombstoned rows: rewrite ONLY the cell partitions
-    * that hold a tombstoned id (dynamic partition overwrite of those
-    * cells; a wholly-emptied cell's dir is dropped explicitly since an
-    * empty write overwrites nothing), then clear the tombstone table
-    * LAST — a crash anywhere leaves a correct index: probes keep
-    * excluding via the surviving tombstones and a re-run vacuum is
-    * idempotent. Cost is deletion-proportional (affected cells), never
-    * index-proportional; the model is untouched (deletion never
-    * invalidates the frozen centroids/codebook — codes stay argmins
-    * against the model that encoded them).
-    */
-  def vacuumIvfPqIndex(s: SparkSession, dir: String): Unit = {
-    ivfPqLayoutParams(dir, "vacuumIvfPqIndex")
-    val tombPath = java.nio.file.Paths.get(dir, "tombstones")
-    if (!java.nio.file.Files.exists(tombPath)) return
-    val tomb = tombstonesOf(s, dir).localCheckpoint(true)
-    // the affected-set SOURCE table must be the LAST rewrite (tied
-    // structurally via `.last`): a crash between the two rewrites then
-    // leaves the source intact, so a recovery re-run recomputes the same
-    // affected set and finishes the job — codes-first would make the
-    // re-run see an empty affected set and strand deleted embeddings in
-    // vectors forever (the vacuumMinhashIndex derived-first ordering)
-    val rewriteOrder = Seq("vectors", "codes")
-    // affected cells off the codes table: bounded by the index GEOMETRY
-    // (≤ nCells literals), collected like the probe's cell list
-    val affected = s.read.parquet(s"$dir/${rewriteOrder.last}")
-      .join(broadcast(tomb), "vec_id").select("cell").distinct()
-      .collect().map(_.getInt(0))
-    for (tbl <- rewriteOrder; if affected.nonEmpty) {
-      val survivors = s.read.parquet(s"$dir/$tbl")
-        .filter(col("cell").isin(affected.map(Integer.valueOf): _*))
-        .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-        // materialize BEFORE the overwrite: the write would otherwise
-        // read the very partitions it replaces (self-overwrite)
-        .localCheckpoint(true)
-      val keptCells = survivors.select("cell").distinct()
-        .collect().map(_.getInt(0)).toSet
-      survivors.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell").parquet(s"$dir/$tbl")
-      Graph.release(survivors)
-      // dynamic overwrite replaces only partitions it WRITES — a cell
-      // whose every row was tombstoned must be dropped by hand
-      affected.filterNot(keptCells).foreach { c =>
-        Dedup.deleteTreeIfExists(java.nio.file.Paths.get(dir, tbl, s"cell=$c"))
-      }
-    }
-    Graph.release(tomb)
-    Dedup.deleteTreeIfExists(tombPath) // LAST: crash ⇒ probes still exclude
-  }
-
-  /** Compact the code and vector tables after a season of appends: fold
-    * each cell partition's one-file-per-append debris into one file per
-    * cell ([[Dedup.compactBucketedTable]] — same swap discipline and
-    * crash story). The model is untouched: compaction is a pure layout
-    * rewrite and codes stay valid against the frozen centroids/codebook
-    * by construction.
-    */
-  def compactIvfPqIndex(s: SparkSession, dir: String): Unit = {
-    val (nCells, _) = ivfPqLayoutParams(dir, "compactIvfPqIndex")
-    Dedup.compactBucketedTable(s, s"$dir/codes", "cell", nCells)
-    Dedup.compactBucketedTable(s, s"$dir/vectors", "cell", nCells)
-  }
-
-  /** Probe the persisted index with a (query_id, qv) batch: assign the
-    * queries to their [[N_PROBE]] best cells against the stored
-    * centroids, then read ONLY those cells' code partitions
-    * (PartitionFilters pruning — the cell-literal list is bounded by
-    * |queries|·N_PROBE, never corpus-proportional) and ADC-score them
-    * against the broadcast LUT. Identical ranking to [[ivfPqTopK]] when
-    * the index was written from the same corpus (spec-pinned). The
-    * probe's intermediate checkpoint is released before returning; the
-    * returned frame holds the one surviving checkpoint for the caller to
-    * [[Graph.release]] once consumed (the probeMinhashIndex hygiene).
-    */
-  def probeIvfPqIndex(s: SparkSession, dir: String, queries: DataFrame,
-      k: Int = 10): DataFrame = {
-    ivfPqLayoutParams(dir, "probeIvfPqIndex")
-    val (ranked, _) = probeAdcRanked(s, dir, queries, k)
-    ranked
-  }
-
-  /** The shared ADC half of both probe flavors: assign the query batch to
-    * its probed cells, prune the code scan to those cell literals,
-    * ADC-score against the broadcast LUT, rank to depth k. Returns the
-    * checkpointed ranked frame — (query_id, rank, vec_id, adc), caller
-    * releases — plus the probed cell ids, so the refined flavor can prune
-    * its vectors scan to the SAME partitions without re-deriving them.
-    */
-  private def probeAdcRanked(s: SparkSession, dir: String, queries: DataFrame,
-      k: Int): (DataFrame, Array[Int]) = {
-    val cents = s.read.parquet(s"$dir/centroids")
-    val cb = s.read.parquet(s"$dir/codebook")
-    // one assigned frame feeds both the cell collect and the scoring join
-    val qprobe = assignToCells(queries, cents, nBest = N_PROBE)
-      .select("query_id", "cell")
-      .localCheckpoint(true)
-    val cells = qprobe.select("cell").distinct().collect().map(_.getInt(0))
-    val codes = s.read.parquet(s"$dir/codes")
-      .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
-    val lut = pqLut(queries, cb).withColumnRenamed("query_id", "lq")
-    val w = Window.partitionBy(col("query_id")).orderBy(col("adc"), col("vec_id"))
-    val res = codes.join(broadcast(qprobe), "cell")
-      .join(broadcast(lut),
-        col("m") === col("lm") && col("code") === col("lj") &&
-          col("query_id") === col("lq"))
-      .groupBy("query_id", "vec_id")
-      .agg(sum(col("pd")).as("adc"))
-      // logically-deleted ids drop BEFORE ranking, so top-k backfills
-      // from survivors (both probe flavors share this: the refined
-      // shortlist can never resurrect a tombstoned id)
-      .join(broadcast(tombstonesOf(s, dir)), Seq("vec_id"), "left_anti")
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "adc")
-      .orderBy("query_id", "rank")
-      .localCheckpoint(true)
-    Graph.release(qprobe)
-    (res, cells)
-  }
-
-  /** s11 at rest: probe the persisted index and REFINE the ADC shortlist
-    * with exact squared L2 against the index's own `vectors` table — the
-    * FAISS IndexRefineFlat probe, against the index instead of a live
-    * corpus frame. The ADC half shortlists top-`c` per query without
-    * touching a full vector; the refine then reads flat vectors from ONLY
-    * the probed cells' partitions (every shortlisted candidate lives in a
-    * probed cell by construction — its code row came from one) and joins
-    * them against the BROADCAST shortlist (≤ c·|queries| rows), so no
-    * vector data ever shuffles and the re-rank window is ≤ c rows per
-    * query. Identical ranking to [[ivfPqRerank]] when the index holds the
-    * same corpus (spec-pinned). Returned frame carries the one surviving
-    * checkpoint — [[Graph.release]] once consumed.
-    */
-  def probeIvfPqIndexRefined(s: SparkSession, dir: String, queries: DataFrame,
-      k: Int = 10, c: Int = RERANK_C): DataFrame = {
-    ivfPqLayoutParams(dir, "probeIvfPqIndexRefined")
-    val (shortlist, cells) = probeAdcRanked(s, dir, queries, c)
-    val vectors = s.read.parquet(s"$dir/vectors")
-      .filter(col("cell").isin(cells.map(Integer.valueOf): _*))
-      .withColumn("cc", qdot(col("qv"), col("qv")))
-    val q = queries.select(col("query_id"), col("qv").as("quv"))
-      .withColumn("qq", qdot(col("quv"), col("quv")))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("sq"), col("vec_id"))
-    val res = vectors
-      .join(broadcast(shortlist.select("query_id", "vec_id")), "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("sq", exactSq)
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "sq")
-      .orderBy("query_id", "rank")
-      .localCheckpoint(true)
-    Graph.release(shortlist)
-    res
-  }
-
   // --------------------------------------------------- hard negatives
   /** s12: hard-negative mining — for each anchor vector, the k nearest
     * neighbors whose LABEL DIFFERS from the anchor's (contrastive /
@@ -2019,10 +1682,9 @@ object Similarity {
     * Same determinism contract as s01 (quantized integer dots, one IEEE
     * division) and the same scale shape: the small anchor sample is
     * broadcast against one corpus scan — never corpus×corpus — and the
-    * per-anchor top-k is a window over a k·|anchors|-bounded frame. At
-    * index scale the corpus scan swaps for the s09 IVF-PQ probe
-    * unchanged: the label-exclusion predicate composes with any candidate
-    * generator.
+    * per-anchor top-k is a window over a k·|anchors|-bounded frame. The
+    * label-exclusion predicate composes with any candidate generator,
+    * the s09 IVF-PQ cell probe included.
     */
   def hardNegatives(s: SparkSession, d: String,
                     nAnchors: Int = 8, k: Int = 5): DataFrame = {
@@ -2330,8 +1992,8 @@ object Similarity {
       |FROM r GROUP BY query_id ORDER BY query_id""".stripMargin
 
   // ---------------------------------------------------- s15 ANN deletion
-  /** Deterministic deletion slice for the s15 key (and the persisted-path
-    * equivalence spec): every 17th vector, offset 3.
+  /** Deterministic deletion slice for the s15 key: every 17th vector,
+    * offset 3.
     */
   val ANN_DEL_MOD = 17L
   val ANN_DEL_RES = 3L
@@ -2343,13 +2005,6 @@ object Similarity {
     * frozen (centroids/codebook were trained with the deleted vectors —
     * deletion never invalidates codes, which remain argmins against the
     * model that encoded them), only the candidate set shrinks.
-    *
-    * This registered key is the frame-level semantics; the persisted
-    * face is [[deleteFromIvfPqIndex]] (O(batch) tombstone append,
-    * immediate exclusion at probe time) + [[vacuumIvfPqIndex]]
-    * (deletion-proportional physical rewrite of affected cell
-    * partitions, tombstones cleared last so a crash anywhere leaves a
-    * correct index) — spec-pinned ≡ this ranking in AnnDeletionSpec.
     */
   def ivfPqDeleteTopK(s: SparkSession, d: String, nQueries: Int = 5,
       k: Int = 10): DataFrame = {
@@ -2955,9 +2610,9 @@ object Similarity {
     *
     * Scale shape: candidates come from EQUALITY on cell — never an
     * all-pairs product. The self-join is a shuffle on cell (at 100 TB,
-    * cell is the persisted index's write-time partition column, making it
-    * partition-local — the s09 probe argument), and per-cell cost is
-    * |cell|² with |cell| bounded by the k-means build (k ~ sqrt(N) cells
+    * cell is a write-time partition column, the s03 layout, which makes
+    * it partition-local), and per-cell cost is |cell|² with |cell|
+    * bounded by the k-means build (k ~ sqrt(N) cells
     * keeps |cell| ~ sqrt(N), so total work is N^1.5 / k — the standard
     * clustered kNN-graph construction bound, tunable via the cell count).
     * The top-k window partitions by src (never unpartitioned); centroids
@@ -3046,10 +2701,9 @@ object Similarity {
     *
     * Scale shape: the batch side is delta-sized; candidates come from
     * equality on the probed cell, so the probe touches |batch| ·
-    * probe-cell residents — at 100 TB, cell is the persisted index's
-    * partition column (the s15 deletion face already reads/writes the
-    * same layout), so each micro-batch prunes to its probed partitions
-    * and the base corpus is never rescanned. Centroids ride a broadcast;
+    * probe-cell residents — at 100 TB, cell is a write-time partition
+    * column of the base (the s03 layout), so each micro-batch prunes to
+    * its probed partitions and the base corpus is never rescanned. Centroids ride a broadcast;
     * the top-k window partitions by the delta's src.
     */
   val N_PROBE_INC = 2

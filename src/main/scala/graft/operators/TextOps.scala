@@ -1878,9 +1878,9 @@ object TextOps {
   def ragChunks(s: SparkSession, d: String): DataFrame =
     ragChunksOf(Tables.documents(s, d))
 
-  /** t27 chunk rows WITHOUT the terminal sort — the shared kernel for the
-    * batch face and [[graft.streaming.StreamingChunks]] (streaming plans
-    * reject global sorts; the chunk set is identical).
+  /** t27 chunk rows WITHOUT the terminal sort — the shared kernel of
+    * t27 and the d24 chunk-grain dedup (which aggregates the rows, so a
+    * sort would be wasted).
     */
   private[graft] def ragChunkRows(docs: DataFrame,
       carry: Seq[String] = Nil): DataFrame = {

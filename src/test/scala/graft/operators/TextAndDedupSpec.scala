@@ -124,14 +124,6 @@ class TextFunctionsSpec extends SparkSpec {
     assert(r(1) != r(2)) // content change changes the fingerprint
   }
 
-  test("wordNgrams produces n-2 trigrams; short docs collapse to one") {
-    val r = Seq("a b c d", "a b").toDF("t")
-      .select(TextFunctions.wordNgrams(col("t"), 3)).collect()
-      .map(_.getSeq[String](0))
-    assert(r(0) == Seq("a b c", "b c d"))
-    assert(r(1) == Seq("a b"))
-  }
-
   test("t11 typicality: common-token docs outscore rare-token docs") {
     val out = TextOps.typicality(spark, "/root/testdata/sf0.001")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
@@ -312,6 +304,24 @@ class DedupSpec extends SparkSpec {
     both.foreach { k =>
       assert(math.abs(exact(k) - est(k)) <= 0.35,
         s"pair $k: exact ${exact(k)} vs minhash ${est(k)}")
+    }
+    // the incremental tiers over the %INC_SPLIT split of the planted
+    // corpus: d16 pairs delta doc 100 with its base original 3; d18's exact
+    // tier is d17, which catches planted byte-copies, and its near tier is
+    // d16 minus the exact-matched docs, so no exact match reaches a band
+    withDocs { dir =>
+      val near = Dedup.incrementalNearDup(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(2), r.getDouble(3), r.getInt(4))).toSeq
+      assert(near.exists(r => r._1 == 100L && r._2 == 3L && r._4 == 1), s"d16: $near")
+      val exactTier = Dedup.incrementalExact(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1))).toSeq
+      assert(exactTier.exists(_._1 >= Dedup.EXACT_PLANT_OFFSET), s"d17: $exactTier")
+      val composed = Dedup.exactThenNear(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getDouble(3), r.getInt(4))).toSeq
+      assert(composed.filter(_._2 == "exact").map(r => (r._1, r._3)) == exactTier)
+      val exactIds = exactTier.map(_._1).toSet
+      assert(composed.filter(_._2 == "near").map(r => (r._1, r._3, r._4, r._5)) ==
+        near.filterNot(r => exactIds(r._1)))
     }
   }
 
@@ -522,308 +532,6 @@ class SimilaritySpec extends SparkSpec {
       wantSse.exists(e => e._1 == 102L && e._3 == 21 && e._4 == 0L && e._5 > 0L))
   }
 
-  test("s09 scale path is executable: cell-partitioned code table, pruned probe, same ranking") {
-    // the composed IVF-PQ claim — "cell and codes are write-time columns;
-    // a probe reads only its cells' partitions and scores via the
-    // broadcast LUT" — as the library's persisted-index API
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq").toString
-    val v = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
-    val queries = v.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("qv"))
-    val corpus = v.filter(col("vec_id") >= 5)
-    Similarity.writeIvfPqIndex(corpus, dir)
-    // query time: probe cells as literals (≤ nQueries·N_PROBE of them)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val probeCells = Similarity.assignToCells(
-        queries.withColumnRenamed("query_id", "vec_id"), cents,
-        nBest = Similarity.N_PROBE)
-      .select("cell").distinct().collect().map(_.getInt(0))
-    assert(probeCells.length < Similarity.N_CELLS,
-      s"probe touches all cells — pruning untestable")
-    // the probe's code scan prunes partitions (the probe itself
-    // checkpoints its result, detaching the scan — pin it directly)
-    val codeScan = spark.read.parquet(s"$dir/codes")
-      .filter(col("cell").isin(probeCells.map(Integer.valueOf): _*))
-    val scanLine = codeScan.queryExecution.sparkPlan.toString.linesIterator
-      .find(_.contains("FileScan")).get
-    assert(scanLine.contains("PartitionFilters: [") &&
-      !scanLine.contains("PartitionFilters: []") && scanLine.contains("cell"),
-      s"probe did not prune partitions:\n$scanLine")
-    // the persisted probe equals the registered composed query
-    val got = Similarity.probeIvfPqIndex(spark, dir, queries)
-    assert(got.collect().toSeq ==
-      Similarity.ivfPqTopK(spark, sfDir).collect().toSeq)
-    graft.operators.Graph.release(got)
-  }
-
-  test("s09: probeIvfPqIndex strands no intermediate checkpoints") {
-    // the probeMinhashIndex hygiene, for the ANN probe: intermediates are
-    // released, the returned frame holds exactly one checkpoint for the
-    // caller. Delta-with-retries: a genuine leak survives every attempt.
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-leak").toString
-    val v = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
-    val queries = v.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("qv"))
-    Similarity.writeIvfPqIndex(v.filter(col("vec_id") >= 5), dir)
-    assert(leaksAtMost(0) {
-      val got = Similarity.probeIvfPqIndex(spark, dir, queries)
-      got.collect()
-      graft.operators.Graph.release(got)
-    }, "probeIvfPqIndex leaked checkpointed RDDs")
-  }
-
-  test("s09: appendToIvfPqIndex encodes under the frozen model — merged probe == from-scratch") {
-    // daily-ingest for ANN: write day-1, append day-2 (no re-clustering),
-    // probe == an index built from scratch over day-1 ∪ day-2. The delta
-    // is chosen ABOVE every seed/codebook id, so the from-scratch build
-    // derives the identical model and the comparison isolates the append
-    // path itself.
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("ivfpq-append").toString
-    val v = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
-    val queries = v.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("qv"))
-    val corpus = v.filter(col("vec_id") >= 5)
-    // seeds are the first N_CELLS ids with vec_id % 31 == 6 (6 … 471);
-    // the codebook is the first PQ_K ids overall (5 … 20) — a delta of
-    // high non-seed ids leaves both model inputs inside the base
-    val isDelta = col("vec_id") > 400 && col("vec_id") % 31 =!= 6
-    val delta = corpus.filter(isDelta)
-    val base = corpus.filter(!isDelta)
-    assert(Similarity.seedCentroids(base).collect().toSeq ==
-      Similarity.seedCentroids(corpus).collect().toSeq,
-      "delta split touches the seed set — comparison would conflate models")
-    assert(Similarity.pqCodebook(base).collect().toSeq ==
-      Similarity.pqCodebook(corpus).collect().toSeq,
-      "delta split touches the codebook — comparison would conflate models")
-    Similarity.writeIvfPqIndex(base, s"$dir/inc")
-    val before = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/inc"))
-      .iterator()
-    import scala.jdk.CollectionConverters._
-    val beforeFiles = before.asScala.filter(f =>
-        java.nio.file.Files.isRegularFile(f) && f.toString.endsWith(".parquet"))
-      .map(f => f -> java.nio.file.Files.size(f)).toMap
-    Similarity.appendToIvfPqIndex(delta, s"$dir/inc")
-    val afterFiles = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/inc"))
-      .iterator().asScala.filter(f =>
-        java.nio.file.Files.isRegularFile(f) && f.toString.endsWith(".parquet"))
-      .map(f => f -> java.nio.file.Files.size(f)).toMap
-    assert(beforeFiles.forall { case (f, sz) => afterFiles.get(f).contains(sz) },
-      "append rewrote or removed an existing index file")
-    assert(afterFiles.size > beforeFiles.size, "append added no files")
-    // a null qv ranks no cell: the append refuses it, touching nothing
-    val e = intercept[IllegalArgumentException](Similarity.appendToIvfPqIndex(
-      delta.limit(1).withColumn("qv", lit(null).cast("array<bigint>")), s"$dir/inc"))
-    assert(e.getMessage.contains("null qv"), e.getMessage)
-    assert(java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/inc")).iterator().asScala
-      .count(f => f.toString.endsWith(".parquet")) == afterFiles.size)
-    Similarity.writeIvfPqIndex(corpus, s"$dir/scratch")
-    val merged = Similarity.probeIvfPqIndex(spark, s"$dir/inc", queries)
-    val scratch = Similarity.probeIvfPqIndex(spark, s"$dir/scratch", queries)
-    val mergedRows = merged.collect().toSeq
-    assert(mergedRows == scratch.collect().toSeq)
-    assert(mergedRows.nonEmpty)
-    // the appended VECTORS are searchable too: the refined probe re-ranks
-    // against the merged flat store and equals the from-scratch refine
-    val mergedRef = Similarity.probeIvfPqIndexRefined(spark, s"$dir/inc", queries)
-    val scratchRef = Similarity.probeIvfPqIndexRefined(spark, s"$dir/scratch", queries)
-    val mergedRefRows = mergedRef.collect().toSeq
-    assert(mergedRefRows == scratchRef.collect().toSeq,
-      "append left the refine store inconsistent with a from-scratch build")
-    Seq(mergedRef, scratchRef).foreach(graft.operators.Graph.release)
-    // appended vectors are genuinely searchable: some delta id must rank
-    // (the delta is ~1/5 of the corpus across all cells)
-    assert(mergedRows.exists(r => r.getLong(2) > 400 && r.getLong(2) % 31 != 6),
-      s"no appended vector ranked: $mergedRows")
-    Seq(merged, scratch).foreach(graft.operators.Graph.release)
-    // compaction folds the append debris to one file per cell without
-    // touching the frozen model or any ranking
-    graft.operators.Similarity.compactIvfPqIndex(spark, s"$dir/inc")
-    import scala.jdk.CollectionConverters._
-    Seq("codes", "vectors").foreach { t =>
-      val perCell = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/inc/$t"))
-        .iterator().asScala.filter(f => java.nio.file.Files.isRegularFile(f) &&
-          f.toString.endsWith(".parquet")).toSeq
-        .groupBy(_.getParent.getFileName.toString).view.mapValues(_.size).toMap
-      assert(perCell.nonEmpty && perCell.values.forall(_ == 1),
-        s"compaction left multi-file cells in $t: $perCell")
-    }
-    val compacted = Similarity.probeIvfPqIndex(spark, s"$dir/inc", queries)
-    assert(compacted.collect().toSeq == mergedRows,
-      "compaction changed the ANN ranking")
-    graft.operators.Graph.release(compacted)
-    val compactedRef = Similarity.probeIvfPqIndexRefined(spark, s"$dir/inc", queries)
-    assert(compactedRef.collect().toSeq == mergedRefRows,
-      "compaction changed the refined ranking")
-    graft.operators.Graph.release(compactedRef)
-  }
-
-  test("s11 at rest: refined probe equals the registered re-rank, prunes the vectors scan, strands nothing") {
-    // the IndexRefineFlat claim — "the refine reads flat vectors from
-    // only the probed cells and broadcasts the shortlist" — against the
-    // persisted index, pinned three ways: ranking identity with the
-    // registered s11 query, PartitionFilters on the vectors scan, and
-    // the one-surviving-checkpoint hygiene
-    val dir = java.nio.file.Files.createTempDirectory("ivfpq-refine").toString
-    val v = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
-    val queries = v.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("qv"))
-    Similarity.writeIvfPqIndex(v.filter(col("vec_id") >= 5), dir)
-    // the refine's vector read prunes to the probed cells (the probe
-    // checkpoints its result, detaching the scan — pin it directly)
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val probeCells = Similarity.assignToCells(
-        queries.withColumnRenamed("query_id", "vec_id"), cents,
-        nBest = Similarity.N_PROBE)
-      .select("cell").distinct().collect().map(_.getInt(0))
-    assert(probeCells.length < Similarity.N_CELLS,
-      "probe touches all cells — pruning untestable")
-    val vecScan = spark.read.parquet(s"$dir/vectors")
-      .filter(col("cell").isin(probeCells.map(Integer.valueOf): _*))
-    val scanLine = vecScan.queryExecution.sparkPlan.toString.linesIterator
-      .find(_.contains("FileScan")).get
-    assert(scanLine.contains("PartitionFilters: [") &&
-      !scanLine.contains("PartitionFilters: []") && scanLine.contains("cell"),
-      s"refine did not prune the vectors scan:\n$scanLine")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val got = Similarity.probeIvfPqIndexRefined(spark, dir, queries)
-    assert(got.collect().toSeq ==
-      Similarity.ivfPqRerank(spark, sfDir).collect().toSeq,
-      "refined probe ranks differently from the registered s11 query")
-    graft.operators.Graph.release(got)
-    val persisted = spark.sparkContext.getPersistentRDDs
-    val added = persisted.keySet -- before
-    added.foreach(id => persisted.get(id).foreach(_.unpersist(true)))
-    assert(added.isEmpty, "probeIvfPqIndexRefined leaked checkpointed RDDs")
-  }
-
-  test("d16: persisted-index probe equals the registered join form; planted cross-batch dups found") {
-    val d = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("mhidx").toString
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    Dedup.writeMinhashIndex(docs.filter(expr("doc_id % 5 != 0")), dir)
-    val probed = Dedup.probeMinhashIndex(spark, dir,
-      docs.filter(expr("doc_id % 5 = 0")))
-    val registered = Dedup.incrementalNearDup(spark, d)
-    assert(probed.collect().toSeq == registered.collect().toSeq)
-    // the fixture plants cross-batch near-dups — the probe must find them
-    assert(registered.filter(col("is_dup") === 1).count() > 0)
-  }
-
-  test("d16: the delta probe PRUNES band partitions — only the delta's buckets are read") {
-    val d = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("mhidx-prune").toString
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    Dedup.writeMinhashIndex(docs.filter(expr("doc_id % 100 != 0")), dir)
-    // a TINY delta (the daily-ingest shape): its band keys hash into a
-    // strict subset of the 64 bucket partitions
-    val delta = docs.filter(expr("doc_id % 100 = 0"))
-    val deltaBuckets = Dedup.bandedKeys(Dedup.minhashSignatures(delta))
-      .select(pmod(xxhash64(col("band_key")), lit(Dedup.INDEX_BUCKETS)).cast("int"))
-      .distinct().count()
-    assert(deltaBuckets < Dedup.INDEX_BUCKETS,
-      s"delta covers all $deltaBuckets buckets — pruning untestable")
-    // assert pruning on the exact scans the probe constructs (the probe
-    // itself checkpoints its candidate frame, which detaches the scans
-    // from the returned plan — so pin them directly, pre-adaptive, where
-    // FileScan nodes print in full)
-    def pinPruned(df: org.apache.spark.sql.DataFrame, part: String): Unit = {
-      val scans = df.queryExecution.sparkPlan.toString
-      val scanLine = scans.linesIterator.find(_.contains("FileScan"))
-        .getOrElse(fail(s"no scan in plan:\n${scans.take(1200)}"))
-      assert(scanLine.contains("PartitionFilters: [") &&
-        !scanLine.contains("PartitionFilters: []") && scanLine.contains(part),
-        s"scan did not prune on $part:\n$scanLine")
-    }
-    val someBuckets = Seq(0, 1, 2).map(Integer.valueOf)
-    pinPruned(spark.read.parquet(s"$dir/bands")
-      .filter(col("bkt").isin(someBuckets: _*)), "bkt")
-    pinPruned(spark.read.parquet(s"$dir/sigs")
-      .filter(col("sbkt").isin(someBuckets: _*)), "sbkt")
-    // and the full pruned probe returns exactly what the un-persisted
-    // join form computes on the same split (not fixture-dependent)
-    val deltaSigs = Dedup.minhashSignatures(delta)
-    val baseSigs = Dedup.minhashSignatures(docs.filter(expr("doc_id % 100 != 0")))
-    val expected = Dedup.probeSignatures(deltaSigs,
-      Dedup.bandedKeys(baseSigs), baseSigs).collect().toSeq
-    assert(Dedup.probeMinhashIndex(spark, dir, delta).collect().toSeq == expected)
-  }
-
-  test("d17: bloom-prefiltered exact-index probe equals the registered join; bloom prunes pre-shuffle") {
-    val d = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("exidx").toString
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val base = docs.filter(expr("doc_id % 5 != 0"))
-    Dedup.writeExactIndex(base, dir)
-    // delta: the %5 slice + planted exact copies of base docs (the
-    // registered query's construction)
-    val delta = docs.filter(expr("doc_id % 5 = 0")).select("doc_id", "text")
-      .unionAll(base.filter(expr(s"doc_id % ${Dedup.EXACT_PLANT_STRIDE} = 1"))
-        .select((col("doc_id") + Dedup.EXACT_PLANT_OFFSET).as("doc_id"), col("text")))
-    val probed = Dedup.probeExactIndex(spark, dir, delta)
-    assert(probed.collect().toSeq ==
-      Dedup.incrementalExact(spark, d).collect().toSeq)
-    // the bloom is a codegen prefilter: most non-dup delta rows die
-    // before any join or exchange (fpp 1% on this corpus ⇒ survivors
-    // ≈ the planted dups, far below the delta size)
-    val bf = java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dir, "bloom.bin"))
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    import org.apache.spark.sql.graft.ColumnShim
-    import org.apache.spark.sql.types.BinaryType
-    val survivors = delta.select(md5(col("text")).as("h"))
-      .filter(ColumnShim.column(BloomFilterMightContain(
-        Literal(bf, BinaryType),
-        ColumnShim.expression(xxhash64(col("h")))))).count()
-    val dups = probed.count()
-    val total = delta.count()
-    assert(survivors >= dups && survivors < total / 2,
-      s"bloom pruned nothing: $survivors of $total survive ($dups true dups)")
-    // the pruned index scan pins PartitionFilters on the hash bucket
-    val scan = spark.read.parquet(s"$dir/hashes")
-      .filter(col("hbkt").isin(Seq(0, 1).map(Integer.valueOf): _*))
-      .queryExecution.sparkPlan.toString
-    val scanLine = scan.linesIterator.find(_.contains("FileScan")).get
-    assert(scanLine.contains("PartitionFilters: [") &&
-      !scanLine.contains("PartitionFilters: []") && scanLine.contains("hbkt"),
-      s"index scan did not prune:\n$scanLine")
-  }
-
-  test("d18: composed probe equals the registered exact-then-near; exact-killed rows reach no band") {
-    val d = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("composed").toString
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val base = docs.filter(expr("doc_id % 5 != 0"))
-    Dedup.writeExactIndex(base, s"$dir/ex")
-    Dedup.writeMinhashIndex(base, s"$dir/mh")
-    val delta = docs.filter(expr("doc_id % 5 = 0")).select("doc_id", "text")
-      .unionAll(base.filter(expr(s"doc_id % ${Dedup.EXACT_PLANT_STRIDE} = 1"))
-        .select((col("doc_id") + Dedup.EXACT_PLANT_OFFSET).as("doc_id"), col("text")))
-    val probed = Dedup.probeExactThenNear(spark, s"$dir/ex", s"$dir/mh", delta)
-    val registered = Dedup.exactThenNear(spark, d)
-    assert(probed.collect().toSeq == registered.collect().toSeq)
-    // the exact tier provably fires (every plant is a byte-copy of base)
-    val exactIds = registered.filter(col("tier") === "exact")
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(exactIds.nonEmpty && exactIds.exists(_ >= Dedup.EXACT_PLANT_OFFSET))
-    // the composition's point: an exact-killed row generates ZERO band
-    // candidates — the near tier's signature input excludes it entirely
-    val index = base.groupBy(md5(col("text")).as("h"))
-      .agg(min(col("doc_id")).as("match_id"))
-    val survivors = delta.withColumn("h", md5(col("text")))
-      .join(index, Seq("h"), "left_anti").select("doc_id", "text")
-    val survivorBands = Dedup.bandedKeys(Dedup.minhashSignatures(survivors))
-    assert(survivorBands.filter(col("doc_id").isin(exactIds.toSeq: _*)).count() == 0)
-    // and no near verdict exists for an exact-matched doc
-    assert(registered.filter(col("tier") === "near" &&
-      col("doc_id").isin(exactIds.toSeq: _*)).count() == 0)
-    Graph.release(probed)
-  }
-
   test("ANN at production k: 256 cells / 256 codes stay broadcast-safe; probe prune stays literal-bounded") {
     // N_CELLS=16 / PQ_K=16 are fixture-scaled; a production vector store
     // runs k ≈ 256+. This pins, QUANTITATIVELY at k=256 on sf0.1, the
@@ -894,275 +602,6 @@ class SimilaritySpec extends SparkSpec {
       "ADC scoring join did not broadcast the LUT")
   }
 
-  // ---- shared by the d16/d17 append tests: the byte-identical-files
-  // invariant and the three-way day split. day-3 plants a byte-copy of a
-  // DAY-2 doc (id + APPEND_PLANT_OFFSET): its match is findable only if
-  // the appended day-2 entries are live in the merged index. day3 is
-  // checkpointed — each test releases it.
-  private val APPEND_PLANT_OFFSET = 20000000L
-  private def parquetListing(p: String): Map[java.nio.file.Path, Long] = {
-    import scala.jdk.CollectionConverters._
-    java.nio.file.Files.walk(java.nio.file.Paths.get(p)).iterator().asScala
-      .filter(f => java.nio.file.Files.isRegularFile(f) &&
-        f.toString.endsWith(".parquet"))
-      .map(f => f -> java.nio.file.Files.size(f)).toMap
-  }
-  private def daySplit(docs: org.apache.spark.sql.DataFrame): (
-      org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame,
-      org.apache.spark.sql.DataFrame) = {
-    val day1 = docs.filter(expr("doc_id % 3 = 1"))
-    val day2 = docs.filter(expr("doc_id % 3 = 2")).select("doc_id", "text")
-    val day3 = docs.filter(expr("doc_id % 3 = 0")).select("doc_id", "text")
-      .unionAll(day2.orderBy("doc_id").limit(1)
-        .select((col("doc_id") + APPEND_PLANT_OFFSET).as("doc_id"), col("text")))
-      .localCheckpoint(true)
-    (day1, day2, day3)
-  }
-
-  test("d16: appendToMinhashIndex absorbs a delta — merged probe == from-scratch; no existing file rewritten") {
-    // the full daily-ingest cycle: write day-1, probe+append day-2,
-    // probe day-3 against the merged index. Merged must equal an index
-    // built from scratch over day-1 ∪ day-2, and the append must be
-    // delta-proportional: every pre-append file survives byte-identical
-    // (parquet append only ADDS files under the delta's partitions).
-    import java.nio.file.Files
-    val d = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val (day1, day2, day3) = daySplit(docs)
-    val dir = Files.createTempDirectory("mhappend").toString
-    Dedup.writeMinhashIndex(day1, s"$dir/inc")
-    val before = parquetListing(s"$dir/inc")
-    // day-2 probes (the daily verdict), then is absorbed
-    Graph.release(Dedup.probeMinhashIndex(spark, s"$dir/inc", day2))
-    Dedup.appendToMinhashIndex(day2, s"$dir/inc")
-    val after = parquetListing(s"$dir/inc")
-    assert(before.forall { case (f, sz) => after.get(f).contains(sz) },
-      "append rewrote or removed an existing index file")
-    assert(after.size > before.size, "append added no files")
-    // merged probe == from-scratch probe over day-1 ∪ day-2
-    Dedup.writeMinhashIndex(docs.filter(expr("doc_id % 3 != 0")), s"$dir/scratch")
-    val merged = Dedup.probeMinhashIndex(spark, s"$dir/inc", day3)
-    val scratch = Dedup.probeMinhashIndex(spark, s"$dir/scratch", day3)
-    val mergedRows = merged.collect().toSeq
-    assert(mergedRows == scratch.collect().toSeq)
-    // the planted day-2 copy is found via the APPENDED signatures
-    assert(mergedRows.exists(r =>
-      r.getLong(0) >= APPEND_PLANT_OFFSET && r.getInt(4) == 1),
-      s"planted day-2 copy not matched: $mergedRows")
-    // torn-append safety: the writer lands sigs BEFORE bands, so the
-    // worst crash leaves ORPHAN signatures (no band rows). Orphans are
-    // never probed — the band join is what creates candidates — so
-    // verdicts must be byte-identical to the untorn index
-    val orphan = day2.orderBy("doc_id").limit(1)
-      .select((col("doc_id") + 30000000L).as("doc_id"), col("text"))
-    Dedup.minhashSignatures(orphan)
-      .withColumn("sbkt",
-        pmod(col("doc_id"), lit(Dedup.INDEX_BUCKETS.toLong)).cast("int"))
-      .write.mode("append").partitionBy("sbkt").parquet(s"$dir/inc/sigs")
-    val afterTorn = Dedup.probeMinhashIndex(spark, s"$dir/inc", day3)
-    assert(afterTorn.collect().toSeq == mergedRows,
-      "orphan signatures changed probe verdicts")
-    Seq(merged, scratch, day3, afterTorn).foreach(Graph.release)
-  }
-
-  test("d17: appendToExactIndex absorbs a delta — merged probe == from-scratch; bloom union is live") {
-    import java.nio.file.Files
-    val d = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val (day1, day2, day3) = daySplit(docs)
-    val dir = Files.createTempDirectory("exappend").toString
-    // NON-default bloom parameters: the append must pick them up from the
-    // index's own manifest (a caller-side default would build a
-    // bit-incompatible delta filter)
-    Dedup.writeExactIndex(day1, s"$dir/inc", expectedKeys = 2000000L, fpp = 0.02)
-    val day2Verdict = Dedup.probeExactIndex(spark, s"$dir/inc", day2)
-    // organic corpus has no exact dups: day-2 is all-new, append it whole
-    assert(day2Verdict.count() == 0)
-    Graph.release(day2Verdict)
-    val before = parquetListing(s"$dir/inc/hashes")
-    Dedup.appendToExactIndex(day2, s"$dir/inc")
-    val after = parquetListing(s"$dir/inc/hashes")
-    assert(before.forall { case (f, sz) => after.get(f).contains(sz) },
-      "append rewrote or removed an existing index file")
-    assert(after.size > before.size, "append added no files")
-    Dedup.writeExactIndex(docs.filter(expr("doc_id % 3 != 0")), s"$dir/scratch")
-    val merged = Dedup.probeExactIndex(spark, s"$dir/inc", day3)
-    val scratch = Dedup.probeExactIndex(spark, s"$dir/scratch", day3)
-    val mergedRows = merged.collect().toSeq
-    assert(mergedRows == scratch.collect().toSeq)
-    // the planted day-2 copy passes the MERGED bloom and hash-joins to
-    // its day-2 keeper — proof the append reached both tiers of the index
-    assert(mergedRows.exists(_.getLong(0) >= APPEND_PLANT_OFFSET),
-      s"planted day-2 copy not matched: $mergedRows")
-    // an empty append is a no-op, not a crash
-    Dedup.appendToExactIndex(day2.filter(lit(false)), s"$dir/inc")
-    Seq(merged, scratch, day3).foreach(Graph.release)
-  }
-
-  private def filesPerBucket(path: String): Map[String, Int] =
-    parquetListing(path).keys.toSeq
-      .groupBy(_.getParent.getFileName.toString).view.mapValues(_.size).toMap
-
-  test("d17: compactExactIndex folds file debris to one file per bucket; probe identical; bloom re-sized") {
-    // after a season of appends every bucket partition holds
-    // one-file-per-append (plus one-file-per-write-task) debris;
-    // compaction folds each bucket to ONE file, rebuilds the bloom at
-    // the manifest fpp over the ACTUAL key set, and must not change a
-    // single probe verdict
-    import java.nio.file.{Files, Paths}
-    val d = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val (day1, day2, day3) = daySplit(docs)
-    val dir = Files.createTempDirectory("excompact").toString
-    Dedup.writeExactIndex(day1, s"$dir/inc", expectedKeys = 2000000L, fpp = 0.02)
-    Dedup.appendToExactIndex(day2, s"$dir/inc")
-    val before = Dedup.probeExactIndex(spark, s"$dir/inc", day3)
-    val beforeRows = before.collect().toSeq
-    Graph.release(before)
-    assert(filesPerBucket(s"$dir/inc/hashes").values.exists(_ > 1),
-      "no multi-file bucket — compaction untestable")
-    // a stale __compact from a crashed prior run is reconciled, not tripped over
-    Files.createDirectories(Paths.get(s"$dir/inc/hashes__compact"))
-    Files.write(Paths.get(s"$dir/inc/hashes__compact/junk"), Array[Byte](1))
-    Dedup.compactExactIndex(spark, s"$dir/inc")
-    val bucketFiles = filesPerBucket(s"$dir/inc/hashes")
-    assert(bucketFiles.nonEmpty && bucketFiles.values.forall(_ == 1),
-      s"compaction left multi-file buckets: $bucketFiles")
-    assert(!Files.exists(Paths.get(s"$dir/inc/hashes__compact")) &&
-      !Files.exists(Paths.get(s"$dir/inc/hashes__old")),
-      "compaction left swap debris")
-    val after = Dedup.probeExactIndex(spark, s"$dir/inc", day3)
-    assert(after.collect().toSeq == beforeRows, "compaction changed probe verdicts")
-    Graph.release(after)
-    // the manifest now records the actual key count at the original fpp —
-    // future appends size their delta blooms against reality
-    val meta = new String(Files.readAllBytes(
-      Paths.get(s"$dir/inc/bloom.meta")), "UTF-8").split(",")
-    assert(meta(0).toLong == spark.read.parquet(s"$dir/inc/hashes").count(),
-      s"manifest keys ${meta(0)} != on-disk key count")
-    assert(meta(1).toDouble == 0.02, "compaction changed the manifest fpp")
-    // the cycle continues: a post-compaction append + probe still works
-    val day4 = day3.filter(col("doc_id") < 100)
-      .select((col("doc_id") + 40000000L).as("doc_id"), col("text"))
-    Dedup.appendToExactIndex(day4, s"$dir/inc")
-    val reprobe = Dedup.probeExactIndex(spark, s"$dir/inc",
-      day4.select((col("doc_id") + 1000L).as("doc_id"), col("text")))
-    assert(reprobe.count() == day4.count(),
-      "post-compaction append not probe-visible")
-    Seq(reprobe, day3).foreach(Graph.release)
-  }
-
-  test("d16: compactMinhashIndex folds both bucketed tables; probe identical") {
-    import java.nio.file.{Files, Paths}
-    val d = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val (day1, day2, day3) = daySplit(docs)
-    val dir = Files.createTempDirectory("mhcompact").toString
-    Dedup.writeMinhashIndex(day1, s"$dir/inc")
-    Dedup.appendToMinhashIndex(day2, s"$dir/inc")
-    val before = Dedup.probeMinhashIndex(spark, s"$dir/inc", day3)
-    val beforeRows = before.collect().toSeq
-    Graph.release(before)
-    assert(filesPerBucket(s"$dir/inc/bands").values.exists(_ > 1),
-      "no multi-file band bucket — compaction untestable")
-    Dedup.compactMinhashIndex(spark, s"$dir/inc")
-    Seq(s"$dir/inc/sigs", s"$dir/inc/bands").foreach { t =>
-      val counts = filesPerBucket(t)
-      assert(counts.nonEmpty && counts.values.forall(_ == 1),
-        s"compaction left multi-file buckets in $t: $counts")
-      assert(!Files.exists(Paths.get(t + "__compact")) &&
-        !Files.exists(Paths.get(t + "__old")), s"swap debris at $t")
-    }
-    val after = Dedup.probeMinhashIndex(spark, s"$dir/inc", day3)
-    assert(after.collect().toSeq == beforeRows, "compaction changed probe verdicts")
-    Seq(after, day3).foreach(Graph.release)
-  }
-
-  test("index writers rebuild cleanly over an existing directory (the retrain path)") {
-    // all three writers drop the table whose staleness would pair
-    // silently with fresh artifacts (bands / codes) before writing, and
-    // overwrite the rest — a rebuild must fully replace content, and a
-    // probe against the rebuilt index must see ONLY the new corpus
-    import java.nio.file.Files
-    val d = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val (day1, day2, _) = daySplit(docs)
-    val dir = Files.createTempDirectory("rebuild").toString
-    // exact: rebuild over day2; a day1 copy must no longer match
-    Dedup.writeExactIndex(day1, s"$dir/ex")
-    Dedup.writeExactIndex(day2, s"$dir/ex")
-    val day1Copy = day1.orderBy("doc_id").limit(1)
-      .select((col("doc_id") + 50000000L).as("doc_id"), col("text"))
-    val day2Copy = day2.orderBy("doc_id").limit(1)
-      .select((col("doc_id") + 50000000L).as("doc_id"), col("text"))
-    val exOld = Dedup.probeExactIndex(spark, s"$dir/ex", day1Copy)
-    val exNew = Dedup.probeExactIndex(spark, s"$dir/ex", day2Copy)
-    assert(exOld.count() == 0, "stale exact-index content survived a rebuild")
-    assert(exNew.count() == 1, "rebuilt exact index misses its own corpus")
-    Seq(exOld, exNew).foreach(Graph.release)
-    // minhash: after a rebuild over day2, both tables hold ONLY day2 ids
-    Dedup.writeMinhashIndex(day1, s"$dir/mh")
-    Dedup.writeMinhashIndex(day2, s"$dir/mh")
-    assert(spark.read.parquet(s"$dir/mh/bands")
-      .filter(expr("doc_id % 3 != 2")).count() == 0,
-      "stale band rows survived a rebuild")
-    assert(spark.read.parquet(s"$dir/mh/sigs")
-      .filter(expr("doc_id % 3 != 2")).count() == 0,
-      "stale signature rows survived a rebuild")
-    // ivf-pq: rebuild over the full corpus equals a fresh-dir build
-    val v = spark.read.parquet(s"$d/embeddings.parquet")
-      .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
-    val queries = v.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("qv"))
-    val corpus = v.filter(col("vec_id") >= 5)
-    Similarity.writeIvfPqIndex(corpus.filter(col("vec_id") < 250), s"$dir/ann")
-    Similarity.writeIvfPqIndex(corpus, s"$dir/ann")
-    assert(spark.read.parquet(s"$dir/ann/codes").select("vec_id").distinct()
-      .count() == corpus.count(), "rebuilt code table has stale or missing ids")
-    assert(spark.read.parquet(s"$dir/ann/vectors").select("vec_id").distinct()
-      .count() == corpus.count(), "rebuilt vectors table has stale or missing ids")
-    val rebuilt = Similarity.probeIvfPqIndex(spark, s"$dir/ann", queries)
-    assert(rebuilt.collect().toSeq ==
-      Similarity.ivfPqTopK(spark, d).collect().toSeq,
-      "rebuilt index ranks differently from the registered query")
-    Graph.release(rebuilt)
-  }
-
-  test("torn exact rebuild is loud; rebuild migrates an old-layout index and stamps last") {
-    import java.nio.file.{Files, Paths}
-    val d = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val (day1, day2, _) = daySplit(docs)
-    val dir = Files.createTempDirectory("torn").toString
-    Dedup.writeExactIndex(day1, s"$dir/ex")
-    // the rebuild's torn window: the stale hash table is dropped BEFORE
-    // any new artifact lands (either stale pairing — old bloom/new
-    // hashes or new bloom/old hashes — mis-verdicts silently), so a
-    // crash inside the window leaves bloom artifacts with no hash table,
-    // and a probe must fail LOUDLY on the missing path, never report
-    // "unique"
-    Dedup.deleteTreeIfExists(Paths.get(s"$dir/ex", "hashes"))
-    val delta = day1.orderBy("doc_id").limit(1).select("doc_id", "text")
-    intercept[Exception] {
-      Dedup.probeExactIndex(spark, s"$dir/ex", delta).count()
-    }
-    // an index stamped by an OLDER build refuses probes (layout test),
-    // but a REBUILD over it must succeed — rebuild IS the migration path
-    // — and must leave the new stamp, written AFTER the tables so a torn
-    // migration keeps refusing instead of blessing old tables
-    Dedup.writeExactIndex(day1, s"$dir/ex")
-    Files.write(Paths.get(s"$dir/ex", "index.meta"),
-      "buckets=7,from=an-older-build".getBytes("UTF-8"))
-    Dedup.writeExactIndex(day2, s"$dir/ex")
-    assert(new String(Files.readAllBytes(Paths.get(s"$dir/ex", "index.meta")),
-      "UTF-8") == Dedup.exactLayout, "rebuild did not re-stamp the layout")
-    val day2Copy = day2.orderBy("doc_id").limit(1)
-      .select((col("doc_id") + 50000000L).as("doc_id"), col("text"))
-    val probed = Dedup.probeExactIndex(spark, s"$dir/ex", day2Copy)
-    assert(probed.count() == 1, "migrated index misses its own corpus")
-    Graph.release(probed)
-  }
-
   test("s11 re-rank recovers recall over the raw ADC ranking; refine joins broadcast") {
     import org.apache.spark.sql.expressions.Window
     val k = 10
@@ -1204,6 +643,19 @@ class SimilaritySpec extends SparkSpec {
     assert(rerank.select("query_id", "vec_id")
       .join(shortlist, Seq("query_id", "vec_id"), "left_anti").isEmpty,
       "re-rank emitted a vector outside the ADC shortlist")
+    // s15 is the s09 ranking with the deletion slice dropped before the
+    // top-k: survivors keep their s09 order and backfill the freed ranks
+    val s15 = Similarity.ivfPqDeleteTopK(spark, sfDir).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq
+    val backfilled = Similarity.ivfPqTopK(spark, sfDir, 5, Similarity.RERANK_C).collect()
+      .map(r => (r.getLong(0), r.getLong(2)))
+      .filter(_._2 % Similarity.ANN_DEL_MOD != Similarity.ANN_DEL_RES)
+      .groupBy(_._1).toSeq.sortBy(_._1)
+      .flatMap { case (q, rows) =>
+        rows.take(k).zipWithIndex.map { case ((_, v), i) => (q, i + 1, v) } }
+    assert(s15 == backfilled)
+    assert(s15.size == Similarity.ivfPqTopK(spark, sfDir).count(),
+      "s15 left holes: the freed ranks did not backfill")
     // plan pin: the ranked shortlist (the plan's only per-query window
     // below a join — the ADC path's windows partition on vec_id) is only
     // ever the BROADCAST side of the refine joins; a shuffle join there
@@ -1222,126 +674,6 @@ class SimilaritySpec extends SparkSpec {
     }
     assert(shuffledOverShortlist.isEmpty,
       s"shortlist reached a shuffle join; refine must broadcast it:\n${shuffledOverShortlist.headOption}")
-  }
-
-  test("index probes refuse a layout-mismatched index, naming both layouts") {
-    // the layout constants an index was written under are part of the
-    // index (the bloom.meta lesson generalized): a probe computing
-    // buckets/band keys/scores with different compiled constants would
-    // prune the wrong partitions and silently report non-dups — so every
-    // probe/append requires index.meta to match exactly
-    import java.nio.file.{Files, Paths}
-    val d = "/root/testdata/sf0.001"
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val base = docs.filter(expr("doc_id % 5 != 0"))
-    val delta = docs.filter(expr("doc_id % 5 = 0")).select("doc_id", "text")
-    val dir = Files.createTempDirectory("layout").toString
-    Dedup.writeExactIndex(base, s"$dir/ex")
-    Dedup.writeMinhashIndex(base, s"$dir/mh")
-    val v = spark.read.parquet(s"$d/embeddings.parquet")
-      .select(col("vec_id"), Similarity.quantize(col("embedding")).as("qv"))
-    val queries = v.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("query_id"), col("qv"))
-    Similarity.writeIvfPqIndex(v.filter(col("vec_id") >= 5), s"$dir/ann")
-    def tamper(idx: String): Unit =
-      Files.write(Paths.get(s"$dir/$idx/index.meta"),
-        "buckets=32,from=an-older-build".getBytes("UTF-8"))
-    Seq("ex", "mh", "ann").foreach(tamper)
-    def refusal(run: => Any): String = {
-      val e = intercept[IllegalArgumentException](run)
-      assert(e.getMessage.contains("buckets=32,from=an-older-build") &&
-        e.getMessage.contains("rebuild"), e.getMessage)
-      e.getMessage
-    }
-    refusal(Dedup.probeExactIndex(spark, s"$dir/ex", delta))
-    refusal(Dedup.appendToExactIndex(delta, s"$dir/ex"))
-    refusal(Dedup.probeMinhashIndex(spark, s"$dir/mh", delta))
-    refusal(Dedup.appendToMinhashIndex(delta, s"$dir/mh"))
-    refusal(Similarity.probeIvfPqIndex(spark, s"$dir/ann", queries))
-    refusal(Similarity.probeIvfPqIndexRefined(spark, s"$dir/ann", queries))
-    refusal(Similarity.appendToIvfPqIndex(queries
-      .withColumnRenamed("query_id", "vec_id"), s"$dir/ann"))
-    // a missing manifest (pre-manifest index) also refuses, pointing at
-    // the rebuild path rather than probing on a guess
-    Files.delete(Paths.get(s"$dir/mh/index.meta"))
-    val e = intercept[IllegalArgumentException](
-      Dedup.probeMinhashIndex(spark, s"$dir/mh", delta))
-    assert(e.getMessage.contains("no layout manifest"), e.getMessage)
-  }
-
-  test("compactBucketedTable: __old without a live table aborts with the recovery path") {
-    // the one crash window is between the two swap renames; the
-    // reconciler must refuse to guess and name the recovery move
-    import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("compact-crash").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .filter(expr("doc_id % 7 = 1"))
-    Dedup.writeExactIndex(docs, s"$dir/inc")
-    // simulate the mid-swap crash: live moved to __old, replacement lost
-    Files.move(Paths.get(s"$dir/inc/hashes"), Paths.get(s"$dir/inc/hashes__old"))
-    val e = intercept[IllegalArgumentException] {
-      Dedup.compactExactIndex(spark, s"$dir/inc")
-    }
-    assert(e.getMessage.contains("restore by renaming"), e.getMessage)
-    // the documented recovery, then compaction proceeds
-    Files.move(Paths.get(s"$dir/inc/hashes__old"), Paths.get(s"$dir/inc/hashes"))
-    Dedup.compactExactIndex(spark, s"$dir/inc")
-    assert(filesPerBucket(s"$dir/inc/hashes").values.forall(_ == 1))
-  }
-
-  test("d16/d17 probes strand no intermediate checkpoints (daily-ingest hygiene)") {
-    // the probes localCheckpoint their intermediates (signatures, bands,
-    // candidates, bloom survivors); DataFrame.unpersist is a NO-OP for
-    // those, so in a long-lived ingest service every probe call would
-    // strand RDD blocks. Each probe must release its intermediates and
-    // return a verdict holding exactly ONE checkpoint, which the caller
-    // releases once consumed. Delta-with-retries pattern: a genuine leak
-    // survives every attempt; a concurrent suite's transient cache does not.
-    val d = "/root/testdata/sf0.001"
-    val dir = java.nio.file.Files.createTempDirectory("probeleak").toString
-    val docs = spark.read.parquet(s"$d/documents.parquet")
-    val base = docs.filter(expr("doc_id % 5 != 0"))
-    Dedup.writeMinhashIndex(base, s"$dir/mh")
-    Dedup.writeExactIndex(base, s"$dir/ex")
-    val delta = docs.filter(expr("doc_id % 5 = 0")).select("doc_id", "text")
-    assert(leaksAtMost(0) {
-      val v = Dedup.probeMinhashIndex(spark, s"$dir/mh", delta)
-      v.collect(); Graph.release(v)
-    }, "probeMinhashIndex leaked checkpointed RDDs")
-    assert(leaksAtMost(0) {
-      val v = Dedup.probeExactIndex(spark, s"$dir/ex", delta)
-      v.collect(); Graph.release(v)
-    }, "probeExactIndex leaked checkpointed RDDs")
-  }
-
-  test("d16/d17: index writers refuse an empty corpus before touching any file") {
-    val dir = java.nio.file.Files.createTempDirectory("exidx-empty").toString
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    val empty = docs.filter(expr("doc_id < 0"))
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.writeExactIndex(empty, dir)
-    }
-    assert(ex.getMessage.contains("empty corpus"))
-    // nothing half-written: no parquet dir, no bloom, no manifest
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "hashes")))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom.bin")))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bloom.meta")))
-    val mx = intercept[IllegalArgumentException] {
-      Dedup.writeMinhashIndex(empty, dir)
-    }
-    assert(mx.getMessage.contains("empty corpus"))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(dir, "bands")))
-    // an APPEND against a missing index path must fail loudly, not
-    // silently mint a fresh delta-only index at the typo'd location
-    val ax = intercept[IllegalArgumentException] {
-      Dedup.appendToMinhashIndex(docs.filter(expr("doc_id < 20")), s"$dir/nope")
-    }
-    assert(ax.getMessage.contains("no index"))
-    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/nope", "bands")))
-    // an empty minhash APPEND over an existing index is a harmless no-op
-    Dedup.writeMinhashIndex(docs.filter(expr("doc_id < 20")), dir)
-    Dedup.appendToMinhashIndex(empty, dir)
-    assert(spark.read.parquet(s"$dir/bands").count() > 0)
   }
 
   test("neardupReport yields d07/d14/d15 outputs from one pair-pipeline run") {
